@@ -269,7 +269,10 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     import __spark_entry__ as entrymod
-    from salesforce_prefect_etl_pipeline_spark.session import get_spark
+    from salesforce_prefect_etl_pipeline_spark.session import (
+        get_spark,
+        graft_conf_overrides,
+    )
 
     spark = get_spark("bench")
     queries = entrymod.queries()
@@ -384,10 +387,12 @@ def main() -> None:
         "calib_sec": {"pre": calib_pre, "post": calib_post},
     }
     # r17 advice: a $SPARK_GRAFT_CONF session override silently changes
-    # what a recorded run measured — stamp it into the run's metadata so
-    # affected records are identifiable (empty string = clean defaults).
-    if os.environ.get("SPARK_GRAFT_CONF"):
-        sidecar["graft_conf"] = os.environ["SPARK_GRAFT_CONF"]
+    # what a recorded run measured — stamp the pairs get_spark applied
+    # into the run's metadata so affected records are identifiable (no
+    # key = clean defaults).
+    overrides = graft_conf_overrides()
+    if overrides:
+        sidecar["graft_conf"] = ";".join(f"{k}={v}" for k, v in overrides.items())
     repo = os.path.dirname(os.path.abspath(__file__))
     # The unstamped repo-root sidecar is the ROUND RECORD too (r15
     # advice: a RUNS=1 ladder point or an A/B rep at another sf was

@@ -13,7 +13,8 @@ Reproduces the reference orchestrator DAG
 
 Differences by design (§7.0): one lazy Spark DAG with a single ``cache()``
 materialization at the fan-out point instead of CSV round-trips between
-stages.
+stages. Each output is evaluated once: the aggregate is cached for its
+two sinks, and the dedup and summary row counts ride along their writes.
 
 Per-stage posture (flows/stages.py): each stage carries the reference's
 exact retry config — extract 3x/10s with a 2h input-hash cache
@@ -22,6 +23,10 @@ branch fans out CONCURRENTLY on a ``LocalTaskRunner`` (the
 ``ConcurrentTaskRunner(max_workers=8)`` analog) with the reference's
 ``wait_for`` gating: dedup/profile/snapshot start only after BOTH
 prechecks pass (flow:145-152).
+
+The run record's ``timings`` holds each stage's wall seconds
+(``<stage>_s``, ``time.perf_counter`` in this process) next to
+``total_s``.
 
 Failure semantics preserved: ETL-branch errors always raise; QA-branch
 errors raise only when ``fail_on_qa_error`` (flow:50-65,162-171), with
@@ -50,6 +55,7 @@ from salesforce_prefect_etl_pipeline_spark.metadata import (
 from salesforce_prefect_etl_pipeline_spark.operators.dedup import dedup_keep_first
 from salesforce_prefect_etl_pipeline_spark.operators.quality import (
     nonempty_gate,
+    observed_qa,
     profile_columns,
     rowcount_drift_check,
     schema_gate,
@@ -85,6 +91,7 @@ class PipelineResult:
     row_counts: dict = field(default_factory=dict)
     qa: dict = field(default_factory=dict)
     states: dict = field(default_factory=dict)
+    timings: dict = field(default_factory=dict)
     drift: dict | None = None
 
 
@@ -116,19 +123,26 @@ def run_pipeline(
     """Full orchestrated run over an extracted frame."""
     run_id = uuid.uuid4().hex[:8]
     res = PipelineResult(run_id=run_id)
-    t0 = time.time()
+    t0 = time.perf_counter()
+    _lock = threading.Lock()
+
+    def _timed(name, fn):
+        start = time.perf_counter()
+        try:
+            return fn()
+        finally:
+            with _lock:
+                res.timings[f"{name}_s"] = time.perf_counter() - start
 
     # X2: extract-once fan-out -> cache at the branch point.
     raw = source_df.cache()
-    raw_rows = raw.count()  # materializes the cache
+    raw_rows = _timed("cache", raw.count)  # materializes the cache
     res.row_counts["raw"] = raw_rows
-
-    _lock = threading.Lock()
 
     def _qa(name, fn, policy=QA_POLICY):
         stage = Stage(fn, name=name, policy=policy, sleep=retry_sleep)
         try:
-            out = stage()
+            out = _timed(name, stage)
             with _lock:
                 res.states[name] = "ok"
             return out
@@ -158,12 +172,16 @@ def run_pipeline(
             return fn()
 
         def _dedup():
-            deduped = dedup_keep_first(raw, dedup_key)
+            # the row count rides along the write instead of re-running
+            # the window sort in a second action
+            deduped, obs = observed_qa(
+                dedup_keep_first(raw, dedup_key), [], name=f"dedup_{run_id}"
+            )
             path = f"{out_dir}/{spec.name}_dedup.csv"
             sio.write_csv_single(deduped, path)
             with _lock:
                 res.artifacts["dedup_csv"] = path
-                res.row_counts["dedup"] = deduped.count()
+                res.row_counts["dedup"] = obs.get["rows"]
             return path
 
         def _profile():
@@ -191,20 +209,29 @@ def run_pipeline(
 
         # --- ETL branch (strict; overlaps the QA branch) ---------------
         def _process_and_load():
-            agg = aggregate_spec(raw, spec)
-            processed_csv = f"{out_dir}/{spec.name}_summary.csv"
-            sio.write_csv_single(agg, processed_csv)
-            out_json = f"{out_dir}/{spec.name}_summary.json"
-            sio.write_json_records(agg, out_json)
+            # one evaluation of the aggregate feeds both sinks; the JSON
+            # sink's record count rides along its collect
+            agg = aggregate_spec(raw, spec).cache()
+            try:
+                processed_csv = f"{out_dir}/{spec.name}_summary.csv"
+                sio.write_csv_single(agg, processed_csv)
+                out_json = f"{out_dir}/{spec.name}_summary.json"
+                records, obs = observed_qa(agg, [], name=f"processed_{run_id}")
+                sio.write_json_records(records, out_json)
+            finally:
+                agg.unpersist()
             with _lock:
                 res.artifacts["processed_csv"] = processed_csv
                 res.artifacts["output_json"] = out_json
-                res.row_counts["processed"] = agg.count()
+                res.row_counts["processed"] = obs.get["rows"]
             return processed_csv
 
-        Stage(
-            _process_and_load, name="process", policy=PROCESS_POLICY, sleep=retry_sleep
-        )()
+        _timed(
+            "process",
+            Stage(
+                _process_and_load, name="process", policy=PROCESS_POLICY, sleep=retry_sleep
+            ),
+        )
         res.states["process"] = res.states["load"] = "ok"
 
         # join the QA branch (propagates strict-mode failures)
@@ -212,27 +239,28 @@ def run_pipeline(
             f.result()
     finally:
         runner.shutdown()
+        raw.unpersist()
 
     # --- drift (consumes the nonempty rowcount, flow:155-157) -----------
-    res.drift = rowcount_drift_check(
-        spark, spec.name, raw_rows, f"{out_dir}/qc_state"
+    res.drift = _timed(
+        "drift",
+        lambda: rowcount_drift_check(spark, spec.name, raw_rows, f"{out_dir}/qc_state"),
     )
 
     # --- metadata record (flow:221-246) ---------------------------------
+    res.timings["total_s"] = time.perf_counter() - t0
     record = make_run_record(
         spec.name,
         run_id=run_id,
         states=res.states,
         artifacts=res.artifacts,
         row_counts=res.row_counts,
-        timings={"total_s": time.time() - t0},
+        timings=res.timings,
         extra={"drift": res.drift},
     )
     store = metadata_store or RunMetadataStore(f"{out_dir}/metadata")
     store.append(record)
     store.write_latest(record, spec.name)
-
-    raw.unpersist()
     return res
 
 

@@ -17,7 +17,7 @@ and SQL-replayable, so the layout derivation itself is oracle-checked.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -76,15 +76,3 @@ def zorder_key_sql(x_expr: str, y_expr: str, bits: int = 16) -> str:
         terms.append(f"((({y_expr}) >> {i}) & 1) * {1 << (2 * i + 1)}")
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
-
-def zorder_layout(
-    df: DataFrame, x: str, y: str, bits: int = 16, id_cols: list[str] | None = None
-) -> DataFrame:
-    """Tag each row with its Z-order key over dimensions (x, y) and
-    return rows ordered by the curve — the write-time ordering a
-    clustered parquet layout persists. Downstream:
-    ``df.repartitionByRange(n, "zkey").sortWithinPartitions("zkey")``
-    before the write gives min/max-prunable files on both dimensions."""
-    cols = (id_cols or df.columns[:1]) + [x, y]
-    out = df.select(*cols, zorder_key(F.col(x), F.col(y), bits).alias("zkey"))
-    return out.orderBy("zkey", *(id_cols or df.columns[:1]))

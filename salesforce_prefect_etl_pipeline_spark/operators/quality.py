@@ -2,10 +2,11 @@
 (tasks/quality_parallel.py) re-expressed as single-pass Spark plans.
 
 - schema gate (X8, :20-51): required-column presence check, raises.
-- non-empty gate (X9, :54-73): raises on 0 rows (cheap ``isEmpty``).
+- non-empty gate (X9, :54-73): raises on 0 rows (one ``count()``, whose
+  result is the gate's report).
 - column profiler (X10, :105-140): dtype / null_count / n_distinct per
-  column in ONE aggregation pass (the reference loops per column), plus
-  top-k value counts for low-cardinality columns (A11).
+  column and top-k value counts for low-cardinality columns (A11), all
+  from ONE melted value-count pass (the reference loops per column).
 - row-count drift (:159-189): relative-change alert against persisted
   per-object state; state lives in a parquet run-log table instead of a
   ``rowcount.txt`` (works from any executor-less driver, survives reruns).
@@ -45,9 +46,38 @@ def schema_gate(df: DataFrame, required_cols: list[str]) -> dict:
 
 
 def nonempty_gate(df: DataFrame) -> dict:
-    if df.isEmpty():
+    rows = df.count()
+    if rows == 0:
         raise EmptyInputError("No data to process")
-    return {"rows": df.count()}
+    return {"rows": rows}
+
+
+def _quoted(c: str):
+    """Column reference that resolves any name, dots and backticks
+    included."""
+    return F.col("`" + c.replace("`", "``") + "`")
+
+
+def _value_counts(df: DataFrame, columns: list[str]) -> DataFrame:
+    """(column_name, value, cnt): every column melted to
+    (name, value-as-string) with ``stack`` and counted by one
+    groupBy(column_name, value) — one scan and one shuffle whatever the
+    width. Labels are literals built through the Column API, so a
+    column name can never alter the expression."""
+    pairs = [x for c in columns for x in (F.lit(c), _quoted(c).cast("string"))]
+    melted = df.select(F.stack(F.lit(len(columns)), *pairs).alias("column_name", "value"))
+    return melted.groupBy("column_name", "value").agg(F.count(F.lit(1)).alias("cnt"))
+
+
+def _ranked(counts: DataFrame, k: int) -> DataFrame:
+    """The ``k`` most frequent values per column of a ``_value_counts``
+    frame, ties broken by value (nulls first), with their rank."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("column_name").orderBy(
+        F.desc("cnt"), F.asc_nulls_first("value")
+    )
+    return counts.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 
 def topk_values(df: DataFrame, columns: list[str], k: int = 5) -> DataFrame:
@@ -59,30 +89,7 @@ def topk_values(df: DataFrame, columns: list[str], k: int = 5) -> DataFrame:
     This replaces a job-per-column loop: on a 100-column table that was
     100 sequential scans; here it is one scan + one shuffle regardless of
     column count (job count verified independent of width in tests)."""
-    from pyspark.sql.window import Window
-
-    n = len(columns)
-    # Backtick-quote identifiers and escape the label literal: a generic
-    # profiler API sees arbitrary column names, which must never be able
-    # to alter the stack() expression.
-    stack_args = ", ".join(
-        f"""'{c.replace("'", "''")}', CAST(`{c.replace('`', '``')}` AS STRING)"""
-        for c in columns
-    )
-    melted = df.select(
-        F.expr(f"stack({n}, {stack_args}) AS (column_name, value)")
-    )
-    counts = melted.groupBy("column_name", "value").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    w = Window.partitionBy("column_name").orderBy(
-        F.desc("cnt"), F.asc_nulls_first("value")
-    )
-    return (
-        counts.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .orderBy("column_name", "rnk")
-    )
+    return _ranked(_value_counts(df, columns), k).orderBy("column_name", "rnk")
 
 
 def topk_values_sql(table: str, columns: list[str], k: int = 5) -> str:
@@ -110,44 +117,78 @@ def profile_columns(
     approx_distinct_at_width: int = 40,
 ) -> dict:
     """Column profile. Returns the reference's JSON shape
-    (tasks/quality_parallel.py:116-135) in at most THREE jobs total,
-    independent of column count:
+    (tasks/quality_parallel.py:116-135): row count, and per column its
+    dtype, null count, distinct count and, for columns with at most
+    ``topk_max_distinct`` distinct values, the ``topk`` most frequent
+    values. Two Spark actions, independent of column count:
 
-    1. one wide aggregation: row count + per-column null count +
-       distinct count. Exact ``countDistinct`` plans an Expand that
-       multiplies the scan by column count, so tables wider than
-       ``approx_distinct_at_width`` switch to ``approx_count_distinct``
-       (HLL, one pass, ~2% error — the A9 approx path);
-    2. one melted ``topk_values`` pass over every low-cardinality column.
+    1. one melted ``_value_counts`` pass, cached: per column, the
+       counts sum to the row count, the null value's count is the null
+       count and the non-null values are the distinct values. The
+       string cast keeps values apart exactly when ``countDistinct``
+       does (every NaN renders "NaN", dates render ISO, timestamps
+       render in the session time zone, UTC in this package's
+       sessions, where no two instants share a rendering), with one
+       exception: -0.0 and 0.0 render apart while ``countDistinct``
+       merges them, so a float column holding both has its distinct
+       count lowered by one (its top-k lists them apart);
+    2. the top-k of the eligible columns, ranked over the cached
+       counts; the at most ``topk`` x columns rows are ordered in
+       Python, with no sort job.
+
+    Tables wider than ``approx_distinct_at_width`` take the distinct
+    counts from one wide ``approx_count_distinct`` aggregation instead
+    (HLL, one pass, ~2% error — the A9 approx path) and melt only the
+    eligible columns for the top-k.
     """
     cols = df.columns
-    use_approx = len(cols) > approx_distinct_at_width
-    distinct = F.approx_count_distinct if use_approx else F.countDistinct
-    aggs = [F.count(F.lit(1)).alias("__nrows__")]
-    for c in cols:
-        aggs.append(F.count_if(F.col(c).isNull()).alias(f"__null__{c}"))
-        aggs.append(distinct(c).alias(f"__nuniq__{c}"))
-    row = df.agg(*aggs).collect()[0].asDict()
     dtypes = dict(df.dtypes)
-    profile: dict = {
-        "n_rows": row["__nrows__"],
-        "distinct_estimated": use_approx,
-        "columns": {},
-    }
-    for c in cols:
-        profile["columns"][c] = {
-            "dtype": dtypes[c],
-            "null_count": row[f"__null__{c}"],
-            "n_unique": row[f"__nuniq__{c}"],
-        }
-    eligible = [
-        c for c in cols if profile["columns"][c]["n_unique"] <= topk_max_distinct
-    ]
-    if eligible:
-        for r in topk_values(df, eligible, k=topk).collect():
-            profile["columns"][r.column_name].setdefault("top_values", []).append(
-                {"value": r.value, "count": r.cnt}
+    use_approx = len(cols) > approx_distinct_at_width
+    profile: dict = {"n_rows": 0, "distinct_estimated": use_approx, "columns": {}}
+    counts = None if use_approx or not cols else _value_counts(df, cols).cache()
+    try:
+        if use_approx:
+            aggs = [F.count(F.lit(1)).alias("__nrows__")]
+            for c in cols:
+                aggs.append(F.count_if(_quoted(c).isNull()).alias(f"__null__{c}"))
+                aggs.append(F.approx_count_distinct(_quoted(c)).alias(f"__nuniq__{c}"))
+            row = df.agg(*aggs).collect()[0].asDict()
+            profile["n_rows"] = row["__nrows__"]
+            stats = {c: (row[f"__null__{c}"], row[f"__nuniq__{c}"]) for c in cols}
+        elif counts is None:  # no columns to melt
+            profile["n_rows"] = df.count()
+            stats = {}
+        else:
+            per_col = counts.groupBy("column_name").agg(
+                F.sum("cnt").alias("rows"),
+                F.sum(F.when(F.col("value").isNull(), F.col("cnt"))).alias("nulls"),
+                F.count("value").alias("uniq"),
+                F.count_if(F.col("value").isin("-0.0", "0.0")).alias("zeros"),
             )
+            stats = {c: (0, 0) for c in cols}  # an empty frame yields no rows
+            for r in per_col.collect():
+                merged = int(r.zeros == 2 and dtypes[r.column_name] in ("float", "double"))
+                stats[r.column_name] = (r.nulls or 0, r.uniq - merged)
+                profile["n_rows"] = r.rows
+        for c in cols:
+            profile["columns"][c] = {
+                "dtype": dtypes[c],
+                "null_count": stats[c][0],
+                "n_unique": stats[c][1],
+            }
+        eligible = [c for c in cols if stats[c][1] <= topk_max_distinct]
+        if eligible:
+            if counts is None:
+                top = _ranked(_value_counts(df, eligible), topk)
+            else:
+                top = _ranked(counts.filter(F.col("column_name").isin(eligible)), topk)
+            for r in sorted(top.collect(), key=lambda r: (r.column_name, r.rnk)):
+                profile["columns"][r.column_name].setdefault("top_values", []).append(
+                    {"value": r.value, "count": r.cnt}
+                )
+    finally:
+        if counts is not None:
+            counts.unpersist()
     return profile
 
 
@@ -277,12 +318,13 @@ def observed_qa(df: DataFrame, columns: list[str] | None = None, name: str = "qa
 
     Returns (observed_df, observation). After the first action on
     observed_df, ``observation.get`` yields
-    {"rows": n, "nulls_<col>": n, ...}. Works on batch frames
+    {"rows": n, "nulls_<col>": n, ...} (null counts for ``columns``,
+    every column by default; ``[]`` observes the row count alone). Works on batch frames
     (streaming queries report through StreamingQueryProgress instead).
     """
     from pyspark.sql import Observation
 
-    cols = columns or df.columns
+    cols = df.columns if columns is None else columns
     obs = Observation(name)
     metrics = [F.count(F.lit(1)).alias("rows")] + [
         F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"nulls_{c}")

@@ -416,30 +416,38 @@ def perceptron_train(
     of the (dims+1)-row weight vector, two exchange-free shuffled-hash
     joins on the cached partitioning, and a dims-sized update aggregate
     (:func:`_epoch_update`) — no corpus-sized shuffle or broadcast
-    anywhere in the loop.
+    anywhere in the loop. The trajectory is materialized before
+    returning and both caches are released.
     """
     feats, labels = _cached_training_frames(docs, dims)
-    spark = docs.sparkSession
-    w = spark.range(-1, dims).select(
-        F.col("id").alias("d"), F.lit(0).cast("long").alias("w")
-    )
-    trajectory = []
-    for epoch in range(1, epochs + 1):
-        upd = _epoch_update(feats, labels, w)
-        w = (
-            w.join(upd, "d", "left")
-            .select(
-                "d",
-                (F.col("w") + F.coalesce(F.col("delta"), F.lit(0))).alias("w"),
+    try:
+        spark = docs.sparkSession
+        w = spark.range(-1, dims).select(
+            F.col("id").alias("d"), F.lit(0).cast("long").alias("w")
+        )
+        trajectory = []
+        for epoch in range(1, epochs + 1):
+            upd = _epoch_update(feats, labels, w)
+            w = (
+                w.join(upd, "d", "left")
+                .select(
+                    "d",
+                    (F.col("w") + F.coalesce(F.col("delta"), F.lit(0))).alias("w"),
+                )
+                .localCheckpoint(eager=False)
             )
-            .localCheckpoint(eager=False)
-        )
-        trajectory.append(
-            w.select(F.lit(epoch).alias("epoch"), "d", "w")
-        )
-    out = trajectory[0]
-    for t in trajectory[1:]:
-        out = out.unionAll(t)
+            trajectory.append(
+                w.select(F.lit(epoch).alias("epoch"), "d", "w")
+            )
+        out = trajectory[0]
+        for t in trajectory[1:]:
+            out = out.unionAll(t)
+        # the (epochs x dims)-row trajectory is materialized here so the
+        # training caches can be released before returning
+        out = out.localCheckpoint()
+    finally:
+        feats.unpersist()
+        labels.unpersist()
     return out.orderBy("epoch", "d")
 
 

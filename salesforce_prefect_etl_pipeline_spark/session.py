@@ -22,6 +22,18 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def graft_conf_overrides() -> dict[str, str]:
+    """The session overrides ``get_spark`` applies from
+    ``$SPARK_GRAFT_CONF``: semicolon-separated ``key=value`` pairs,
+    stripped; an entry without ``=`` or with an empty key is ignored."""
+    out = {}
+    for pair in os.environ.get("SPARK_GRAFT_CONF", "").split(";"):
+        k, eq, v = pair.partition("=")
+        if eq and k.strip():
+            out[k.strip()] = v.strip()
+    return out
+
+
 def get_spark(
     app_name: str = "salesforce-prefect-etl-pipeline-spark",
     master: str | None = None,
@@ -135,20 +147,17 @@ def get_spark(
     # cluster deployments (and paired config A/B experiments) tune the
     # session without code edits. Applied LAST: an explicit operator
     # override beats both the local-mode defaults and caller extra_conf.
-    _overrides = []
-    for pair in os.environ.get("SPARK_GRAFT_CONF", "").split(";"):
-        if "=" in pair:
-            k, v = pair.split("=", 1)
-            conf[k.strip()] = v.strip()
-            _overrides.append(f"{k.strip()}={v.strip()}")
-    if _overrides:
+    overrides = graft_conf_overrides()
+    conf.update(overrides)
+    if overrides:
         # Visible in every run's stderr (r17 advice): a forgotten env
         # override silently contaminating a recorded bench/correctness
         # run must be identifiable from the run's own output.
         import sys as _sys
 
         print(
-            f"# SPARK_GRAFT_CONF overrides applied: {'; '.join(_overrides)}",
+            "# SPARK_GRAFT_CONF overrides applied: "
+            + "; ".join(f"{k}={v}" for k, v in overrides.items()),
             file=_sys.stderr,
         )
     for k, v in conf.items():

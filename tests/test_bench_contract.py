@@ -97,3 +97,16 @@ def test_designed_guards_are_bench_skips_not_crashes():
     # both stay ValueErrors so non-bench callers' existing handling holds
     assert issubclass(FamilySizeError, ValueError)
     assert issubclass(SeedReplayError, ValueError)
+
+
+def test_graft_conf_overrides_parse_only_applied_pairs(monkeypatch):
+    """get_spark applies, and bench.py stamps, the same parsed pairs:
+    entries without ``=`` or with an empty key are dropped by both."""
+    from salesforce_prefect_etl_pipeline_spark.session import graft_conf_overrides
+
+    monkeypatch.setenv("SPARK_GRAFT_CONF", " a.b = 1 ;junk;=x; c=d=e;")
+    assert graft_conf_overrides() == {"a.b": "1", "c": "d=e"}
+    monkeypatch.setenv("SPARK_GRAFT_CONF", "no pairs here")
+    assert graft_conf_overrides() == {}
+    monkeypatch.delenv("SPARK_GRAFT_CONF")
+    assert graft_conf_overrides() == {}

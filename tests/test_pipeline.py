@@ -791,3 +791,172 @@ def test_tpch_style_refresh_stream_maintains_aggregates(spark, tmp_path):
     )
     live = read_live_snapshot(spark, snap, "o_deleted")
     assert agg(live) == (20, sum(100.0 + i for i in range(5, 20)) + 5 * 500.0)
+
+
+# ----------------------------------------------------------------------
+# One evaluation per output: outputs pinned byte for byte, a job budget,
+# and the one-pass profile against the two-pass definition it replaced.
+
+RICH_RECORDS = [
+    {"attributes": {"type": "Opportunity"}, "Id": f"006{i % 9:03d}",
+     "StageName": ("Won", "Lost", "Open", None)[i % 4],
+     "Amount": (None, "N/A", "0", "-0.0", "12.5", "1e3", "7")[i % 7],
+     "CloseDate": (None, "2024-02-29", "bogus", "2023-12-31")[i % 4]}
+    for i in range(14)
+]
+
+EXPECTED_SUMMARY_CSV = (
+    "StageName,records,sum_amount,avg_amount\n"
+    ",3,12.5,6.25\n"
+    "Lost,4,1007.0,335.6666666666667\n"
+    "Open,3,7.0,2.3333333333333335\n"
+    "Won,4,1012.5,506.25\n"
+)
+
+EXPECTED_SUMMARY_JSON = (
+    '[\n  {\n    "StageName": null,\n    "records": 3,\n    "sum_amount": 12.5,\n'
+    '    "avg_amount": 6.25\n  },\n  {\n    "StageName": "Lost",\n    "records": 4,\n'
+    '    "sum_amount": 1007.0,\n    "avg_amount": 335.6666666666667\n  },\n  {\n'
+    '    "StageName": "Open",\n    "records": 3,\n    "sum_amount": 7.0,\n'
+    '    "avg_amount": 2.3333333333333335\n  },\n  {\n    "StageName": "Won",\n'
+    '    "records": 4,\n    "sum_amount": 1012.5,\n    "avg_amount": 506.25\n  }\n]'
+)
+
+EXPECTED_DEDUP_CSV = (
+    "Id,StageName,Amount,CloseDate\n"
+    "006000,Lost,0.0,2024-02-29\n"
+    "006001,Lost,,2024-02-29\n"
+    "006002,,12.5,2023-12-31\n"
+    "006003,,-0.0,2023-12-31\n"
+    "006004,Lost,7.0,2024-02-29\n"
+    "006005,Lost,1000.0,2024-02-29\n"
+    "006006,Open,7.0,\n"
+    "006007,,,2023-12-31\n"
+    "006008,Won,,\n"
+)
+
+#: Spark jobs one ``run_pipeline`` call may start (32 when the
+#: aggregate ran three times, the dedup output was counted after its
+#: write and the profile took a wide distinct aggregation plus a sorted
+#: top-k pass; 20 since).
+PIPELINE_JOB_BUDGET = 22
+
+
+def _last_job_id(spark) -> int:
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+def test_pipeline_outputs_are_pinned_byte_for_byte(spark, tmp_path):
+    df, _ = extract_object(spark, OPP_SPEC, lambda soql: RICH_RECORDS)
+    res = run_pipeline(spark, OPP_SPEC, df, str(tmp_path / "out"))
+    assert open(res.artifacts["processed_csv"]).read() == EXPECTED_SUMMARY_CSV
+    assert open(res.artifacts["output_json"]).read() == EXPECTED_SUMMARY_JSON
+    assert open(res.artifacts["dedup_csv"]).read() == EXPECTED_DEDUP_CSV
+    assert res.row_counts == {"raw": 14, "dedup": 9, "processed": 4}
+    assert set(res.states.values()) == {"ok"}
+    snap = spark.read.parquet(res.artifacts["snapshot_parquet"])
+    assert sorted(map(tuple, snap.collect()), key=repr) == sorted(
+        map(tuple, df.collect()), key=repr
+    )
+
+
+def test_pipeline_job_budget_and_released_caches(spark, tmp_path):
+    """Counted as the status store's job-id delta: the QA pool threads
+    do not carry the caller's job group."""
+    df, _ = extract_object(spark, OPP_SPEC, lambda soql: RICH_RECORDS)
+    persisted = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    before = _last_job_id(spark)
+    res = run_pipeline(spark, OPP_SPEC, df, str(tmp_path / "out"))
+    jobs = _last_job_id(spark) - before
+    assert jobs <= PIPELINE_JOB_BUDGET, f"{jobs} jobs for one run"
+    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == persisted
+    assert df.storageLevel.useMemory is False
+    # every stage carries its own wall time into the run record
+    stages = {"cache", "schema_gate", "nonempty_gate", "dedup", "profile",
+              "snapshot", "process", "drift", "total"}
+    assert set(res.timings) == {f"{s}_s" for s in stages}
+    assert all(v >= 0 for v in res.timings.values())
+    latest = json.load(
+        open(tmp_path / "out" / "metadata" / OPP_SPEC.name / "latest_run.json")
+    )
+    assert latest["timings"] == res.timings
+
+
+def test_pipeline_row_counts_on_empty_extract(spark, tmp_path):
+    """The counts observed during the writes arrive for 0-row outputs
+    too: the ETL branch still runs when the advisory non-empty gate
+    fails."""
+    df, _ = extract_object(spark, OPP_SPEC, lambda soql: [])
+    res = run_pipeline(spark, OPP_SPEC, df, str(tmp_path / "out"), retry_sleep=lambda s: None)
+    assert res.row_counts == {"raw": 0, "processed": 0}
+    assert res.states["nonempty_gate"].startswith("error")
+    assert res.states["process"] == "ok"
+    assert open(res.artifacts["processed_csv"]).read() == (
+        "StageName,records,sum_amount,avg_amount\n"
+    )
+
+
+def _two_pass_profile(df, topk=5, topk_max_distinct=5000):
+    """The profile's previous definition: one wide exact-distinct
+    aggregation, then the ordered melted top-k of the eligible columns."""
+    from pyspark.sql import functions as F
+
+    from salesforce_prefect_etl_pipeline_spark.operators.quality import topk_values
+
+    def q(c):
+        return F.col("`" + c.replace("`", "``") + "`")
+
+    aggs = [F.count(F.lit(1)).alias("n")]
+    for i, c in enumerate(df.columns):
+        aggs += [F.count_if(q(c).isNull()).alias(f"z{i}"), F.countDistinct(q(c)).alias(f"u{i}")]
+    row = df.agg(*aggs).collect()[0]
+    dtypes = dict(df.dtypes)
+    cols = {
+        c: {"dtype": dtypes[c], "null_count": row[f"z{i}"], "n_unique": row[f"u{i}"]}
+        for i, c in enumerate(df.columns)
+    }
+    eligible = [c for c in df.columns if cols[c]["n_unique"] <= topk_max_distinct]
+    for r in topk_values(df, eligible, k=topk).collect():
+        cols[r.column_name].setdefault("top_values", []).append(
+            {"value": r.value, "count": r.cnt}
+        )
+    return {"n_rows": row["n"], "distinct_estimated": False, "columns": cols}
+
+
+def test_profile_columns_equals_two_pass_definition(spark):
+    import datetime
+
+    schema = T.StructType([
+        T.StructField("all_null", T.StringType()),
+        T.StructField("x", T.DoubleType()),
+        T.StructField("f", T.FloatType()),
+        T.StructField("day", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("it's `odd`", T.StringType()),
+        T.StructField("n", T.LongType()),
+    ])
+    nan = float("nan")
+    d, t = datetime.date, datetime.datetime
+    rows = [
+        (None, -0.0, -0.0, d(2024, 1, 1), t(2024, 1, 1, 10), "a", 1),
+        (None, 0.0, 0.0, d(2024, 1, 1), t(2024, 1, 1, 10), "a", 1),
+        (None, nan, nan, None, None, None, 2),
+        (None, nan, 1.5, d(1, 1, 1), t(2024, 3, 1), "b", 3),
+        (None, None, None, d(9999, 12, 31), t(2024, 3, 1), "'", 4),
+        (None, 1.0, 1.0, d(2024, 1, 2), t(2024, 3, 1, 0, 0, 0, 1), "`", 5),
+        (None, -0.0, None, d(2024, 1, 2), t(2024, 3, 1, 0, 0, 0, 1), "a", None),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    got = profile_columns(df, topk=3)
+    assert got == _two_pass_profile(df, topk=3)
+    assert got["columns"]["x"]["n_unique"] == 3  # -0.0 == 0.0, NaN == NaN
+    # the distinct-count guard still bounds which columns get a top-k
+    capped = profile_columns(df, topk=2, topk_max_distinct=3)
+    assert capped == _two_pass_profile(df, topk=2, topk_max_distinct=3)
+    assert "top_values" not in capped["columns"]["n"]
+    # empty input: zero counts, no top values
+    empty = df.limit(0)
+    assert profile_columns(empty) == _two_pass_profile(empty)

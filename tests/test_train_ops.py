@@ -213,6 +213,26 @@ def test_perceptron_matches_sequential_replay(spark):
     assert got == _py_perceptron(texts, dims=8, epochs=3)
 
 
+def test_perceptron_releases_its_training_caches(spark, monkeypatch):
+    """The doc_id-partitioned feature and label caches live only while
+    training runs; the returned trajectory no longer needs them."""
+    from pyspark import StorageLevel
+
+    made = []
+    real = train._cached_training_frames
+
+    def spy(docs, dims):
+        made.extend(real(docs, dims))
+        return tuple(made)
+
+    monkeypatch.setattr(train, "_cached_training_frames", spy)
+    texts = ["a b c d e f", "g g g g g g g g", "spark join merge"]
+    out = train.perceptron_train(_docs(spark, texts), dims=4, epochs=2)
+    assert len(made) == 2
+    assert all(f.storageLevel == StorageLevel.NONE for f in made)
+    assert [tuple(r) for r in out.collect()] == _py_perceptron(texts, dims=4, epochs=2)
+
+
 def test_perceptron_epoch1_update_is_full_gradient(spark):
     """With w0 = 0 every margin is 0 (misclassified), so epoch 1's
     weights must equal sum_docs y * x exactly."""

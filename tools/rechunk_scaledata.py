@@ -47,6 +47,10 @@ def checksum(con, path: str) -> tuple:
     ).fetchone()
 
 
+def _rows_per_group(n_rows: int, target_groups: int, min_rows_per_group: int) -> int:
+    return max(min_rows_per_group, n_rows // target_groups)
+
+
 def expected_min_groups(
     n_rows: int,
     target_groups: int = TARGET_GROUPS,
@@ -56,8 +60,7 @@ def expected_min_groups(
     the assertable post-condition callers (gen_scale_data) check so a
     regenerated fixture can never silently revert to the one-57 MB-row-
     group layout that serialized every scan at sf10 (r16 forensics)."""
-    rows_per_group = max(min_rows_per_group, n_rows // target_groups)
-    return max(1, n_rows // rows_per_group)
+    return max(1, n_rows // _rows_per_group(n_rows, target_groups, min_rows_per_group))
 
 
 def main(
@@ -73,8 +76,9 @@ def main(
         for path in sorted(glob.glob(os.path.join(d, "*.parquet"))):
             f = pq.ParquetFile(path)
             n = f.metadata.num_rows
-            rows_per_group = max(min_rows_per_group, n // target_groups)
-            if f.metadata.num_row_groups >= max(1, n // rows_per_group):
+            if f.metadata.num_row_groups >= expected_min_groups(
+                n, target_groups, min_rows_per_group
+            ):
                 print(f"skip {path}: already {f.metadata.num_row_groups} groups")
                 continue
             before = checksum(con, path)
@@ -104,7 +108,7 @@ def main(
             pq.write_table(
                 table,
                 tmp,
-                row_group_size=rows_per_group,
+                row_group_size=_rows_per_group(n, target_groups, min_rows_per_group),
                 compression="snappy",
             )
             after = checksum(con, tmp)
