@@ -36,6 +36,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
+    index_component_path,
+    next_version,
+    publish_version,
+    reset_versions,
+)
 from salesforce_prefect_etl_pipeline_spark.operators.text import (
     NORMALIZED_SQL,
     fingerprints,
@@ -1384,88 +1390,6 @@ FROM per_key JOIN per_doc USING (band) ORDER BY band
 
 # ----------------------------------------------------------------------
 # Incremental dedup: persisted LSH index + probe
-def index_component_path(index_dir: str, comp: str) -> str:
-    """Resolve an index component (``bands`` / ``profiles``) through the
-    version pointer. A fresh build writes the FLAT layout
-    (``<index_dir>/<comp>``); the first compaction introduces versioned
-    dirs (``<index_dir>/versions/v<N>/<comp>``) published by atomically
-    replacing the ``CURRENT`` pointer file — so there is never a window
-    where the live component doesn't exist, and a probe that resolved
-    CURRENT keeps reading a retained version even while a compaction
-    publishes the next one. Every reader and appender resolves through
-    this function."""
-    cur = os.path.join(index_dir, "CURRENT")
-    if os.path.exists(cur):
-        v = open(cur).read().strip()
-        if v:
-            return os.path.join(index_dir, "versions", v, comp)
-    return os.path.join(index_dir, comp)
-
-
-def current_index_version(index_dir: str) -> str:
-    """The version the CURRENT pointer resolves to, or "" for the flat
-    (never-compacted/rebuilt) layout. Cache keys derived from an index
-    dir should include this: a versioned rebuild changes it, so memoized
-    per-version artifacts (e.g. loaded IVF centroids) can never pair
-    with a newer version's data."""
-    cur = os.path.join(index_dir, "CURRENT")
-    if os.path.exists(cur):
-        return open(cur).read().strip()
-    return ""
-
-
-def gc_index_versions(index_dir: str, keep_n: int = 2) -> list[str]:
-    """Garbage-collect superseded ``versions/v<N>/`` snapshots under a
-    versioned index (r15 verdict task 4) — the retention policy that
-    bounds a periodically-compacted streamed index's storage. Every
-    compactor/rebuilder (``compact_text_index``,
-    ``compact_minhash_index``, ``rebuild_ivf_index``) already drops
-    non-retained versions at publish time; this is the standalone,
-    explicitly-schedulable GC for indexes whose maintenance cadence
-    leaves snapshots behind (e.g. a crashed publish's orphan dir, or a
-    raised keep-N later dialed back down).
-
-    Safety contract:
-
-    - NEVER deletes the CURRENT target, and keeps at least the
-      previous published version too (``keep_n`` is clamped to >= 2):
-      a concurrent reader that resolved the pointer one publish ago is
-      still reading data that exists — deletion only touches versions
-      superseded >= 2 publishes ago.
-    - Versions NEWER than CURRENT are left alone (an in-flight
-      publish's staging dir under the one-maintenance-writer model).
-    - Idempotent and interruption-tolerant: each victim is removed
-      independently (``ignore_errors``); a killed GC leaves a strict
-      subset removed and the re-run converges to the same end state.
-    - Flat (never-versioned) layouts are a no-op.
-
-    Returns the removed version names (e.g. ``["v1", "v2"]``)."""
-    import shutil
-
-    keep_n = max(2, int(keep_n))
-    cur = current_index_version(index_dir)
-    versions_root = os.path.join(index_dir, "versions")
-    if not cur or not os.path.isdir(versions_root):
-        return []
-    cur_n = int(cur[1:])
-    numbered = sorted(
-        int(v[1:])
-        for v in os.listdir(versions_root)
-        if v.startswith("v") and v[1:].isdigit()
-    )
-    retained = set(
-        sorted((n for n in numbered if n <= cur_n), reverse=True)[:keep_n]
-    )
-    removed = []
-    for n in numbered:
-        if n < cur_n and n not in retained:
-            shutil.rmtree(
-                os.path.join(versions_root, f"v{n}"), ignore_errors=True
-            )
-            removed.append(f"v{n}")
-    return removed
-
-
 def build_minhash_index(docs: DataFrame, index_dir: str, k: int = 8) -> None:
     """Persist the corpus near-dup index: ``bands/`` (doc_id, band, key
     — partitioned by band, sorted by key within each partition for
@@ -1476,14 +1400,9 @@ def build_minhash_index(docs: DataFrame, index_dir: str, k: int = 8) -> None:
     split that makes dedup-on-ingest affordable at 100 TB (the IVF
     lifecycle's pattern applied to text).
 
-    A full build SUPERSEDES any versioned history at this path (the
-    CURRENT pointer and versions/ are removed first), else the fresh
-    flat layout would be shadowed by a stale compacted snapshot."""
-    import shutil
-
-    if os.path.exists(os.path.join(index_dir, "CURRENT")):
-        os.remove(os.path.join(index_dir, "CURRENT"))
-        shutil.rmtree(os.path.join(index_dir, "versions"), ignore_errors=True)
+    A full build SUPERSEDES any versioned history at this path
+    (``index_store.reset_versions``)."""
+    reset_versions(index_dir)
     prof = minhash_profile(docs, k)
     banded = prof.select(
         "doc_id", F.posexplode(band_key_array(F.col("sig"))).alias("band", "key")
@@ -1516,28 +1435,10 @@ def compact_minhash_index(
     index are IDENTICAL (pytest-asserted): dedup and tombstone-drop
     change bytes, not candidates.
 
-    Publication is SNAPSHOT-ISOLATED (versioned dirs + a pointer file,
-    the Delta/Iceberg commit shape at directory grain): both components
-    are rewritten into ``versions/v<N+1>/`` and become live via ONE
-    atomic ``os.replace`` of the ``CURRENT`` pointer. There is no
-    window where a live component is missing — a concurrent probe that
-    resolved CURRENT (``index_component_path``) before the swap keeps
-    reading the retained previous version; one that resolves after
-    reads the new one. A crash anywhere leaves CURRENT pointing at
-    intact data (an orphaned in-progress version dir is simply
-    overwritten by the next compaction). Retention: the current and
-    previous versions are kept, older ones (and the superseded
-    flat-layout dirs of the original build) are removed at publish
-    time — so a probe must finish within one full maintenance cycle,
-    trivially true at any realistic compaction cadence.
-
-    Still required: a SINGLE maintenance writer, and no concurrent
-    APPENDS during compaction (an append into the old version after
-    the rewrite began would be silently dropped by the publish — the
-    ingest job and the compactor must be the same owner, which is the
-    reference's operating model)."""
-    import shutil
-
+    Publication is a versioned, snapshot-isolated publish: both
+    components are rewritten into a new version and made live by the
+    CURRENT-pointer swap, under ``operators.index_store``'s crash-safety,
+    retention and single-owner contract."""
     stats: dict = {}
     drops = (
         drop_doc_ids.select(F.col(drop_doc_ids.columns[0]).alias("doc_id"))
@@ -1546,23 +1447,7 @@ def compact_minhash_index(
         if drop_doc_ids is not None
         else None
     )
-    versions_root = os.path.join(index_dir, "versions")
-    cur_pointer = os.path.join(index_dir, "CURRENT")
-    prev_version = ""
-    if os.path.exists(cur_pointer):
-        prev_version = open(cur_pointer).read().strip()
-    existing = (
-        sorted(
-            int(v[1:])
-            for v in os.listdir(versions_root)
-            if v.startswith("v") and v[1:].isdigit()
-        )
-        if os.path.isdir(versions_root)
-        else []
-    )
-    next_v = f"v{(existing[-1] + 1) if existing else 1}"
-    new_root = os.path.join(versions_root, next_v)
-    shutil.rmtree(new_root, ignore_errors=True)
+    new_root = next_version(index_dir)
     for comp, keys in (("bands", ["doc_id", "band", "key"]), ("profiles", None)):
         path = index_component_path(index_dir, comp)
         cur = spark.read.parquet(path)
@@ -1588,23 +1473,7 @@ def compact_minhash_index(
         writer.parquet(out)
         after = spark.read.parquet(out).count()
         stats[comp] = {"before": before, "after": after}
-    # atomic publish: the pointer replace is the commit point
-    tmp_pointer = os.path.join(index_dir, ".CURRENT.tmp")
-    with open(tmp_pointer, "w") as f:
-        f.write(next_v)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp_pointer, cur_pointer)
-    # retention: keep the just-published and the previous version; drop
-    # everything older, including the original flat build once it is no
-    # longer the previous snapshot
-    keep = {next_v, prev_version}
-    for v in os.listdir(versions_root):
-        if v not in keep:
-            shutil.rmtree(os.path.join(versions_root, v), ignore_errors=True)
-    if prev_version:  # flat layout superseded at least one publish ago
-        shutil.rmtree(os.path.join(index_dir, "bands"), ignore_errors=True)
-        shutil.rmtree(os.path.join(index_dir, "profiles"), ignore_errors=True)
+    publish_version(index_dir, new_root, flat=("bands", "profiles"))
     if drops is not None:
         drops.unpersist()
     return stats

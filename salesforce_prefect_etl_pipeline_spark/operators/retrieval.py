@@ -52,8 +52,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from salesforce_prefect_etl_pipeline_spark.operators.dedup import (
+from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
+    batch_id_col,
     index_component_path,
+    next_version,
+    publish_version,
 )
 from salesforce_prefect_etl_pipeline_spark.operators.text import (
     analyzed_tokens,
@@ -278,7 +281,7 @@ TEXT_INDEX_BUCKETS = 32
 #: postings/positional rows + the posbatches commit marker. v3 (r15):
 #: tombstone retraction batches + versioned compaction snapshots
 #: resolved through the CURRENT pointer (the MinHash index's layout,
-#: dedup.index_component_path). v4 (r16): commit records carry build
+#: index_store.index_component_path). v4 (r16): commit records carry build
 #: provenance (``origin`` = build/append/retract — the replay-dedup
 #: skip is only safe for overwrite-built single-batch indexes, r15
 #: advice), and the positional tier's tombstones split into their own
@@ -287,12 +290,9 @@ TEXT_INDEX_BUCKETS = 32
 TEXT_INDEX_LAYOUT = 4
 
 
-def _comp(index_dir: str, name: str) -> str:
-    """Resolve a text-index component (postings / totals / champions /
-    positional / posbatches / tombstones) through the version pointer —
-    shared with the MinHash index (dedup.index_component_path): flat
-    layout until the first compaction publishes ``versions/v<N>/``."""
-    return index_component_path(index_dir, name)
+#: The benchmark's ``corpus_index`` workload (perfbench/workloads.py)
+#: reads index components through this name.
+_comp = index_component_path
 
 
 def _term_bucket_py(term: str) -> int:
@@ -323,42 +323,6 @@ def _postings(docs: DataFrame, analyzer: str = "raw") -> DataFrame:
     )
 
 
-def _batch_id_agg(docs: DataFrame, prefix: str = "") -> DataFrame:
-    """1-row frame with the batch's content-derived id:
-    md5([prefix:]min_doc_id:max_doc_id:count). Batches hold disjoint
-    doc_ids by contract, so no two batches share a min — the id is
-    unique AND deterministic (no wall clock), keeping rebuilt indexes
-    bit-reproducible. The aggregate touches ONLY ``doc_id``, so
-    Catalyst prunes the scan to that column (no text read, no
-    tokenize — pytest-asserted on the optimized plan)."""
-    parts = ([F.lit(prefix)] if prefix else []) + [
-        F.min("doc_id"),
-        F.max("doc_id"),
-        F.count(F.lit(1)),
-    ]
-    return docs.agg(F.md5(F.concat_ws(":", *parts)).alias("batch_id"))
-
-
-def _batch_totals(docs: DataFrame, analyzer: str = "raw") -> DataFrame:
-    """Per-batch corpus totals + the :func:`_batch_id_agg` id in one
-    frame. No longer on the write path (r15 verdict task 7 —
-    :func:`_write_index_batch` now derives totals from the postings it
-    just wrote instead of tokenizing the corpus a second time); kept
-    as the reference aggregate the single-scan derivation is
-    pytest-pinned against."""
-    return docs.select(
-        "doc_id", F.size(_ANALYZERS[analyzer][0]("text")).alias("dl")
-    ).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_len"),
-        F.md5(
-            F.concat_ws(
-                ":", F.min("doc_id"), F.max("doc_id"), F.count(F.lit(1))
-            )
-        ).alias("batch_id"),
-    )
-
-
 def _write_index_batch(
     docs: DataFrame,
     index_dir: str,
@@ -379,7 +343,7 @@ def _write_index_batch(
     just-written batch's (doc_id, dl) pairs — a 2-column scan of data
     this job just produced, keyed per-doc so the derivation is also
     immune to replay-duplicated rows. Values are bit-identical to the
-    old double-scan :func:`_batch_totals` (pytest-pinned).
+    old double-scan totals aggregate (pytest-pinned).
 
     The REBUILD (overwrite) path deletes the old totals before touching
     the postings (r14 advice): the append invariant — postings without
@@ -403,15 +367,17 @@ def _write_index_batch(
 
     spark = docs.sparkSession
     if bid is None:
-        bid = _batch_id_agg(docs).collect()[0]["batch_id"]
+        bid = docs.agg(batch_id_col("doc_id")).collect()[0]["batch_id"]
     if mode == "overwrite":
-        shutil.rmtree(_comp(index_dir, "totals"), ignore_errors=True)
-        shutil.rmtree(_comp(index_dir, "tombstones"), ignore_errors=True)
+        shutil.rmtree(index_component_path(index_dir, "totals"), ignore_errors=True)
+        shutil.rmtree(index_component_path(index_dir, "tombstones"), ignore_errors=True)
     _postings(docs, analyzer).withColumn(
         "batch_id", F.lit(bid)
-    ).write.mode(mode).partitionBy("bucket").parquet(_comp(index_dir, "postings"))
+    ).write.mode(mode).partitionBy("bucket").parquet(
+        index_component_path(index_dir, "postings")
+    )
     tot = (
-        spark.read.parquet(_comp(index_dir, "postings"))
+        spark.read.parquet(index_component_path(index_dir, "postings"))
         .filter(F.col("batch_id") == bid)
         .select("doc_id", "dl")
         .dropDuplicates(["doc_id"])
@@ -425,11 +391,13 @@ def _write_index_batch(
     spark.createDataFrame(
         [(tot["n_docs"], tot["total_len"], bid, origin)],
         "n_docs long, total_len long, batch_id string, origin string",
-    ).write.mode(mode).parquet(_comp(index_dir, "totals"))
+    ).write.mode(mode).parquet(index_component_path(index_dir, "totals"))
 
 
 def _valid_batches(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(_comp(index_dir, "totals")).select("batch_id")
+    return spark.read.parquet(index_component_path(index_dir, "totals")).select(
+        "batch_id"
+    )
 
 
 def _committed_tombstones(
@@ -444,13 +412,13 @@ def _committed_tombstones(
     tier resets its tombstones without de-committing the other's.
     Returns None when the index has no tombstone component (the
     overwhelmingly common case: zero read cost, zero plan change)."""
-    path = _comp(
+    path = index_component_path(
         index_dir, "postombstones" if marker == "posbatches" else "tombstones"
     )
     if not os.path.isdir(path):
         return None
     committed = (
-        spark.read.parquet(_comp(index_dir, marker))
+        spark.read.parquet(index_component_path(index_dir, marker))
         .select("batch_id")
         .dropDuplicates(["batch_id"])
     )
@@ -509,52 +477,39 @@ def retract_text_index(
         .agg(
             (-F.count(F.lit(1))).cast("long").alias("n_docs"),
             (-F.sum("dl")).cast("long").alias("total_len"),
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.lit("retract"),
-                    F.min("doc_id"),
-                    F.max("doc_id"),
-                    F.count(F.lit(1)),
-                )
-            ).alias("batch_id"),
+            batch_id_col("doc_id", "retract"),
         )
         .collect()[0]
     )
     docs.select("doc_id").distinct().withColumn(
         "batch_id", F.lit(tot["batch_id"])
-    ).write.mode("append").parquet(_comp(index_dir, "tombstones"))
+    ).write.mode("append").parquet(index_component_path(index_dir, "tombstones"))
     docs.sparkSession.createDataFrame(
         [(tot["n_docs"], tot["total_len"], tot["batch_id"], "retract")],
         "n_docs long, total_len long, batch_id string, origin string",
-    ).write.mode("append").parquet(_comp(index_dir, "totals"))
+    ).write.mode("append").parquet(index_component_path(index_dir, "totals"))
 
 
-def retract_positional_index(docs: DataFrame, index_dir: str) -> None:
+def retract_positional_index(
+    docs: DataFrame, index_dir: str, bid: str | None = None
+) -> None:
     """Retract documents from the positional tier: tombstone rows first,
     then the ``posbatches`` marker row commits them (the positional
     probe carries no corpus totals, so only doc_ids are needed — the
     'retractpos' prefix keeps the batch id disjoint from the BM25
-    tier's, each tier committing its own tombstones independently)."""
-    bid = (
-        docs.agg(
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.lit("retractpos"),
-                    F.min("doc_id"),
-                    F.max("doc_id"),
-                    F.count(F.lit(1)),
-                )
-            ).alias("batch_id")
-        ).collect()[0]["batch_id"]
-    )
+    tier's, each tier committing its own tombstones independently).
+    ``bid`` is the batch's 'retractpos' id when the caller already
+    computed it."""
+    if bid is None:
+        bid = docs.agg(batch_id_col("doc_id", "retractpos")).collect()[0][
+            "batch_id"
+        ]
     docs.select("doc_id").distinct().withColumn(
         "batch_id", F.lit(bid)
-    ).write.mode("append").parquet(_comp(index_dir, "postombstones"))
+    ).write.mode("append").parquet(index_component_path(index_dir, "postombstones"))
     docs.sparkSession.createDataFrame(
         [(bid, "retract")], "batch_id string, origin string"
-    ).write.mode("append").parquet(_comp(index_dir, "posbatches"))
+    ).write.mode("append").parquet(index_component_path(index_dir, "posbatches"))
 
 
 def build_text_index(
@@ -651,12 +606,12 @@ def _reconciled_postings(
     nothing to replay against). Retraction batches are commit records
     only, no posting rows; dedup keys on the precise triple instead
     of whole rows."""
-    p = spark.read.parquet(_comp(index_dir, "postings"))
+    p = spark.read.parquet(index_component_path(index_dir, "postings"))
     if buckets is not None:
         p = p.filter(F.col("bucket").isin([int(b) for b in buckets]))
     if terms is not None:
         p = p.filter(F.col("term").isin(terms))
-    tdf = spark.read.parquet(_comp(index_dir, "totals"))
+    tdf = spark.read.parquet(index_component_path(index_dir, "totals"))
     has_origin = "origin" in tdf.columns
     tot_rows = tdf.select(
         "batch_id", "n_docs", *(["origin"] if has_origin else [])
@@ -698,7 +653,7 @@ def build_champion_lists(
     postings = _reconciled_postings(spark, index_dir)
     _champion_recut(postings, m).write.mode("overwrite").partitionBy(
         "bucket"
-    ).parquet(_comp(index_dir, "champions"))
+    ).parquet(index_component_path(index_dir, "champions"))
 
 
 def append_champion_lists(
@@ -753,7 +708,7 @@ def append_champion_lists(
     try:
         _champion_recut(postings, m).write.mode("overwrite").partitionBy(
             "bucket"
-        ).parquet(_comp(index_dir, "champions"))
+        ).parquet(index_component_path(index_dir, "champions"))
     finally:
         spark.conf.set(mode_key, prev)
 
@@ -799,7 +754,7 @@ def probe_champion_lists(
     terms = sorted({t for _, t in qterm_rows})
     qdf = spark.createDataFrame(qterm_rows, "query_id int, term string")
     champs = _apply_tombstones(
-        spark.read.parquet(_comp(index_dir, "champions"))
+        spark.read.parquet(index_component_path(index_dir, "champions"))
         .filter(F.col("bucket").isin([int(b) for b in buckets]))
         .filter(F.col("term").isin(terms))
         .select("term", "doc_id", "tf", "dl", "df"),
@@ -808,7 +763,7 @@ def probe_champion_lists(
         "totals",
     )
     totals = (
-        spark.read.parquet(_comp(index_dir, "totals"))
+        spark.read.parquet(index_component_path(index_dir, "totals"))
         .dropDuplicates(["batch_id"])
         .agg(
             F.sum("n_docs").alias("n_docs"),
@@ -874,7 +829,7 @@ def probe_text_index(
     # per-batch rows summed (append-only totals; see build_text_index);
     # batch_id dedup makes a replayed totals row harmless too
     totals = (
-        spark.read.parquet(_comp(index_dir, "totals"))
+        spark.read.parquet(index_component_path(index_dir, "totals"))
         .dropDuplicates(["batch_id"])
         .agg(
             F.sum("n_docs").alias("n_docs"),
@@ -1142,9 +1097,11 @@ def _write_positional_batch(
     import shutil
 
     if mode == "overwrite":
-        shutil.rmtree(_comp(index_dir, "posbatches"), ignore_errors=True)
-        shutil.rmtree(_comp(index_dir, "postombstones"), ignore_errors=True)
-    bid = _batch_id_agg(docs).collect()[0]["batch_id"]
+        shutil.rmtree(index_component_path(index_dir, "posbatches"), ignore_errors=True)
+        shutil.rmtree(
+            index_component_path(index_dir, "postombstones"), ignore_errors=True
+        )
+    bid = docs.agg(batch_id_col("doc_id")).collect()[0]["batch_id"]
     tok = docs.select(
         "doc_id",
         F.posexplode(_ANALYZERS[analyzer][0]("text")).alias("pos", "term"),
@@ -1162,12 +1119,12 @@ def _write_positional_batch(
         )
     )
     positional.write.mode(mode).partitionBy("bucket").parquet(
-        _comp(index_dir, "positional")
+        index_component_path(index_dir, "positional")
     )
     origin = "build" if mode == "overwrite" else "append"
     docs.sparkSession.createDataFrame(
         [(bid, origin)], "batch_id string, origin string"
-    ).write.mode(mode).parquet(_comp(index_dir, "posbatches"))
+    ).write.mode(mode).parquet(index_component_path(index_dir, "posbatches"))
 
 
 def build_positional_index(
@@ -1222,7 +1179,7 @@ def probe_phrase_index(
     # for a single-batch OVERWRITE-built tier (origin provenance on
     # the posbatches rows, r15 advice — an append-created single batch
     # can carry torn-replay duplicates)
-    pbdf = spark.read.parquet(_comp(index_dir, "posbatches"))
+    pbdf = spark.read.parquet(index_component_path(index_dir, "posbatches"))
     has_origin = "origin" in pbdf.columns
     pb_rows = pbdf.select(
         "batch_id", *(["origin"] if has_origin else [])
@@ -1235,16 +1192,16 @@ def probe_phrase_index(
     }
     single_build = len(ingest) == 1 and set(ingest.values()) == {"build"}
     tok = (
-        spark.read.parquet(_comp(index_dir, "positional"))
+        spark.read.parquet(index_component_path(index_dir, "positional"))
         .filter(F.col("bucket").isin([int(b) for b in buckets]))
         .filter(F.col("term").isin(terms))
     )
     if len(committed_ids) <= _BATCH_ISIN_CAP:
         tok = tok.filter(F.col("batch_id").isin(committed_ids))
     else:
-        valid = spark.read.parquet(_comp(index_dir, "posbatches")).select(
-            "batch_id"
-        )
+        valid = spark.read.parquet(
+            index_component_path(index_dir, "posbatches")
+        ).select("batch_id")
         tok = tok.join(F.broadcast(valid), "batch_id", "leftsemi")
     if not single_build:
         tok = tok.dropDuplicates(["term", "doc_id", "batch_id"])
@@ -1278,50 +1235,26 @@ def compact_text_index(
     a compacted index are IDENTICAL (pytest-pinned): compaction changes
     bytes, not rankings.
 
-    Publication is the MinHash compactor's snapshot-isolation shape
-    (dedup.compact_minhash_index): every component is rewritten into
-    ``versions/v<N+1>/`` and becomes live via ONE atomic ``os.replace``
-    of the CURRENT pointer — no window where a live component is
-    missing; a crash anywhere leaves CURRENT on intact data, and an
-    interrupted compaction's orphan dir is simply superseded by the
-    re-run (replay converges). Retention keeps the published and
-    previous versions; the flat build dirs are removed once superseded.
-    Same caveat as the MinHash side: ONE maintenance writer, no
-    concurrent appends during the rewrite (the ingest job and the
-    compactor are the same owner — the reference's operating model).
+    Publication is a versioned, snapshot-isolated publish (every
+    component rewritten into a new version, made live by the
+    CURRENT-pointer swap) under ``operators.index_store``'s crash-safety,
+    retention and single-owner contract; an interrupted compaction's
+    orphan dir is superseded by the re-run.
 
     Returns per-component {before, after} row and parquet-file counts —
     the maintenance job's log line. The new batch ids are
     content-derived ("compact:" + corpus aggregates), so recompacting
     an unchanged index is bit-reproducible."""
-    import shutil
-
     stats: dict = {}
-    versions_root = os.path.join(index_dir, "versions")
-    cur_pointer = os.path.join(index_dir, "CURRENT")
-    prev_version = ""
-    if os.path.exists(cur_pointer):
-        prev_version = open(cur_pointer).read().strip()
-    existing = (
-        sorted(
-            int(v[1:])
-            for v in os.listdir(versions_root)
-            if v.startswith("v") and v[1:].isdigit()
-        )
-        if os.path.isdir(versions_root)
-        else []
-    )
-    next_v = f"v{(existing[-1] + 1) if existing else 1}"
-    new_root = os.path.join(versions_root, next_v)
-    shutil.rmtree(new_root, ignore_errors=True)
+    new_root = next_version(index_dir)
 
     # --- BM25 tier: committed, replay-deduped, tombstone-free postings
     # restamped as one batch; totals folded to a single row (negative
     # retraction rows summed in — the live corpus's exact N/total_len).
-    old_postings = _comp(index_dir, "postings")
+    old_postings = index_component_path(index_dir, "postings")
     postings = _reconciled_postings(spark, index_dir)
     tot = (
-        spark.read.parquet(_comp(index_dir, "totals"))
+        spark.read.parquet(index_component_path(index_dir, "totals"))
         .dropDuplicates(["batch_id"])
         .agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
@@ -1358,7 +1291,7 @@ def compact_text_index(
     ).write.mode("overwrite").parquet(os.path.join(new_root, "totals"))
 
     # --- champion tier: recut from the compacted corpus when present
-    if os.path.isdir(_comp(index_dir, "champions")):
+    if os.path.isdir(index_component_path(index_dir, "champions")):
         champs = _champion_recut(postings, m)
         (
             champs.repartition("bucket")
@@ -1374,10 +1307,10 @@ def compact_text_index(
 
     # --- positional tier: same reconcile (posbatches commit ids,
     # (term, doc_id, batch) replay dedup, tombstones) into one batch
-    if os.path.isdir(_comp(index_dir, "positional")):
-        old_pos = _comp(index_dir, "positional")
+    if os.path.isdir(index_component_path(index_dir, "positional")):
+        old_pos = index_component_path(index_dir, "positional")
         valid = (
-            spark.read.parquet(_comp(index_dir, "posbatches"))
+            spark.read.parquet(index_component_path(index_dir, "posbatches"))
             .select("batch_id")
             .dropDuplicates(["batch_id"])
         )
@@ -1410,20 +1343,11 @@ def compact_text_index(
             [(pbid, "build")], "batch_id string, origin string"
         ).write.mode("overwrite").parquet(os.path.join(new_root, "posbatches"))
 
-    # tombstones are APPLIED, not copied: the new version has none.
-    # atomic publish — the pointer replace is the commit point
-    tmp_pointer = os.path.join(index_dir, ".CURRENT.tmp")
-    with open(tmp_pointer, "w") as f:
-        f.write(next_v)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp_pointer, cur_pointer)
-    keep = {next_v, prev_version}
-    for v in os.listdir(versions_root):
-        if v not in keep:
-            shutil.rmtree(os.path.join(versions_root, v), ignore_errors=True)
-    if prev_version:  # flat layout superseded at least one publish ago
-        for comp in (
+    # tombstones are APPLIED, not copied: the new version has none
+    publish_version(
+        index_dir,
+        new_root,
+        flat=(
             "postings",
             "totals",
             "champions",
@@ -1431,8 +1355,8 @@ def compact_text_index(
             "posbatches",
             "tombstones",
             "postombstones",
-        ):
-            shutil.rmtree(os.path.join(index_dir, comp), ignore_errors=True)
+        ),
+    )
     return stats
 
 
@@ -1480,7 +1404,7 @@ def text_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
 
     def _bucket_file_counts(comp: str) -> dict[int, int]:
         out: dict[int, int] = {}
-        root = _comp(index_dir, comp)
+        root = index_component_path(index_dir, comp)
         for d in _glob.glob(os.path.join(root, "bucket=*")):
             b = int(os.path.basename(d).split("=")[1])
             out[b] = sum(
@@ -1491,7 +1415,7 @@ def text_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     def _tier_stats(
         comp: str, marker: str, committed_ids: list[str]
     ) -> list[tuple]:
-        raw = spark.read.parquet(_comp(index_dir, comp)).select(
+        raw = spark.read.parquet(index_component_path(index_dir, comp)).select(
             "bucket", "term", "doc_id", "batch_id"
         )
         tomb = _committed_tombstones(spark, index_dir, marker)
@@ -1552,26 +1476,28 @@ def text_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     tot_ids = sorted(
         {
             r["batch_id"]
-            for r in spark.read.parquet(_comp(index_dir, "totals"))
+            for r in spark.read.parquet(index_component_path(index_dir, "totals"))
             .select("batch_id")
             .collect()
         }
     )
     rows += _tier_stats("postings", "totals", tot_ids)
-    if os.path.isdir(_comp(index_dir, "positional")):
+    if os.path.isdir(index_component_path(index_dir, "positional")):
         pos_ids = sorted(
             {
                 r["batch_id"]
-                for r in spark.read.parquet(_comp(index_dir, "posbatches"))
+                for r in spark.read.parquet(
+                    index_component_path(index_dir, "posbatches")
+                )
                 .select("batch_id")
                 .collect()
             }
         )
         rows += _tier_stats("positional", "posbatches", pos_ids)
-    if os.path.isdir(_comp(index_dir, "champions")):
+    if os.path.isdir(index_component_path(index_dir, "champions")):
         # champions are a derived cache: no batch stamps; live = rows
         # minus committed BM25-tier tombstones
-        raw = spark.read.parquet(_comp(index_dir, "champions")).select(
+        raw = spark.read.parquet(index_component_path(index_dir, "champions")).select(
             "bucket", "term", "doc_id"
         )
         tomb = _committed_tombstones(spark, index_dir, "totals")

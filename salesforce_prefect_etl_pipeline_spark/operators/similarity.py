@@ -34,6 +34,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
+    batch_id_col,
+    index_component_path,
+    next_version,
+    publish_version,
+    reset_versions,
+)
+
 
 class SeedReplayError(ValueError):
     """The iters=0 seed quantizer/codebook is the SQL-replayable form
@@ -470,19 +478,6 @@ def semdedup_survivors(
     return av.join(pruned, "vec_id", "left_anti").select("vec_id", "list_id", "rk")
 
 
-def ivf_component_path(index_dir: str, comp: str) -> str:
-    """Resolve an IVF index component (``lists`` / ``centroids``)
-    through the same CURRENT-pointer convention as the MinHash index
-    (dedup.index_component_path): flat layout until the first versioned
-    rebuild publishes ``versions/v<N>``; readers and appenders always
-    resolve through this function."""
-    from salesforce_prefect_etl_pipeline_spark.operators.dedup import (
-        index_component_path,
-    )
-
-    return index_component_path(index_dir, comp)
-
-
 def build_ivf_index(
     emb: DataFrame,
     index_dir: str,
@@ -516,29 +511,9 @@ def build_ivf_index(
     import os
     import shutil
 
-    if os.path.exists(os.path.join(index_dir, "CURRENT")):
-        os.remove(os.path.join(index_dir, "CURRENT"))
-        shutil.rmtree(os.path.join(index_dir, "versions"), ignore_errors=True)
+    reset_versions(index_dir)
     shutil.rmtree(os.path.join(index_dir, "tombstones"), ignore_errors=True)
     return _write_ivf_snapshot(emb, index_dir, nlist, iters, seed_emb)
-
-
-def _ivf_batch_id(emb: DataFrame) -> str:
-    """Content-derived batch id for a vector batch (the text tiers'
-    md5(min:max:count) convention, 'ivf'-prefixed): deterministic, no
-    wall clock, identical on replay — the idempotence anchor for
-    streamed appends."""
-    return emb.agg(
-        F.md5(
-            F.concat_ws(
-                ":",
-                F.lit("ivf"),
-                F.min("vec_id"),
-                F.max("vec_id"),
-                F.count(F.lit(1)),
-            )
-        ).alias("batch_id")
-    ).collect()[0]["batch_id"]
 
 
 #: Committed-id sets small enough to push as a plan-time ``isin``
@@ -573,10 +548,10 @@ def _reconciled_lists(spark, index_dir: str, list_ids=None) -> DataFrame:
     sparing the embedding-array comparisons."""
     import os
 
-    df = spark.read.parquet(ivf_component_path(index_dir, "lists"))
+    df = spark.read.parquet(index_component_path(index_dir, "lists"))
     if list_ids is not None:
         df = df.filter(F.col("list_id").isin(list_ids))
-    vb = ivf_component_path(index_dir, "vecbatches")
+    vb = index_component_path(index_dir, "vecbatches")
     if not os.path.isdir(vb):
         return df
     vbdf = spark.read.parquet(vb)
@@ -591,7 +566,7 @@ def _reconciled_lists(spark, index_dir: str, list_ids=None) -> DataFrame:
         if not has_origin or r["origin"] != "retract"
     }
     single_build = len(ingest) == 1 and set(ingest.values()) == {"build"}
-    tomb = ivf_component_path(index_dir, "tombstones")
+    tomb = index_component_path(index_dir, "tombstones")
     # lists carry only ingest-batch stamps; retraction ids exist solely
     # as commit records, so the literal filter is exact either way
     if len(committed_ids) <= _BATCH_ISIN_CAP:
@@ -639,7 +614,7 @@ def _write_ivf_snapshot(
     # r15: every write is batch-stamped with a vecbatches commit record
     # (the text tiers' invariant) so streamed appends get exactly-once
     # reads; centroids land LAST — they carry the ensure gates.
-    bid = _ivf_batch_id(emb)
+    bid = emb.agg(batch_id_col("vec_id", "ivf")).collect()[0]["batch_id"]
     assigned.withColumn("batch_id", F.lit(bid)).write.mode(
         "overwrite"
     ).partitionBy("list_id").parquet(f"{root}/lists")
@@ -664,50 +639,20 @@ def rebuild_ivf_index(
     """Periodic retrain + republish — the rebuild cadence that bounds
     the frozen-quantizer drift ``append_ivf_vectors`` documents, made
     SAFE UNDER CONCURRENT PROBES: the fresh snapshot (retrained
-    centroids + fully re-assigned lists) is written into
-    ``versions/v<N+1>/`` and published by one atomic ``os.replace`` of
-    the ``CURRENT`` pointer (the exact commit discipline of
-    ``dedup.compact_minhash_index``). A probe that resolved the old
-    version keeps reading it (current + previous snapshots are
-    retained); a crash leaves CURRENT on intact data. ``build_ivf_index``
-    remains the initial flat-layout build; in-place overwrite rebuilds
-    are exactly the delete-then-write window this exists to remove."""
-    import os
-    import shutil
-
-    versions_root = os.path.join(index_dir, "versions")
-    cur_pointer = os.path.join(index_dir, "CURRENT")
-    prev_version = ""
-    if os.path.exists(cur_pointer):
-        prev_version = open(cur_pointer).read().strip()
-    existing = (
-        sorted(
-            int(v[1:])
-            for v in os.listdir(versions_root)
-            if v.startswith("v") and v[1:].isdigit()
-        )
-        if os.path.isdir(versions_root)
-        else []
-    )
-    next_v = f"v{(existing[-1] + 1) if existing else 1}"
-    new_root = os.path.join(versions_root, next_v)
-    shutil.rmtree(new_root, ignore_errors=True)
+    centroids + fully re-assigned lists) is written and published as a
+    new version by the CURRENT-pointer swap
+    (``operators.index_store``'s publish contract: a probe that resolved
+    the old version keeps reading it, a crash leaves CURRENT on intact
+    data). ``build_ivf_index`` remains the initial flat-layout build;
+    in-place overwrite rebuilds are exactly the delete-then-write window
+    this exists to remove."""
+    new_root = next_version(index_dir)
     cents = _write_ivf_snapshot(emb, new_root, nlist, iters, seed_emb)
-    tmp_pointer = os.path.join(index_dir, ".CURRENT.tmp")
-    with open(tmp_pointer, "w") as f:
-        f.write(next_v)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp_pointer, cur_pointer)
-    keep = {next_v, prev_version}
-    for v in os.listdir(versions_root):
-        if v not in keep:
-            shutil.rmtree(os.path.join(versions_root, v), ignore_errors=True)
-    if prev_version:
-        shutil.rmtree(os.path.join(index_dir, "lists"), ignore_errors=True)
-        shutil.rmtree(os.path.join(index_dir, "centroids"), ignore_errors=True)
-        shutil.rmtree(os.path.join(index_dir, "vecbatches"), ignore_errors=True)
-        shutil.rmtree(os.path.join(index_dir, "tombstones"), ignore_errors=True)
+    publish_version(
+        index_dir,
+        new_root,
+        flat=("lists", "centroids", "vecbatches", "tombstones"),
+    )
     return cents
 
 
@@ -746,13 +691,13 @@ def append_ivf_vectors(
     # byte-identical rows under the same content-derived id and probes
     # collapse them by full-row dedup — exactly-once without writer
     # coordination (what stream_ivf_index_ingest composes on).
-    bid = _ivf_batch_id(new_emb)
+    bid = new_emb.agg(batch_id_col("vec_id", "ivf")).collect()[0]["batch_id"]
     assigned.withColumn("batch_id", F.lit(bid)).write.mode(
         "append"
-    ).partitionBy("list_id").parquet(ivf_component_path(index_dir, "lists"))
+    ).partitionBy("list_id").parquet(index_component_path(index_dir, "lists"))
     spark.createDataFrame(
         [(bid, "append")], "batch_id string, origin string"
-    ).write.mode("append").parquet(ivf_component_path(index_dir, "vecbatches"))
+    ).write.mode("append").parquet(index_component_path(index_dir, "vecbatches"))
     return cents
 
 
@@ -771,7 +716,7 @@ def ivf_list_stats(spark, index_dir: str) -> DataFrame:
     crosses its threshold."""
     lists = _reconciled_lists(spark, index_dir)
     cents = spark.read.parquet(
-        ivf_component_path(index_dir, "centroids")
+        index_component_path(index_dir, "centroids")
     ).select("list_id")
     nlist = cents.count()
     per = lists.groupBy("list_id").agg(F.count(F.lit(1)).alias("n_vecs"))
@@ -815,7 +760,9 @@ def rebalance_ivf_index(
     )
 
 
-def retract_ivf_vectors(spark, index_dir: str, vec_ids: DataFrame) -> None:
+def retract_ivf_vectors(
+    spark, index_dir: str, vec_ids: DataFrame, bid: str | None = None
+) -> None:
     """Retract vectors from the IVF index (the delete path the text
     tiers got in r15, vector edition): a tombstone batch (vec_id,
     batch_id) lands first, then one ``vecbatches`` row commits it —
@@ -829,10 +776,11 @@ def retract_ivf_vectors(spark, index_dir: str, vec_ids: DataFrame) -> None:
     snapshot carries no tombstone component). Only on the STAMPED
     layout (vecbatches present): an unstamped legacy index has no
     commit surface to make retraction crash-safe, so this raises
-    rather than leaving a silently half-applied delete."""
+    rather than leaving a silently half-applied delete. ``bid`` is the
+    batch's 'retractivf' id when the caller already computed it."""
     import os
 
-    vb = ivf_component_path(index_dir, "vecbatches")
+    vb = index_component_path(index_dir, "vecbatches")
     if not os.path.isdir(vb):
         raise ValueError(
             f"{index_dir} has no vecbatches commit records (pre-r15 "
@@ -842,19 +790,12 @@ def retract_ivf_vectors(spark, index_dir: str, vec_ids: DataFrame) -> None:
     ids = vec_ids.select(
         F.col(vec_ids.columns[0]).cast("long").alias("vec_id")
     ).distinct()
-    bid = ids.agg(
-        F.md5(
-            F.concat_ws(
-                ":",
-                F.lit("retractivf"),
-                F.min("vec_id"),
-                F.max("vec_id"),
-                F.count(F.lit(1)),
-            )
-        ).alias("batch_id")
-    ).collect()[0]["batch_id"]
+    if bid is None:
+        bid = ids.agg(batch_id_col("vec_id", "retractivf")).collect()[0][
+            "batch_id"
+        ]
     ids.withColumn("batch_id", F.lit(bid)).write.mode("append").parquet(
-        ivf_component_path(index_dir, "tombstones")
+        index_component_path(index_dir, "tombstones")
     )
     spark.createDataFrame(
         [(bid, "retract")], "batch_id string, origin string"
@@ -863,7 +804,7 @@ def retract_ivf_vectors(spark, index_dir: str, vec_ids: DataFrame) -> None:
 
 def load_ivf_centroids(spark, index_dir: str) -> np.ndarray:
     rows = (
-        spark.read.parquet(ivf_component_path(index_dir, "centroids"))
+        spark.read.parquet(index_component_path(index_dir, "centroids"))
         .orderBy("list_id")
         .collect()
     )
@@ -1066,7 +1007,7 @@ def build_ivfpq_codes(
     books_comp = "pqresbooks" if residual else "pqbooks"
     enc = pq_encode(lists, books, passthrough=("list_id",))
     enc.write.mode("overwrite").partitionBy("list_id").parquet(
-        ivf_component_path(index_dir, codes_comp)
+        index_component_path(index_dir, codes_comp)
     )
     m, codes, dsub = books.shape
     rows = [
@@ -1077,7 +1018,7 @@ def build_ivfpq_codes(
     spark.createDataFrame(
         rows, "subspace int, code int, c array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(
-        ivf_component_path(index_dir, books_comp)
+        index_component_path(index_dir, books_comp)
     )
 
 
@@ -1085,7 +1026,7 @@ def load_pq_codebooks(
     spark, index_dir: str, comp: str = "pqbooks"
 ) -> np.ndarray:
     rows = (
-        spark.read.parquet(ivf_component_path(index_dir, comp))
+        spark.read.parquet(index_component_path(index_dir, comp))
         .orderBy("subspace", "code")
         .collect()
     )
@@ -1205,7 +1146,7 @@ def probe_ivfpq(
     code_cols = [f"code_{s}" for s in range(m)]
     cand = (
         spark.read.parquet(
-            ivf_component_path(
+            index_component_path(
                 index_dir, "pqrescodes" if residual else "pqcodes"
             )
         )
@@ -1216,9 +1157,9 @@ def probe_ivfpq(
     )
     # retractions AFTER the codes build: drop committed tombstones at
     # read time (same live view as _reconciled_lists)
-    tomb = ivf_component_path(index_dir, "tombstones")
+    tomb = index_component_path(index_dir, "tombstones")
     if os.path.isdir(tomb):
-        vb = ivf_component_path(index_dir, "vecbatches")
+        vb = index_component_path(index_dir, "vecbatches")
         committed = (
             spark.read.parquet(vb)
             .select("batch_id")

@@ -16,6 +16,10 @@ from salesforce_prefect_etl_pipeline_spark.operators import (
     similarity,
     text,
 )
+from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
+    current_index_version,
+    index_component_path,
+)
 from salesforce_prefect_etl_pipeline_spark.memo import AppMemo
 from salesforce_prefect_etl_pipeline_spark.plans import load_table
 from salesforce_prefect_etl_pipeline_spark.queries_registry import register_query
@@ -95,10 +99,6 @@ _QVEC_CACHE = AppMemo()
 def _ivf_centroids(spark, index_dir: str):
     """Centroids of ``index_dir``'s CURRENT version, memoized per
     (application, index dir, resolved version)."""
-    from salesforce_prefect_etl_pipeline_spark.operators.dedup import (
-        current_index_version,
-    )
-
     key = (
         spark.sparkContext.applicationId,
         index_dir,
@@ -129,7 +129,7 @@ def ensure_ivf_index(spark, sf_dir: str, nlist: int = 16, iters: int = 10) -> st
         IVF_INDEX_ROOT, f"{tag}-nlist{nlist}-iters{iters}-det5"
     )
     success = os.path.join(
-        similarity.ivf_component_path(index_dir, "centroids"), "_SUCCESS"
+        index_component_path(index_dir, "centroids"), "_SUCCESS"
     )
     stale = os.path.exists(success) and os.path.getmtime(success) < os.path.getmtime(
         os.path.join(sf_dir, "embeddings.parquet")
@@ -593,7 +593,7 @@ def ensure_minhash_index(spark, sf_dir: str, k: int = 8) -> str:
     silently probed)."""
     tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
     index_dir = os.path.join(MINHASH_INDEX_ROOT, f"{tag}-k{k}-c{_CORPUS_PCT}")
-    success = os.path.join(dedup.index_component_path(index_dir, "bands"), "_SUCCESS")
+    success = os.path.join(index_component_path(index_dir, "bands"), "_SUCCESS")
     src = os.path.join(sf_dir, "documents.parquet")
     stale = os.path.exists(success) and os.path.getmtime(
         success
@@ -1037,10 +1037,10 @@ def _ensure_ivfpq_codes(spark, sf_dir: str, index_dir: str):
     rule, vector edition)."""
     books = _panel_pq_books(spark, sf_dir)
     success = os.path.join(
-        similarity.ivf_component_path(index_dir, "pqcodes"), "_SUCCESS"
+        index_component_path(index_dir, "pqcodes"), "_SUCCESS"
     )
     cent_success = os.path.join(
-        similarity.ivf_component_path(index_dir, "centroids"), "_SUCCESS"
+        index_component_path(index_dir, "centroids"), "_SUCCESS"
     )
     if not os.path.exists(success) or os.path.getmtime(
         success
@@ -1249,10 +1249,10 @@ def _ensure_ivfpq_residual_codes(spark, sf_dir: str, index_dir: str):
     coexist on one index."""
     books = _panel_pq_residual_books(spark, sf_dir)
     success = os.path.join(
-        similarity.ivf_component_path(index_dir, "pqrescodes"), "_SUCCESS"
+        index_component_path(index_dir, "pqrescodes"), "_SUCCESS"
     )
     cent_success = os.path.join(
-        similarity.ivf_component_path(index_dir, "centroids"), "_SUCCESS"
+        index_component_path(index_dir, "centroids"), "_SUCCESS"
     )
     if not os.path.exists(success) or os.path.getmtime(
         success

@@ -33,7 +33,6 @@ band-partitioned layout.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,8 +44,14 @@ from salesforce_prefect_etl_pipeline_spark.operators.dedup import (
     minhash_profile,
     probe_minhash_index,
 )
+from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
+    batch_id_col,
+    committed_batch_ids,
+    index_component_path,
+)
 from salesforce_prefect_etl_pipeline_spark.streaming.windows import (
-    pinned_stream_shuffle,
+    run_available_now,
+    table_link_dir,
 )
 
 
@@ -84,10 +89,6 @@ def _append_profile_to_index(prof: DataFrame, index_dir: str) -> None:
     versioned the index; appends must not run concurrently WITH a
     compaction (same single-owner contract, see
     compact_minhash_index)."""
-    from salesforce_prefect_etl_pipeline_spark.operators.dedup import (
-        index_component_path,
-    )
-
     banded = prof.select(
         "doc_id", F.posexplode(band_key_array(F.col("sig"))).alias("band", "key")
     )
@@ -109,7 +110,6 @@ def stream_dedup_on_ingest(
     accepted_dir: str,
     k: int = 8,
     threshold: float = 0.8,
-    name: str = "dedup_ingest",
     checkpoint_dir: str | None = None,
     max_batch_rows: int = 100_000,
     distributed_accept: bool = False,
@@ -134,8 +134,6 @@ def stream_dedup_on_ingest(
     spark = stream_docs.sparkSession
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_df = batch_df.select("doc_id", "text")
         # enforce the driver-state contract BEFORE anything is
         # collected, and failing fast beats an OOM'd driver
@@ -167,10 +165,6 @@ def stream_dedup_on_ingest(
         # profile would silently drop it from the corpus instead of
         # accepting it (it can't near-dup anything it doesn't shingle).
         prof = minhash_profile(batch_df, k).localCheckpoint(eager=True)
-        from salesforce_prefect_etl_pipeline_spark.operators.dedup import (
-            index_component_path,
-        )
-
         has_index = os.path.exists(
             os.path.join(index_component_path(index_dir, "bands"), "_SUCCESS")
         )
@@ -263,32 +257,13 @@ def stream_dedup_on_ingest(
             pairs_df.unpersist()
             keep_df.unpersist()
 
-    ctx = (
-        tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_")
-        if checkpoint_dir is None
-        else None
-    )
-    ckpt = checkpoint_dir if checkpoint_dir is not None else ctx.name
-    try:
-        with pinned_stream_shuffle(spark):
-            q = (
-                stream_docs.writeStream.foreachBatch(_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if ctx is not None:
-            ctx.cleanup()
+    run_available_now(stream_docs, _batch, checkpoint_dir=checkpoint_dir)
     return accepted_dir
 
 
 def stream_text_index_ingest(
     stream_docs: DataFrame,
     index_dir: str,
-    name: str = "text_index_ingest",
     checkpoint_dir: str | None = None,
     analyzer: str = "raw",
     positional: bool = False,
@@ -326,61 +301,31 @@ def stream_text_index_ingest(
 
     spark = stream_docs.sparkSession
 
-    def _committed(record_path: str) -> set[str]:
-        if not os.path.exists(os.path.join(record_path, "_SUCCESS")):
-            return set()
-        return {
-            r["batch_id"]
-            for r in spark.read.parquet(record_path).select("batch_id").collect()
-        }  # one row per batch — control-plane sized
-
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         b = batch_df.select("doc_id", "text")
         # content-derived id from a doc_id-only aggregate (no tokenize);
         # the stamped append itself is _write_index_batch's single
         # tokenizing scan (r15 verdict task 7). Resolve through the
         # version pointer (r15 layout): a compacted index keeps
         # ingesting into its live snapshot.
-        bid = retrieval._batch_id_agg(b).collect()[0]["batch_id"]
-        tpath = retrieval._comp(index_dir, "totals")
-        if bid not in _committed(tpath):
+        bid = b.agg(batch_id_col("doc_id")).collect()[0]["batch_id"]
+        tpath = index_component_path(index_dir, "totals")
+        if bid not in committed_batch_ids(spark, tpath):
             retrieval._write_index_batch(b, index_dir, "append", analyzer, bid=bid)
-        if positional and bid not in _committed(
-            retrieval._comp(index_dir, "posbatches")
-        ):
+        ppath = index_component_path(index_dir, "posbatches")
+        if positional and bid not in committed_batch_ids(spark, ppath):
             # the positional tier's own stamped write + commit record;
             # guarded separately so a crash between the two tiers'
             # appends replays only the missing one
             retrieval._write_positional_batch(b, index_dir, "append", analyzer)
 
-    ctx = (
-        tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_")
-        if checkpoint_dir is None
-        else None
-    )
-    ckpt = checkpoint_dir if checkpoint_dir is not None else ctx.name
-    try:
-        with pinned_stream_shuffle(spark):
-            q = (
-                stream_docs.writeStream.foreachBatch(_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if ctx is not None:
-            ctx.cleanup()
+    run_available_now(stream_docs, _batch, checkpoint_dir=checkpoint_dir)
     return index_dir
 
 
 def stream_ivf_index_ingest(
     stream_emb: DataFrame,
     index_dir: str,
-    name: str = "ivf_index_ingest",
     checkpoint_dir: str | None = None,
     centroids=None,
 ) -> str:
@@ -414,43 +359,15 @@ def stream_ivf_index_ingest(
         else similarity.load_ivf_centroids(spark, index_dir)
     )
 
-    def _committed(record_path: str) -> set[str]:
-        if not os.path.exists(os.path.join(record_path, "_SUCCESS")):
-            return set()
-        return {
-            r["batch_id"]
-            for r in spark.read.parquet(record_path).select("batch_id").collect()
-        }  # one row per batch — control-plane sized
-
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         b = batch_df.select("vec_id", "embedding")
-        bid = similarity._ivf_batch_id(b)
-        vb = similarity.ivf_component_path(index_dir, "vecbatches")
-        if bid in _committed(vb):
+        bid = b.agg(batch_id_col("vec_id", "ivf")).collect()[0]["batch_id"]
+        vb = index_component_path(index_dir, "vecbatches")
+        if bid in committed_batch_ids(spark, vb):
             return
         similarity.append_ivf_vectors(spark, index_dir, b, centroids=cents)
 
-    ctx = (
-        tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_")
-        if checkpoint_dir is None
-        else None
-    )
-    ckpt = checkpoint_dir if checkpoint_dir is not None else ctx.name
-    try:
-        with pinned_stream_shuffle(spark):
-            q = (
-                stream_emb.writeStream.foreachBatch(_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if ctx is not None:
-            ctx.cleanup()
+    run_available_now(stream_emb, _batch, checkpoint_dir=checkpoint_dir)
     return index_dir
 
 
@@ -470,31 +387,13 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the testdata documents table (a single read-only file)
     through a one-file symlink directory, the stream_events pattern —
     the streaming file source only accepts directories."""
-    link_dir = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_streams",
-        sf_dir.strip("/").replace("/", "_") + "_docs",
-    )
-    os.makedirs(link_dir, exist_ok=True)
-    link = os.path.join(link_dir, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.abspath(f"{sf_dir}/documents.parquet"), link)
-    return stream_documents_dir(spark, link_dir)
+    return stream_documents_dir(spark, table_link_dir(sf_dir, "documents", "_docs"))
 
 
 def stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the testdata embeddings table through a one-file symlink
     directory — :func:`stream_documents` for the vector feed."""
-    link_dir = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_streams",
-        sf_dir.strip("/").replace("/", "_") + "_emb",
-    )
-    os.makedirs(link_dir, exist_ok=True)
-    link = os.path.join(link_dir, "embeddings.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.abspath(f"{sf_dir}/embeddings.parquet"), link)
-    return stream_documents_dir(spark, link_dir)
+    return stream_documents_dir(spark, table_link_dir(sf_dir, "embeddings", "_emb"))
 
 
 def greedy_accept_sql(pairs_sql: str, source: str = "documents") -> str:
@@ -531,7 +430,6 @@ ORDER BY doc_id
 def stream_retract_ingest(
     stream_docs: DataFrame,
     index_dir: str,
-    name: str = "text_retract_ingest",
     checkpoint_dir: str | None = None,
     analyzer: str = "raw",
     positional: bool = False,
@@ -571,58 +469,27 @@ def stream_retract_ingest(
 
     spark = stream_docs.sparkSession
 
-    def _committed(record_path: str) -> set[str]:
-        if not os.path.exists(os.path.join(record_path, "_SUCCESS")):
-            return set()
-        return {
-            r["batch_id"]
-            for r in spark.read.parquet(record_path).select("batch_id").collect()
-        }  # one row per batch — control-plane sized
-
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         b = batch_df.select("doc_id", "text")
-        bid = retrieval._batch_id_agg(b, prefix="retract").collect()[0][
-            "batch_id"
-        ]
-        if bid not in _committed(retrieval._comp(index_dir, "totals")):
+        bid = b.agg(batch_id_col("doc_id", "retract")).collect()[0]["batch_id"]
+        tpath = index_component_path(index_dir, "totals")
+        if bid not in committed_batch_ids(spark, tpath):
             retrieval.retract_text_index(b, index_dir, analyzer)
         if positional:
-            pbid = retrieval._batch_id_agg(b, prefix="retractpos").collect()[
-                0
-            ]["batch_id"]
-            if pbid not in _committed(
-                retrieval._comp(index_dir, "posbatches")
-            ):
-                retrieval.retract_positional_index(b, index_dir)
+            pbid = b.agg(batch_id_col("doc_id", "retractpos")).collect()[0][
+                "batch_id"
+            ]
+            ppath = index_component_path(index_dir, "posbatches")
+            if pbid not in committed_batch_ids(spark, ppath):
+                retrieval.retract_positional_index(b, index_dir, bid=pbid)
 
-    ctx = (
-        tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_")
-        if checkpoint_dir is None
-        else None
-    )
-    ckpt = checkpoint_dir if checkpoint_dir is not None else ctx.name
-    try:
-        with pinned_stream_shuffle(spark):
-            q = (
-                stream_docs.writeStream.foreachBatch(_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if ctx is not None:
-            ctx.cleanup()
+    run_available_now(stream_docs, _batch, checkpoint_dir=checkpoint_dir)
     return index_dir
 
 
 def stream_ivf_retract_ingest(
     stream_ids: DataFrame,
     index_dir: str,
-    name: str = "ivf_retract_ingest",
     checkpoint_dir: str | None = None,
 ) -> str:
     """Streaming vector takedowns — :func:`stream_retract_ingest` for
@@ -638,53 +505,17 @@ def stream_ivf_retract_ingest(
 
     spark = stream_ids.sparkSession
 
-    def _committed(record_path: str) -> set[str]:
-        if not os.path.exists(os.path.join(record_path, "_SUCCESS")):
-            return set()
-        return {
-            r["batch_id"]
-            for r in spark.read.parquet(record_path).select("batch_id").collect()
-        }
-
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ids = batch_df.select(
             F.col(batch_df.columns[0]).cast("long").alias("vec_id")
         ).distinct()
-        bid = ids.agg(
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.lit("retractivf"),
-                    F.min("vec_id"),
-                    F.max("vec_id"),
-                    F.count(F.lit(1)),
-                )
-            ).alias("batch_id")
-        ).collect()[0]["batch_id"]
-        vb = similarity.ivf_component_path(index_dir, "vecbatches")
-        if bid in _committed(vb):
+        bid = ids.agg(batch_id_col("vec_id", "retractivf")).collect()[0][
+            "batch_id"
+        ]
+        vb = index_component_path(index_dir, "vecbatches")
+        if bid in committed_batch_ids(spark, vb):
             return
-        similarity.retract_ivf_vectors(spark, index_dir, ids)
+        similarity.retract_ivf_vectors(spark, index_dir, ids, bid=bid)
 
-    ctx = (
-        tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_")
-        if checkpoint_dir is None
-        else None
-    )
-    ckpt = checkpoint_dir if checkpoint_dir is not None else ctx.name
-    try:
-        with pinned_stream_shuffle(spark):
-            q = (
-                stream_ids.writeStream.foreachBatch(_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if ctx is not None:
-            ctx.cleanup()
+    run_available_now(stream_ids, _batch, checkpoint_dir=checkpoint_dir)
     return index_dir

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import os
 import tempfile
-from contextlib import contextmanager
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,16 +77,26 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The streaming file source only accepts directories; the testdata dir
     holds all tables side by side (and is read-only), so the events file
-    is exposed through a one-file symlink directory under /tmp.
+    is exposed through a one-file symlink directory (:func:`table_link_dir`).
     """
+    return stream_events_dir(spark, table_link_dir(sf_dir, "events"))
+
+
+def table_link_dir(sf_dir: str, table: str, suffix: str = "") -> str:
+    """One-file directory under the temp dir whose only entry is a
+    symlink to ``{sf_dir}/{table}.parquet`` — the streaming file source
+    only accepts directories. ``suffix`` keeps the directories of
+    different tables of one ``sf_dir`` apart."""
     link_dir = os.path.join(
-        tempfile.gettempdir(), "spark_graft_streams", sf_dir.strip("/").replace("/", "_")
+        tempfile.gettempdir(),
+        "spark_graft_streams",
+        sf_dir.strip("/").replace("/", "_") + suffix,
     )
     os.makedirs(link_dir, exist_ok=True)
-    link = os.path.join(link_dir, "events.parquet")
+    link = os.path.join(link_dir, f"{table}.parquet")
     if not os.path.exists(link):
-        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), link)
-    return stream_events_dir(spark, link_dir)
+        os.symlink(os.path.abspath(f"{sf_dir}/{table}.parquet"), link)
+    return link_dir
 
 
 def tumbling_agg(events: DataFrame, size: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
@@ -319,55 +329,67 @@ def stream_stream_attribution_outer(
 #: stores vs 2.5 s at 8; hourly tumbling 1.5-2.2 s vs ~1.1 s. On a real
 #: cluster size this to state volume (~2-3x cores), not to this local
 #: floor.
-STREAM_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+STREAM_SHUFFLE_PARTITIONS = 8
 
 
-@contextmanager
-def pinned_stream_shuffle(spark: SparkSession, n: int | None = None):
-    """Pin spark.sql.shuffle.partitions for a stateful stream's
-    lifetime and restore it after — state partitioning is fixed at
-    first start from this value and AQE cannot coalesce it later. One
-    place instead of a copy per sink (the copies had already drifted
-    in finally-ordering)."""
+def run_available_now(
+    df: DataFrame,
+    on_batch: Callable[[DataFrame, int], None] | None = None,
+    query_name: str | None = None,
+    mode: str = "update",
+    checkpoint_dir: str | None = None,
+) -> None:
+    """Run a streaming plan with Trigger.AvailableNow (process everything
+    new, then stop) and wait for it: into ``on_batch`` via foreachBatch,
+    called for non-empty micro-batches only, or into the memory sink
+    table ``query_name``.
+
+    The checkpoint is a temp dir removed afterwards unless the caller
+    passes ``checkpoint_dir``, which is kept so the next run resumes
+    from the last committed offset. ``spark.sql.shuffle.partitions`` is
+    pinned to ``STREAM_SHUFFLE_PARTITIONS`` for the stream's whole
+    lifetime and restored after, also when a callback raises: state
+    partitioning is fixed at first start from this value and AQE cannot
+    coalesce it later, and callbacks that plan through the caller's
+    session see the same value as the stream's own plans."""
+    spark = df.sparkSession
+    ctx = None
+    if checkpoint_dir is None:
+        ctx = tempfile.TemporaryDirectory(prefix="ckpt_")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(n or STREAM_SHUFFLE_PARTITIONS)
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     try:
-        yield
+        writer = (
+            df.writeStream.outputMode(mode)
+            .option("checkpointLocation", checkpoint_dir or ctx.name)
+            .trigger(availableNow=True)
+        )
+        if on_batch is None:
+            writer = writer.format("memory").queryName(query_name)
+        else:
+
+            def _non_empty(batch_df: DataFrame, batch_id: int) -> None:
+                if not batch_df.isEmpty():
+                    on_batch(batch_df, batch_id)
+
+            writer = writer.foreachBatch(_non_empty)
+        writer.start().awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if ctx is not None:
+            ctx.cleanup()
 
 
 def run_stream_to_batch(
-    result: DataFrame,
-    name: str,
-    mode: str = "complete",
-    shuffle_partitions: int | None = None,
+    result: DataFrame, name: str, mode: str = "complete"
 ) -> DataFrame:
     """Execute a streaming plan with Trigger.AvailableNow into a memory
     sink and return the materialized result (the reference's
     run-the-whole-batch-now cadence, X-ref serve_15min.py). Aggregating
     plans use ``complete`` mode; stream-stream joins emit with
-    ``append`` (rows finalize when the watermark passes them).
-
-    ``spark.sql.shuffle.partitions`` is pinned (default
-    ``STREAM_SHUFFLE_PARTITIONS``) for the duration of the stream and
-    restored after: state partitioning is fixed at first start from this
-    value and AQE cannot coalesce it later."""
-    spark = result.sparkSession
-    with pinned_stream_shuffle(spark, shuffle_partitions):
-        with tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_") as ckpt:
-            q = (
-                result.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    return spark.table(name)
+    ``append`` (rows finalize when the watermark passes them)."""
+    run_available_now(result, query_name=name, mode=mode)
+    return result.sparkSession.table(name)
 
 
 def stream_upsert_snapshot(
@@ -375,7 +397,6 @@ def stream_upsert_snapshot(
     snapshot_path: str,
     key: str,
     version_col: str,
-    name: str = "upsert",
     checkpoint_dir: str | None = None,
 ) -> str:
     """Streaming upsert sink: ``foreachBatch`` folds every micro-batch
@@ -392,34 +413,14 @@ def stream_upsert_snapshot(
     ``update`` output mode: aggregating plans emit only the groups a
     batch changed, exactly the delta the merge needs — ``complete``
     would rewrite every group every batch."""
-    import tempfile as _tf
-
     from salesforce_prefect_etl_pipeline_spark.sources.io import merge_snapshot
 
     spark = result.sparkSession
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_snapshot(spark, snapshot_path, batch_df, key, version_col)
-
-    ctx = (
-        _tf.TemporaryDirectory(prefix=f"ckpt_{name}_")
-        if checkpoint_dir is None
-        else None
+    run_available_now(
+        result,
+        lambda batch_df, _: merge_snapshot(
+            spark, snapshot_path, batch_df, key, version_col
+        ),
+        checkpoint_dir=checkpoint_dir,
     )
-    ckpt = checkpoint_dir if checkpoint_dir is not None else ctx.name
-    try:
-        with pinned_stream_shuffle(spark):
-            q = (
-                result.writeStream.foreachBatch(_merge)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if ctx is not None:
-            ctx.cleanup()
     return snapshot_path

@@ -57,3 +57,22 @@ def assert_matches_oracle(spark, duck, fn, sql, sf_dir=SF_SMALL):
 
     s, o = norm(spark_pdf), norm(oracle_pdf)
     pd.testing.assert_frame_equal(s, o, check_dtype=False, check_exact=True)
+
+
+def batch_totals(docs, analyzer: str = "raw"):
+    """Per-batch text-index totals and batch id from one aggregate over
+    a second tokenizing scan — the reference the index write path's
+    single-scan totals are pinned against."""
+    from pyspark.sql import functions as F
+
+    from salesforce_prefect_etl_pipeline_spark.operators import retrieval
+    from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
+        batch_id_col,
+    )
+
+    tokenize = retrieval._ANALYZERS[analyzer][0]
+    return docs.select("doc_id", F.size(tokenize("text")).alias("dl")).agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("dl").cast("long").alias("total_len"),
+        batch_id_col("doc_id"),
+    )

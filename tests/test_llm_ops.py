@@ -8,6 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from salesforce_prefect_etl_pipeline_spark.operators import dedup, similarity, text
+from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
+    index_component_path,
+)
 from salesforce_prefect_etl_pipeline_spark.plans import load_table
 
 from tests.conftest import SF_SMALL
@@ -339,7 +342,7 @@ def test_ivf_rebuild_is_snapshot_isolated(spark, emb, tmp_path):
     cents_fresh = similarity.build_ivf_index(emb, index_dir, nlist=16, iters=0)
     assert not os.path.exists(os.path.join(index_dir, "CURRENT"))
     assert not os.path.exists(os.path.join(index_dir, "versions"))
-    assert similarity.ivf_component_path(index_dir, "lists") == os.path.join(
+    assert index_component_path(index_dir, "lists") == os.path.join(
         index_dir, "lists"
     )
     assert (similarity.load_ivf_centroids(spark, index_dir) == cents_fresh).all()
@@ -1155,7 +1158,7 @@ def test_compact_minhash_index_preserves_probes_and_drops_tombstones(spark, docs
     assert os.path.isdir(os.path.join(idx, "versions", "v2", "bands"))
     assert os.path.isdir(os.path.join(idx, "versions", "v1", "bands"))
     assert not os.path.exists(os.path.join(idx, "bands"))
-    assert dedup.index_component_path(idx, "bands").endswith(
+    assert index_component_path(idx, "bands").endswith(
         os.path.join("versions", "v2", "bands")
     )
 
@@ -1197,7 +1200,7 @@ def test_compaction_publish_is_snapshot_isolated(spark, docs, tmp_path):
 
     assert os.path.isdir(os.path.join(idx, "versions", "v1", "bands"))
     grown = spark.read.parquet(
-        dedup.index_component_path(idx, "profiles")
+        index_component_path(idx, "profiles")
     ).count()
     base = corpus_side.count()
     assert grown == base + increment.count()
@@ -1207,7 +1210,7 @@ def test_compaction_publish_is_snapshot_isolated(spark, docs, tmp_path):
     dedup.build_minhash_index(corpus_side, idx)
     assert not os.path.exists(os.path.join(idx, "CURRENT"))
     assert not os.path.exists(os.path.join(idx, "versions"))
-    assert dedup.index_component_path(idx, "bands") == os.path.join(idx, "bands")
+    assert index_component_path(idx, "bands") == os.path.join(idx, "bands")
     rebuilt = sorted(
         set(
             (r.da, r.db, r.jaccard)
@@ -1839,9 +1842,9 @@ def test_ivf_retraction_equals_never_ingested_and_compacts(spark, emb, tmp_path)
 
     # (4) rebalance = compaction: physical drop, no tombstone component
     similarity.rebalance_ivf_index(spark, idx, nlist=16, iters=0, seed_emb=emb)
-    raw = spark.read.parquet(similarity.ivf_component_path(idx, "lists"))
+    raw = spark.read.parquet(index_component_path(idx, "lists"))
     assert raw.filter(F.col("vec_id").isin(dead_ids)).count() == 0
-    assert not _os.path.isdir(similarity.ivf_component_path(idx, "tombstones"))
+    assert not _os.path.isdir(index_component_path(idx, "tombstones"))
     assert raw.count() == live.count()
 
     # (5) unstamped legacy layout refuses
@@ -1973,7 +1976,7 @@ def test_ivfpq_codes_respect_reconcile_and_retraction(spark, emb, tmp_path):
     # rebuilding the codes after the retraction physically drops them
     similarity.build_ivfpq_codes(spark, index_dir, books)
     rebuilt = spark.read.parquet(
-        similarity.ivf_component_path(index_dir, "pqcodes")
+        index_component_path(index_dir, "pqcodes")
     )
     assert rebuilt.filter(F.col("vec_id").isin(dead_ids)).count() == 0
     assert [
@@ -2005,7 +2008,7 @@ def test_ivfpq_residual_layout_contract(spark, emb, tmp_path):
     books = similarity.train_pq_codebooks(emb, m=4, codes=16, iters=0)
     similarity.build_ivfpq_codes(spark, index_dir, books)
     plain_before = spark.read.parquet(
-        similarity.ivf_component_path(index_dir, "pqcodes")
+        index_component_path(index_dir, "pqcodes")
     ).collect()
 
     cents = similarity.load_ivf_centroids(spark, index_dir)
@@ -2063,7 +2066,7 @@ def test_ivfpq_residual_layout_contract(spark, emb, tmp_path):
 
     # (4) parallel components: the plain layout is untouched
     plain_after = spark.read.parquet(
-        similarity.ivf_component_path(index_dir, "pqcodes")
+        index_component_path(index_dir, "pqcodes")
     ).collect()
     assert sorted(map(tuple, plain_after)) == sorted(map(tuple, plain_before))
 
@@ -2109,12 +2112,12 @@ def test_ivfpq_residual_gain_on_clustered_corpus(spark, tmp_path):
 
     plain_err = (
         spark.read.parquet(
-            similarity.ivf_component_path(index_dir, "pqcodes")
+            index_component_path(index_dir, "pqcodes")
         ).agg(F.avg("qerr")).collect()[0][0]
     )
     resid_err = (
         spark.read.parquet(
-            similarity.ivf_component_path(index_dir, "pqrescodes")
+            index_component_path(index_dir, "pqrescodes")
         ).agg(F.avg("qerr")).collect()[0][0]
     )
     # not just "less": an order of magnitude, because between-cluster

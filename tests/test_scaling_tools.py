@@ -7,6 +7,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 sys.path.insert(
     0,
     os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"),
@@ -126,11 +128,28 @@ def test_rechunk_splits_single_group_files_and_guard_math(tmp_path):
     assert rc.expected_min_groups(5_000_000) == 16
 
 
-def test_gen_scale_data_wires_the_layout_guard():
-    """gen_scale_data must rechunk its own output and assert the row-
-    group post-condition — the r16 regeneration skipped the separate
-    rechunk step and produced an unsplittable 57 MB-row-group fixture."""
-    src = open(os.path.join(REPO, "tools", "gen_scale_data.py")).read()
-    assert "rechunk_scaledata.main" in src
-    assert "expected_min_groups" in src
-    assert "LAYOUT GUARD" in src
+def test_gen_scale_data_wires_the_layout_guard(tmp_path, monkeypatch):
+    """gen_scale_data must rechunk its own output and then enforce the
+    row-group post-condition — the r16 regeneration skipped the separate
+    rechunk step and produced an unsplittable 57 MB-row-group fixture.
+    Runs the real guard path on a one-row-group fixture: it passes after
+    rechunking, and fails loudly when the rechunk is skipped."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import gen_scale_data
+    import rechunk_scaledata as rc
+
+    n = 1000
+    tbl = pa.table({"k": list(range(n))})
+    path = tmp_path / "docs.parquet"
+    pq.write_table(tbl, path, row_group_size=n)
+    sizing = {"target_groups": 8, "min_rows_per_group": 100}
+    gen_scale_data.enforce_row_group_layout(str(tmp_path), **sizing)
+    assert pq.ParquetFile(path).metadata.num_row_groups >= 8
+    assert pq.read_table(path).equals(tbl)
+
+    pq.write_table(tbl, path, row_group_size=n)  # back to one group
+    monkeypatch.setattr(rc, "main", lambda *a, **k: 0)  # rechunk skipped
+    with pytest.raises(SystemExit, match="LAYOUT GUARD"):
+        gen_scale_data.enforce_row_group_layout(str(tmp_path), **sizing)

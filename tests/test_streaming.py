@@ -10,6 +10,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from salesforce_prefect_etl_pipeline_spark.operators.index_store import batch_id_col
 from salesforce_prefect_etl_pipeline_spark.plans import load_table
 from salesforce_prefect_etl_pipeline_spark.streaming.drift import drift_stream
 from salesforce_prefect_etl_pipeline_spark.streaming.windows import (
@@ -19,7 +20,7 @@ from salesforce_prefect_etl_pipeline_spark.streaming.windows import (
     tumbling_agg,
 )
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, batch_totals
 
 
 def test_streaming_tumbling_equals_batch(spark):
@@ -57,7 +58,9 @@ def two_batch_dir(spark):
 
 def test_stateful_drift_across_microbatches(spark, two_batch_dir):
     events = stream_events_dir(spark, two_batch_dir, max_files_per_trigger=1)
-    out = run_stream_to_batch_append(drift_stream(events, threshold=0.5), "drift_out")
+    out = run_stream_to_batch(
+        drift_stream(events, threshold=0.5), "drift_out", mode="append"
+    )
     rows = out.collect()
     # two batches x n event_types
     types = {r.event_type for r in rows}
@@ -84,30 +87,11 @@ def test_streaming_dedup_across_microbatches(spark, two_batch_dir):
     deduped = dedup_within_watermark(
         events, ["user_id", "event_type"], watermark="3650 days"
     ).select("user_id", "event_type")
-    out = run_stream_to_batch_append(deduped, "dedup_out")
+    out = run_stream_to_batch(deduped, "dedup_out", mode="append")
     batch1 = spark.read.parquet(os.path.join(two_batch_dir, "batch_0.parquet"))
     expected = batch1.select("user_id", "event_type").distinct().count()
     assert out.count() == expected
     assert out.distinct().count() == expected
-
-
-def run_stream_to_batch_append(result, name):
-    """Append-mode variant of run_stream_to_batch (applyInPandasWithState
-    emits append output)."""
-    spark = result.sparkSession
-    import tempfile as tf
-
-    with tf.TemporaryDirectory(prefix=f"ckpt_{name}_") as ckpt:
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 def test_watermark_drops_late_data(spark, tmp_path):
@@ -159,7 +143,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("records"))
         .select(F.col("w.start").cast("string").alias("bucket"), "records")
     )
-    out = run_stream_to_batch_append(agg, "wm_out")
+    out = run_stream_to_batch(agg, "wm_out", mode="append")
     rows = out.collect()
     hour0 = [r.records for r in rows if r.bucket.startswith("1970-01-01 00")]
     # finalized once with only the on-time event; late event 4 dropped
@@ -502,7 +486,7 @@ def test_stream_text_index_torn_batch_replay_is_exactly_once(spark, tmp_path):
     retrieval.build_text_index(head, index_dir)
 
     # (a) tear: postings land, totals commit record does not
-    tot = retrieval._batch_totals(tail).collect()[0]
+    tot = batch_totals(tail).collect()[0]
     retrieval._postings(tail).withColumn(
         "batch_id", F.lit(tot["batch_id"])
     ).write.mode("append").partitionBy("bucket").parquet(f"{index_dir}/postings")
@@ -677,7 +661,7 @@ def test_stream_ivf_index_ingest_multi_batch_equals_monolithic(spark, tmp_path):
     # torn batch: stamped list rows land, no vecbatches record -> the
     # probe is unchanged
     tear = emb.filter(F.col("vec_id").isin([1, 7]))
-    bid = similarity._ivf_batch_id(tear)
+    bid = tear.agg(batch_id_col("vec_id", "ivf")).collect()[0]["batch_id"]
     similarity.ivf_assign(tear, cents).withColumn(
         "batch_id", F.lit("torn-" + bid)
     ).write.mode("append").partitionBy("list_id").parquet(f"{index_dir}/lists")
@@ -801,9 +785,7 @@ def test_stream_retract_torn_and_replayed_batches_are_exactly_once(
     full = [tuple(r) for r in retrieval.probe_text_index(spark, idx).collect()]
 
     # (a) tear: tombstones land, the negative totals row does not
-    bid = retrieval._batch_id_agg(dead, prefix="retract").collect()[0][
-        "batch_id"
-    ]
+    bid = dead.agg(batch_id_col("doc_id", "retract")).collect()[0]["batch_id"]
     dead.select("doc_id").distinct().withColumn(
         "batch_id", F.lit(bid)
     ).write.mode("append").parquet(f"{idx}/tombstones")

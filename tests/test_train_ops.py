@@ -16,6 +16,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from salesforce_prefect_etl_pipeline_spark.operators import retrieval, similarity, train
+from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
+    batch_id_col,
+    index_component_path,
+)
 
 
 def _docs(spark, texts):
@@ -1137,7 +1141,7 @@ def test_compaction_is_probe_identical_and_merges_files(spark, tmp_path):
     assert _all_tier_probes(spark, idx) == before
     # one file per bucket partition at both heavy tiers
     for comp in ("postings", "positional"):
-        root = retrieval._comp(idx, comp)
+        root = index_component_path(idx, comp)
         for bucket_dir in _os.listdir(root):
             if not bucket_dir.startswith("bucket="):
                 continue
@@ -1149,9 +1153,9 @@ def test_compaction_is_probe_identical_and_merges_files(spark, tmp_path):
             assert len(files) == 1, (comp, bucket_dir, files)
         assert stats[comp]["files_after"] < stats[comp]["files_before"]
     # tombstones applied, not carried into the new version
-    assert not _os.path.isdir(retrieval._comp(idx, "tombstones"))
+    assert not _os.path.isdir(index_component_path(idx, "tombstones"))
     # physical drop: the retracted doc's postings are gone from disk
-    raw = spark.read.parquet(retrieval._comp(idx, "postings"))
+    raw = spark.read.parquet(index_component_path(idx, "postings"))
     assert raw.filter("doc_id IN (3, 11)").count() == 0
 
     # interrupted compaction: an orphan version dir (crash before the
@@ -1402,7 +1406,7 @@ def test_single_batch_append_created_index_still_dedups_replay(
     docs = _docs(spark, _LIFECYCLE_TEXTS)
     idx = str(tmp_path / "idx")
     # tear: the append's postings land, the totals commit record doesn't
-    bid = retrieval._batch_id_agg(docs).collect()[0]["batch_id"]
+    bid = docs.agg(batch_id_col("doc_id")).collect()[0]["batch_id"]
     retrieval._postings(docs).withColumn(
         "batch_id", F.lit(bid)
     ).write.mode("append").partitionBy("bucket").parquet(f"{idx}/postings")
@@ -1418,7 +1422,7 @@ def test_single_batch_append_created_index_still_dedups_replay(
     want = [tuple(r) for r in retrieval.probe_text_index(spark, mono).collect()]
     assert got == want and got
     # the positional tier's marker carries the same provenance contract
-    pbid = retrieval._batch_id_agg(docs).collect()[0]["batch_id"]
+    pbid = docs.agg(batch_id_col("doc_id")).collect()[0]["batch_id"]
     tok = docs.select(
         "doc_id",
         F.posexplode(retrieval._ANALYZERS["raw"][0]("text")).alias(
@@ -1479,10 +1483,8 @@ def test_index_batch_write_is_single_tokenizing_scan(spark, tmp_path):
     aggregate (Catalyst prunes the text column — no second tokenize)
     and the totals derived from the written postings equal the
     reference double-scan aggregate bit-for-bit."""
-    import pyspark.sql.functions as F
-
     from salesforce_prefect_etl_pipeline_spark.plans import load_table
-    from tests.conftest import SF_SMALL
+    from tests.conftest import SF_SMALL, batch_totals
 
     import contextlib
     import io
@@ -1502,11 +1504,12 @@ def test_index_batch_write_is_single_tokenizing_scan(spark, tmp_path):
     spark.catalog.clearCache()
     docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
     # column pruning: the id aggregate's scan reads doc_id only
-    assert "text" not in _read_schema_lines(retrieval._batch_id_agg(docs))
+    id_agg = docs.agg(batch_id_col("doc_id"))
+    assert "text" not in _read_schema_lines(id_agg)
     idx = str(tmp_path / "idx")
     retrieval.build_text_index(docs, idx)
     got = spark.read.parquet(f"{idx}/totals").collect()[0]
-    ref = retrieval._batch_totals(docs).collect()[0]
+    ref = batch_totals(docs).collect()[0]
     assert (got["n_docs"], got["total_len"], got["batch_id"]) == (
         ref["n_docs"],
         ref["total_len"],
@@ -1514,20 +1517,8 @@ def test_index_batch_write_is_single_tokenizing_scan(spark, tmp_path):
     )
     assert got["origin"] == "build"
     # IVF twin: the vector batch id aggregate prunes to vec_id only
-    from salesforce_prefect_etl_pipeline_spark.operators import similarity
-
     emb = load_table(spark, SF_SMALL, "embeddings")
-    id_agg = emb.agg(
-        F.md5(
-            F.concat_ws(
-                ":",
-                F.lit("ivf"),
-                F.min("vec_id"),
-                F.max("vec_id"),
-                F.count(F.lit(1)),
-            )
-        ).alias("batch_id")
-    )
+    id_agg = emb.agg(batch_id_col("vec_id", "ivf"))
     assert "embedding" not in _read_schema_lines(id_agg)
 
 
@@ -1538,7 +1529,7 @@ def test_gc_index_versions_matrix(spark, tmp_path):
     and probes are identical before/after."""
     import os as _os
 
-    from salesforce_prefect_etl_pipeline_spark.operators.dedup import (
+    from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
         gc_index_versions,
     )
 
@@ -1596,7 +1587,7 @@ def test_text_index_stats_flags_fragmentation_then_goes_quiet(
         retrieval.append_positional_index(b, idx)
     # a torn+replayed batch leaves replay dups on disk
     extra = docs.filter("doc_id >= 28")
-    bid = retrieval._batch_id_agg(extra).collect()[0]["batch_id"]
+    bid = extra.agg(batch_id_col("doc_id")).collect()[0]["batch_id"]
     retrieval._postings(extra).withColumn(
         "batch_id", F.lit(bid)
     ).write.mode("append").partitionBy("bucket").parquet(f"{idx}/postings")

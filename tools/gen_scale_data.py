@@ -162,27 +162,33 @@ def main() -> None:
     )
     write(emb_out, "embeddings")
 
-    # Layout guard (r16 post-mortem): the coalesce(1) writes above leave
-    # ONE row group per file (Spark's 128 MB parquet block), which makes
-    # big tables unsplittable — sf10's 57 MB single-group documents file
-    # serialized every text kernel and inflated the ladder point 2.4x.
-    # Rechunking is part of generation, not a separate step a caller can
-    # forget; the assert makes a silent revert impossible.
+    enforce_row_group_layout(args.out)
+    print(f"done -> {args.out}")
+
+
+def enforce_row_group_layout(out_dir: str, **group_sizing) -> None:
+    """Layout guard (r16 post-mortem): the coalesce(1) writes of
+    :func:`main` leave ONE row group per file (Spark's 128 MB parquet
+    block), which makes big tables unsplittable — sf10's 57 MB
+    single-group documents file serialized every text kernel and
+    inflated the ladder point 2.4x. Rechunking is part of generation,
+    not a separate step a caller can forget; the check afterwards makes
+    a silent revert impossible. ``group_sizing`` passes
+    ``target_groups`` / ``min_rows_per_group`` to both."""
     import pyarrow.parquet as pq
 
     sys.path.insert(0, str(Path(__file__).resolve().parent))
     import rechunk_scaledata
 
-    rechunk_scaledata.main([args.out])
-    for path in sorted(glob_mod.glob(os.path.join(args.out, "*.parquet"))):
+    rechunk_scaledata.main([out_dir], **group_sizing)
+    for path in sorted(glob_mod.glob(os.path.join(out_dir, "*.parquet"))):
         meta = pq.ParquetFile(path).metadata
-        want = rechunk_scaledata.expected_min_groups(meta.num_rows)
+        want = rechunk_scaledata.expected_min_groups(meta.num_rows, **group_sizing)
         if meta.num_row_groups < want:
             raise SystemExit(
                 f"LAYOUT GUARD: {path} has {meta.num_row_groups} row "
                 f"groups, expected >= {want} for {meta.num_rows} rows"
             )
-    print(f"done -> {args.out}")
 
 
 if __name__ == "__main__":
