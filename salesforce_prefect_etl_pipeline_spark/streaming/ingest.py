@@ -387,13 +387,13 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the testdata documents table (a single read-only file)
     through a one-file symlink directory, the stream_events pattern —
     the streaming file source only accepts directories."""
-    return stream_documents_dir(spark, table_link_dir(sf_dir, "documents", "_docs"))
+    return stream_documents_dir(spark, table_link_dir(sf_dir, "documents"))
 
 
 def stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the testdata embeddings table through a one-file symlink
     directory — :func:`stream_documents` for the vector feed."""
-    return stream_documents_dir(spark, table_link_dir(sf_dir, "embeddings", "_emb"))
+    return stream_documents_dir(spark, table_link_dir(sf_dir, "embeddings"))
 
 
 def greedy_accept_sql(pairs_sql: str, source: str = "documents") -> str:

@@ -82,15 +82,14 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_events_dir(spark, table_link_dir(sf_dir, "events"))
 
 
-def table_link_dir(sf_dir: str, table: str, suffix: str = "") -> str:
-    """One-file directory under the temp dir whose only entry is a
-    symlink to ``{sf_dir}/{table}.parquet`` — the streaming file source
-    only accepts directories. ``suffix`` keeps the directories of
-    different tables of one ``sf_dir`` apart."""
+def table_link_dir(sf_dir: str, table: str) -> str:
+    """One-file directory ``<sf_dir>_<table>`` under the temp dir whose
+    only entry is a symlink to ``{sf_dir}/{table}.parquet`` — the
+    streaming file source only accepts directories."""
     link_dir = os.path.join(
         tempfile.gettempdir(),
         "spark_graft_streams",
-        sf_dir.strip("/").replace("/", "_") + suffix,
+        f"{sf_dir.strip('/').replace('/', '_')}_{table}",
     )
     os.makedirs(link_dir, exist_ok=True)
     link = os.path.join(link_dir, f"{table}.parquet")

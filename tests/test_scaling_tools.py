@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import subprocess
@@ -140,16 +141,22 @@ def test_gen_scale_data_wires_the_layout_guard(tmp_path, monkeypatch):
     import gen_scale_data
     import rechunk_scaledata as rc
 
-    n = 1000
+    # main() itself must run the guard, not leave it to a caller
+    assert "enforce_row_group_layout(args.out)" in inspect.getsource(
+        gen_scale_data.main
+    )
+
+    n = 100_000
     tbl = pa.table({"k": list(range(n))})
     path = tmp_path / "docs.parquet"
-    pq.write_table(tbl, path, row_group_size=n)
-    sizing = {"target_groups": 8, "min_rows_per_group": 100}
-    gen_scale_data.enforce_row_group_layout(str(tmp_path), **sizing)
-    assert pq.ParquetFile(path).metadata.num_row_groups >= 8
+    pq.write_table(tbl, path, row_group_size=n)  # ONE group: the bad layout
+    want = rc.expected_min_groups(n)
+    assert want == 2
+    gen_scale_data.enforce_row_group_layout(str(tmp_path))
+    assert pq.ParquetFile(path).metadata.num_row_groups >= want
     assert pq.read_table(path).equals(tbl)
 
     pq.write_table(tbl, path, row_group_size=n)  # back to one group
     monkeypatch.setattr(rc, "main", lambda *a, **k: 0)  # rechunk skipped
     with pytest.raises(SystemExit, match="LAYOUT GUARD"):
-        gen_scale_data.enforce_row_group_layout(str(tmp_path), **sizing)
+        gen_scale_data.enforce_row_group_layout(str(tmp_path))

@@ -166,24 +166,23 @@ def main() -> None:
     print(f"done -> {args.out}")
 
 
-def enforce_row_group_layout(out_dir: str, **group_sizing) -> None:
+def enforce_row_group_layout(out_dir: str) -> None:
     """Layout guard (r16 post-mortem): the coalesce(1) writes of
     :func:`main` leave ONE row group per file (Spark's 128 MB parquet
     block), which makes big tables unsplittable — sf10's 57 MB
     single-group documents file serialized every text kernel and
     inflated the ladder point 2.4x. Rechunking is part of generation,
     not a separate step a caller can forget; the check afterwards makes
-    a silent revert impossible. ``group_sizing`` passes
-    ``target_groups`` / ``min_rows_per_group`` to both."""
+    a silent revert impossible."""
     import pyarrow.parquet as pq
 
     sys.path.insert(0, str(Path(__file__).resolve().parent))
     import rechunk_scaledata
 
-    rechunk_scaledata.main([out_dir], **group_sizing)
+    rechunk_scaledata.main([out_dir])
     for path in sorted(glob_mod.glob(os.path.join(out_dir, "*.parquet"))):
         meta = pq.ParquetFile(path).metadata
-        want = rechunk_scaledata.expected_min_groups(meta.num_rows, **group_sizing)
+        want = rechunk_scaledata.expected_min_groups(meta.num_rows)
         if meta.num_row_groups < want:
             raise SystemExit(
                 f"LAYOUT GUARD: {path} has {meta.num_row_groups} row "
