@@ -1,9 +1,9 @@
-"""Write, commit and publish lifecycle shared by every persisted index
-family: the MinHash LSH index (operators/dedup.py), the BM25 /
+"""Write, commit, read and publish lifecycle shared by every persisted
+index family: the MinHash LSH index (operators/dedup.py), the BM25 /
 positional / champion text tiers (operators/retrieval.py) and the IVF
-index (operators/similarity.py). Each family keeps its own components
-and reconciled reads; the crash-safety and publish contract below is
-stated here once.
+index (operators/similarity.py). Each family keeps its own component
+names, key columns and pruning predicates; the crash-safety, read and
+publish contract below is stated here once.
 
 **Batches.** Every write lands as one batch whose id is
 content-derived: ``md5("[prefix:]min:max:count")`` over the batch's key
@@ -14,17 +14,46 @@ rebuilt indexes are bit-reproducible.
 **Commit records.** Data rows land first, each stamped with the batch
 id; then one row in the family's commit record (``totals`` /
 ``posbatches`` for the text tiers, ``vecbatches`` for IVF) commits
-them. Readers see committed batches only, so a crash between the two
-writes leaves an invisible orphan, and the replay re-appends
+them (:func:`commit_batch`). The row carries ``origin`` provenance:
+``build`` (an overwrite build or a published snapshot), ``append`` or
+``retract``. Readers see committed batches only, so a crash between
+the two writes leaves an invisible orphan, and the replay re-appends
 byte-identical rows that the readers' replay dedup collapses.
 Retractions use the same order: tombstone rows, then the commit row.
 Streaming sinks skip a batch whose id is already committed
 (:func:`committed_batch_ids`; one row per batch, so driver state is
 bounded by the batch count).
 
-**Versions.** A fresh build writes the flat layout
+**Reads.** Every stamped component is read through
+:func:`reconciled_read`, which sees:
+
+- committed batches only. The commit record is collected once (one row
+  per batch) and its ids filter the data as a plan-time ``isin``
+  literal, which parquet can push into the scan, up to
+  :data:`BATCH_ISIN_CAP` ids; above that, as a broadcast semi-join
+  against the same collected ids;
+- replay-deduplicated rows, keyed on the family's row key plus
+  ``batch_id`` (only a replayed batch can duplicate a row). The dedup
+  is skipped only when the index's one ingest batch (``origin !=
+  "retract"``) is an overwrite ``build``: an overwrite replaces the
+  directory, so there is nothing to replay against, while an
+  append-created single batch (a streamed first micro-batch, torn and
+  replayed) carries duplicates under one committed id;
+- no retracted rows: the tier's committed tombstones
+  (:func:`committed_tombstones`, a tombstone counts only when its batch
+  id is in the tier's own commit record) are anti-joined out. The
+  anti-join is not a forced broadcast: retraction sets grow without
+  bound at crawl scale, and AQE promotes it while they are small.
+
+**Versions.** A fresh MinHash or IVF build writes the flat layout
 ``<index_dir>/<comp>`` after :func:`reset_versions` drops any versioned
-history, which would otherwise shadow it. Compaction and rebuild write
+history, which would otherwise shadow it. The text tiers share one
+directory, so their builds do not reset it (that would drop the other
+tiers' components): an overwrite build rewrites its own tier's
+components in place, resolved through :func:`index_component_path`,
+so inside the live snapshot once one was published. It deletes the
+tier's commit record first, so a torn rebuild fails loudly instead of
+reading new data against stale commit ids. Compaction and rebuild write
 a whole snapshot into the staging root :func:`next_version` returns
 (``versions/v<N+1>/``) and :func:`publish_version` makes it live by
 atomically replacing the ``CURRENT`` pointer file: a temp pointer,
@@ -51,8 +80,9 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Sequence
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -140,15 +170,102 @@ def batch_id_col(key: str, prefix: str = "") -> Column:
     return F.md5(F.concat_ws(":", *parts)).alias("batch_id")
 
 
-def committed_batch_ids(spark: SparkSession, record_path: str) -> set[str]:
-    """Batch ids in a commit record, or the empty set before its first
-    commit. One row per batch — control-plane sized."""
-    if not os.path.exists(os.path.join(record_path, "_SUCCESS")):
+#: Largest committed-id set a read filters as a plan-time ``isin``
+#: literal; larger sets use a broadcast semi-join. Batch counts are
+#: control-plane sized (one id per batch), so even heavy streaming stays
+#: in the hundreds between compactions.
+BATCH_ISIN_CAP = 128
+
+
+def commit_batch(
+    spark: SparkSession, path: str, bid: str, origin: str, mode: str, **longs: int
+) -> None:
+    """Write one commit row ``(*longs, batch_id, origin)`` to the commit
+    record at ``path``. ``longs`` become leading bigint columns in the
+    order given: the text ``totals`` row's ``n_docs`` and
+    ``total_len``."""
+    spark.createDataFrame(
+        [(*longs.values(), bid, origin)],
+        "".join(f"{c} long, " for c in longs) + "batch_id string, origin string",
+    ).write.mode(mode).parquet(path)
+
+
+def committed_batch_ids(spark: SparkSession, index_dir: str, record: str) -> set[str]:
+    """Batch ids in an index's commit record, or the empty set before
+    its first commit. One row per batch — control-plane sized."""
+    path = index_component_path(index_dir, record)
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
         return set()
-    return {
-        r["batch_id"]
-        for r in spark.read.parquet(record_path).select("batch_id").collect()
-    }
+    return {r["batch_id"] for r in spark.read.parquet(path).select("batch_id").collect()}
+
+
+def _id_frame(spark: SparkSession, ids: list[str]) -> DataFrame:
+    return spark.createDataFrame([(b,) for b in ids], "batch_id string")
+
+
+def committed_tombstones(
+    spark: SparkSession,
+    index_dir: str,
+    record: str,
+    tombstones: str,
+    committed: list[str] | None = None,
+) -> DataFrame | None:
+    """Distinct keys retracted from a tier: the rows of its
+    ``tombstones`` component whose batch id is in its own ``record``,
+    without ``batch_id``. None when the tier has no tombstone component
+    (the common case: no read, no plan change). ``committed`` is the
+    record's ids when the caller already collected them; otherwise the
+    plan scans the record."""
+    path = index_component_path(index_dir, tombstones)
+    if not os.path.isdir(path):
+        return None
+    ids = (
+        spark.read.parquet(index_component_path(index_dir, record)).select("batch_id")
+        if committed is None
+        else _id_frame(spark, committed)
+    )
+    return (
+        spark.read.parquet(path)
+        .join(F.broadcast(ids), "batch_id", "leftsemi")
+        .drop("batch_id")
+        .distinct()
+    )
+
+
+def reconciled_read(
+    spark: SparkSession,
+    index_dir: str,
+    data: str,
+    record: str,
+    tombstones: str,
+    key: Sequence[str],
+    prune: Sequence[Column] = (),
+) -> DataFrame:
+    """The live rows of the stamped component ``data``, under the
+    **Reads** contract above: filtered by the ``prune`` predicates
+    first (in order, so partition filters stay static), then reconciled
+    against the ``record`` commit record and the ``tombstones``
+    component. ``key`` names the columns that identify a row within a
+    batch. The result keeps ``batch_id``. A missing commit record fails
+    loudly."""
+    df = spark.read.parquet(index_component_path(index_dir, data))
+    for pred in prune:
+        df = df.filter(pred)
+    rows = (
+        spark.read.parquet(index_component_path(index_dir, record))
+        .select("batch_id", "origin")
+        .collect()
+    )
+    committed = sorted({r["batch_id"] for r in rows})
+    ingest = {r["batch_id"]: r["origin"] for r in rows if r["origin"] != "retract"}
+    if len(committed) <= BATCH_ISIN_CAP:
+        df = df.filter(F.col("batch_id").isin(committed))
+    else:
+        df = df.join(F.broadcast(_id_frame(spark, committed)), "batch_id", "leftsemi")
+    if list(ingest.values()) != ["build"]:
+        df = df.dropDuplicates([*key, "batch_id"])
+    dead = committed_tombstones(spark, index_dir, record, tombstones, committed)
+    return df if dead is None else df.join(dead, dead.columns, "anti")
 
 
 def reset_versions(index_dir: str) -> None:

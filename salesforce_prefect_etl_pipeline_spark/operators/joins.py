@@ -10,16 +10,16 @@ bottleneck at 100 TB:
   splitting handles moderate skew automatically — salting is for the
   pathological keys AQE can't split (a single key bigger than an
   executor).
-- **Bucketing** (`write_bucketed`, `read_bucketed`): pre-shuffle both
-  facts ONCE into the same bucket layout (hash(key) mod n stored as
-  `bucketBy` metadata); every subsequent equi-join on that key is
-  exchange-free. The write pays one shuffle; every downstream join reads
+- **Bucketing** (`write_bucketed`): pre-shuffle both facts ONCE into
+  the same bucket layout (hash(key) mod n stored as `bucketBy`
+  metadata); every subsequent equi-join on that key, read back with
+  `spark.table`, is exchange-free. The write pays one shuffle; every downstream join reads
   co-located buckets — the right trade for fact tables joined daily.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -64,7 +64,3 @@ def write_bucketed(
     if sort_by:
         writer = writer.sortBy(sort_by)
     writer.saveAsTable(table_name)
-
-
-def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)

@@ -47,16 +47,21 @@ scores. No all-pairs anything.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
     batch_id_col,
+    commit_batch,
+    committed_batch_ids,
+    committed_tombstones,
     index_component_path,
     next_version,
     publish_version,
+    reconciled_read,
 )
 from salesforce_prefect_etl_pipeline_spark.operators.text import (
     analyzed_tokens,
@@ -295,8 +300,17 @@ TEXT_INDEX_LAYOUT = 4
 _comp = index_component_path
 
 
+def _term_bucket() -> Column:
+    """The posting partition of the ``term`` column: md5 prefix mod
+    ``TEXT_INDEX_BUCKETS``."""
+    return (
+        F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("long")
+        % TEXT_INDEX_BUCKETS
+    ).cast("int")
+
+
 def _term_bucket_py(term: str) -> int:
-    """Driver-side twin of the bucket expression (hashlib md5 == both
+    """Driver-side twin of :func:`_term_bucket` (hashlib md5 == both
     engines' md5): probes compute their buckets BEFORE the scan, so the
     partition filter is a static literal — pruning guaranteed at plan
     time, no DPP dependence."""
@@ -313,13 +327,7 @@ def _postings(docs: DataFrame, analyzer: str = "raw") -> DataFrame:
     return (
         tok.groupBy("term", "doc_id")
         .agg(F.count(F.lit(1)).alias("tf"), F.min("dl").alias("dl"))
-        .withColumn(
-            "bucket",
-            (
-                F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("long")
-                % TEXT_INDEX_BUCKETS
-            ).cast("int"),
-        )
+        .withColumn("bucket", _term_bucket())
     )
 
 
@@ -357,12 +365,8 @@ def _write_index_batch(
     retraction whose content-derived id collides with a stale tombstone
     batch's cannot resurrect rows that kill live doc_ids.
 
-    The totals row carries build provenance (``origin`` —
-    build/append/retract, r15 advice): probes may skip the replay
-    dedup only for OVERWRITE-built single-batch indexes; an
-    append-created single-batch index (a streamed first micro-batch,
-    torn and replayed) has duplicate rows under one committed id and
-    must still dedup."""
+    The totals row's ``origin`` (build/append) decides whether reads
+    may skip the replay dedup (``index_store``'s **Reads**)."""
     import shutil
 
     spark = docs.sparkSession
@@ -387,58 +391,15 @@ def _write_index_batch(
         )
         .collect()[0]
     )
-    origin = "build" if mode == "overwrite" else "append"
-    spark.createDataFrame(
-        [(tot["n_docs"], tot["total_len"], bid, origin)],
-        "n_docs long, total_len long, batch_id string, origin string",
-    ).write.mode(mode).parquet(index_component_path(index_dir, "totals"))
-
-
-def _valid_batches(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(index_component_path(index_dir, "totals")).select(
-        "batch_id"
+    commit_batch(
+        spark,
+        index_component_path(index_dir, "totals"),
+        bid,
+        "build" if mode == "overwrite" else "append",
+        mode,
+        n_docs=tot["n_docs"],
+        total_len=tot["total_len"],
     )
-
-
-def _committed_tombstones(
-    spark: SparkSession, index_dir: str, marker: str
-) -> DataFrame | None:
-    """doc_ids retracted from a tier, restricted to COMMITTED retraction
-    batches — committed meaning the batch id appears in the tier's own
-    commit record (``totals`` for the BM25/champion tiers, ``posbatches``
-    for the positional tier), the same tear invariant ingest batches
-    carry. Each tier owns its tombstone component (``tombstones`` vs
-    ``postombstones``, r16 layout v4) so an overwrite rebuild of one
-    tier resets its tombstones without de-committing the other's.
-    Returns None when the index has no tombstone component (the
-    overwhelmingly common case: zero read cost, zero plan change)."""
-    path = index_component_path(
-        index_dir, "postombstones" if marker == "posbatches" else "tombstones"
-    )
-    if not os.path.isdir(path):
-        return None
-    committed = (
-        spark.read.parquet(index_component_path(index_dir, marker))
-        .select("batch_id")
-        .dropDuplicates(["batch_id"])
-    )
-    return (
-        spark.read.parquet(path)
-        .join(F.broadcast(committed), "batch_id", "leftsemi")
-        .select("doc_id")
-        .distinct()
-    )
-
-
-def _apply_tombstones(
-    df: DataFrame, spark: SparkSession, index_dir: str, marker: str
-) -> DataFrame:
-    """Anti-join a posting-shaped frame against the tier's committed
-    tombstones (no-op without a tombstone component). Deliberately NOT
-    a forced broadcast: retraction sets can grow unboundedly at crawl
-    scale; AQE promotes the anti-join to broadcast while they're small."""
-    tomb = _committed_tombstones(spark, index_dir, marker)
-    return df if tomb is None else df.join(tomb, "doc_id", "anti")
 
 
 def retract_text_index(
@@ -484,10 +445,15 @@ def retract_text_index(
     docs.select("doc_id").distinct().withColumn(
         "batch_id", F.lit(tot["batch_id"])
     ).write.mode("append").parquet(index_component_path(index_dir, "tombstones"))
-    docs.sparkSession.createDataFrame(
-        [(tot["n_docs"], tot["total_len"], tot["batch_id"], "retract")],
-        "n_docs long, total_len long, batch_id string, origin string",
-    ).write.mode("append").parquet(index_component_path(index_dir, "totals"))
+    commit_batch(
+        docs.sparkSession,
+        index_component_path(index_dir, "totals"),
+        tot["batch_id"],
+        "retract",
+        "append",
+        n_docs=tot["n_docs"],
+        total_len=tot["total_len"],
+    )
 
 
 def retract_positional_index(
@@ -507,9 +473,13 @@ def retract_positional_index(
     docs.select("doc_id").distinct().withColumn(
         "batch_id", F.lit(bid)
     ).write.mode("append").parquet(index_component_path(index_dir, "postombstones"))
-    docs.sparkSession.createDataFrame(
-        [(bid, "retract")], "batch_id string, origin string"
-    ).write.mode("append").parquet(index_component_path(index_dir, "posbatches"))
+    commit_batch(
+        docs.sparkSession,
+        index_component_path(index_dir, "posbatches"),
+        bid,
+        "retract",
+        "append",
+    )
 
 
 def build_text_index(
@@ -527,8 +497,8 @@ def build_text_index(
     atomic together): postings are written FIRST, stamped with the
     batch's content-derived id, and the totals row lands LAST as the
     batch's commit record. A crash between the two leaves a postings
-    batch with no totals row; probes reconcile by semi-joining postings
-    against the totals batch ids, so an uncommitted batch is invisible
+    batch with no totals row; probes read committed batches only
+    (``index_store``'s **Reads**), so an uncommitted batch is invisible
     (its docs counted in neither tf/df nor N/total_len) rather than
     skewing every idf. Totals stay APPEND-ONLY batch rows the probe
     sums, never a read-modify-write. ``analyzer`` fixes the index's
@@ -573,67 +543,54 @@ def _champion_recut(postings: DataFrame, m: int) -> DataFrame:
     )
 
 
-#: Committed-id sets small enough to push as a plan-time ``isin``
-#: literal instead of a broadcast semi-join (the similarity-module
-#: constant, lexical edition).
-_BATCH_ISIN_CAP = 128
-
-
 def _reconciled_postings(
-    spark: SparkSession,
-    index_dir: str,
-    buckets: list[int] | None = None,
-    terms: list[str] | None = None,
+    spark: SparkSession, index_dir: str, prune: Sequence[Column] = ()
 ) -> DataFrame:
-    """The one true posting read every consumer shares: bucket/term
-    pruning pushed BEFORE the scan, committed batches only, replay
-    dedup, and committed tombstones anti-joined out — so probes,
-    champion cuts and compaction all see the identical reconciled
-    corpus.
+    """The BM25 tier's live postings (``index_store.reconciled_read``,
+    keyed on (term, doc_id)): probes, champion cuts and compaction all
+    read this one view."""
+    return reconciled_read(
+        spark, index_dir, "postings", "totals", "tombstones", ("term", "doc_id"), prune
+    )
 
-    Probe hot path kept shuffle-free in the common cases (the r15
-    paired A/B lesson from the vector tier): totals rows are
-    control-plane sized, so the committed ids are collected once and
-    pushed as a plan-time ``isin`` filter when few (falling back to
-    the broadcast semi-join past ``_BATCH_ISIN_CAP``), and the replay
-    dedup — a replayed batch duplicates exactly its
-    (term, doc_id, batch_id) rows — is skipped ONLY for a
-    single-batch index whose one ingest batch is an OVERWRITE build
-    (``origin`` provenance on the totals row, r15 advice: an
-    append-created single-batch index — a streamed first micro-batch,
-    torn and replayed — carries duplicates under one committed id and
-    must still dedup; an overwrite build replaces the directory, so
-    nothing to replay against). Retraction batches are commit records
-    only, no posting rows; dedup keys on the precise triple instead
-    of whole rows."""
-    p = spark.read.parquet(index_component_path(index_dir, "postings"))
-    if buckets is not None:
-        p = p.filter(F.col("bucket").isin([int(b) for b in buckets]))
-    if terms is not None:
-        p = p.filter(F.col("term").isin(terms))
-    tdf = spark.read.parquet(index_component_path(index_dir, "totals"))
-    has_origin = "origin" in tdf.columns
-    tot_rows = tdf.select(
-        "batch_id", "n_docs", *(["origin"] if has_origin else [])
-    ).collect()  # one row per batch — control-plane sized
-    committed_ids = sorted({r["batch_id"] for r in tot_rows})
-    ingest = {
-        r["batch_id"]: (r["origin"] if has_origin else None)
-        for r in tot_rows
-        if r["n_docs"] >= 0
-    }
-    single_build = len(ingest) == 1 and set(ingest.values()) == {"build"}
-    if len(committed_ids) <= _BATCH_ISIN_CAP:
-        p = p.filter(F.col("batch_id").isin(committed_ids))
-    else:
-        p = p.join(
-            F.broadcast(_valid_batches(spark, index_dir)),
-            "batch_id",
-            "leftsemi",
+
+def _term_prune(terms: list[str]) -> list[Column]:
+    """Read predicates for a probe's terms: the bucket partition filter,
+    computed driver-side so pruning is fixed at plan time, then the
+    term filter."""
+    return [
+        F.col("bucket").isin(sorted({_term_bucket_py(t) for t in terms})),
+        F.col("term").isin(terms),
+    ]
+
+
+def _probe_terms(
+    spark: SparkSession, queries: tuple[tuple[int, str], ...], analyzer: str
+) -> tuple[DataFrame, list[Column]]:
+    """A BM25 probe's (query_id, term) relation, tokenized with the
+    analyzer's driver-side twin, and the read predicates for its
+    terms."""
+    rows = sorted(
+        {(qid, t) for qid, text in queries for t in _ANALYZERS[analyzer][1](text)}
+    )
+    return (
+        spark.createDataFrame(rows, "query_id int, term string"),
+        _term_prune(sorted({t for _, t in rows})),
+    )
+
+
+def _corpus_totals(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The live corpus's (n_docs, total_len): the append-only totals
+    rows summed (retraction rows are negative), one row per batch id so
+    a replayed commit row counts once."""
+    return (
+        spark.read.parquet(index_component_path(index_dir, "totals"))
+        .dropDuplicates(["batch_id"])
+        .agg(
+            F.sum("n_docs").alias("n_docs"),
+            F.sum("total_len").cast("long").alias("total_len"),
         )
-    if not single_build:
-        p = p.dropDuplicates(["term", "doc_id", "batch_id"])
-    return _apply_tombstones(p, spark, index_dir, "totals")
+    )
 
 
 def build_champion_lists(
@@ -687,21 +644,16 @@ def append_champion_lists(
         new_docs.select(
             F.explode(_ANALYZERS[analyzer][0]("text")).alias("term")
         )
-        .select(
-            (
-                F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("long")
-                % TEXT_INDEX_BUCKETS
-            )
-            .cast("int")
-            .alias("bucket")
-        )
+        .select(_term_bucket().alias("bucket"))
         .distinct()
         .collect()  # bounded by TEXT_INDEX_BUCKETS rows
     )
     buckets = sorted(int(r["bucket"]) for r in bucket_rows)
     if not buckets:
         return
-    postings = _reconciled_postings(spark, index_dir, buckets=buckets)
+    postings = _reconciled_postings(
+        spark, index_dir, [F.col("bucket").isin(buckets)]
+    )
     mode_key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(mode_key, "static")
     spark.conf.set(mode_key, "dynamic")
@@ -742,37 +694,19 @@ def probe_champion_lists(
     restricted to each term's top-m postings. Exact whenever every
     query term's df <= CHAMPION_M (pytest-pinned both ways); recall on
     common-term queries is the documented trade for the bounded read."""
-    tok_py = _ANALYZERS[analyzer][1]
-    qterm_rows = sorted(
-        {
-            (qid, term)
-            for qid, text in queries
-            for term in tok_py(text)
-        }
-    )
-    buckets = sorted({_term_bucket_py(t) for _, t in qterm_rows})
-    terms = sorted({t for _, t in qterm_rows})
-    qdf = spark.createDataFrame(qterm_rows, "query_id int, term string")
-    champs = _apply_tombstones(
+    qdf, (in_bucket, in_terms) = _probe_terms(spark, queries, analyzer)
+    champs = (
         spark.read.parquet(index_component_path(index_dir, "champions"))
-        .filter(F.col("bucket").isin([int(b) for b in buckets]))
-        .filter(F.col("term").isin(terms))
-        .select("term", "doc_id", "tf", "dl", "df"),
-        spark,
-        index_dir,
-        "totals",
+        .filter(in_bucket)
+        .filter(in_terms)
+        .select("term", "doc_id", "tf", "dl", "df")
     )
-    totals = (
-        spark.read.parquet(index_component_path(index_dir, "totals"))
-        .dropDuplicates(["batch_id"])
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("total_len").cast("long").alias("total_len"),
-        )
-    )
+    dead = committed_tombstones(spark, index_dir, "totals", "tombstones")
+    if dead is not None:
+        champs = champs.join(dead, "doc_id", "anti")
     scored = (
         champs.join(F.broadcast(qdf), "term")
-        .crossJoin(F.broadcast(totals))
+        .crossJoin(F.broadcast(_corpus_totals(spark, index_dir)))
         .select(
             "query_id",
             "doc_id",
@@ -806,37 +740,17 @@ def probe_text_index(
     tokenizing the corpus. Query text is tokenized with
     :func:`text.tokens_py`, the driver-side twin of the corpus
     tokenizer, so probe == direct holds for Unicode-whitespace and
-    empty query text too (r14 advice). Postings are reconciled against
-    the committed totals batches (torn append invisible) and committed
-    tombstones (retracted docs gone — df recomputes from the filtered
-    read, N/total_len sum the negative retraction rows, so the result
-    is exactly the never-ingested corpus's). ``analyzer`` must match
-    the one the index was built with."""
-    tok_py = _ANALYZERS[analyzer][1]
-    qterm_rows = sorted(
-        {
-            (qid, term)
-            for qid, text in queries
-            for term in tok_py(text)
-        }
+    empty query text too (r14 advice). Postings are the reconciled
+    view (``index_store``'s **Reads**): retracted docs are gone, df
+    recomputes from the filtered read and N/total_len sum the negative
+    retraction rows, so the result is exactly the never-ingested
+    corpus's. ``analyzer`` must match the one the index was built
+    with."""
+    qdf, prune = _probe_terms(spark, queries, analyzer)
+    tf0 = _reconciled_postings(spark, index_dir, prune).select(
+        "term", "doc_id", "tf", "dl"
     )
-    buckets = sorted({_term_bucket_py(t) for _, t in qterm_rows})
-    terms = sorted({t for _, t in qterm_rows})
-    qdf = spark.createDataFrame(qterm_rows, "query_id int, term string")
-    tf0 = _reconciled_postings(
-        spark, index_dir, buckets=buckets, terms=terms
-    ).select("term", "doc_id", "tf", "dl")
-    # per-batch rows summed (append-only totals; see build_text_index);
-    # batch_id dedup makes a replayed totals row harmless too
-    totals = (
-        spark.read.parquet(index_component_path(index_dir, "totals"))
-        .dropDuplicates(["batch_id"])
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("total_len").cast("long").alias("total_len"),
-        )
-    )
-    return _score_topk(tf0, qdf, totals, k)
+    return _score_topk(tf0, qdf, _corpus_totals(spark, index_dir), k)
 
 
 def bm25_topk_sql(
@@ -1091,9 +1005,7 @@ def _write_positional_batch(
     de-commits the superseded index's tombstone batches — and removes
     the tier's tombstone component itself (r15 advice: stale tombstone
     rows must not be resurrectable by a content-derived id collision).
-    The marker row carries ``origin`` provenance like the totals row
-    (the probe's replay-dedup skip is only safe for overwrite-built
-    single-batch tiers)."""
+    The marker row carries ``origin`` provenance like the totals row."""
     import shutil
 
     if mode == "overwrite":
@@ -1110,21 +1022,18 @@ def _write_positional_batch(
         tok.groupBy("term", "doc_id")
         .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
         .withColumn("batch_id", F.lit(bid))
-        .withColumn(
-            "bucket",
-            (
-                F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("long")
-                % TEXT_INDEX_BUCKETS
-            ).cast("int"),
-        )
+        .withColumn("bucket", _term_bucket())
     )
     positional.write.mode(mode).partitionBy("bucket").parquet(
         index_component_path(index_dir, "positional")
     )
-    origin = "build" if mode == "overwrite" else "append"
-    docs.sparkSession.createDataFrame(
-        [(bid, origin)], "batch_id string, origin string"
-    ).write.mode(mode).parquet(index_component_path(index_dir, "posbatches"))
+    commit_batch(
+        docs.sparkSession,
+        index_component_path(index_dir, "posbatches"),
+        bid,
+        "build" if mode == "overwrite" else "append",
+        mode,
+    )
 
 
 def build_positional_index(
@@ -1173,41 +1082,15 @@ def probe_phrase_index(
     terms = sorted(
         {t for _, text in queries for t in _ANALYZERS[analyzer][1](text)}
     )
-    buckets = sorted({_term_bucket_py(t) for t in terms})
-    # same shuffle-free fast path as _reconciled_postings: literal
-    # committed-id filter when few; the replay dedup is skipped only
-    # for a single-batch OVERWRITE-built tier (origin provenance on
-    # the posbatches rows, r15 advice — an append-created single batch
-    # can carry torn-replay duplicates)
-    pbdf = spark.read.parquet(index_component_path(index_dir, "posbatches"))
-    has_origin = "origin" in pbdf.columns
-    pb_rows = pbdf.select(
-        "batch_id", *(["origin"] if has_origin else [])
-    ).collect()
-    committed_ids = sorted({r["batch_id"] for r in pb_rows})
-    ingest = {
-        r["batch_id"]: (r["origin"] if has_origin else None)
-        for r in pb_rows
-        if not has_origin or r["origin"] != "retract"
-    }
-    single_build = len(ingest) == 1 and set(ingest.values()) == {"build"}
-    tok = (
-        spark.read.parquet(index_component_path(index_dir, "positional"))
-        .filter(F.col("bucket").isin([int(b) for b in buckets]))
-        .filter(F.col("term").isin(terms))
-    )
-    if len(committed_ids) <= _BATCH_ISIN_CAP:
-        tok = tok.filter(F.col("batch_id").isin(committed_ids))
-    else:
-        valid = spark.read.parquet(
-            index_component_path(index_dir, "posbatches")
-        ).select("batch_id")
-        tok = tok.join(F.broadcast(valid), "batch_id", "leftsemi")
-    if not single_build:
-        tok = tok.dropDuplicates(["term", "doc_id", "batch_id"])
-    tok = _apply_tombstones(tok, spark, index_dir, "posbatches").select(
-        "term", "doc_id", F.explode("positions").alias("pos")
-    )
+    tok = reconciled_read(
+        spark,
+        index_dir,
+        "positional",
+        "posbatches",
+        "postombstones",
+        ("term", "doc_id"),
+        _term_prune(terms),
+    ).select("term", "doc_id", F.explode("positions").alias("pos"))
     return _phrase_anchor_topk(tok, spark, queries, k, analyzer)
 
 
@@ -1224,7 +1107,7 @@ def compact_text_index(
     """Index maintenance for the batch-appended / streamed text tiers
     (r14 verdict task 3): every ``append_text_index`` /
     ``stream_text_index_ingest`` micro-batch lands one stamped parquet
-    batch per tier, and probes full-row-dedup across ALL committed
+    batch per tier, and probes replay-dedup across ALL committed
     batches on every read — after thousands of micro-batches a probe
     reads thousands of small files per touched bucket. This merges each
     tier's committed batches into ONE canonical batch per bucket (one
@@ -1253,15 +1136,7 @@ def compact_text_index(
     # retraction rows summed in — the live corpus's exact N/total_len).
     old_postings = index_component_path(index_dir, "postings")
     postings = _reconciled_postings(spark, index_dir)
-    tot = (
-        spark.read.parquet(index_component_path(index_dir, "totals"))
-        .dropDuplicates(["batch_id"])
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("total_len").cast("long").alias("total_len"),
-        )
-        .collect()[0]
-    )
+    tot = _corpus_totals(spark, index_dir).collect()[0]
     n_postings = postings.count()
     import hashlib
 
@@ -1285,10 +1160,15 @@ def compact_text_index(
     )
     # origin "build": the compacted snapshot is one canonical
     # overwrite-equivalent batch, so probes skip the replay dedup
-    spark.createDataFrame(
-        [(int(tot["n_docs"]), int(tot["total_len"]), bid, "build")],
-        "n_docs long, total_len long, batch_id string, origin string",
-    ).write.mode("overwrite").parquet(os.path.join(new_root, "totals"))
+    commit_batch(
+        spark,
+        os.path.join(new_root, "totals"),
+        bid,
+        "build",
+        "overwrite",
+        n_docs=tot["n_docs"],
+        total_len=tot["total_len"],
+    )
 
     # --- champion tier: recut from the compacted corpus when present
     if os.path.isdir(index_component_path(index_dir, "champions")):
@@ -1305,22 +1185,11 @@ def compact_text_index(
             ).count()
         }
 
-    # --- positional tier: same reconcile (posbatches commit ids,
-    # (term, doc_id, batch) replay dedup, tombstones) into one batch
+    # --- positional tier: the same reconciled read, into one batch
     if os.path.isdir(index_component_path(index_dir, "positional")):
         old_pos = index_component_path(index_dir, "positional")
-        valid = (
-            spark.read.parquet(index_component_path(index_dir, "posbatches"))
-            .select("batch_id")
-            .dropDuplicates(["batch_id"])
-        )
-        posi = _apply_tombstones(
-            spark.read.parquet(old_pos)
-            .join(F.broadcast(valid), "batch_id", "leftsemi")
-            .dropDuplicates(["term", "doc_id", "batch_id"]),
-            spark,
-            index_dir,
-            "posbatches",
+        posi = reconciled_read(
+            spark, index_dir, "positional", "posbatches", "postombstones", ("term", "doc_id")
         ).drop("batch_id")
         n_pos = posi.count()
         pbid = hashlib.md5(f"compactpos:{n_pos}".encode()).hexdigest()
@@ -1339,9 +1208,9 @@ def compact_text_index(
         stats["positional"]["files_after"] = _parquet_file_count(
             os.path.join(new_root, "positional")
         )
-        spark.createDataFrame(
-            [(pbid, "build")], "batch_id string, origin string"
-        ).write.mode("overwrite").parquet(os.path.join(new_root, "posbatches"))
+        commit_batch(
+            spark, os.path.join(new_root, "posbatches"), pbid, "build", "overwrite"
+        )
 
     # tombstones are APPLIED, not copied: the new version has none
     publish_version(
@@ -1412,17 +1281,18 @@ def text_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
             )
         return out
 
-    def _tier_stats(
-        comp: str, marker: str, committed_ids: list[str]
-    ) -> list[tuple]:
+    def _tier_stats(comp: str, record: str, tombstones: str) -> list[tuple]:
         raw = spark.read.parquet(index_component_path(index_dir, comp)).select(
             "bucket", "term", "doc_id", "batch_id"
         )
-        tomb = _committed_tombstones(spark, index_dir, marker)
+        record_ids = sorted(committed_batch_ids(spark, index_dir, record))
+        tomb = committed_tombstones(
+            spark, index_dir, record, tombstones, record_ids
+        )
         grouped = raw.groupBy("bucket", "term", "doc_id", "batch_id").agg(
             F.count(F.lit(1)).alias("copies")
         )
-        committed = F.col("batch_id").isin(committed_ids)
+        committed = F.col("batch_id").isin(record_ids)
         if tomb is None:
             dead = F.lit(False)
         else:
@@ -1472,35 +1342,16 @@ def text_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
             for r in per
         ]
 
-    rows: list[tuple] = []
-    tot_ids = sorted(
-        {
-            r["batch_id"]
-            for r in spark.read.parquet(index_component_path(index_dir, "totals"))
-            .select("batch_id")
-            .collect()
-        }
-    )
-    rows += _tier_stats("postings", "totals", tot_ids)
+    rows = _tier_stats("postings", "totals", "tombstones")
     if os.path.isdir(index_component_path(index_dir, "positional")):
-        pos_ids = sorted(
-            {
-                r["batch_id"]
-                for r in spark.read.parquet(
-                    index_component_path(index_dir, "posbatches")
-                )
-                .select("batch_id")
-                .collect()
-            }
-        )
-        rows += _tier_stats("positional", "posbatches", pos_ids)
+        rows += _tier_stats("positional", "posbatches", "postombstones")
     if os.path.isdir(index_component_path(index_dir, "champions")):
         # champions are a derived cache: no batch stamps; live = rows
         # minus committed BM25-tier tombstones
         raw = spark.read.parquet(index_component_path(index_dir, "champions")).select(
             "bucket", "term", "doc_id"
         )
-        tomb = _committed_tombstones(spark, index_dir, "totals")
+        tomb = committed_tombstones(spark, index_dir, "totals", "tombstones")
         if tomb is None:
             flagged = raw.withColumn("_dead", F.lit(False))
         else:

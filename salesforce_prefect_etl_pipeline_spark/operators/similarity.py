@@ -36,9 +36,12 @@ from pyspark.sql.window import Window
 
 from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
     batch_id_col,
+    commit_batch,
+    committed_tombstones,
     index_component_path,
     next_version,
     publish_version,
+    reconciled_read,
     reset_versions,
 )
 
@@ -516,86 +519,21 @@ def build_ivf_index(
     return _write_ivf_snapshot(emb, index_dir, nlist, iters, seed_emb)
 
 
-#: Committed-id sets small enough to push as a plan-time ``isin``
-#: literal instead of a broadcast semi-join. Batch counts are
-#: control-plane sized (one id per ingest batch), so even heavy
-#: streaming stays in the hundreds between compactions.
-_BATCH_ISIN_CAP = 128
-
-
 def _reconciled_lists(spark, index_dir: str, list_ids=None) -> DataFrame:
-    """The one true inverted-list read: optional list pruning pushed
-    BEFORE the scan, then — when the index carries the stamped layout
-    (a ``vecbatches`` commit-record component) — committed batches
-    only, replay dedup, committed tombstones dropped, batch stamp
-    removed. Unstamped legacy layouts (lists written directly by
-    ``ivf_assign``) pass through untouched, so every pre-r15 index
-    keeps probing identically.
-
-    The probe hot path stays shuffle-free in the common cases (the r15
-    paired A/B caught the naive semi-join + full-row dedup adding
-    ~60% to ann_ivf_probe): committed ids are control-plane sized, so
-    they are collected once and pushed as a PLAN-TIME ``isin`` filter
-    (parquet-scannable) when few; and the replay dedup — only
-    REPLAYED batches can duplicate a (vec_id, batch_id) — is skipped
-    ONLY for a single-batch index whose one ingest batch is an
-    OVERWRITE build (``origin`` provenance on the vecbatches row, r15
-    advice: an append-created single-batch index — a streamed first
-    micro-batch, torn and replayed — carries duplicates under one
-    committed id and must still dedup; an overwrite build replaces the
-    directory, nothing to replay against). Multi-batch indexes dedup
-    on the precise (vec_id, batch_id) key rather than whole rows,
-    sparing the embedding-array comparisons."""
+    """The live inverted lists (``index_store.reconciled_read``, keyed
+    on vec_id), optionally pruned to ``list_ids`` before the scan, with
+    the batch stamp removed. Lists with no ``vecbatches`` commit record
+    (written directly by ``ivf_assign``, as tests build reference
+    indexes) carry no stamps and pass through as stored."""
     import os
 
-    df = spark.read.parquet(index_component_path(index_dir, "lists"))
-    if list_ids is not None:
-        df = df.filter(F.col("list_id").isin(list_ids))
-    vb = index_component_path(index_dir, "vecbatches")
-    if not os.path.isdir(vb):
-        return df
-    vbdf = spark.read.parquet(vb)
-    has_origin = "origin" in vbdf.columns
-    vb_rows = vbdf.select(
-        "batch_id", *(["origin"] if has_origin else [])
-    ).collect()  # one row per batch — control-plane sized
-    committed_ids = sorted({r["batch_id"] for r in vb_rows})
-    ingest = {
-        r["batch_id"]: (r["origin"] if has_origin else None)
-        for r in vb_rows
-        if not has_origin or r["origin"] != "retract"
-    }
-    single_build = len(ingest) == 1 and set(ingest.values()) == {"build"}
-    tomb = index_component_path(index_dir, "tombstones")
-    # lists carry only ingest-batch stamps; retraction ids exist solely
-    # as commit records, so the literal filter is exact either way
-    if len(committed_ids) <= _BATCH_ISIN_CAP:
-        df = df.filter(F.col("batch_id").isin(committed_ids))
-    else:
-        committed = (
-            spark.read.parquet(vb)
-            .select("batch_id")
-            .dropDuplicates(["batch_id"])
-        )
-        df = df.join(F.broadcast(committed), "batch_id", "leftsemi")
-    if not single_build:
-        df = df.dropDuplicates(["vec_id", "batch_id"])
-    df = df.drop("batch_id")
-    if os.path.isdir(tomb):
-        # committed retraction batches only (same tear invariant);
-        # not a forced broadcast on the corpus side — retraction sets
-        # grow unboundedly at crawl scale, AQE promotes while small
-        committed_df = spark.createDataFrame(
-            [(b,) for b in committed_ids], "batch_id string"
-        )
-        dead = (
-            spark.read.parquet(tomb)
-            .join(F.broadcast(committed_df), "batch_id", "leftsemi")
-            .select("vec_id")
-            .distinct()
-        )
-        df = df.join(dead, "vec_id", "anti")
-    return df
+    prune = [] if list_ids is None else [F.col("list_id").isin(list_ids)]
+    if not os.path.isdir(index_component_path(index_dir, "vecbatches")):
+        lists = spark.read.parquet(index_component_path(index_dir, "lists"))
+        return lists.filter(prune[0]) if prune else lists
+    return reconciled_read(
+        spark, index_dir, "lists", "vecbatches", "tombstones", ("vec_id",), prune
+    ).drop("batch_id")
 
 
 def _write_ivf_snapshot(
@@ -618,9 +556,7 @@ def _write_ivf_snapshot(
     assigned.withColumn("batch_id", F.lit(bid)).write.mode(
         "overwrite"
     ).partitionBy("list_id").parquet(f"{root}/lists")
-    spark.createDataFrame(
-        [(bid, "build")], "batch_id string, origin string"
-    ).write.mode("overwrite").parquet(f"{root}/vecbatches")
+    commit_batch(spark, f"{root}/vecbatches", bid, "build", "overwrite")
     cent_df = spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
         schema="list_id int, centroid array<double>",
@@ -685,19 +621,15 @@ def append_ivf_vectors(
         centroids if centroids is not None else load_ivf_centroids(spark, index_dir)
     )
     assigned = ivf_assign(new_emb, cents)
-    # stamped append + commit record, lists FIRST (r15, the text tiers'
-    # tear invariant): a crash before the vecbatches row leaves an
-    # uncommitted batch probes never see; the replay re-appends
-    # byte-identical rows under the same content-derived id and probes
-    # collapse them by full-row dedup — exactly-once without writer
-    # coordination (what stream_ivf_index_ingest composes on).
+    # stamped lists FIRST, then the commit row: index_store's
+    # crash-safety contract, which stream_ivf_index_ingest composes on
     bid = new_emb.agg(batch_id_col("vec_id", "ivf")).collect()[0]["batch_id"]
     assigned.withColumn("batch_id", F.lit(bid)).write.mode(
         "append"
     ).partitionBy("list_id").parquet(index_component_path(index_dir, "lists"))
-    spark.createDataFrame(
-        [(bid, "append")], "batch_id string, origin string"
-    ).write.mode("append").parquet(index_component_path(index_dir, "vecbatches"))
+    commit_batch(
+        spark, index_component_path(index_dir, "vecbatches"), bid, "append", "append"
+    )
     return cents
 
 
@@ -797,9 +729,7 @@ def retract_ivf_vectors(
     ids.withColumn("batch_id", F.lit(bid)).write.mode("append").parquet(
         index_component_path(index_dir, "tombstones")
     )
-    spark.createDataFrame(
-        [(bid, "retract")], "batch_id string, origin string"
-    ).write.mode("append").parquet(vb)
+    commit_batch(spark, vb, bid, "retract", "append")
 
 
 def load_ivf_centroids(spark, index_dir: str) -> np.ndarray:
@@ -1076,8 +1006,6 @@ def probe_ivfpq(
     scoring joins on (query_id, list_id). The ADC estimate then
     approximates ||q − x||² with the coarse term cancelled, which is
     what buys residual PQ its lower quantization error."""
-    import os
-
     cents = (
         centroids if centroids is not None else load_ivf_centroids(spark, index_dir)
     )
@@ -1157,20 +1085,8 @@ def probe_ivfpq(
     )
     # retractions AFTER the codes build: drop committed tombstones at
     # read time (same live view as _reconciled_lists)
-    tomb = index_component_path(index_dir, "tombstones")
-    if os.path.isdir(tomb):
-        vb = index_component_path(index_dir, "vecbatches")
-        committed = (
-            spark.read.parquet(vb)
-            .select("batch_id")
-            .dropDuplicates(["batch_id"])
-        )
-        dead = (
-            spark.read.parquet(tomb)
-            .join(F.broadcast(committed), "batch_id", "leftsemi")
-            .select("vec_id")
-            .distinct()
-        )
+    dead = committed_tombstones(spark, index_dir, "vecbatches", "tombstones")
+    if dead is not None:
         cand = cand.join(dead, "vec_id", "anti")
     scored = cand.join(F.broadcast(lut), lut_keys)
     adc = None

@@ -283,7 +283,7 @@ def stream_text_index_ingest(
     - a crash BEFORE the totals write leaves an invisible orphan batch;
     - the replayed batch is detected as uncommitted (its id is absent
       from totals), re-appends its byte-identical postings, and
-      commits — probes collapse the doubled rows by full-row dedup;
+      commits — probes collapse the doubled rows by replay dedup;
     - a replayed ALREADY-COMMITTED batch (crash after totals, before
       the checkpoint advanced) is skipped by the committed-id guard
       here, with batch-count-bounded driver state.
@@ -305,15 +305,15 @@ def stream_text_index_ingest(
         b = batch_df.select("doc_id", "text")
         # content-derived id from a doc_id-only aggregate (no tokenize);
         # the stamped append itself is _write_index_batch's single
-        # tokenizing scan (r15 verdict task 7). Resolve through the
-        # version pointer (r15 layout): a compacted index keeps
-        # ingesting into its live snapshot.
+        # tokenizing scan (r15 verdict task 7). The guard and the write
+        # resolve through the version pointer (r15 layout): a compacted
+        # index keeps ingesting into its live snapshot.
         bid = b.agg(batch_id_col("doc_id")).collect()[0]["batch_id"]
-        tpath = index_component_path(index_dir, "totals")
-        if bid not in committed_batch_ids(spark, tpath):
+        if bid not in committed_batch_ids(spark, index_dir, "totals"):
             retrieval._write_index_batch(b, index_dir, "append", analyzer, bid=bid)
-        ppath = index_component_path(index_dir, "posbatches")
-        if positional and bid not in committed_batch_ids(spark, ppath):
+        if positional and bid not in committed_batch_ids(
+            spark, index_dir, "posbatches"
+        ):
             # the positional tier's own stamped write + commit record;
             # guarded separately so a crash between the two tiers'
             # appends replays only the missing one
@@ -347,7 +347,7 @@ def stream_ivf_index_ingest(
     committed-id guard here (a replayed ALREADY-committed batch is
     skipped with batch-count-bounded driver state); a replayed torn
     batch re-appends byte-identical rows under the same id, which
-    probe-side full-row dedup collapses. N micro-batches == one
+    probe-side replay dedup collapses. N micro-batches == one
     monolithic build with the same centroids, pytest-pinned
     bit-for-bit."""
     from salesforce_prefect_etl_pipeline_spark.operators import similarity
@@ -362,8 +362,7 @@ def stream_ivf_index_ingest(
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.select("vec_id", "embedding")
         bid = b.agg(batch_id_col("vec_id", "ivf")).collect()[0]["batch_id"]
-        vb = index_component_path(index_dir, "vecbatches")
-        if bid in committed_batch_ids(spark, vb):
+        if bid in committed_batch_ids(spark, index_dir, "vecbatches"):
             return
         similarity.append_ivf_vectors(spark, index_dir, b, centroids=cents)
 
@@ -472,15 +471,13 @@ def stream_retract_ingest(
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.select("doc_id", "text")
         bid = b.agg(batch_id_col("doc_id", "retract")).collect()[0]["batch_id"]
-        tpath = index_component_path(index_dir, "totals")
-        if bid not in committed_batch_ids(spark, tpath):
+        if bid not in committed_batch_ids(spark, index_dir, "totals"):
             retrieval.retract_text_index(b, index_dir, analyzer)
         if positional:
             pbid = b.agg(batch_id_col("doc_id", "retractpos")).collect()[0][
                 "batch_id"
             ]
-            ppath = index_component_path(index_dir, "posbatches")
-            if pbid not in committed_batch_ids(spark, ppath):
+            if pbid not in committed_batch_ids(spark, index_dir, "posbatches"):
                 retrieval.retract_positional_index(b, index_dir, bid=pbid)
 
     run_available_now(stream_docs, _batch, checkpoint_dir=checkpoint_dir)
@@ -512,8 +509,7 @@ def stream_ivf_retract_ingest(
         bid = ids.agg(batch_id_col("vec_id", "retractivf")).collect()[0][
             "batch_id"
         ]
-        vb = index_component_path(index_dir, "vecbatches")
-        if bid in committed_batch_ids(spark, vb):
+        if bid in committed_batch_ids(spark, index_dir, "vecbatches"):
             return
         similarity.retract_ivf_vectors(spark, index_dir, ids, bid=bid)
 

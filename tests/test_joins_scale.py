@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from salesforce_prefect_etl_pipeline_spark.operators.joins import (
-    read_bucketed,
     salted_join,
     write_bucketed,
 )
@@ -56,7 +55,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     write_bucketed(
         li.withColumnRenamed("l_orderkey", "o_orderkey"), "bdb.b_lineitem", "o_orderkey", buckets=8
     )
-    a, b = read_bucketed(spark, "bdb.b_orders"), read_bucketed(spark, "bdb.b_lineitem")
+    a, b = spark.table("bdb.b_orders"), spark.table("bdb.b_lineitem")
     # disable auto-broadcast so the join would otherwise need a shuffle
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

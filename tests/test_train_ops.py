@@ -15,10 +15,17 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from salesforce_prefect_etl_pipeline_spark.operators import retrieval, similarity, train
+from salesforce_prefect_etl_pipeline_spark.operators import (
+    index_store,
+    retrieval,
+    similarity,
+    train,
+)
 from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
     batch_id_col,
+    commit_batch,
     index_component_path,
+    reconciled_read,
 )
 
 
@@ -1453,29 +1460,141 @@ def test_single_batch_append_created_index_still_dedups_replay(
     assert got_ph == want_ph
 
 
-def test_overwrite_build_skips_replay_dedup_append_does_not(spark, tmp_path):
-    """The provenance-gated fast path: a single-batch OVERWRITE-built
-    index reconciles without the dedup exchange; a single-batch
-    APPEND-created one keeps it (r15 advice)."""
-    docs = _docs(spark, _LIFECYCLE_TEXTS)
-    built = str(tmp_path / "built")
-    retrieval.build_text_index(docs, built)
-    plan_built = (
-        retrieval._reconciled_postings(spark, built)
+#: (data, record, tombstones, key) of each stamped component family.
+_RECONCILED = {
+    "bm25": ("postings", "totals", "tombstones", ("term", "doc_id")),
+    "positional": ("positional", "posbatches", "postombstones", ("term", "doc_id")),
+    "ivf": ("lists", "vecbatches", "tombstones", ("vec_id",)),
+}
+
+
+def _emb(spark):
+    from salesforce_prefect_etl_pipeline_spark.plans import load_table
+    from tests.conftest import SF_SMALL
+
+    return load_table(spark, SF_SMALL, "embeddings")
+
+
+@pytest.mark.parametrize("family", sorted(_RECONCILED))
+def test_overwrite_build_skips_replay_dedup_append_does_not(
+    spark, tmp_path, family
+):
+    """The provenance-gated fast path of the shared reconciled read: a
+    single-batch OVERWRITE-built index reconciles without the dedup
+    exchange; a single-batch APPEND-created one keeps it (r15 advice)."""
+    docs, emb = _docs(spark, _LIFECYCLE_TEXTS), _emb(spark)
+    write = {
+        "bm25": (retrieval.build_text_index, retrieval.append_text_index),
+        "positional": (
+            retrieval.build_positional_index,
+            retrieval.append_positional_index,
+        ),
+        "ivf": (
+            lambda e, d: similarity.build_ivf_index(e, d, nlist=4, iters=0),
+            lambda e, d: similarity.append_ivf_vectors(
+                spark, d, e, similarity.train_ivf_centroids(e, nlist=4, iters=0)
+            ),
+        ),
+    }[family]
+    data = emb if family == "ivf" else docs
+    for writer, dedups in zip(write, (False, True)):
+        idx = str(tmp_path / str(dedups))
+        writer(data, idx)
+        plan = (
+            reconciled_read(spark, idx, *_RECONCILED[family])
+            ._jdf.queryExecution()
+            .analyzed()
+            .toString()
+        )
+        assert ("Deduplicate" in plan) == dedups, plan
+
+
+def test_above_cap_semi_join_equals_literal_filter(spark, tmp_path, monkeypatch):
+    """Past ``BATCH_ISIN_CAP`` committed ids the reconciled read filters
+    by a broadcast semi-join instead of the ``isin`` literal. The BM25,
+    phrase and IVF probes return the same rows either way, on indexes
+    with several batches, one committed retraction and one torn
+    tombstone batch."""
+    docs, emb = _docs(spark, _LIFECYCLE_TEXTS), _emb(spark)
+    idx, vidx = str(tmp_path / "text"), str(tmp_path / "ivf")
+    retrieval.build_text_index(docs.filter("doc_id < 3"), idx)
+    retrieval.build_positional_index(docs.filter("doc_id < 3"), idx)
+    for part in ("doc_id BETWEEN 3 AND 5", "doc_id > 5"):
+        retrieval.append_text_index(docs.filter(part), idx)
+        retrieval.append_positional_index(docs.filter(part), idx)
+    retrieval.retract_text_index(docs.filter("doc_id = 4"), idx)
+    retrieval.retract_positional_index(docs.filter("doc_id = 4"), idx)
+    cents = similarity.build_ivf_index(
+        emb.filter("vec_id % 3 = 0"), vidx, nlist=4, iters=0
+    )
+    for part in ("vec_id % 3 = 1", "vec_id % 3 = 2"):
+        similarity.append_ivf_vectors(spark, vidx, emb.filter(part), cents)
+    qvecs = [(r.vec_id, list(r.embedding)) for r in emb.limit(3).collect()]
+    dead_vecs = [qvecs[0][0] + 1, qvecs[1][0] + 1]
+    similarity.retract_ivf_vectors(
+        spark, vidx, spark.createDataFrame([(v,) for v in dead_vecs], "vec_id long")
+    )
+    # torn tombstone batches: rows written, commit row never landed
+    for path, key, ids in (
+        (f"{idx}/tombstones", "doc_id", [0]),
+        (f"{idx}/postombstones", "doc_id", [0]),
+        (f"{vidx}/tombstones", "vec_id", [qvecs[2][0] + 1]),
+    ):
+        spark.createDataFrame(
+            [(i, "torn") for i in ids], f"{key} long, batch_id string"
+        ).write.mode("append").parquet(path)
+
+    def _probes():
+        return (
+            [tuple(r) for r in retrieval.probe_text_index(spark, idx).collect()],
+            [tuple(r) for r in retrieval.probe_phrase_index(spark, idx).collect()],
+            [
+                tuple(r)
+                for r in similarity.probe_ivf(
+                    spark, vidx, qvecs, k=10, nprobe=4, centroids=cents
+                ).collect()
+            ],
+        )
+
+    literal = _probes()
+    bm25, _, ivf = literal
+    assert {r[2] for r in bm25} >= {0} and 4 not in {r[2] for r in bm25}
+    assert not {r[1] for r in ivf} & set(dead_vecs)
+    monkeypatch.setattr(index_store, "BATCH_ISIN_CAP", 0)
+    plan = (
+        reconciled_read(spark, idx, *_RECONCILED["bm25"])
         ._jdf.queryExecution()
-        .analyzed()
+        .optimizedPlan()
         .toString()
     )
-    assert "Deduplicate" not in plan_built
-    appended = str(tmp_path / "appended")
-    retrieval.append_text_index(docs, appended)
-    plan_appended = (
-        retrieval._reconciled_postings(spark, appended)
-        ._jdf.queryExecution()
-        .analyzed()
-        .toString()
-    )
-    assert "Deduplicate" in plan_appended
+    assert "LeftSemi" in plan, plan
+    assert _probes() == literal
+
+
+def test_commit_batch_on_disk_schema(spark, tmp_path):
+    """The commit record format: the text ``totals`` shape (leading
+    ``n_docs``/``total_len`` longs) and the plain (batch_id, origin)
+    shape, column names and order pinned."""
+    totals, record = str(tmp_path / "totals"), str(tmp_path / "record")
+    commit_batch(spark, totals, "b1", "build", "overwrite", n_docs=3, total_len=-7)
+    commit_batch(spark, record, "b2", "retract", "append")
+    commit_batch(spark, record, "b3", "append", "append")
+    t, r = spark.read.parquet(totals), spark.read.parquet(record)
+    assert [(f.name, f.dataType.simpleString()) for f in t.schema] == [
+        ("n_docs", "bigint"),
+        ("total_len", "bigint"),
+        ("batch_id", "string"),
+        ("origin", "string"),
+    ]
+    assert [tuple(x) for x in t.collect()] == [(3, -7, "b1", "build")]
+    assert [(f.name, f.dataType.simpleString()) for f in r.schema] == [
+        ("batch_id", "string"),
+        ("origin", "string"),
+    ]
+    assert sorted(tuple(x) for x in r.collect()) == [
+        ("b2", "retract"),
+        ("b3", "append"),
+    ]
 
 
 def test_index_batch_write_is_single_tokenizing_scan(spark, tmp_path):
