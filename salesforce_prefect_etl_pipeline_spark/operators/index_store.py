@@ -1,27 +1,41 @@
 """Write, commit, read and publish lifecycle shared by every persisted
 index family: the MinHash LSH index (operators/dedup.py), the BM25 /
 positional / champion text tiers (operators/retrieval.py) and the IVF
-index (operators/similarity.py). Each family keeps its own component
-names, key columns and pruning predicates; the crash-safety, read and
-publish contract below is stated here once.
+index (operators/similarity.py). Each stamped tier is declared once as
+a :class:`Tier`; the family modules keep their row shapes and pruning
+predicates, and the crash-safety, read and publish contract below is
+stated here once.
+
+**Tiers.** The three stamped tiers and their components:
+
+==========  ==========  =============  =============  ===========  ==============
+tier        data        commit record  tombstones     ingest id    retract id
+==========  ==========  =============  =============  ===========  ==============
+BM25        postings    totals         tombstones     (no prefix)  ``retract``
+positional  positional  posbatches     postombstones  (no prefix)  ``retractpos``
+IVF         lists       vecbatches     tombstones     ``ivf``      ``retractivf``
+==========  ==========  =============  =============  ===========  ==============
+
+The champion tier and the IVFPQ codes are unstamped derived caches;
+they only read a tier's committed tombstones.
 
 **Batches.** Every write lands as one batch whose id is
-content-derived: ``md5("[prefix:]min:max:count")`` over the batch's key
-column (:func:`batch_id_col`). Batches hold disjoint keys, so ids are
-unique; there is no wall clock, so a replayed batch gets the same id and
-rebuilt indexes are bit-reproducible.
+content-derived: ``md5("[prefix:]min:max:count")`` over the tier's id
+column (:func:`batch_id_col`, :func:`batch_id_of`). Batches hold
+disjoint keys, so ids are unique; there is no wall clock, so a replayed
+batch gets the same id and rebuilt indexes are bit-reproducible.
 
 **Commit records.** Data rows land first, each stamped with the batch
-id; then one row in the family's commit record (``totals`` /
-``posbatches`` for the text tiers, ``vecbatches`` for IVF) commits
-them (:func:`commit_batch`). The row carries ``origin`` provenance:
-``build`` (an overwrite build or a published snapshot), ``append`` or
-``retract``. Readers see committed batches only, so a crash between
-the two writes leaves an invisible orphan, and the replay re-appends
-byte-identical rows that the readers' replay dedup collapses.
-Retractions use the same order: tombstone rows, then the commit row.
-Streaming sinks skip a batch whose id is already committed
-(:func:`committed_batch_ids`; one row per batch, so driver state is
+id (:func:`write_stamped`); then one row in the tier's commit record
+commits them (:func:`commit_batch`). The row carries ``origin``
+provenance: ``build`` (an overwrite build or a published snapshot),
+``append`` or ``retract``. Readers see committed batches only, so a
+crash between the two writes leaves an invisible orphan, and the replay
+re-appends byte-identical rows that the readers' replay dedup
+collapses. Retractions use the same order (:func:`retract_batch`):
+tombstone rows, then the commit row. Streaming sinks skip a batch whose
+id is already committed (:func:`write_uncommitted`, over
+:func:`committed_batch_ids`; one row per batch, so driver state is
 bounded by the batch count).
 
 **Reads.** Every stamped component is read through
@@ -52,12 +66,13 @@ directory, so their builds do not reset it (that would drop the other
 tiers' components): an overwrite build rewrites its own tier's
 components in place, resolved through :func:`index_component_path`,
 so inside the live snapshot once one was published. It deletes the
-tier's commit record first, so a torn rebuild fails loudly instead of
-reading new data against stale commit ids. Compaction and rebuild write
-a whole snapshot into the staging root :func:`next_version` returns
-(``versions/v<N+1>/``) and :func:`publish_version` makes it live by
-atomically replacing the ``CURRENT`` pointer file: a temp pointer,
-``flush`` + ``fsync``, then ``os.replace``. There is never a window
+tier's commit record first (:func:`reset_tier`), so a torn rebuild
+fails loudly instead of reading new data against stale commit ids.
+Compaction and rebuild write a whole snapshot into the staging root
+:func:`next_version` returns (``versions/v<N+1>/``) and
+:func:`publish_version` makes it live by atomically replacing the
+``CURRENT`` pointer file: a temp pointer, ``flush`` + ``fsync``, then
+``os.replace``. There is never a window
 where a live component is missing. A reader that resolved ``CURRENT``
 (:func:`index_component_path`) before the swap keeps reading the
 previous version; one that resolves after reads the new one. A crash
@@ -80,7 +95,8 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Sequence
+from collections.abc import Callable, Mapping, Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -155,19 +171,45 @@ def gc_index_versions(index_dir: str, keep_n: int = 2) -> list[str]:
     return removed
 
 
+@dataclass(frozen=True)
+class Tier:
+    """A stamped tier (see **Tiers**): its three components, the ``key``
+    of a row within a batch, the ``id_col`` batch ids are taken over,
+    its data's ``partition`` column and its two id prefixes."""
+
+    data: str
+    record: str
+    tombstones: str
+    key: tuple[str, ...]
+    id_col: str
+    partition: str
+    ingest_prefix: str
+    retract_prefix: str
+
+    @property
+    def components(self) -> tuple[str, str, str]:
+        return (self.data, self.record, self.tombstones)
+
+
 def batch_id_col(key: str, prefix: str = "") -> Column:
     """Aggregate expression for a batch's content-derived id,
     ``md5("[prefix:]min(key):max(key):count")``, aliased ``batch_id``.
     It touches only ``key``, so Catalyst prunes the scan to that column.
-    Prefixes keep id spaces of different batch kinds disjoint: ""
-    (text ingest), ``retract``, ``retractpos``, ``ivf``,
-    ``retractivf``."""
+    Prefixes keep id spaces of different batch kinds disjoint (the
+    **Tiers** table)."""
     parts = ([F.lit(prefix)] if prefix else []) + [
         F.min(key),
         F.max(key),
         F.count(F.lit(1)),
     ]
     return F.md5(F.concat_ws(":", *parts)).alias("batch_id")
+
+
+def batch_id_of(df: DataFrame, tier: Tier, retract: bool = False) -> str:
+    """The id of ``df`` as one of ``tier``'s ingest batches, or its
+    retraction batches when ``retract``: one id-column aggregate."""
+    prefix = tier.retract_prefix if retract else tier.ingest_prefix
+    return df.agg(batch_id_col(tier.id_col, prefix)).collect()[0]["batch_id"]
 
 
 #: Largest committed-id set a read filters as a plan-time ``isin``
@@ -177,26 +219,84 @@ def batch_id_col(key: str, prefix: str = "") -> Column:
 BATCH_ISIN_CAP = 128
 
 
-def commit_batch(
-    spark: SparkSession, path: str, bid: str, origin: str, mode: str, **longs: int
+def write_stamped(
+    df: DataFrame, index_dir: str, tier: Tier, bid: str, mode: str
 ) -> None:
-    """Write one commit row ``(*longs, batch_id, origin)`` to the commit
-    record at ``path``. ``longs`` become leading bigint columns in the
-    order given: the text ``totals`` row's ``n_docs`` and
-    ``total_len``."""
+    """Write ``df`` as the tier's data rows, each stamped with ``bid``,
+    partitioned by the tier's partition column."""
+    df.withColumn("batch_id", F.lit(bid)).write.mode(mode).partitionBy(
+        tier.partition
+    ).parquet(index_component_path(index_dir, tier.data))
+
+
+def commit_batch(
+    spark: SparkSession,
+    index_dir: str,
+    tier: Tier,
+    bid: str,
+    origin: str,
+    **longs: int,
+) -> None:
+    """Write one commit row ``(*longs, batch_id, origin)`` to the tier's
+    commit record; a ``build`` row replaces the record, any other
+    appends to it. ``longs`` become leading bigint columns in the order
+    given: the text ``totals`` row's ``n_docs`` and ``total_len``."""
     spark.createDataFrame(
         [(*longs.values(), bid, origin)],
         "".join(f"{c} long, " for c in longs) + "batch_id string, origin string",
-    ).write.mode(mode).parquet(path)
+    ).write.mode("overwrite" if origin == "build" else "append").parquet(
+        index_component_path(index_dir, tier.record)
+    )
 
 
-def committed_batch_ids(spark: SparkSession, index_dir: str, record: str) -> set[str]:
-    """Batch ids in an index's commit record, or the empty set before
+def reset_tier(index_dir: str, tier: Tier) -> None:
+    """Before an in-place overwrite build: delete the tier's commit
+    record, which de-commits the superseded data and tombstones, and
+    its tombstone component, so a later retraction whose content id
+    collides with a stale tombstone batch cannot resurrect its rows."""
+    for comp in (tier.record, tier.tombstones):
+        shutil.rmtree(index_component_path(index_dir, comp), ignore_errors=True)
+
+
+def retract_batch(
+    df: DataFrame, index_dir: str, tier: Tier, bid: str, **longs: int
+) -> None:
+    """One retraction batch: the distinct ids of ``df``'s id column as
+    tombstone rows, then the ``retract`` commit row (``longs`` as in
+    :func:`commit_batch`)."""
+    df.select(tier.id_col).distinct().withColumn("batch_id", F.lit(bid)).write.mode(
+        "append"
+    ).parquet(index_component_path(index_dir, tier.tombstones))
+    commit_batch(df.sparkSession, index_dir, tier, bid, "retract", **longs)
+
+
+def committed_batch_ids(spark: SparkSession, index_dir: str, tier: Tier) -> set[str]:
+    """Batch ids in the tier's commit record, or the empty set before
     its first commit. One row per batch — control-plane sized."""
-    path = index_component_path(index_dir, record)
+    path = index_component_path(index_dir, tier.record)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         return set()
     return {r["batch_id"] for r in spark.read.parquet(path).select("batch_id").collect()}
+
+
+def write_uncommitted(
+    df: DataFrame,
+    index_dir: str,
+    writes: Mapping[Tier, Callable[[str], None]],
+    retract: bool = False,
+) -> None:
+    """The streaming sinks' replay guard: for each tier in ``writes``, in
+    order, its writer gets the tier's batch id over ``df`` unless the id
+    is already committed. Tiers with one id rule share one computation;
+    each is guarded alone, so a crash between two tiers' writes replays
+    only the missing one."""
+    ids: dict[tuple[str, str], str] = {}
+    for tier, write in writes.items():
+        rule = (tier.id_col, tier.retract_prefix if retract else tier.ingest_prefix)
+        if rule not in ids:
+            ids[rule] = batch_id_of(df, tier, retract)
+        if ids[rule] not in committed_batch_ids(df.sparkSession, index_dir, tier):
+            write(ids[rule])
 
 
 def _id_frame(spark: SparkSession, ids: list[str]) -> DataFrame:
@@ -206,21 +306,21 @@ def _id_frame(spark: SparkSession, ids: list[str]) -> DataFrame:
 def committed_tombstones(
     spark: SparkSession,
     index_dir: str,
-    record: str,
-    tombstones: str,
+    tier: Tier,
     committed: list[str] | None = None,
 ) -> DataFrame | None:
-    """Distinct keys retracted from a tier: the rows of its
-    ``tombstones`` component whose batch id is in its own ``record``,
-    without ``batch_id``. None when the tier has no tombstone component
-    (the common case: no read, no plan change). ``committed`` is the
+    """Distinct keys retracted from a tier: the rows of its tombstone
+    component whose batch id is in its own commit record, without
+    ``batch_id``. None when the tier has no tombstone component (the
+    common case: no read, no plan change). ``committed`` is the
     record's ids when the caller already collected them; otherwise the
     plan scans the record."""
-    path = index_component_path(index_dir, tombstones)
+    path = index_component_path(index_dir, tier.tombstones)
     if not os.path.isdir(path):
         return None
     ids = (
-        spark.read.parquet(index_component_path(index_dir, record)).select("batch_id")
+        spark.read.parquet(index_component_path(index_dir, tier.record))
+        .select("batch_id")
         if committed is None
         else _id_frame(spark, committed)
     )
@@ -235,24 +335,19 @@ def committed_tombstones(
 def reconciled_read(
     spark: SparkSession,
     index_dir: str,
-    data: str,
-    record: str,
-    tombstones: str,
-    key: Sequence[str],
+    tier: Tier,
     prune: Sequence[Column] = (),
 ) -> DataFrame:
-    """The live rows of the stamped component ``data``, under the
-    **Reads** contract above: filtered by the ``prune`` predicates
-    first (in order, so partition filters stay static), then reconciled
-    against the ``record`` commit record and the ``tombstones``
-    component. ``key`` names the columns that identify a row within a
-    batch. The result keeps ``batch_id``. A missing commit record fails
-    loudly."""
-    df = spark.read.parquet(index_component_path(index_dir, data))
+    """The live rows of the tier's data component, under the **Reads**
+    contract above: filtered by the ``prune`` predicates first (in
+    order, so partition filters stay static), then reconciled against
+    the tier's commit record and tombstones. The result keeps
+    ``batch_id``. A missing commit record fails loudly."""
+    df = spark.read.parquet(index_component_path(index_dir, tier.data))
     for pred in prune:
         df = df.filter(pred)
     rows = (
-        spark.read.parquet(index_component_path(index_dir, record))
+        spark.read.parquet(index_component_path(index_dir, tier.record))
         .select("batch_id", "origin")
         .collect()
     )
@@ -263,8 +358,8 @@ def reconciled_read(
     else:
         df = df.join(F.broadcast(_id_frame(spark, committed)), "batch_id", "leftsemi")
     if list(ingest.values()) != ["build"]:
-        df = df.dropDuplicates([*key, "batch_id"])
-    dead = committed_tombstones(spark, index_dir, record, tombstones, committed)
+        df = df.dropDuplicates([*tier.key, "batch_id"])
+    dead = committed_tombstones(spark, index_dir, tier, committed)
     return df if dead is None else df.join(dead, dead.columns, "anti")
 
 

@@ -47,14 +47,15 @@ scores. No all-pairs anything.
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
+    Tier,
     batch_id_col,
+    batch_id_of,
     commit_batch,
     committed_batch_ids,
     committed_tombstones,
@@ -62,6 +63,9 @@ from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
     next_version,
     publish_version,
     reconciled_read,
+    reset_tier,
+    retract_batch,
+    write_stamped,
 )
 from salesforce_prefect_etl_pipeline_spark.operators.text import (
     analyzed_tokens,
@@ -294,6 +298,19 @@ TEXT_INDEX_BUCKETS = 32
 #: tombstones without touching the other tier's.
 TEXT_INDEX_LAYOUT = 4
 
+#: The stamped text tiers (``index_store``'s **Tiers**): BM25 postings
+#: and the phrase tier's positions, each committed and retracted alone.
+BM25 = Tier(
+    data="postings", record="totals", tombstones="tombstones",
+    key=("term", "doc_id"), id_col="doc_id", partition="bucket",
+    ingest_prefix="", retract_prefix="retract",
+)
+POSITIONAL = Tier(
+    data="positional", record="posbatches", tombstones="postombstones",
+    key=("term", "doc_id"), id_col="doc_id", partition="bucket",
+    ingest_prefix="", retract_prefix="retractpos",
+)
+
 
 #: The benchmark's ``corpus_index`` workload (perfbench/workloads.py)
 #: reads index components through this name.
@@ -332,11 +349,7 @@ def _postings(docs: DataFrame, analyzer: str = "raw") -> DataFrame:
 
 
 def _write_index_batch(
-    docs: DataFrame,
-    index_dir: str,
-    mode: str,
-    analyzer: str = "raw",
-    bid: str | None = None,
+    docs: DataFrame, index_dir: str, mode: str, analyzer: str, bid: str
 ) -> None:
     """The shared stamped two-file write: postings first (every row
     carrying the batch id), then the 1-row totals record — the commit
@@ -344,44 +357,33 @@ def _write_index_batch(
     :func:`build_text_index`).
 
     Single corpus scan (r15 verdict task 7 — the old shape tokenized
-    the corpus twice, once for totals and once for postings): the
-    batch id comes from a doc_id-only aggregate (column-pruned — no
-    text read), the postings write is the ONE tokenizing pass, and the
+    the corpus twice, once for totals and once for postings): ``bid``
+    comes from a doc_id-only aggregate (column-pruned — no text read;
+    the caller's ``batch_id_of``), the postings write is the ONE
+    tokenizing pass, and the
     totals (n_docs, total_len) are derived by reading back the
     just-written batch's (doc_id, dl) pairs — a 2-column scan of data
     this job just produced, keyed per-doc so the derivation is also
     immune to replay-duplicated rows. Values are bit-identical to the
     old double-scan totals aggregate (pytest-pinned).
 
-    The REBUILD (overwrite) path deletes the old totals before touching
-    the postings (r14 advice): the append invariant — postings without
-    a totals row are invisible — inverts on overwrite, where new
-    postings reconciled against STALE totals ids are all 'uncommitted'
-    and probes would silently return empty. Deleting totals first makes
-    a torn rebuild fail LOUDLY (missing totals path) instead; it also
-    de-commits any tombstone batches of the superseded index, so a
-    rebuild never inherits retractions aimed at the old corpus — and
-    (r15 advice) the tombstone component itself is removed, so a later
-    retraction whose content-derived id collides with a stale tombstone
-    batch's cannot resurrect rows that kill live doc_ids.
+    The REBUILD (overwrite) path runs ``index_store.reset_tier``
+    before touching the postings (r14 advice): the append invariant —
+    postings without a totals row are invisible — inverts on overwrite,
+    where new postings reconciled against STALE totals ids are all
+    'uncommitted' and probes would silently return empty. Deleting
+    totals first makes a torn rebuild fail LOUDLY (missing totals path)
+    instead, and the reset also drops the superseded index's
+    tombstones.
 
     The totals row's ``origin`` (build/append) decides whether reads
     may skip the replay dedup (``index_store``'s **Reads**)."""
-    import shutil
-
     spark = docs.sparkSession
-    if bid is None:
-        bid = docs.agg(batch_id_col("doc_id")).collect()[0]["batch_id"]
     if mode == "overwrite":
-        shutil.rmtree(index_component_path(index_dir, "totals"), ignore_errors=True)
-        shutil.rmtree(index_component_path(index_dir, "tombstones"), ignore_errors=True)
-    _postings(docs, analyzer).withColumn(
-        "batch_id", F.lit(bid)
-    ).write.mode(mode).partitionBy("bucket").parquet(
-        index_component_path(index_dir, "postings")
-    )
+        reset_tier(index_dir, BM25)
+    write_stamped(_postings(docs, analyzer), index_dir, BM25, bid, mode)
     tot = (
-        spark.read.parquet(index_component_path(index_dir, "postings"))
+        spark.read.parquet(index_component_path(index_dir, BM25.data))
         .filter(F.col("batch_id") == bid)
         .select("doc_id", "dl")
         .dropDuplicates(["doc_id"])
@@ -393,10 +395,10 @@ def _write_index_batch(
     )
     commit_batch(
         spark,
-        index_component_path(index_dir, "totals"),
+        index_dir,
+        BM25,
         bid,
         "build" if mode == "overwrite" else "append",
-        mode,
         n_docs=tot["n_docs"],
         total_len=tot["total_len"],
     )
@@ -438,47 +440,28 @@ def retract_text_index(
         .agg(
             (-F.count(F.lit(1))).cast("long").alias("n_docs"),
             (-F.sum("dl")).cast("long").alias("total_len"),
-            batch_id_col("doc_id", "retract"),
+            batch_id_col(BM25.id_col, BM25.retract_prefix),
         )
         .collect()[0]
     )
-    docs.select("doc_id").distinct().withColumn(
-        "batch_id", F.lit(tot["batch_id"])
-    ).write.mode("append").parquet(index_component_path(index_dir, "tombstones"))
-    commit_batch(
-        docs.sparkSession,
-        index_component_path(index_dir, "totals"),
+    retract_batch(
+        docs,
+        index_dir,
+        BM25,
         tot["batch_id"],
-        "retract",
-        "append",
         n_docs=tot["n_docs"],
         total_len=tot["total_len"],
     )
 
 
-def retract_positional_index(
-    docs: DataFrame, index_dir: str, bid: str | None = None
-) -> None:
+def retract_positional_index(docs: DataFrame, index_dir: str) -> None:
     """Retract documents from the positional tier: tombstone rows first,
     then the ``posbatches`` marker row commits them (the positional
     probe carries no corpus totals, so only doc_ids are needed — the
     'retractpos' prefix keeps the batch id disjoint from the BM25
-    tier's, each tier committing its own tombstones independently).
-    ``bid`` is the batch's 'retractpos' id when the caller already
-    computed it."""
-    if bid is None:
-        bid = docs.agg(batch_id_col("doc_id", "retractpos")).collect()[0][
-            "batch_id"
-        ]
-    docs.select("doc_id").distinct().withColumn(
-        "batch_id", F.lit(bid)
-    ).write.mode("append").parquet(index_component_path(index_dir, "postombstones"))
-    commit_batch(
-        docs.sparkSession,
-        index_component_path(index_dir, "posbatches"),
-        bid,
-        "retract",
-        "append",
+    tier's, each tier committing its own tombstones independently)."""
+    retract_batch(
+        docs, index_dir, POSITIONAL, batch_id_of(docs, POSITIONAL, retract=True)
     )
 
 
@@ -504,7 +487,7 @@ def build_text_index(
     sums, never a read-modify-write. ``analyzer`` fixes the index's
     tokenizer chain — probes must use the same one (the caller's
     contract; an index dir holds exactly one analyzer's terms)."""
-    _write_index_batch(docs, index_dir, "overwrite", analyzer)
+    _write_index_batch(docs, index_dir, "overwrite", analyzer, batch_id_of(docs, BM25))
 
 
 def append_text_index(
@@ -517,7 +500,9 @@ def append_text_index(
     Probes see the union — pytest pins append == monolithic build
     bit-for-bit. O(increment) work; the existing corpus is never
     re-read."""
-    _write_index_batch(new_docs, index_dir, "append", analyzer)
+    _write_index_batch(
+        new_docs, index_dir, "append", analyzer, batch_id_of(new_docs, BM25)
+    )
 
 
 #: Champion-list size: per-term cap on postings kept in the pruned
@@ -540,17 +525,6 @@ def _champion_recut(postings: DataFrame, m: int) -> DataFrame:
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= m)
         .select("term", "doc_id", "tf", "dl", "df", "bucket")
-    )
-
-
-def _reconciled_postings(
-    spark: SparkSession, index_dir: str, prune: Sequence[Column] = ()
-) -> DataFrame:
-    """The BM25 tier's live postings (``index_store.reconciled_read``,
-    keyed on (term, doc_id)): probes, champion cuts and compaction all
-    read this one view."""
-    return reconciled_read(
-        spark, index_dir, "postings", "totals", "tombstones", ("term", "doc_id"), prune
     )
 
 
@@ -584,7 +558,7 @@ def _corpus_totals(spark: SparkSession, index_dir: str) -> DataFrame:
     rows summed (retraction rows are negative), one row per batch id so
     a replayed commit row counts once."""
     return (
-        spark.read.parquet(index_component_path(index_dir, "totals"))
+        spark.read.parquet(index_component_path(index_dir, BM25.record))
         .dropDuplicates(["batch_id"])
         .agg(
             F.sum("n_docs").alias("n_docs"),
@@ -607,7 +581,7 @@ def build_champion_lists(
     dropped), one term-keyed window, one partitioned write. After
     appends, prefer :func:`append_champion_lists` (bucket-bounded
     recut) over this full rebuild."""
-    postings = _reconciled_postings(spark, index_dir)
+    postings = reconciled_read(spark, index_dir, BM25)
     _champion_recut(postings, m).write.mode("overwrite").partitionBy(
         "bucket"
     ).parquet(index_component_path(index_dir, "champions"))
@@ -651,18 +625,14 @@ def append_champion_lists(
     buckets = sorted(int(r["bucket"]) for r in bucket_rows)
     if not buckets:
         return
-    postings = _reconciled_postings(
-        spark, index_dir, [F.col("bucket").isin(buckets)]
+    postings = reconciled_read(
+        spark, index_dir, BM25, [F.col("bucket").isin(buckets)]
     )
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        _champion_recut(postings, m).write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(index_component_path(index_dir, "champions"))
-    finally:
-        spark.conf.set(mode_key, prev)
+    # the per-write option, never the session conf: a concurrent writer
+    # on the same session must keep its own overwrite mode
+    _champion_recut(postings, m).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(index_component_path(index_dir, "champions"))
 
 
 def retract_champion_lists(
@@ -701,7 +671,7 @@ def probe_champion_lists(
         .filter(in_terms)
         .select("term", "doc_id", "tf", "dl", "df")
     )
-    dead = committed_tombstones(spark, index_dir, "totals", "tombstones")
+    dead = committed_tombstones(spark, index_dir, BM25)
     if dead is not None:
         champs = champs.join(dead, "doc_id", "anti")
     scored = (
@@ -747,7 +717,7 @@ def probe_text_index(
     corpus's. ``analyzer`` must match the one the index was built
     with."""
     qdf, prune = _probe_terms(spark, queries, analyzer)
-    tf0 = _reconciled_postings(spark, index_dir, prune).select(
+    tf0 = reconciled_read(spark, index_dir, BM25, prune).select(
         "term", "doc_id", "tf", "dl"
     )
     return _score_topk(tf0, qdf, _corpus_totals(spark, index_dir), k)
@@ -994,26 +964,17 @@ def _phrase_anchor_topk(
 
 
 def _write_positional_batch(
-    docs: DataFrame, index_dir: str, mode: str, analyzer: str = "raw"
+    docs: DataFrame, index_dir: str, mode: str, analyzer: str, bid: str
 ) -> None:
     """Stamped positional write + its commit marker — the
     :func:`_write_index_batch` invariant for the positional tier:
     position rows first (batch-stamped), then the 1-row ``posbatches``
     record; probes ignore position batches with no marker. The rebuild
-    path deletes the old marker dir first (same loud-tear inversion fix
-    as the BM25 tier — see :func:`_write_index_batch`), which also
-    de-commits the superseded index's tombstone batches — and removes
-    the tier's tombstone component itself (r15 advice: stale tombstone
-    rows must not be resurrectable by a content-derived id collision).
-    The marker row carries ``origin`` provenance like the totals row."""
-    import shutil
-
+    path resets the tier first (same loud-tear inversion fix as the
+    BM25 tier — see :func:`_write_index_batch`). The marker row carries
+    ``origin`` provenance like the totals row."""
     if mode == "overwrite":
-        shutil.rmtree(index_component_path(index_dir, "posbatches"), ignore_errors=True)
-        shutil.rmtree(
-            index_component_path(index_dir, "postombstones"), ignore_errors=True
-        )
-    bid = docs.agg(batch_id_col("doc_id")).collect()[0]["batch_id"]
+        reset_tier(index_dir, POSITIONAL)
     tok = docs.select(
         "doc_id",
         F.posexplode(_ANALYZERS[analyzer][0]("text")).alias("pos", "term"),
@@ -1021,18 +982,15 @@ def _write_positional_batch(
     positional = (
         tok.groupBy("term", "doc_id")
         .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-        .withColumn("batch_id", F.lit(bid))
         .withColumn("bucket", _term_bucket())
     )
-    positional.write.mode(mode).partitionBy("bucket").parquet(
-        index_component_path(index_dir, "positional")
-    )
+    write_stamped(positional, index_dir, POSITIONAL, bid, mode)
     commit_batch(
         docs.sparkSession,
-        index_component_path(index_dir, "posbatches"),
+        index_dir,
+        POSITIONAL,
         bid,
         "build" if mode == "overwrite" else "append",
-        mode,
     )
 
 
@@ -1047,7 +1005,9 @@ def build_positional_index(
     parallelism (collect_list order is not). Batch-stamped with a
     ``posbatches`` commit marker (same tear invariant as
     :func:`build_text_index`)."""
-    _write_positional_batch(docs, index_dir, "overwrite", analyzer)
+    _write_positional_batch(
+        docs, index_dir, "overwrite", analyzer, batch_id_of(docs, POSITIONAL)
+    )
 
 
 def append_positional_index(
@@ -1061,7 +1021,9 @@ def append_positional_index(
     the probe's union of batches IS the monolithic index —
     pytest-pinned bit-for-bit. O(increment); the existing corpus is
     never re-read."""
-    _write_positional_batch(new_docs, index_dir, "append", analyzer)
+    _write_positional_batch(
+        new_docs, index_dir, "append", analyzer, batch_id_of(new_docs, POSITIONAL)
+    )
 
 
 def probe_phrase_index(
@@ -1082,15 +1044,9 @@ def probe_phrase_index(
     terms = sorted(
         {t for _, text in queries for t in _ANALYZERS[analyzer][1](text)}
     )
-    tok = reconciled_read(
-        spark,
-        index_dir,
-        "positional",
-        "posbatches",
-        "postombstones",
-        ("term", "doc_id"),
-        _term_prune(terms),
-    ).select("term", "doc_id", F.explode("positions").alias("pos"))
+    tok = reconciled_read(spark, index_dir, POSITIONAL, _term_prune(terms)).select(
+        "term", "doc_id", F.explode("positions").alias("pos")
+    )
     return _phrase_anchor_topk(tok, spark, queries, k, analyzer)
 
 
@@ -1128,44 +1084,38 @@ def compact_text_index(
     the maintenance job's log line. The new batch ids are
     content-derived ("compact:" + corpus aggregates), so recompacting
     an unchanged index is bit-reproducible."""
+    import hashlib
+
     stats: dict = {}
     new_root = next_version(index_dir)
 
-    # --- BM25 tier: committed, replay-deduped, tombstone-free postings
-    # restamped as one batch; totals folded to a single row (negative
-    # retraction rows summed in — the live corpus's exact N/total_len).
-    old_postings = index_component_path(index_dir, "postings")
-    postings = _reconciled_postings(spark, index_dir)
-    tot = _corpus_totals(spark, index_dir).collect()[0]
-    n_postings = postings.count()
-    import hashlib
+    def _rewrite(tier: Tier, seed: str, **longs: int) -> DataFrame:
+        # the tier's live rows restamped as one batch; origin "build":
+        # one canonical batch, so probes skip the replay dedup
+        old = index_component_path(index_dir, tier.data)
+        rows = reconciled_read(spark, index_dir, tier)
+        n = rows.count()
+        bid = hashlib.md5(f"{seed}:{n}".encode()).hexdigest()
+        stats[tier.data] = {
+            "before": spark.read.parquet(old).count(),
+            "after": n,
+            "files_before": _parquet_file_count(old),
+        }
+        write_stamped(
+            rows.repartition(tier.partition), new_root, tier, bid, "overwrite"
+        )
+        stats[tier.data]["files_after"] = _parquet_file_count(
+            os.path.join(new_root, tier.data)
+        )
+        commit_batch(spark, new_root, tier, bid, "build", **longs)
+        return rows
 
-    bid = hashlib.md5(
-        f"compact:{tot['n_docs']}:{tot['total_len']}:{n_postings}".encode()
-    ).hexdigest()
-    stats["postings"] = {
-        "before": spark.read.parquet(old_postings).count(),
-        "after": n_postings,
-        "files_before": _parquet_file_count(old_postings),
-    }
-    (
-        postings.withColumn("batch_id", F.lit(bid))
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(new_root, "postings"))
-    )
-    stats["postings"]["files_after"] = _parquet_file_count(
-        os.path.join(new_root, "postings")
-    )
-    # origin "build": the compacted snapshot is one canonical
-    # overwrite-equivalent batch, so probes skip the replay dedup
-    commit_batch(
-        spark,
-        os.path.join(new_root, "totals"),
-        bid,
-        "build",
-        "overwrite",
+    # --- BM25 tier: totals folded to a single row (negative retraction
+    # rows summed in — the live corpus's exact N/total_len).
+    tot = _corpus_totals(spark, index_dir).collect()[0]
+    postings = _rewrite(
+        BM25,
+        f"compact:{tot['n_docs']}:{tot['total_len']}",
         n_docs=tot["n_docs"],
         total_len=tot["total_len"],
     )
@@ -1185,46 +1135,12 @@ def compact_text_index(
             ).count()
         }
 
-    # --- positional tier: the same reconciled read, into one batch
-    if os.path.isdir(index_component_path(index_dir, "positional")):
-        old_pos = index_component_path(index_dir, "positional")
-        posi = reconciled_read(
-            spark, index_dir, "positional", "posbatches", "postombstones", ("term", "doc_id")
-        ).drop("batch_id")
-        n_pos = posi.count()
-        pbid = hashlib.md5(f"compactpos:{n_pos}".encode()).hexdigest()
-        stats["positional"] = {
-            "before": spark.read.parquet(old_pos).count(),
-            "after": n_pos,
-            "files_before": _parquet_file_count(old_pos),
-        }
-        (
-            posi.withColumn("batch_id", F.lit(pbid))
-            .repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(new_root, "positional"))
-        )
-        stats["positional"]["files_after"] = _parquet_file_count(
-            os.path.join(new_root, "positional")
-        )
-        commit_batch(
-            spark, os.path.join(new_root, "posbatches"), pbid, "build", "overwrite"
-        )
+    if os.path.isdir(index_component_path(index_dir, POSITIONAL.data)):
+        _rewrite(POSITIONAL, "compactpos")
 
     # tombstones are APPLIED, not copied: the new version has none
     publish_version(
-        index_dir,
-        new_root,
-        flat=(
-            "postings",
-            "totals",
-            "champions",
-            "positional",
-            "posbatches",
-            "tombstones",
-            "postombstones",
-        ),
+        index_dir, new_root, flat=(*BM25.components, "champions", *POSITIONAL.components)
     )
     return stats
 
@@ -1275,24 +1191,31 @@ def text_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
         out: dict[int, int] = {}
         root = index_component_path(index_dir, comp)
         for d in _glob.glob(os.path.join(root, "bucket=*")):
-            b = int(os.path.basename(d).split("=")[1])
-            out[b] = sum(
-                1 for f in os.listdir(d) if f.endswith(".parquet")
-            )
+            out[int(os.path.basename(d).split("=")[1])] = _parquet_file_count(d)
         return out
 
-    def _tier_stats(comp: str, record: str, tombstones: str) -> list[tuple]:
-        raw = spark.read.parquet(index_component_path(index_dir, comp)).select(
-            "bucket", "term", "doc_id", "batch_id"
-        )
-        record_ids = sorted(committed_batch_ids(spark, index_dir, record))
-        tomb = committed_tombstones(
-            spark, index_dir, record, tombstones, record_ids
-        )
-        grouped = raw.groupBy("bucket", "term", "doc_id", "batch_id").agg(
-            F.count(F.lit(1)).alias("copies")
-        )
-        committed = F.col("batch_id").isin(record_ids)
+    def _tier_stats(comp: str, tier: Tier) -> list[tuple]:
+        """Stats of the tier's data component, or of the champions
+        cache: no batch stamps, every row committed, live = rows minus
+        the BM25 tier's committed tombstones."""
+        raw = spark.read.parquet(index_component_path(index_dir, comp))
+        if comp == tier.data:
+            record_ids = sorted(committed_batch_ids(spark, index_dir, tier))
+            tomb = committed_tombstones(spark, index_dir, tier, record_ids)
+            grouped = raw.groupBy("bucket", "term", "doc_id", "batch_id").agg(
+                F.count(F.lit(1)).alias("copies")
+            )
+            committed = F.col("batch_id").isin(record_ids)
+        else:
+            tomb = committed_tombstones(spark, index_dir, tier)
+            grouped = raw.select(
+                "bucket",
+                "term",
+                "doc_id",
+                F.lit("").alias("batch_id"),
+                F.lit(1).alias("copies"),
+            )
+            committed = F.lit(True)
         if tomb is None:
             dead = F.lit(False)
         else:
@@ -1342,56 +1265,11 @@ def text_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
             for r in per
         ]
 
-    rows = _tier_stats("postings", "totals", "tombstones")
-    if os.path.isdir(index_component_path(index_dir, "positional")):
-        rows += _tier_stats("positional", "posbatches", "postombstones")
+    rows = _tier_stats(BM25.data, BM25)
+    if os.path.isdir(index_component_path(index_dir, POSITIONAL.data)):
+        rows += _tier_stats(POSITIONAL.data, POSITIONAL)
     if os.path.isdir(index_component_path(index_dir, "champions")):
-        # champions are a derived cache: no batch stamps; live = rows
-        # minus committed BM25-tier tombstones
-        raw = spark.read.parquet(index_component_path(index_dir, "champions")).select(
-            "bucket", "term", "doc_id"
-        )
-        tomb = committed_tombstones(spark, index_dir, "totals", "tombstones")
-        if tomb is None:
-            flagged = raw.withColumn("_dead", F.lit(False))
-        else:
-            flagged = raw.join(
-                tomb.withColumn("_dead", F.lit(True)), "doc_id", "left"
-            ).withColumn("_dead", F.coalesce(F.col("_dead"), F.lit(False)))
-        per = (
-            flagged.groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum(F.when(~F.col("_dead"), 1).otherwise(0))
-                .cast("long")
-                .alias("n_live"),
-                F.count_distinct(
-                    F.when(~F.col("_dead"), F.col("term"))
-                ).cast("long").alias("n_terms"),
-                F.count_distinct(
-                    F.when(~F.col("_dead"), F.col("doc_id"))
-                ).cast("long").alias("n_docs"),
-            )
-            .orderBy("bucket")
-            .collect()
-        )
-        files = _bucket_file_counts("champions")
-        rows += [
-            (
-                "champions",
-                int(r["bucket"]),
-                files.get(int(r["bucket"]), 0),
-                1,
-                r["n_rows"],
-                r["n_rows"],
-                r["n_live"],
-                0,
-                r["n_rows"] - r["n_live"],
-                r["n_terms"],
-                r["n_docs"],
-            )
-            for r in per
-        ]
+        rows += _tier_stats("champions", BM25)
     return spark.createDataFrame(
         rows,
         "tier string, bucket int, n_files int, n_batches long, "

@@ -26,6 +26,8 @@ broken by vec_id, so the output is stable and hash-comparable.
 from __future__ import annotations
 
 import hashlib
+import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -35,7 +37,8 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
-    batch_id_col,
+    Tier,
+    batch_id_of,
     commit_batch,
     committed_tombstones,
     index_component_path,
@@ -43,6 +46,8 @@ from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
     publish_version,
     reconciled_read,
     reset_versions,
+    retract_batch,
+    write_stamped,
 )
 
 
@@ -481,6 +486,15 @@ def semdedup_survivors(
     return av.join(pruned, "vec_id", "left_anti").select("vec_id", "list_id", "rk")
 
 
+#: The stamped IVF tier (``index_store``'s **Tiers**): inverted lists
+#: partitioned by ``list_id``, committed by ``vecbatches`` rows.
+IVF = Tier(
+    data="lists", record="vecbatches", tombstones="tombstones",
+    key=("vec_id",), id_col="vec_id", partition="list_id",
+    ingest_prefix="ivf", retract_prefix="retractivf",
+)
+
+
 def build_ivf_index(
     emb: DataFrame,
     index_dir: str,
@@ -511,11 +525,8 @@ def build_ivf_index(
     content-derived batch id collides with a stale tombstone batch's
     must not resurrect rows that kill vectors live in the rebuilt
     index."""
-    import os
-    import shutil
-
     reset_versions(index_dir)
-    shutil.rmtree(os.path.join(index_dir, "tombstones"), ignore_errors=True)
+    shutil.rmtree(os.path.join(index_dir, IVF.tombstones), ignore_errors=True)
     return _write_ivf_snapshot(emb, index_dir, nlist, iters, seed_emb)
 
 
@@ -525,15 +536,11 @@ def _reconciled_lists(spark, index_dir: str, list_ids=None) -> DataFrame:
     the batch stamp removed. Lists with no ``vecbatches`` commit record
     (written directly by ``ivf_assign``, as tests build reference
     indexes) carry no stamps and pass through as stored."""
-    import os
-
     prune = [] if list_ids is None else [F.col("list_id").isin(list_ids)]
-    if not os.path.isdir(index_component_path(index_dir, "vecbatches")):
-        lists = spark.read.parquet(index_component_path(index_dir, "lists"))
+    if not os.path.isdir(index_component_path(index_dir, IVF.record)):
+        lists = spark.read.parquet(index_component_path(index_dir, IVF.data))
         return lists.filter(prune[0]) if prune else lists
-    return reconciled_read(
-        spark, index_dir, "lists", "vecbatches", "tombstones", ("vec_id",), prune
-    ).drop("batch_id")
+    return reconciled_read(spark, index_dir, IVF, prune).drop("batch_id")
 
 
 def _write_ivf_snapshot(
@@ -547,17 +554,11 @@ def _write_ivf_snapshot(
     cents = train_ivf_centroids(
         emb if seed_emb is None else seed_emb, nlist=nlist, iters=iters
     )
-    assigned = ivf_assign(emb, cents)
-    spark = emb.sparkSession
     # r15: every write is batch-stamped with a vecbatches commit record
     # (the text tiers' invariant) so streamed appends get exactly-once
     # reads; centroids land LAST — they carry the ensure gates.
-    bid = emb.agg(batch_id_col("vec_id", "ivf")).collect()[0]["batch_id"]
-    assigned.withColumn("batch_id", F.lit(bid)).write.mode(
-        "overwrite"
-    ).partitionBy("list_id").parquet(f"{root}/lists")
-    commit_batch(spark, f"{root}/vecbatches", bid, "build", "overwrite")
-    cent_df = spark.createDataFrame(
+    _write_lists(emb, root, cents, "overwrite", batch_id_of(emb, IVF))
+    cent_df = emb.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
         schema="list_id int, centroid array<double>",
     )
@@ -587,7 +588,7 @@ def rebuild_ivf_index(
     publish_version(
         index_dir,
         new_root,
-        flat=("lists", "centroids", "vecbatches", "tombstones"),
+        flat=(*IVF.components, "centroids"),
     )
     return cents
 
@@ -620,17 +621,20 @@ def append_ivf_vectors(
     cents = (
         centroids if centroids is not None else load_ivf_centroids(spark, index_dir)
     )
-    assigned = ivf_assign(new_emb, cents)
-    # stamped lists FIRST, then the commit row: index_store's
-    # crash-safety contract, which stream_ivf_index_ingest composes on
-    bid = new_emb.agg(batch_id_col("vec_id", "ivf")).collect()[0]["batch_id"]
-    assigned.withColumn("batch_id", F.lit(bid)).write.mode(
-        "append"
-    ).partitionBy("list_id").parquet(index_component_path(index_dir, "lists"))
-    commit_batch(
-        spark, index_component_path(index_dir, "vecbatches"), bid, "append", "append"
-    )
+    _write_lists(new_emb, index_dir, cents, "append", batch_id_of(new_emb, IVF))
     return cents
+
+
+def _write_lists(
+    emb: DataFrame, root: str, cents: np.ndarray, mode: str, bid: str
+) -> None:
+    """``emb`` assigned with ``cents`` as one stamped batch of lists,
+    then its commit row (index_store's crash-safety contract, which
+    stream_ivf_index_ingest composes on)."""
+    write_stamped(ivf_assign(emb, cents), root, IVF, bid, mode)
+    commit_batch(
+        emb.sparkSession, root, IVF, bid, "build" if mode == "overwrite" else "append"
+    )
 
 
 def ivf_list_stats(spark, index_dir: str) -> DataFrame:
@@ -692,9 +696,7 @@ def rebalance_ivf_index(
     )
 
 
-def retract_ivf_vectors(
-    spark, index_dir: str, vec_ids: DataFrame, bid: str | None = None
-) -> None:
+def retract_ivf_vectors(spark, index_dir: str, vec_ids: DataFrame) -> None:
     """Retract vectors from the IVF index (the delete path the text
     tiers got in r15, vector edition): a tombstone batch (vec_id,
     batch_id) lands first, then one ``vecbatches`` row commits it —
@@ -708,28 +710,24 @@ def retract_ivf_vectors(
     snapshot carries no tombstone component). Only on the STAMPED
     layout (vecbatches present): an unstamped legacy index has no
     commit surface to make retraction crash-safe, so this raises
-    rather than leaving a silently half-applied delete. ``bid`` is the
-    batch's 'retractivf' id when the caller already computed it."""
-    import os
+    rather than leaving a silently half-applied delete."""
+    ids = _retraction_ids(index_dir, vec_ids)
+    retract_batch(ids, index_dir, IVF, batch_id_of(ids, IVF, retract=True))
 
-    vb = index_component_path(index_dir, "vecbatches")
-    if not os.path.isdir(vb):
+
+def _retraction_ids(index_dir: str, vec_ids: DataFrame) -> DataFrame:
+    """The first column of ``vec_ids`` as the distinct long ``vec_id``
+    frame a retraction batch tombstones; raises on the unstamped
+    layout (see :func:`retract_ivf_vectors`)."""
+    if not os.path.isdir(index_component_path(index_dir, IVF.record)):
         raise ValueError(
             f"{index_dir} has no vecbatches commit records (pre-r15 "
             "unstamped layout) — rebuild_ivf_index it first; tombstones "
             "need a commit surface to be crash-safe"
         )
-    ids = vec_ids.select(
+    return vec_ids.select(
         F.col(vec_ids.columns[0]).cast("long").alias("vec_id")
     ).distinct()
-    if bid is None:
-        bid = ids.agg(batch_id_col("vec_id", "retractivf")).collect()[0][
-            "batch_id"
-        ]
-    ids.withColumn("batch_id", F.lit(bid)).write.mode("append").parquet(
-        index_component_path(index_dir, "tombstones")
-    )
-    commit_batch(spark, vb, bid, "retract", "append")
 
 
 def load_ivf_centroids(spark, index_dir: str) -> np.ndarray:
@@ -1085,7 +1083,7 @@ def probe_ivfpq(
     )
     # retractions AFTER the codes build: drop committed tombstones at
     # read time (same live view as _reconciled_lists)
-    dead = committed_tombstones(spark, index_dir, "vecbatches", "tombstones")
+    dead = committed_tombstones(spark, index_dir, IVF)
     if dead is not None:
         cand = cand.join(dead, "vec_id", "anti")
     scored = cand.join(F.broadcast(lut), lut_keys)

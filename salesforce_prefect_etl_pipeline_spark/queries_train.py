@@ -38,7 +38,7 @@ def ensure_text_index(spark: SparkSession, sf_dir: str) -> str:
         TEXT_INDEX_ROOT,
         f"{tag}-b{retrieval.TEXT_INDEX_BUCKETS}-L{retrieval.TEXT_INDEX_LAYOUT}",
     )
-    success = os.path.join(index_dir, "totals", "_SUCCESS")
+    success = os.path.join(index_dir, retrieval.BM25.record, "_SUCCESS")
     stale = os.path.exists(success) and os.path.getmtime(
         success
     ) < os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
@@ -95,7 +95,7 @@ def ensure_text_index_appended(spark: SparkSession, sf_dir: str) -> str:
         f"{tag}-b{retrieval.TEXT_INDEX_BUCKETS}"
         f"-L{retrieval.TEXT_INDEX_LAYOUT}-appended",
     )
-    success = os.path.join(index_dir, "totals", "_SUCCESS")
+    success = os.path.join(index_dir, retrieval.BM25.record, "_SUCCESS")
     stale = os.path.exists(success) and os.path.getmtime(
         success
     ) < os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
@@ -170,7 +170,7 @@ def ensure_phrase_index(spark: SparkSession, sf_dir: str) -> str:
     between the two would otherwise look complete while the probe's
     batch reconcile sees zero committed batches."""
     index_dir = ensure_text_index(spark, sf_dir)
-    success = os.path.join(index_dir, "posbatches", "_SUCCESS")
+    success = os.path.join(index_dir, retrieval.POSITIONAL.record, "_SUCCESS")
     stale = os.path.exists(success) and os.path.getmtime(
         success
     ) < os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))

@@ -33,6 +33,7 @@ band-partitioned layout.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,9 +46,9 @@ from salesforce_prefect_etl_pipeline_spark.operators.dedup import (
     probe_minhash_index,
 )
 from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
-    batch_id_col,
-    committed_batch_ids,
     index_component_path,
+    retract_batch,
+    write_uncommitted,
 )
 from salesforce_prefect_etl_pipeline_spark.streaming.windows import (
     run_available_now,
@@ -275,49 +276,35 @@ def stream_text_index_ingest(
     re-paying offline builds. Returns ``index_dir``; probes see exactly
     the union of committed batches.
 
-    Exactly-once story, composed from the index's own invariants
-    (operators/retrieval.py): each batch's id is CONTENT-derived
-    (md5 of min/max doc_id + count), postings land before the totals
-    commit record, and probes reconcile against committed ids — so
-
-    - a crash BEFORE the totals write leaves an invisible orphan batch;
-    - the replayed batch is detected as uncommitted (its id is absent
-      from totals), re-appends its byte-identical postings, and
-      commits — probes collapse the doubled rows by replay dedup;
-    - a replayed ALREADY-COMMITTED batch (crash after totals, before
-      the checkpoint advanced) is skipped by the committed-id guard
-      here, with batch-count-bounded driver state.
-
-    At-least-once delivery + content-addressed idempotent writes =
-    exactly-once reads, the same composition as
-    ``stream_dedup_on_ingest`` — but here the torn-batch repair is
-    pinned bit-for-bit (probe == monolithic build, pytest).
+    Exactly-once under ``index_store``'s **Commit records** contract:
+    a batch torn before its totals row is an invisible orphan that the
+    replay re-appends and commits (probes collapse the doubled rows by
+    replay dedup), and a replayed ALREADY-COMMITTED batch (crash after
+    totals, before the checkpoint advanced) is skipped by the replay
+    guard (``index_store.write_uncommitted``). At-least-once delivery +
+    content-addressed idempotent writes = exactly-once reads, pinned
+    bit-for-bit (probe == monolithic build, pytest).
 
     ``positional=True`` additionally maintains the phrase tier per
     batch (``append_positional_index``'s write shape, its own
-    ``posbatches`` commit record and committed-id guard) — the whole
-    lexical surface stays stream-fresh, not just BM25."""
+    ``posbatches`` commit record and guard) — the whole lexical surface
+    stays stream-fresh, not just BM25."""
     from salesforce_prefect_etl_pipeline_spark.operators import retrieval
-
-    spark = stream_docs.sparkSession
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.select("doc_id", "text")
-        # content-derived id from a doc_id-only aggregate (no tokenize);
-        # the stamped append itself is _write_index_batch's single
+        # the id is a doc_id-only aggregate (no tokenize), shared by both
+        # tiers; the stamped append is _write_index_batch's single
         # tokenizing scan (r15 verdict task 7). The guard and the write
         # resolve through the version pointer (r15 layout): a compacted
         # index keeps ingesting into its live snapshot.
-        bid = b.agg(batch_id_col("doc_id")).collect()[0]["batch_id"]
-        if bid not in committed_batch_ids(spark, index_dir, "totals"):
-            retrieval._write_index_batch(b, index_dir, "append", analyzer, bid=bid)
-        if positional and bid not in committed_batch_ids(
-            spark, index_dir, "posbatches"
-        ):
-            # the positional tier's own stamped write + commit record;
-            # guarded separately so a crash between the two tiers'
-            # appends replays only the missing one
-            retrieval._write_positional_batch(b, index_dir, "append", analyzer)
+        args = (b, index_dir, "append", analyzer)
+        writes = {retrieval.BM25: partial(retrieval._write_index_batch, *args)}
+        if positional:
+            writes[retrieval.POSITIONAL] = partial(
+                retrieval._write_positional_batch, *args
+            )
+        write_uncommitted(b, index_dir, writes)
 
     run_available_now(stream_docs, _batch, checkpoint_dir=checkpoint_dir)
     return index_dir
@@ -340,16 +327,10 @@ def stream_ivf_index_ingest(
     ``append_ivf_vectors`` — ``ivf_list_stats`` +
     ``rebalance_ivf_index`` are the maintenance loop.
 
-    Exactly-once story, composed from the same three invariants as the
-    text sink: content-derived batch ids (md5 of the batch's vec_id
-    min/max/count), lists-then-commit-record write order (a crash
-    before the ``vecbatches`` row leaves an invisible orphan), and the
-    committed-id guard here (a replayed ALREADY-committed batch is
-    skipped with batch-count-bounded driver state); a replayed torn
-    batch re-appends byte-identical rows under the same id, which
-    probe-side replay dedup collapses. N micro-batches == one
-    monolithic build with the same centroids, pytest-pinned
-    bit-for-bit."""
+    Exactly-once by the same composition as the text sink
+    (``index_store``'s **Commit records** and replay guard). N
+    micro-batches == one monolithic build with the same centroids,
+    pytest-pinned bit-for-bit."""
     from salesforce_prefect_etl_pipeline_spark.operators import similarity
 
     spark = stream_emb.sparkSession
@@ -361,10 +342,8 @@ def stream_ivf_index_ingest(
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.select("vec_id", "embedding")
-        bid = b.agg(batch_id_col("vec_id", "ivf")).collect()[0]["batch_id"]
-        if bid in committed_batch_ids(spark, index_dir, "vecbatches"):
-            return
-        similarity.append_ivf_vectors(spark, index_dir, b, centroids=cents)
+        append = partial(similarity._write_lists, b, index_dir, cents, "append")
+        write_uncommitted(b, index_dir, {similarity.IVF: append})
 
     run_available_now(stream_emb, _batch, checkpoint_dir=checkpoint_dir)
     return index_dir
@@ -441,18 +420,12 @@ def stream_retract_ingest(
     rows first, the negative totals row as the commit record — and
     probes stop returning the retracted documents immediately.
 
-    Exactly-once story, the ingest sinks' composition run in reverse:
-
-    - retraction batch ids are CONTENT-derived ('retract'-prefixed
-      md5 of the batch's doc_id min/max/count), so a replayed batch
-      collides with its own id;
-    - a crash between tombstones and the totals row leaves the batch
-      uncommitted — invisible to probes — and the replay re-appends
-      byte-identical tombstone rows, then commits;
-    - a replayed ALREADY-COMMITTED batch is skipped by the
-      committed-id guard here (batch-count-bounded driver state), and
-      even without the guard it is harmless: probes dedup totals rows
-      by batch id and read tombstone doc_ids through a distinct.
+    Exactly-once by the ingest sinks' composition run in reverse
+    (``index_store``'s **Commit records** and replay guard): a torn
+    retraction is invisible until its replay commits it, and a
+    replayed ALREADY-COMMITTED batch is skipped — even without the
+    guard it is harmless: probes dedup totals rows by batch id and read
+    tombstone doc_ids through a distinct.
 
     N micro-batches == one monolithic ``retract_text_index`` over the
     union (pytest-pinned; the registered ``streaming_text_retraction``
@@ -466,19 +439,21 @@ def stream_retract_ingest(
     micro-batch; probes hide dead doc_ids meanwhile."""
     from salesforce_prefect_etl_pipeline_spark.operators import retrieval
 
-    spark = stream_docs.sparkSession
-
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.select("doc_id", "text")
-        bid = b.agg(batch_id_col("doc_id", "retract")).collect()[0]["batch_id"]
-        if bid not in committed_batch_ids(spark, index_dir, "totals"):
-            retrieval.retract_text_index(b, index_dir, analyzer)
+        # retract_text_index takes its id from the aggregate that also
+        # sums the negative totals, so the BM25 writer ignores the one
+        # the guard computed
+        writes = {
+            retrieval.BM25: lambda _bid: retrieval.retract_text_index(
+                b, index_dir, analyzer
+            )
+        }
         if positional:
-            pbid = b.agg(batch_id_col("doc_id", "retractpos")).collect()[0][
-                "batch_id"
-            ]
-            if pbid not in committed_batch_ids(spark, index_dir, "posbatches"):
-                retrieval.retract_positional_index(b, index_dir, bid=pbid)
+            writes[retrieval.POSITIONAL] = partial(
+                retract_batch, b, index_dir, retrieval.POSITIONAL
+            )
+        write_uncommitted(b, index_dir, writes, retract=True)
 
     run_available_now(stream_docs, _batch, checkpoint_dir=checkpoint_dir)
     return index_dir
@@ -492,26 +467,17 @@ def stream_ivf_retract_ingest(
     """Streaming vector takedowns — :func:`stream_retract_ingest` for
     the IVF tier: per micro-batch of vec_ids, one
     ``retract_ivf_vectors`` tombstone batch + ``vecbatches`` commit
-    record. Same exactly-once composition ('retractivf'-prefixed
-    content ids, tombstones-then-commit write order, committed-id
-    guard here; probes distinct tombstoned vec_ids so even an
-    unguarded replay is harmless). N micro-batches == one monolithic
-    retraction (pytest-pinned); ``rebalance_ivf_index`` remains the
-    compaction that physically drops the tombstoned vectors."""
+    record. Same exactly-once composition (probes distinct tombstoned
+    vec_ids, so even an unguarded replay is harmless). N micro-batches
+    == one monolithic retraction (pytest-pinned); ``rebalance_ivf_index``
+    remains the compaction that physically drops the tombstoned
+    vectors."""
     from salesforce_prefect_etl_pipeline_spark.operators import similarity
 
-    spark = stream_ids.sparkSession
-
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        ids = batch_df.select(
-            F.col(batch_df.columns[0]).cast("long").alias("vec_id")
-        ).distinct()
-        bid = ids.agg(batch_id_col("vec_id", "retractivf")).collect()[0][
-            "batch_id"
-        ]
-        if bid in committed_batch_ids(spark, index_dir, "vecbatches"):
-            return
-        similarity.retract_ivf_vectors(spark, index_dir, ids, bid=bid)
+        ids = similarity._retraction_ids(index_dir, batch_df)
+        tombstone = partial(retract_batch, ids, index_dir, similarity.IVF)
+        write_uncommitted(ids, index_dir, {similarity.IVF: tombstone}, retract=True)
 
     run_available_now(stream_ids, _batch, checkpoint_dir=checkpoint_dir)
     return index_dir

@@ -467,6 +467,12 @@ def test_stream_text_index_ingest_multi_batch_equals_monolithic(spark, tmp_path)
     assert got == want and got
 
 
+def _parquet_files(path: str) -> int:
+    return sum(
+        f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
+    )
+
+
 def test_stream_text_index_torn_batch_replay_is_exactly_once(spark, tmp_path):
     """The crash-replay matrix the sink documents: (a) a batch torn
     after its postings write is invisible; (b) replaying it re-appends
@@ -477,6 +483,10 @@ def test_stream_text_index_torn_batch_replay_is_exactly_once(spark, tmp_path):
 
     from salesforce_prefect_etl_pipeline_spark.operators import retrieval
     from salesforce_prefect_etl_pipeline_spark.plans import load_table
+    from salesforce_prefect_etl_pipeline_spark.streaming.ingest import (
+        stream_documents_dir,
+        stream_text_index_ingest,
+    )
     from tests.conftest import SF_SMALL
 
     docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
@@ -508,15 +518,17 @@ def test_stream_text_index_torn_batch_replay_is_exactly_once(spark, tmp_path):
     want = [tuple(r) for r in retrieval.probe_text_index(spark, mono_all).collect()]
     assert got == want and got
 
-    # (c) an already-committed batch replayed through the sink guard is
-    # a no-op: the totals file still has exactly 2 committed ids
-    n = (
-        spark.read.parquet(f"{index_dir}/totals")
-        .select("batch_id")
-        .distinct()
-        .count()
-    )
-    assert n == 2
+    # (c) the already-committed batch replayed through the sink: the
+    # guard skips it, so no commit row and no postings file is added
+    src = tmp_path / "src"
+    tail.coalesce(1).write.parquet(str(src))
+    files = _parquet_files(f"{index_dir}/postings")
+    stream_text_index_ingest(stream_documents_dir(spark, str(src)), index_dir)
+    assert spark.read.parquet(f"{index_dir}/totals").count() == 2
+    assert _parquet_files(f"{index_dir}/postings") == files
+    assert [
+        tuple(r) for r in retrieval.probe_text_index(spark, index_dir).collect()
+    ] == want
 
 
 def test_stream_positional_ingest_multi_batch_equals_monolithic(spark, tmp_path):
@@ -877,3 +889,98 @@ def test_stream_ivf_retract_multi_batch_equals_monolithic(spark, tmp_path):
     assert got == want and got
     dead_set = set(dead_ids)
     assert not any(r[1] in dead_set for r in got)
+
+
+#: The six streaming sinks, each over the tier whose guard it exercises:
+#: (text feed or vector feed, retraction sink, positional tier).
+_SINKS = {
+    "text_ingest_bm25": ("text", False, False),
+    "text_ingest_positional": ("text", False, True),
+    "ivf_ingest": ("ivf", False, False),
+    "text_retract_bm25": ("text", True, False),
+    "text_retract_positional": ("text", True, True),
+    "ivf_retract": ("ivf", True, False),
+}
+
+
+@pytest.mark.parametrize("sink", list(_SINKS))
+def test_sink_guard_skips_a_replayed_committed_batch(spark, tmp_path, sink):
+    """Every sink's committed-id guard: re-running the sink over the
+    same source with a fresh checkpoint (a crash after the commit row,
+    before the checkpoint advanced, replays the batch) writes nothing.
+    The commit record's ids, the data and tombstone file counts and the
+    probe rows are unchanged."""
+    from salesforce_prefect_etl_pipeline_spark.operators import retrieval, similarity
+    from salesforce_prefect_etl_pipeline_spark.streaming import ingest
+
+    feed, retract, positional = _SINKS[sink]
+    idx, src = str(tmp_path / "idx"), str(tmp_path / "src")
+    if feed == "text":
+        docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
+        tier = retrieval.POSITIONAL if positional else retrieval.BM25
+        probe = (
+            retrieval.probe_phrase_index if positional else retrieval.probe_text_index
+        )
+        base = docs if retract else docs.filter("doc_id % 2 = 0")
+        retrieval.build_text_index(base, idx)
+        if positional:
+            retrieval.build_positional_index(base, idx)
+        fed = docs.filter("doc_id % 5 = 0" if retract else "doc_id % 2 = 1")
+        run = ingest.stream_retract_ingest if retract else ingest.stream_text_index_ingest
+
+        def _run(ckpt):
+            run(
+                ingest.stream_documents_dir(spark, src),
+                idx,
+                checkpoint_dir=ckpt,
+                positional=positional,
+            )
+
+    else:
+        emb = load_table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
+        tier = similarity.IVF
+        qvecs = [
+            (r.vec_id, list(r.embedding))
+            for r in emb.filter(F.col("vec_id").isin([1, 7, 42])).collect()
+        ]
+        base = emb if retract else emb.filter("vec_id % 2 = 0")
+        cents = similarity.build_ivf_index(base, idx, nlist=4, iters=0)
+
+        def probe(spark, idx):
+            return similarity.probe_ivf(
+                spark, idx, qvecs, k=10, nprobe=4, centroids=cents
+            )
+
+        fed = (
+            emb.filter("vec_id % 5 = 0").select("vec_id")
+            if retract
+            else emb.filter("vec_id % 2 = 1")
+        )
+
+        def _run(ckpt):
+            stream = ingest.stream_documents_dir(spark, src)
+            if retract:
+                ingest.stream_ivf_retract_ingest(stream, idx, checkpoint_dir=ckpt)
+            else:
+                ingest.stream_ivf_index_ingest(
+                    stream, idx, checkpoint_dir=ckpt, centroids=cents
+                )
+
+    fed.coalesce(1).write.parquet(src)
+
+    def _state():
+        return (
+            sorted(
+                r.batch_id
+                for r in spark.read.parquet(f"{idx}/{tier.record}").collect()
+            ),
+            _parquet_files(f"{idx}/{tier.data}"),
+            _parquet_files(f"{idx}/{tier.tombstones}"),
+            [tuple(r) for r in probe(spark, idx).collect()],
+        )
+
+    _run(str(tmp_path / "ckpt1"))
+    first = _state()
+    assert len(first[0]) == 2 and first[3]  # build + the streamed batch
+    _run(str(tmp_path / "ckpt2"))
+    assert _state() == first

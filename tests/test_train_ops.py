@@ -23,7 +23,6 @@ from salesforce_prefect_etl_pipeline_spark.operators import (
 )
 from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
     batch_id_col,
-    commit_batch,
     index_component_path,
     reconciled_read,
 )
@@ -836,6 +835,28 @@ def test_champion_append_recut_equals_full_rebuild(spark, tmp_path):
     assert mono_probe  # non-vacuous
 
 
+def test_champion_append_leaves_session_conf_alone(spark, tmp_path, monkeypatch):
+    """The bucket recut asks for dynamic partition overwrite on its own
+    write: it never sets session-global conf, which a concurrent writer
+    on the same session would see."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    docs = _docs(spark, _LIFECYCLE_TEXTS)
+    idx = str(tmp_path / "idx")
+    retrieval.build_text_index(docs.filter("doc_id < 4"), idx)
+    retrieval.build_champion_lists(idx, spark, m=2)
+    retrieval.append_text_index(docs.filter("doc_id >= 4"), idx)
+    calls = []
+    real_set = RuntimeConfig.set
+    monkeypatch.setattr(
+        RuntimeConfig,
+        "set",
+        lambda self, key, value: calls.append(key) or real_set(self, key, value),
+    )
+    retrieval.append_champion_lists(docs.filter("doc_id >= 4"), idx, m=2)
+    assert calls == []
+
+
 def test_phrase_index_probe_identical_to_direct(spark, tmp_path):
     """The positional tier is lossless: probe == direct phrase search,
     and the probed read carries the bucket PartitionFilters."""
@@ -1460,11 +1481,11 @@ def test_single_batch_append_created_index_still_dedups_replay(
     assert got_ph == want_ph
 
 
-#: (data, record, tombstones, key) of each stamped component family.
+#: The stamped tier of each index family.
 _RECONCILED = {
-    "bm25": ("postings", "totals", "tombstones", ("term", "doc_id")),
-    "positional": ("positional", "posbatches", "postombstones", ("term", "doc_id")),
-    "ivf": ("lists", "vecbatches", "tombstones", ("vec_id",)),
+    "bm25": retrieval.BM25,
+    "positional": retrieval.POSITIONAL,
+    "ivf": similarity.IVF,
 }
 
 
@@ -1501,7 +1522,7 @@ def test_overwrite_build_skips_replay_dedup_append_does_not(
         idx = str(tmp_path / str(dedups))
         writer(data, idx)
         plan = (
-            reconciled_read(spark, idx, *_RECONCILED[family])
+            reconciled_read(spark, idx, _RECONCILED[family])
             ._jdf.queryExecution()
             .analyzed()
             .toString()
@@ -1562,7 +1583,7 @@ def test_above_cap_semi_join_equals_literal_filter(spark, tmp_path, monkeypatch)
     assert not {r[1] for r in ivf} & set(dead_vecs)
     monkeypatch.setattr(index_store, "BATCH_ISIN_CAP", 0)
     plan = (
-        reconciled_read(spark, idx, *_RECONCILED["bm25"])
+        reconciled_read(spark, idx, _RECONCILED["bm25"])
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
@@ -1571,30 +1592,141 @@ def test_above_cap_semi_join_equals_literal_filter(spark, tmp_path, monkeypatch)
     assert _probes() == literal
 
 
-def test_commit_batch_on_disk_schema(spark, tmp_path):
-    """The commit record format: the text ``totals`` shape (leading
-    ``n_docs``/``total_len`` longs) and the plain (batch_id, origin)
-    shape, column names and order pinned."""
-    totals, record = str(tmp_path / "totals"), str(tmp_path / "record")
-    commit_batch(spark, totals, "b1", "build", "overwrite", n_docs=3, total_len=-7)
-    commit_batch(spark, record, "b2", "retract", "append")
-    commit_batch(spark, record, "b3", "append", "append")
-    t, r = spark.read.parquet(totals), spark.read.parquet(record)
-    assert [(f.name, f.dataType.simpleString()) for f in t.schema] == [
-        ("n_docs", "bigint"),
-        ("total_len", "bigint"),
-        ("batch_id", "string"),
-        ("origin", "string"),
+#: Each stamped tier's on-disk format, spelled out rather than read from
+#: its ``Tier``: (data, record, tombstones) component names, their
+#: parquet file schemas (partition column excluded), the partition
+#: column, and the ingest and retraction id prefixes.
+_ON_DISK = {
+    "bm25": (
+        ("postings", "totals", "tombstones"),
+        (
+            [
+                ("term", "string"),
+                ("doc_id", "int64"),
+                ("tf", "int64"),
+                ("dl", "int32"),
+                ("batch_id", "string"),
+            ],
+            [
+                ("n_docs", "int64"),
+                ("total_len", "int64"),
+                ("batch_id", "string"),
+                ("origin", "string"),
+            ],
+            [("doc_id", "int64"), ("batch_id", "string")],
+        ),
+        "bucket",
+        ("", "retract"),
+    ),
+    "positional": (
+        ("positional", "posbatches", "postombstones"),
+        (
+            [
+                ("term", "string"),
+                ("doc_id", "int64"),
+                ("positions", "list<element: int32 not null>"),
+                ("batch_id", "string"),
+            ],
+            [("batch_id", "string"), ("origin", "string")],
+            [("doc_id", "int64"), ("batch_id", "string")],
+        ),
+        "bucket",
+        ("", "retractpos"),
+    ),
+    "ivf": (
+        ("lists", "vecbatches", "tombstones"),
+        (
+            [
+                ("vec_id", "int64"),
+                ("embedding", "list<element: float>"),
+                ("batch_id", "string"),
+            ],
+            [("batch_id", "string"), ("origin", "string")],
+            [("vec_id", "int64"), ("batch_id", "string")],
+        ),
+        "list_id",
+        ("ivf", "retractivf"),
+    ),
+}
+
+
+def _file_schema(path: str) -> list[tuple[str, str]]:
+    """The one (name, arrow type) schema every parquet file under
+    ``path`` shares."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    schemas = {
+        tuple((f.name, str(f.type)) for f in pq.read_schema(p))
+        for p in glob.glob(f"{path}/**/*.parquet", recursive=True)
+    }
+    assert len(schemas) == 1, schemas
+    return list(schemas.pop())
+
+
+@pytest.mark.parametrize("tier", sorted(_ON_DISK))
+def test_commit_batch_on_disk_schema(spark, tmp_path, tier):
+    """The stamped tiers' on-disk format after a build, an append and a
+    retraction: component names, file schemas and column order,
+    partition dir names, and commit and tombstone rows whose batch ids
+    are hashlib's md5 of "[prefix:]min:max:count"."""
+    import hashlib
+    import os
+
+    comps, schemas, part, (ingest, retract) = _ON_DISK[tier]
+    idx = str(tmp_path / tier)
+    if tier == "ivf":
+        key, frame = "vec_id", _emb(spark).select("vec_id", "embedding")
+        head, tail = frame.filter("vec_id % 2 = 0"), frame.filter("vec_id % 2 = 1")
+        dead = tail.filter("vec_id % 3 = 0").select("vec_id")
+        cents = similarity.build_ivf_index(head, idx, nlist=4, iters=0)
+        similarity.append_ivf_vectors(spark, idx, tail, cents)
+        similarity.retract_ivf_vectors(spark, idx, dead)
+        parts = {f"list_id={i}" for i in range(4)}
+    else:
+        key, frame = "doc_id", _docs(spark, _LIFECYCLE_TEXTS)
+        head, tail = frame.filter("doc_id < 4"), frame.filter("doc_id >= 4")
+        dead = frame.filter("doc_id IN (1, 5)")
+        if tier == "bm25":
+            retrieval.build_text_index(head, idx)
+            retrieval.append_text_index(tail, idx)
+            retrieval.retract_text_index(dead, idx)
+        else:
+            retrieval.build_positional_index(head, idx)
+            retrieval.append_positional_index(tail, idx)
+            retrieval.retract_positional_index(dead, idx)
+        parts = {
+            f"bucket={int(hashlib.md5(t.encode()).hexdigest()[:8], 16) % 32}"
+            for text in _LIFECYCLE_TEXTS
+            for t in text.split()
+        }
+
+    def _md5_id(df, prefix):
+        ids = sorted(r[0] for r in df.select(key).collect())
+        body = f"{ids[0]}:{ids[-1]}:{len(ids)}"
+        return hashlib.md5((f"{prefix}:{body}" if prefix else body).encode()).hexdigest()
+
+    data, record, tombstones = (os.path.join(idx, c) for c in comps)
+    assert [_file_schema(p) for p in (data, record, tombstones)] == list(schemas)
+    got_parts = {d for d in os.listdir(data) if "=" in d}
+    assert got_parts <= parts and (tier == "ivf" or got_parts == parts), got_parts
+    dead_id = _md5_id(dead, retract)
+    assert sorted(
+        tuple(r) for r in spark.read.parquet(record).select("batch_id", "origin").collect()
+    ) == sorted(
+        [
+            (_md5_id(head, ingest), "build"),
+            (_md5_id(tail, ingest), "append"),
+            (dead_id, "retract"),
+        ]
+    )
+    assert sorted(tuple(r) for r in spark.read.parquet(tombstones).collect()) == [
+        (r[0], dead_id) for r in sorted(dead.select(key).collect())
     ]
-    assert [tuple(x) for x in t.collect()] == [(3, -7, "b1", "build")]
-    assert [(f.name, f.dataType.simpleString()) for f in r.schema] == [
-        ("batch_id", "string"),
-        ("origin", "string"),
-    ]
-    assert sorted(tuple(x) for x in r.collect()) == [
-        ("b2", "retract"),
-        ("b3", "append"),
-    ]
+    if tier == "bm25":
+        n_docs = [r[0] for r in spark.read.parquet(record).select("n_docs").collect()]
+        assert sorted(n_docs) == [-2, 4, 4]
 
 
 def test_index_batch_write_is_single_tokenizing_scan(spark, tmp_path):
