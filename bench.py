@@ -264,6 +264,47 @@ def compact_line(timings: dict[str, float], sf: str, calib: float | None = None)
     return render({}, len(timings))
 
 
+def warm(spark, sf_dir: str, queries) -> None:
+    """Untimed warm-up shared by bench.py and tools/ab_bench.py: the
+    JVM, each big table's first scan, and every persisted index the
+    timed rows probe."""
+    from salesforce_prefect_etl_pipeline_spark.queries_llm import (
+        _ensure_ivfpq_codes,
+        ensure_ivf_index,
+        ensure_minhash_index,
+    )
+    from salesforce_prefect_etl_pipeline_spark.queries_train import (
+        ensure_champion_lists,
+        ensure_text_index_retracted,
+    )
+
+    # Warm the JVM/code paths AND each big table's first scan (not
+    # timed): the flagship covers orders, but the first documents/events
+    # query in suite order was otherwise paying the cold file scan —
+    # corpus_pack_stats benched ~2x its warm cost purely from ordering.
+    queries["spec_orders_by_status"](spark, sf_dir).collect()
+    queries["corpus_split_counts"](spark, sf_dir).collect()
+    queries["events_hourly_by_type"](spark, sf_dir).collect()
+    queries["q6_forecast_revenue"](spark, sf_dir).collect()
+    # Offline index build (not timed): ann_ivf_probe measures PROBE cost —
+    # at 100 TB the index is built once and amortized across query batches.
+    ensure_ivf_index(spark, sf_dir)
+    # the iters=0 index too: ann_ivf_list_stats reports over it, and
+    # ann_ivfpq_topk probes its derived PQ-codes component (the codes
+    # encode is index-publish maintenance, warmed untimed like every
+    # other build)
+    _ensure_ivfpq_codes(spark, sf_dir, ensure_ivf_index(spark, sf_dir, iters=0))
+    # Same offline/online split for the LSH index: the probe row
+    # measures PROBE cost, the one-time corpus signing is not timed.
+    ensure_minhash_index(spark, sf_dir)
+    # ... and for the BM25 inverted index (text_bm25_indexed probes it)
+    # plus its derived champion tier (text_bm25_champion).
+    ensure_champion_lists(spark, sf_dir)
+    # ... and the retracted index (text_bm25_retracted measures the
+    # tombstone-reconciled PROBE, not the build+retract maintenance)
+    ensure_text_index_retracted(spark, sf_dir)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -277,46 +318,7 @@ def main() -> None:
     spark = get_spark("bench")
     queries = entrymod.queries()
 
-    # Warm the JVM/code paths AND each big table's first scan (not
-    # timed): the flagship covers orders, but the first documents/events
-    # query in suite order was otherwise paying the cold file scan —
-    # corpus_pack_stats benched ~2x its warm cost purely from ordering.
-    queries["spec_orders_by_status"](spark, sf_dir).collect()
-    queries["corpus_split_counts"](spark, sf_dir).collect()
-    queries["events_hourly_by_type"](spark, sf_dir).collect()
-    queries["q6_forecast_revenue"](spark, sf_dir).collect()
-    # Offline index build (not timed): ann_ivf_probe measures PROBE cost —
-    # at 100 TB the index is built once and amortized across query batches.
-    from salesforce_prefect_etl_pipeline_spark.queries_llm import (
-        ensure_ivf_index,
-        ensure_minhash_index,
-    )
-
-    ensure_ivf_index(spark, sf_dir)
-    # the iters=0 index too: ann_ivf_list_stats reports over it, and
-    # ann_ivfpq_topk probes its derived PQ-codes component (the codes
-    # encode is index-publish maintenance, warmed untimed like every
-    # other build)
-    idx0 = ensure_ivf_index(spark, sf_dir, iters=0)
-    from salesforce_prefect_etl_pipeline_spark.queries_llm import (
-        _ensure_ivfpq_codes,
-    )
-
-    _ensure_ivfpq_codes(spark, sf_dir, idx0)
-    # Same offline/online split for the LSH index: the probe row
-    # measures PROBE cost, the one-time corpus signing is not timed.
-    ensure_minhash_index(spark, sf_dir)
-    # ... and for the BM25 inverted index (text_bm25_indexed probes it)
-    # plus its derived champion tier (text_bm25_champion).
-    from salesforce_prefect_etl_pipeline_spark.queries_train import (
-        ensure_champion_lists,
-        ensure_text_index_retracted,
-    )
-
-    ensure_champion_lists(spark, sf_dir)
-    # ... and the retracted index (text_bm25_retracted measures the
-    # tombstone-reconciled PROBE, not the build+retract maintenance)
-    ensure_text_index_retracted(spark, sf_dir)
+    warm(spark, sf_dir, queries)
 
     from salesforce_prefect_etl_pipeline_spark.queries_llm import _minhash_pairs_cached
 

@@ -1008,29 +1008,6 @@ ORDER BY da, db
 
 # ----------------------------------------------------------------------
 # MinHash + LSH
-def minhash_signatures(docs: DataFrame, k: int = 8, num_hashes: int = 64) -> DataFrame:
-    """(doc_id, sig: array<bigint>) — min over the shingle set of
-    pmod(a_i * h(s) + b_i, 2^31-1) per permutation i, with
-    h(s) = hash60 (md5-60bit) reduced mod 2^31-1.
-
-    Explode + one group-by with 64 min-aggregates: the aggregation is
-    whole-stage-codegen'd (array higher-order functions are interpreted,
-    measurably slower at this expression count) and the shuffle carries
-    only (doc_id, 64 longs). Shingles enter pre-hashed (see
-    char_shingle_hashes) so no strings cross the exchange.
-    """
-    sh = char_shingle_hashes(docs, k)
-    h = F.pmod(F.col("h"), F.lit(MERSENNE_31))
-    mins = [
-        F.min(
-            F.pmod(F.lit(MINHASH_A[i]) * h + F.lit(MINHASH_B[i]), F.lit(MERSENNE_31))
-        ).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sig = sh.groupBy("doc_id").agg(*mins)
-    return sig.select(
-        "doc_id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig")
-    )
 
 
 def band_key_array(sig: Column, bands: int = 16, rows: int = 4) -> Column:

@@ -68,6 +68,8 @@ components in place, resolved through :func:`index_component_path`,
 so inside the live snapshot once one was published. It deletes the
 tier's commit record first (:func:`reset_tier`), so a torn rebuild
 fails loudly instead of reading new data against stale commit ids.
+An IVF build resets its tier the same way and also removes the
+centroids every probe needs.
 Compaction and rebuild write a whole snapshot into the staging root
 :func:`next_version` returns (``versions/v<N+1>/``) and
 :func:`publish_version` makes it live by atomically replacing the

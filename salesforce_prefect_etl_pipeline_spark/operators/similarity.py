@@ -45,6 +45,7 @@ from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
     next_version,
     publish_version,
     reconciled_read,
+    reset_tier,
     reset_versions,
     retract_batch,
     write_stamped,
@@ -519,14 +520,15 @@ def build_ivf_index(
 
     A full build SUPERSEDES any versioned history at this path: the
     CURRENT pointer and versions/ are removed first, else the fresh
-    flat layout would be shadowed by a stale versioned snapshot. The
-    flat tombstone component is removed too (r15 advice): retractions
-    were aimed at the superseded corpus, and a later retraction whose
-    content-derived batch id collides with a stale tombstone batch's
-    must not resurrect rows that kill vectors live in the rebuilt
-    index."""
+    flat layout would be shadowed by a stale versioned snapshot. Then
+    the tier is reset (``index_store.reset_tier``: the commit record and
+    the tombstones aimed at the superseded corpus) and the centroids are
+    removed, so a rebuild torn before its commit row has no centroids
+    and every probe fails loudly instead of reading the new lists
+    against stale commit ids."""
     reset_versions(index_dir)
-    shutil.rmtree(os.path.join(index_dir, IVF.tombstones), ignore_errors=True)
+    reset_tier(index_dir, IVF)
+    shutil.rmtree(os.path.join(index_dir, "centroids"), ignore_errors=True)
     return _write_ivf_snapshot(emb, index_dir, nlist, iters, seed_emb)
 
 
@@ -556,7 +558,8 @@ def _write_ivf_snapshot(
     )
     # r15: every write is batch-stamped with a vecbatches commit record
     # (the text tiers' invariant) so streamed appends get exactly-once
-    # reads; centroids land LAST — they carry the ensure gates.
+    # reads; centroids land last, so an index whose lists write was
+    # torn has none.
     _write_lists(emb, root, cents, "overwrite", batch_id_of(emb, IVF))
     cent_df = emb.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],

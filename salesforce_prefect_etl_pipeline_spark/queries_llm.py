@@ -18,11 +18,15 @@ from salesforce_prefect_etl_pipeline_spark.operators import (
 )
 from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
     current_index_version,
-    index_component_path,
 )
 from salesforce_prefect_etl_pipeline_spark.memo import AppMemo
 from salesforce_prefect_etl_pipeline_spark.plans import load_table
-from salesforce_prefect_etl_pipeline_spark.queries_registry import register_query
+from salesforce_prefect_etl_pipeline_spark.queries_registry import (
+    build_derived,
+    build_once,
+    fixture_dir,
+    register_query,
+)
 
 ANN_QUERY_IDS = [1, 7, 42, 99, 123]
 
@@ -84,8 +88,8 @@ assigned AS (
 # panel-seeded and therefore defined after the panel helpers below.
 
 
-#: (app, index_dir, version) -> centroids ndarray; (app, sf_dir) ->
-#: query vectors. Driver-side memos: centroids/query vectors are tiny
+#: (app, index_dir, version) -> centroids ndarray; (app, sf_dir, ids)
+#: -> query vectors. Driver-side memos: centroids/query vectors are tiny
 #: and immutable per index VERSION — a probe should pay ONLY the
 #: pruned-partition scan + rank. Both follow the AppMemo discipline
 #: (bounded, auto-evicting on a new applicationId — see memo.py); the
@@ -111,9 +115,73 @@ def _ivf_centroids(spark, index_dir: str):
     return cents
 
 
+def _query_vectors(
+    spark, sf_dir: str, ids: tuple[int, ...] = tuple(ANN_QUERY_IDS)
+) -> list[tuple[int, list[float]]]:
+    """(vec_id, embedding) of the probe query ids, memoized per
+    (application, sf_dir, ids)."""
+    key = (spark.sparkContext.applicationId, sf_dir, ids)
+    qvecs = _QVEC_CACHE.get(key)
+    if qvecs is None:
+        qvecs = _QVEC_CACHE[key] = [
+            (r.vec_id, list(r.embedding))
+            for r in load_table(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id").isin(list(ids)))
+            .collect()
+        ]
+    return qvecs
+
+
+def _ivf_fixture(spark, sf_dir: str, layout: str, build) -> str:
+    """An IVF fixture built once per embeddings version (the
+    ``build_once`` gate). ``build(index_dir)`` returns the centroids it
+    published; they seed the centroid memo, so the first probe after a
+    build reads none. Opening the index loads them otherwise: an online
+    ANN service holds the (nlist x dim) centroids in memory, so that is
+    part of index open, not of a probe."""
+
+    def _build(index_dir: str) -> None:
+        cents = build(index_dir)
+        _CENTROID_CACHE[
+            (
+                spark.sparkContext.applicationId,
+                index_dir,
+                current_index_version(index_dir),
+            )
+        ] = cents
+
+    index_dir = build_once(
+        fixture_dir(IVF_INDEX_ROOT, sf_dir, layout),
+        os.path.join(sf_dir, "embeddings.parquet"),
+        _build,
+    )
+    _ivf_centroids(spark, index_dir)
+    return index_dir
+
+
+def _probe_ivf_fixture(
+    spark,
+    sf_dir: str,
+    index_dir: str,
+    k: int = 10,
+    nprobe: int = 4,
+    ids: tuple[int, ...] = tuple(ANN_QUERY_IDS),
+):
+    """``probe_ivf`` over a fixture with its memoized centroids and
+    query vectors."""
+    return similarity.probe_ivf(
+        spark,
+        index_dir,
+        _query_vectors(spark, sf_dir, ids),
+        k=k,
+        nprobe=nprobe,
+        centroids=_ivf_centroids(spark, index_dir),
+    )
+
+
 def ensure_ivf_index(spark, sf_dir: str, nlist: int = 16, iters: int = 10) -> str:
-    """Build the persisted IVF index for a testdata dir once per process
-    lifetime (train -> assign -> partitioned-by-list_id parquet); return
+    """Build the persisted IVF index for a testdata dir once per source
+    version (train -> assign -> partitioned-by-list_id parquet); return
     its path. The offline-build / online-probe split is the 100 TB
     contract — see similarity.build_ivf_index.
 
@@ -121,54 +189,20 @@ def ensure_ivf_index(spark, sf_dir: str, nlist: int = 16, iters: int = 10) -> st
     (re)written is rebuilt, not reused — the testdata generator does
     regenerate between rounds, and probing a stale index silently
     returns assignments of data that no longer exists."""
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
     # det5 (r16): origin-stamped commit records (build/append/retract)
     # (det4/r15: batch-stamped lists + vecbatches commit records)
     # (det3/r14: panel-seeded iters=0 quantizer)
-    index_dir = os.path.join(
-        IVF_INDEX_ROOT, f"{tag}-nlist{nlist}-iters{iters}-det5"
-    )
-    success = os.path.join(
-        index_component_path(index_dir, "centroids"), "_SUCCESS"
-    )
-    stale = os.path.exists(success) and os.path.getmtime(success) < os.path.getmtime(
-        os.path.join(sf_dir, "embeddings.parquet")
-    )
-    if stale or not os.path.exists(success):
-        # iters=0 is the SQL-replayable configuration: panel-seeded so
-        # the seed pick stays replayable at any corpus size (no
-        # SeedReplayError); the Lloyd's path keeps its corpus sampling.
-        seed_emb = _emb_panel(spark, sf_dir) if iters == 0 else None
-        cents = similarity.build_ivf_index(
-            _emb(spark, sf_dir), index_dir, nlist=nlist, iters=iters,
-            seed_emb=seed_emb,
-        )
-        # a full build resets the index to the flat ("") version layout
-        _CENTROID_CACHE[
-            (spark.sparkContext.applicationId, index_dir, "")
-        ] = cents
-    else:
-        # an online ANN service holds the (nlist x dim) centroids in
-        # memory; loading them is part of index open, not of a probe
-        _ivf_centroids(spark, index_dir)
-    return index_dir
-
-
-def _ivf_probe_query(spark, sf_dir: str, k: int = 10, nprobe: int = 8):
-    index_dir = ensure_ivf_index(spark, sf_dir)
-    cents = _ivf_centroids(spark, index_dir)
-    qkey = (spark.sparkContext.applicationId, sf_dir)
-    qvecs = _QVEC_CACHE.get(qkey)
-    if qvecs is None:
-        qvecs = [
-            (r.vec_id, list(r.embedding))
-            for r in load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id").isin(ANN_QUERY_IDS))
-            .collect()
-        ]
-        _QVEC_CACHE[qkey] = qvecs
-    return similarity.probe_ivf(
-        spark, index_dir, qvecs, k=k, nprobe=nprobe, centroids=cents
+    # iters=0 is the SQL-replayable configuration: panel-seeded so the
+    # seed pick stays replayable at any corpus size (no SeedReplayError);
+    # the Lloyd's path keeps its corpus sampling.
+    return _ivf_fixture(
+        spark,
+        sf_dir,
+        f"-nlist{nlist}-iters{iters}-det5",
+        lambda d: similarity.build_ivf_index(
+            _emb(spark, sf_dir), d, nlist=nlist, iters=iters,
+            seed_emb=_emb_panel(spark, sf_dir) if iters == 0 else None,
+        ),
     )
 
 
@@ -587,23 +621,21 @@ _CORPUS_PCT = 80
 
 
 def ensure_minhash_index(spark, sf_dir: str, k: int = 8) -> str:
-    """Build the persisted corpus LSH index once per process lifetime
-    (same staleness discipline as ensure_ivf_index: an index persisted
+    """Build the persisted corpus LSH index once per source version
+    (the ``build_once`` gate, as ensure_ivf_index: an index persisted
     before the source documents file was rewritten is rebuilt, not
     silently probed)."""
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_dir = os.path.join(MINHASH_INDEX_ROOT, f"{tag}-k{k}-c{_CORPUS_PCT}")
-    success = os.path.join(index_component_path(index_dir, "bands"), "_SUCCESS")
-    src = os.path.join(sf_dir, "documents.parquet")
-    stale = os.path.exists(success) and os.path.getmtime(
-        success
-    ) < os.path.getmtime(src)
-    if stale or not os.path.exists(success):
-        corpus_side = _docs(spark, sf_dir).filter(
-            corpus.split_bucket(F.col("doc_id")) < _CORPUS_PCT
-        )
-        dedup.build_minhash_index(corpus_side, index_dir, k=k)
-    return index_dir
+    return build_once(
+        fixture_dir(MINHASH_INDEX_ROOT, sf_dir, f"-k{k}-c{_CORPUS_PCT}"),
+        os.path.join(sf_dir, "documents.parquet"),
+        lambda d: dedup.build_minhash_index(
+            _docs(spark, sf_dir).filter(
+                corpus.split_bucket(F.col("doc_id")) < _CORPUS_PCT
+            ),
+            d,
+            k=k,
+        ),
+    )
 
 
 def _incremental_dedup_query(spark, sf_dir):
@@ -761,28 +793,15 @@ register_query(
 
 def _ivf_probe_contract_query(spark, sf_dir: str, k: int = 10, nprobe: int = 8):
     index_dir = ensure_ivf_index(spark, sf_dir)
-    cents = _ivf_centroids(spark, index_dir)
-    qkey = (spark.sparkContext.applicationId, sf_dir)
-    qvecs = _QVEC_CACHE.get(qkey)
-    if qvecs is None:
-        qvecs = [
-            (r.vec_id, list(r.embedding))
-            for r in load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id").isin(ANN_QUERY_IDS))
-            .collect()
-        ]
-        _QVEC_CACHE[qkey] = qvecs
-    probed = similarity.probe_ivf(
-        spark, index_dir, qvecs, k=k, nprobe=nprobe, centroids=cents
-    )
+    probed = _probe_ivf_fixture(spark, sf_dir, index_dir, k, nprobe)
     exact = similarity.probe_ivf_exact_within_lists(
         spark,
         index_dir,
         _emb(spark, sf_dir),
-        qvecs,
+        _query_vectors(spark, sf_dir),
         k=k,
         nprobe=nprobe,
-        centroids=cents,
+        centroids=_ivf_centroids(spark, index_dir),
     )
     ex = exact.select(
         "query_id",
@@ -832,20 +851,8 @@ def _ivf_probe_exact_query(spark, sf_dir: str, k: int = 10, nprobe: int = 4):
     tighter lists (better recall per probe) at the cost of that
     replayability; this query proves the probe MACHINERY exact, the
     other keeps the production quantizer honest via recall pytests."""
-    index_dir = ensure_ivf_index(spark, sf_dir, iters=0)
-    cents = _ivf_centroids(spark, index_dir)
-    qkey = (spark.sparkContext.applicationId, sf_dir)
-    qvecs = _QVEC_CACHE.get(qkey)
-    if qvecs is None:
-        qvecs = [
-            (r.vec_id, list(r.embedding))
-            for r in load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id").isin(ANN_QUERY_IDS))
-            .collect()
-        ]
-        _QVEC_CACHE[qkey] = qvecs
-    return similarity.probe_ivf(
-        spark, index_dir, qvecs, k=k, nprobe=nprobe, centroids=cents
+    return _probe_ivf_fixture(
+        spark, sf_dir, ensure_ivf_index(spark, sf_dir, iters=0), k, nprobe
     )
 
 
@@ -910,48 +917,26 @@ def _ivf_probe_appended_query(spark, sf_dir: str, k: int = 10, nprobe: int = 4):
     value-identical to a monolithic build with the same centroids over
     the union — the oracle replays exactly that: seeds restricted to
     the 80% split, assignment over the full corpus."""
-    import shutil
+    index_dir = _ivf_fixture(
+        spark, sf_dir, "-appended-iters0-det5",
+        lambda d: _build_ivf_appended(spark, sf_dir, d),
+    )
+    return _probe_ivf_fixture(spark, sf_dir, index_dir, k, nprobe)
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_dir = os.path.join(IVF_INDEX_ROOT, f"{tag}-appended-iters0-det5")
-    marker = os.path.join(index_dir, "_APPENDED")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    stale = os.path.exists(marker) and os.path.getmtime(marker) < os.path.getmtime(src)
-    if stale or not os.path.exists(marker):
-        # build + append are one logical transaction here: a marker
-        # written only after the append makes a crash between the two
-        # rebuild from scratch instead of probing a half-built index
-        shutil.rmtree(index_dir, ignore_errors=True)
-        emb = _emb(spark, sf_dir)
-        corpus_side = emb.filter(corpus.split_bucket(F.col("vec_id")) < 80)
-        # panel ∩ build-split seeds: replayed by the oracle as the
-        # panel relation under the same split predicate
-        seed_emb = _emb_panel(spark, sf_dir).filter(
-            corpus.split_bucket(F.col("vec_id")) < 80
-        )
-        cents = similarity.build_ivf_index(
-            corpus_side, index_dir, nlist=_SEED_NLIST, iters=0,
-            seed_emb=seed_emb,
-        )
-        increment = emb.filter(corpus.split_bucket(F.col("vec_id")) >= 80)
-        similarity.append_ivf_vectors(spark, index_dir, increment, centroids=cents)
-        open(marker, "w").close()
-        _CENTROID_CACHE[
-            (spark.sparkContext.applicationId, index_dir, "")
-        ] = cents
-    cents = _ivf_centroids(spark, index_dir)
-    qkey = (spark.sparkContext.applicationId, sf_dir)
-    qvecs = _QVEC_CACHE.get(qkey)
-    if qvecs is None:
-        qvecs = [
-            (r.vec_id, list(r.embedding))
-            for r in load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id").isin(ANN_QUERY_IDS))
-            .collect()
-        ]
-        _QVEC_CACHE[qkey] = qvecs
-    return similarity.probe_ivf(
-        spark, index_dir, qvecs, k=k, nprobe=nprobe, centroids=cents
+
+def _build_ivf_appended(spark, sf_dir: str, index_dir: str):
+    """The iters=0 index over the 80% md5 split, seeded from the panel
+    ∩ that split (replayed by the oracle as the panel relation under
+    the same predicate), then the 20% increment appended with the
+    frozen centroids; returns them."""
+    emb = _emb(spark, sf_dir)
+    b = corpus.split_bucket(F.col("vec_id"))
+    cents = similarity.build_ivf_index(
+        emb.filter(b < 80), index_dir, nlist=_SEED_NLIST, iters=0,
+        seed_emb=_emb_panel(spark, sf_dir).filter(b < 80),
+    )
+    return similarity.append_ivf_vectors(
+        spark, index_dir, emb.filter(b >= 80), centroids=cents
     )
 
 
@@ -1036,16 +1021,10 @@ def _ensure_ivfpq_codes(spark, sf_dir: str, index_dir: str):
     stored lists + panel-seeded codebooks — the champion-tier staleness
     rule, vector edition)."""
     books = _panel_pq_books(spark, sf_dir)
-    success = os.path.join(
-        index_component_path(index_dir, "pqcodes"), "_SUCCESS"
+    build_derived(
+        index_dir, "pqcodes",
+        lambda: similarity.build_ivfpq_codes(spark, index_dir, books),
     )
-    cent_success = os.path.join(
-        index_component_path(index_dir, "centroids"), "_SUCCESS"
-    )
-    if not os.path.exists(success) or os.path.getmtime(
-        success
-    ) < os.path.getmtime(cent_success):
-        similarity.build_ivfpq_codes(spark, index_dir, books)
     return books
 
 
@@ -1061,26 +1040,15 @@ def _ivfpq_topk_query(
     tables, shortlist cut, re-rank — replays as one SQL value-hash."""
     index_dir = ensure_ivf_index(spark, sf_dir, iters=0)
     books = _ensure_ivfpq_codes(spark, sf_dir, index_dir)
-    cents = _ivf_centroids(spark, index_dir)
-    qkey = (spark.sparkContext.applicationId, sf_dir)
-    qvecs = _QVEC_CACHE.get(qkey)
-    if qvecs is None:
-        qvecs = [
-            (r.vec_id, list(r.embedding))
-            for r in load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id").isin(ANN_QUERY_IDS))
-            .collect()
-        ]
-        _QVEC_CACHE[qkey] = qvecs
     return similarity.probe_ivfpq(
         spark,
         index_dir,
-        qvecs,
+        _query_vectors(spark, sf_dir),
         k=k,
         nprobe=nprobe,
         shortlist=shortlist,
         rerank_emb=_emb(spark, sf_dir),
-        centroids=cents,
+        centroids=_ivf_centroids(spark, index_dir),
         codebooks=books,
     )
 
@@ -1248,16 +1216,10 @@ def _ensure_ivfpq_residual_codes(spark, sf_dir: str, index_dir: str):
     :func:`_ensure_ivfpq_codes`, parallel component so both layouts
     coexist on one index."""
     books = _panel_pq_residual_books(spark, sf_dir)
-    success = os.path.join(
-        index_component_path(index_dir, "pqrescodes"), "_SUCCESS"
+    build_derived(
+        index_dir, "pqrescodes",
+        lambda: similarity.build_ivfpq_codes(spark, index_dir, books, residual=True),
     )
-    cent_success = os.path.join(
-        index_component_path(index_dir, "centroids"), "_SUCCESS"
-    )
-    if not os.path.exists(success) or os.path.getmtime(
-        success
-    ) < os.path.getmtime(cent_success):
-        similarity.build_ivfpq_codes(spark, index_dir, books, residual=True)
     return books
 
 
@@ -1275,26 +1237,15 @@ def _ivfpq_residual_topk_query(
     shortlist, re-rank — still replays as one SQL value-hash."""
     index_dir = ensure_ivf_index(spark, sf_dir, iters=0)
     books = _ensure_ivfpq_residual_codes(spark, sf_dir, index_dir)
-    cents = _ivf_centroids(spark, index_dir)
-    qkey = (spark.sparkContext.applicationId, sf_dir)
-    qvecs = _QVEC_CACHE.get(qkey)
-    if qvecs is None:
-        qvecs = [
-            (r.vec_id, list(r.embedding))
-            for r in load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id").isin(ANN_QUERY_IDS))
-            .collect()
-        ]
-        _QVEC_CACHE[qkey] = qvecs
     return similarity.probe_ivfpq(
         spark,
         index_dir,
-        qvecs,
+        _query_vectors(spark, sf_dir),
         k=k,
         nprobe=nprobe,
         shortlist=shortlist,
         rerank_emb=_emb(spark, sf_dir),
-        centroids=cents,
+        centroids=_ivf_centroids(spark, index_dir),
         codebooks=books,
         residual=True,
     )
@@ -1488,45 +1439,16 @@ def _ivf_rebalanced_query(spark, sf_dir: str, k: int = 10, nprobe: int = 4):
     is bit-identical to a monolithic panel-seeded build over the whole
     corpus — so the probe shares ``ann_ivf_probe_exact``'s oracle,
     value-proving the recut rather than asserting recall statistics."""
-    import shutil
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_dir = os.path.join(IVF_INDEX_ROOT, f"{tag}-rebalanced-iters0-det5")
-    marker = os.path.join(index_dir, "_REBALANCED")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    stale = os.path.exists(marker) and os.path.getmtime(marker) < os.path.getmtime(src)
-    if stale or not os.path.exists(marker):
-        shutil.rmtree(index_dir, ignore_errors=True)
-        emb = _emb(spark, sf_dir)
-        corpus_side = emb.filter(corpus.split_bucket(F.col("vec_id")) < 80)
-        seed_emb = _emb_panel(spark, sf_dir).filter(
-            corpus.split_bucket(F.col("vec_id")) < 80
-        )
-        cents = similarity.build_ivf_index(
-            corpus_side, index_dir, nlist=_SEED_NLIST, iters=0,
-            seed_emb=seed_emb,
-        )
-        increment = emb.filter(corpus.split_bucket(F.col("vec_id")) >= 80)
-        similarity.append_ivf_vectors(spark, index_dir, increment, centroids=cents)
-        similarity.rebalance_ivf_index(
+    def _build(index_dir: str):
+        _build_ivf_appended(spark, sf_dir, index_dir)
+        return similarity.rebalance_ivf_index(
             spark, index_dir, nlist=_SEED_NLIST, iters=0,
             seed_emb=_emb_panel(spark, sf_dir),
         )
-        open(marker, "w").close()
-    cents = _ivf_centroids(spark, index_dir)
-    qkey = (spark.sparkContext.applicationId, sf_dir)
-    qvecs = _QVEC_CACHE.get(qkey)
-    if qvecs is None:
-        qvecs = [
-            (r.vec_id, list(r.embedding))
-            for r in load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id").isin(ANN_QUERY_IDS))
-            .collect()
-        ]
-        _QVEC_CACHE[qkey] = qvecs
-    return similarity.probe_ivf(
-        spark, index_dir, qvecs, k=k, nprobe=nprobe, centroids=cents
-    )
+
+    index_dir = _ivf_fixture(spark, sf_dir, "-rebalanced-iters0-det5", _build)
+    return _probe_ivf_fixture(spark, sf_dir, index_dir, k, nprobe)
 
 
 register_query(
@@ -1548,15 +1470,8 @@ def _ivf_retracted_query(spark, sf_dir: str, k: int = 10, nprobe: int = 4):
     BUILD-time quantizer stays frozen (the tombstone semantics) — the
     oracle replays exactly that: full-corpus seeds and assignment,
     candidates restricted to the live complement."""
-    import shutil
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_dir = os.path.join(IVF_INDEX_ROOT, f"{tag}-retracted-iters0-det5")
-    marker = os.path.join(index_dir, "_RETRACTED")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    stale = os.path.exists(marker) and os.path.getmtime(marker) < os.path.getmtime(src)
-    if stale or not os.path.exists(marker):
-        shutil.rmtree(index_dir, ignore_errors=True)
+    def _build(index_dir: str):
         emb = _emb(spark, sf_dir)
         cents = similarity.build_ivf_index(
             emb, index_dir, nlist=_SEED_NLIST, iters=0,
@@ -1566,24 +1481,10 @@ def _ivf_retracted_query(spark, sf_dir: str, k: int = 10, nprobe: int = 4):
             corpus.split_bucket(F.col("vec_id")) >= _IVF_RETRACT_PCT
         ).select("vec_id")
         similarity.retract_ivf_vectors(spark, index_dir, dead)
-        open(marker, "w").close()
-        _CENTROID_CACHE[
-            (spark.sparkContext.applicationId, index_dir, "")
-        ] = cents
-    cents = _ivf_centroids(spark, index_dir)
-    qkey = (spark.sparkContext.applicationId, sf_dir)
-    qvecs = _QVEC_CACHE.get(qkey)
-    if qvecs is None:
-        qvecs = [
-            (r.vec_id, list(r.embedding))
-            for r in load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id").isin(ANN_QUERY_IDS))
-            .collect()
-        ]
-        _QVEC_CACHE[qkey] = qvecs
-    return similarity.probe_ivf(
-        spark, index_dir, qvecs, k=k, nprobe=nprobe, centroids=cents
-    )
+        return cents
+
+    index_dir = _ivf_fixture(spark, sf_dir, "-retracted-iters0-det5", _build)
+    return _probe_ivf_fixture(spark, sf_dir, index_dir, k, nprobe)
 
 
 register_query(

@@ -360,12 +360,10 @@ def _streaming_ivf_index_ingest(spark, sf_dir):
     separately."""
     import tempfile as _tf
 
-    from pyspark.sql import functions as F
-
     from salesforce_prefect_etl_pipeline_spark.operators import similarity
     from salesforce_prefect_etl_pipeline_spark.queries_llm import (
-        ANN_QUERY_IDS,
         _panel_seed_cents,
+        _query_vectors,
     )
     from salesforce_prefect_etl_pipeline_spark.streaming.ingest import (
         stream_embeddings,
@@ -373,12 +371,7 @@ def _streaming_ivf_index_ingest(spark, sf_dir):
     )
 
     cents = _panel_seed_cents(spark, sf_dir)
-    qvecs = [
-        (r.vec_id, list(r.embedding))
-        for r in load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id").isin(ANN_QUERY_IDS))
-        .collect()
-    ]
+    qvecs = _query_vectors(spark, sf_dir)
     with _tf.TemporaryDirectory(prefix="ivf_ingest_") as tmp:
         index_dir = f"{tmp}/index"
         # index open: persist the frozen quantizer; lists arrive by stream
@@ -485,10 +478,10 @@ def _streaming_ivf_retraction(spark, sf_dir):
         similarity,
     )
     from salesforce_prefect_etl_pipeline_spark.queries_llm import (
-        ANN_QUERY_IDS,
         _SEED_NLIST,
         _emb,
         _emb_panel,
+        _query_vectors,
     )
     from salesforce_prefect_etl_pipeline_spark.streaming.ingest import (
         stream_embeddings,
@@ -496,12 +489,7 @@ def _streaming_ivf_retraction(spark, sf_dir):
     )
 
     emb = _emb(spark, sf_dir)
-    qvecs = [
-        (r.vec_id, list(r.embedding))
-        for r in load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id").isin(ANN_QUERY_IDS))
-        .collect()
-    ]
+    qvecs = _query_vectors(spark, sf_dir)
     with _tf.TemporaryDirectory(prefix="ivf_retract_") as tmp:
         index_dir = f"{tmp}/index"
         cents = similarity.build_ivf_index(

@@ -13,11 +13,24 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from salesforce_prefect_etl_pipeline_spark.operators import retrieval, train
+from salesforce_prefect_etl_pipeline_spark.operators import corpus, retrieval, train
 from salesforce_prefect_etl_pipeline_spark.plans.compiler import load_table
-from salesforce_prefect_etl_pipeline_spark.queries_llm import _emb, _spread_scan
-from salesforce_prefect_etl_pipeline_spark.queries_registry import register_query
+from salesforce_prefect_etl_pipeline_spark.queries_llm import (
+    _SEED_NLIST,
+    _docs,
+    _emb,
+    _probe_ivf_fixture,
+    _spread_scan,
+    ensure_ivf_index,
+)
+from salesforce_prefect_etl_pipeline_spark.queries_registry import (
+    build_derived,
+    build_once,
+    fixture_dir,
+    register_query,
+)
 
 #: Persisted inverted-index root (one subdir per testdata dir, like
 #: queries_llm's IVF/minhash index roots).
@@ -26,27 +39,35 @@ TEXT_INDEX_ROOT = os.path.join(
 )
 
 
+def _text_fixture(sf_dir: str, variant: str, build) -> str:
+    """A text-index fixture built once per source version (the
+    ``build_once`` gate): ``build(index_dir)`` runs over a wiped dir
+    whenever the documents file is newer than the fixture's marker."""
+    index_dir = fixture_dir(
+        TEXT_INDEX_ROOT,
+        sf_dir,
+        f"-b{retrieval.TEXT_INDEX_BUCKETS}-L{retrieval.TEXT_INDEX_LAYOUT}{variant}",
+    )
+    return build_once(index_dir, os.path.join(sf_dir, "documents.parquet"), build)
+
+
+def _split(docs, pct: int):
+    """``docs`` split on the md5 doc_id bucket: (< ``pct``, the rest)."""
+    b = corpus.split_bucket(F.col("doc_id"))
+    return docs.filter(b < pct), docs.filter(b >= pct)
+
+
 def ensure_text_index(spark: SparkSession, sf_dir: str) -> str:
     """Build the persisted BM25 inverted index for a testdata dir once
     per source version; return its path. Same offline-build /
-    online-probe contract and mtime-staleness rule as
-    ``queries_llm.ensure_ivf_index`` — probing an index persisted
-    before the source documents file was (re)written silently serves
-    deleted data, so it is rebuilt instead."""
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_dir = os.path.join(
-        TEXT_INDEX_ROOT,
-        f"{tag}-b{retrieval.TEXT_INDEX_BUCKETS}-L{retrieval.TEXT_INDEX_LAYOUT}",
+    online-probe contract as ``queries_llm.ensure_ivf_index`` — probing
+    an index persisted before the source documents file was (re)written
+    silently serves deleted data, so it is rebuilt instead."""
+    return _text_fixture(
+        sf_dir,
+        "",
+        lambda d: retrieval.build_text_index(_docs(spark, sf_dir), d),
     )
-    success = os.path.join(index_dir, retrieval.BM25.record, "_SUCCESS")
-    stale = os.path.exists(success) and os.path.getmtime(
-        success
-    ) < os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
-    if stale or not os.path.exists(success):
-        retrieval.build_text_index(
-            _spread_scan(load_table(spark, sf_dir, "documents")), index_dir
-        )
-    return index_dir
 
 
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,31 +108,13 @@ def ensure_text_index_appended(spark: SparkSession, sf_dir: str) -> str:
     ann_ivf_probe_appended recipe) — so the registered probe
     value-verifies the whole incremental-maintenance path: its end
     state must equal the monolithic index bit-for-bit."""
-    from pyspark.sql import functions as F
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_dir = os.path.join(
-        TEXT_INDEX_ROOT,
-        f"{tag}-b{retrieval.TEXT_INDEX_BUCKETS}"
-        f"-L{retrieval.TEXT_INDEX_LAYOUT}-appended",
-    )
-    success = os.path.join(index_dir, retrieval.BM25.record, "_SUCCESS")
-    stale = os.path.exists(success) and os.path.getmtime(
-        success
-    ) < os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
-    if stale or not os.path.exists(success):
-        docs = _spread_scan(load_table(spark, sf_dir, "documents"))
-        bucket = (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                16,
-                10,
-            ).cast("long")
-            % 100
-        )
-        retrieval.build_text_index(docs.filter(bucket < 80), index_dir)
-        retrieval.append_text_index(docs.filter(bucket >= 80), index_dir)
-    return index_dir
+    def _build(index_dir: str) -> None:
+        head, tail = _split(_docs(spark, sf_dir), 80)
+        retrieval.build_text_index(head, index_dir)
+        retrieval.append_text_index(tail, index_dir)
+
+    return _text_fixture(sf_dir, "-appended", _build)
 
 
 def text_bm25_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -125,16 +128,11 @@ def text_bm25_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ensure_champion_lists(spark: SparkSession, sf_dir: str) -> str:
     """Champion tier derived from the full index (rebuilt whenever the
-    postings are newer — it's a derived cache, not a source of truth)."""
+    index is — it's a derived cache, not a source of truth)."""
     index_dir = ensure_text_index(spark, sf_dir)
-    success = os.path.join(index_dir, "champions", "_SUCCESS")
-    postings_success = os.path.join(index_dir, "postings", "_SUCCESS")
-    stale = os.path.exists(success) and os.path.getmtime(
-        success
-    ) < os.path.getmtime(postings_success)
-    if stale or not os.path.exists(success):
-        retrieval.build_champion_lists(index_dir, spark)
-    return index_dir
+    return build_derived(
+        index_dir, "champions", lambda: retrieval.build_champion_lists(index_dir, spark)
+    )
 
 
 def text_bm25_champion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -165,45 +163,13 @@ def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ensure_phrase_index(spark: SparkSession, sf_dir: str) -> str:
     """Positional tier for the phrase probe, co-located with the BM25
-    index (same bucket scheme, same staleness rule). Gates on the
-    ``posbatches`` commit marker, not the position files — a build torn
-    between the two would otherwise look complete while the probe's
-    batch reconcile sees zero committed batches."""
+    index (same bucket scheme) and rebuilt whenever that index is."""
     index_dir = ensure_text_index(spark, sf_dir)
-    success = os.path.join(index_dir, retrieval.POSITIONAL.record, "_SUCCESS")
-    stale = os.path.exists(success) and os.path.getmtime(
-        success
-    ) < os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
-    if stale or not os.path.exists(success):
-        retrieval.build_positional_index(
-            _spread_scan(load_table(spark, sf_dir, "documents")), index_dir
-        )
-    return index_dir
-
-
-def _ensure_sequence(index_dir: str, sf_dir: str, build) -> str:
-    """Marker-gated multi-step index build (r14 advice): gating on a
-    component's ``_SUCCESS`` detects only the step that WROTE it — a
-    crash later in the sequence leaves a complete-looking cache that
-    mtime never flags. So every multi-step ensure gates on ONE explicit
-    end-of-sequence marker (the ``_APPENDED`` pattern
-    ``_ivf_probe_appended_query`` uses), written after the last step;
-    a stale or missing marker wipes the dir and replays the whole
-    sequence."""
-    import shutil
-
-    marker = os.path.join(index_dir, "_COMPLETE")
-    src = os.path.join(sf_dir, "documents.parquet")
-    stale = os.path.exists(marker) and os.path.getmtime(
-        marker
-    ) < os.path.getmtime(src)
-    if stale or not os.path.exists(marker):
-        shutil.rmtree(index_dir, ignore_errors=True)
-        build()
-        os.makedirs(index_dir, exist_ok=True)
-        with open(marker, "w") as f:
-            f.write("ok")
-    return index_dir
+    return build_derived(
+        index_dir,
+        retrieval.POSITIONAL.data,
+        lambda: retrieval.build_positional_index(_docs(spark, sf_dir), index_dir),
+    )
 
 
 def ensure_phrase_index_appended(spark: SparkSession, sf_dir: str) -> str:
@@ -212,33 +178,14 @@ def ensure_phrase_index_appended(spark: SparkSession, sf_dir: str) -> str:
     other *_appended rows use), in its own dir so the monolithic row
     stays independent. The registered probe over it value-verifies the
     positional append path end-to-end: union of batches == monolithic
-    tier bit-for-bit. Gated on the end-of-sequence marker, not the
-    mid-sequence ``posbatches/_SUCCESS`` (r14 advice: that file is
-    written by the initial build, so a crash before the append left a
-    complete-looking stale cache)."""
-    from pyspark.sql import functions as F
+    tier bit-for-bit."""
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_dir = os.path.join(
-        TEXT_INDEX_ROOT,
-        f"{tag}-b{retrieval.TEXT_INDEX_BUCKETS}"
-        f"-L{retrieval.TEXT_INDEX_LAYOUT}-pos-appended",
-    )
+    def _build(index_dir: str) -> None:
+        head, tail = _split(_docs(spark, sf_dir), 80)
+        retrieval.build_positional_index(head, index_dir)
+        retrieval.append_positional_index(tail, index_dir)
 
-    def _build() -> None:
-        docs = _spread_scan(load_table(spark, sf_dir, "documents"))
-        bucket = (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                16,
-                10,
-            ).cast("long")
-            % 100
-        )
-        retrieval.build_positional_index(docs.filter(bucket < 80), index_dir)
-        retrieval.append_positional_index(docs.filter(bucket >= 80), index_dir)
-
-    return _ensure_sequence(index_dir, sf_dir, _build)
+    return _text_fixture(sf_dir, "-pos-appended", _build)
 
 
 def text_phrase_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -267,34 +214,15 @@ def ensure_champion_appended(spark: SparkSession, sf_dir: str) -> str:
     buckets — the realistic append-heavy lifecycle (r13 verdict task 4:
     previously each batch re-paid a full champion rebuild). End state
     must equal the monolithic cut over the full corpus."""
-    from pyspark.sql import functions as F
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_dir = os.path.join(
-        TEXT_INDEX_ROOT,
-        f"{tag}-b{retrieval.TEXT_INDEX_BUCKETS}"
-        f"-L{retrieval.TEXT_INDEX_LAYOUT}-champ-appended",
-    )
-
-    def _build() -> None:
-        docs = _spread_scan(load_table(spark, sf_dir, "documents"))
-        bucket = (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                16,
-                10,
-            ).cast("long")
-            % 100
-        )
-        head, tail = docs.filter(bucket < 80), docs.filter(bucket >= 80)
+    def _build(index_dir: str) -> None:
+        head, tail = _split(_docs(spark, sf_dir), 80)
         retrieval.build_text_index(head, index_dir)
         retrieval.build_champion_lists(index_dir, spark)
         retrieval.append_text_index(tail, index_dir)
         retrieval.append_champion_lists(tail, index_dir)
 
-    # end-of-sequence marker gate (r14 advice): champions/_SUCCESS is
-    # written by the MID-sequence build_champion_lists call
-    return _ensure_sequence(index_dir, sf_dir, _build)
+    return _text_fixture(sf_dir, "-champ-appended", _build)
 
 
 def text_bm25_champion_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -367,6 +295,20 @@ def text_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return retrieval.hybrid_rrf_topk(docs, emb, spark)
 
 
+def _ann_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The hybrid queries' semantic leg: top-20 per anchor vector from
+    the iters=0 IVF index at nprobe = nlist, which scans every list and
+    so equals the brute-force cosine ranking."""
+    return _probe_ivf_fixture(
+        spark,
+        sf_dir,
+        ensure_ivf_index(spark, sf_dir, iters=0),
+        k=20,
+        nprobe=_SEED_NLIST,
+        ids=tuple(v for _, _, v in retrieval.HYBRID_QUERIES),
+    )
+
+
 def text_hybrid_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB form of ``text_hybrid_rrf_topk``: BOTH legs come from
     persisted indexes — the bucket-pruned BM25 probe and the
@@ -377,35 +319,15 @@ def text_hybrid_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     leg-swap claim, not just asserts it. At nprobe < nlist the same
     composition is the documented approximate tier (IVF recall
     pytests)."""
-    from salesforce_prefect_etl_pipeline_spark.queries_llm import (
-        _SEED_NLIST,
-        _ivf_centroids,
-        ensure_ivf_index,
-    )
-    from pyspark.sql import functions as F
-
+    q = retrieval.HYBRID_QUERIES
     bm = retrieval.probe_text_index(
         spark,
         ensure_text_index(spark, sf_dir),
-        queries=tuple((q, t) for q, t, _ in retrieval.HYBRID_QUERIES),
+        queries=tuple((qid, t) for qid, t, _ in q),
         k=20,
     )
-    ivf_dir = ensure_ivf_index(spark, sf_dir, iters=0)
-    cents = _ivf_centroids(spark, ivf_dir)
-    anchors = [v for _, _, v in retrieval.HYBRID_QUERIES]
-    from salesforce_prefect_etl_pipeline_spark.operators import similarity
-
-    qvecs = [
-        (r.vec_id, list(r.embedding))
-        for r in load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id").isin(anchors))
-        .collect()
-    ]
-    ann = similarity.probe_ivf(
-        spark, ivf_dir, qvecs, k=20, nprobe=_SEED_NLIST, centroids=cents
-    )
     return retrieval.hybrid_rrf_from_legs(
-        bm, ann, spark, retrieval.HYBRID_QUERIES, k=5
+        bm, _ann_leg(spark, sf_dir), spark, q, k=5
     )
 
 
@@ -421,22 +343,10 @@ def ensure_text_index_retracted(spark: SparkSession, sf_dir: str) -> str:
     documents retracted (tombstone batches + negative totals + the
     champion recut) — the registered probes over it value-verify the
     whole delete path: retract == never-ingested, at every tier."""
-    from pyspark.sql import functions as F
 
-    from salesforce_prefect_etl_pipeline_spark.operators import corpus
-
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_dir = os.path.join(
-        TEXT_INDEX_ROOT,
-        f"{tag}-b{retrieval.TEXT_INDEX_BUCKETS}"
-        f"-L{retrieval.TEXT_INDEX_LAYOUT}-retracted",
-    )
-
-    def _build() -> None:
-        docs = _spread_scan(load_table(spark, sf_dir, "documents"))
-        dead = docs.filter(
-            corpus.split_bucket(F.col("doc_id")) >= _RETRACT_PCT
-        )
+    def _build(index_dir: str) -> None:
+        docs = _docs(spark, sf_dir)
+        dead = _split(docs, _RETRACT_PCT)[1]
         retrieval.build_text_index(docs, index_dir)
         retrieval.build_champion_lists(index_dir, spark)
         retrieval.build_positional_index(docs, index_dir)
@@ -444,7 +354,7 @@ def ensure_text_index_retracted(spark: SparkSession, sf_dir: str) -> str:
         retrieval.retract_positional_index(dead, index_dir)
         retrieval.retract_champion_lists(dead, index_dir)
 
-    return _ensure_sequence(index_dir, sf_dir, _build)
+    return _text_fixture(sf_dir, "-retracted", _build)
 
 
 def text_bm25_retracted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -483,22 +393,11 @@ def ensure_text_index_compacted(spark: SparkSession, sf_dir: str) -> str:
     rows and replay duplicates, published by atomic version-pointer
     swap. The registered probe's value-hash proves the compaction
     changes bytes, not rankings."""
-    from pyspark.sql import functions as F
 
-    from salesforce_prefect_etl_pipeline_spark.operators import corpus
-
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_dir = os.path.join(
-        TEXT_INDEX_ROOT,
-        f"{tag}-b{retrieval.TEXT_INDEX_BUCKETS}"
-        f"-L{retrieval.TEXT_INDEX_LAYOUT}-compacted",
-    )
-
-    def _build() -> None:
-        docs = _spread_scan(load_table(spark, sf_dir, "documents"))
-        b = corpus.split_bucket(F.col("doc_id"))
-        head, tail = docs.filter(b < 80), docs.filter(b >= 80)
-        dead = docs.filter(b >= _RETRACT_PCT)
+    def _build(index_dir: str) -> None:
+        docs = _docs(spark, sf_dir)
+        head, tail = _split(docs, 80)
+        dead = _split(docs, _RETRACT_PCT)[1]
         retrieval.build_text_index(head, index_dir)
         retrieval.build_champion_lists(index_dir, spark)
         retrieval.build_positional_index(head, index_dir)
@@ -509,7 +408,7 @@ def ensure_text_index_compacted(spark: SparkSession, sf_dir: str) -> str:
         retrieval.retract_positional_index(dead, index_dir)
         retrieval.compact_text_index(spark, index_dir)
 
-    return _ensure_sequence(index_dir, sf_dir, _build)
+    return _text_fixture(sf_dir, "-compacted", _build)
 
 
 def text_bm25_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -587,32 +486,12 @@ def text_hybrid_rrf_weighted_indexed(
     ``hybrid_rrf_weighted_sql``'s oracle: the three-way leg-swap claim
     is value-proven, completing the weighted fusion's index story the
     way ``text_hybrid_rrf_indexed`` did for the 2-leg form."""
-    from pyspark.sql import functions as F
-
-    from salesforce_prefect_etl_pipeline_spark.operators import similarity
-    from salesforce_prefect_etl_pipeline_spark.queries_llm import (
-        _SEED_NLIST,
-        _ivf_centroids,
-        ensure_ivf_index,
-    )
-
     q = retrieval.HYBRID_QUERIES
     text_qs = tuple((qid, t) for qid, t, _ in q)
     bm = retrieval.probe_text_index(
         spark, ensure_text_index(spark, sf_dir), queries=text_qs, k=20
     )
-    ivf_dir = ensure_ivf_index(spark, sf_dir, iters=0)
-    cents = _ivf_centroids(spark, ivf_dir)
-    anchors = [v for _, _, v in q]
-    qvecs = [
-        (r.vec_id, list(r.embedding))
-        for r in load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id").isin(anchors))
-        .collect()
-    ]
-    ann = similarity.probe_ivf(
-        spark, ivf_dir, qvecs, k=20, nprobe=_SEED_NLIST, centroids=cents
-    )
+    ann = _ann_leg(spark, sf_dir)
     ph = retrieval.probe_phrase_index(
         spark, ensure_phrase_index(spark, sf_dir), queries=text_qs, k=20
     )
@@ -664,9 +543,9 @@ register_query(
 register_query(
     "text_hybrid_rrf_indexed", text_hybrid_rrf_indexed, retrieval.hybrid_rrf_sql()
 )
-def _live_pred_sql() -> str:
-    from salesforce_prefect_etl_pipeline_spark.operators import corpus
 
+
+def _live_pred_sql() -> str:
     return f"({corpus.split_bucket_sql('doc_id')}) < {_RETRACT_PCT}"
 
 

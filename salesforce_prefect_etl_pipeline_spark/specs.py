@@ -64,12 +64,6 @@ def register(spec: TableSpec) -> TableSpec:
     return spec
 
 
-def get_spec(name: str) -> TableSpec:
-    if name not in SPECS:
-        raise KeyError(f"unknown spec: {name!r} (have: {sorted(SPECS)})")
-    return SPECS[name]
-
-
 # --- Registered specs over the driver testdata (TESTDATA.md) -----------
 # Flagship: mirrors Opportunity-by-StageName (configs/salesforce_objects.py:38-44).
 register(

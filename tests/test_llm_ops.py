@@ -348,6 +348,37 @@ def test_ivf_rebuild_is_snapshot_isolated(spark, emb, tmp_path):
     assert (similarity.load_ivf_centroids(spark, index_dir) == cents_fresh).all()
 
 
+def test_torn_inplace_ivf_rebuild_fails_loudly(spark, emb, tmp_path, monkeypatch):
+    """build_ivf_index over an existing index resets the tier and drops
+    the centroids before it writes: a rebuild torn before its commit
+    row leaves no centroids, so the probe surfaces raise instead of
+    reconciling the new lists against the old commit id (zero rows)."""
+    from pyspark.errors import AnalysisException
+
+    index_dir = str(tmp_path / "ivf")
+    similarity.build_ivf_index(emb, index_dir, nlist=16, iters=0)
+    qvecs = [
+        (r.vec_id, list(r.embedding))
+        for r in emb.filter(F.col("vec_id").isin([1, 7, 42])).collect()
+    ]
+    assert similarity.probe_ivf(spark, index_dir, qvecs).count() > 0
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before the commit row")
+
+    monkeypatch.setattr(similarity, "commit_batch", crash)
+    with pytest.raises(RuntimeError, match="commit row"):
+        similarity.build_ivf_index(
+            emb.filter(F.col("vec_id") % 2 == 0), index_dir, nlist=16, iters=0
+        )
+    with pytest.raises(AnalysisException):
+        similarity.probe_ivf(spark, index_dir, qvecs).collect()
+    with pytest.raises(AnalysisException):
+        similarity.load_ivf_centroids(spark, index_dir)
+    with pytest.raises(AnalysisException):
+        similarity.ivf_list_stats(spark, index_dir).collect()
+
+
 def test_ivf_probe_contract_verifier(spark, emb, tmp_path):
     """ann_ivf_probe's oracle contract: probe_ivf_exact_within_lists is
     an independent recomputation (vectors from the SOURCE table, index

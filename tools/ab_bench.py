@@ -1,5 +1,5 @@
 """Focused A/B bench: median-of-N wall time for a few registered
-queries, with the same warmup discipline as bench.py — for attributing
+queries, after bench.py's own warm-up (``bench.warm``) — for attributing
 a specific round-over-round movement without re-running the whole
 headline suite on both sides.
 
@@ -34,23 +34,13 @@ def main() -> None:
         raise SystemExit(2)
 
     import __spark_entry__ as entrymod
+    from bench import warm
     from salesforce_prefect_etl_pipeline_spark.session import get_spark
 
     spark = get_spark("ab-bench")
     queries = entrymod.queries()
 
-    # same warmers as bench.py: JVM + first scan of each big table
-    queries["spec_orders_by_status"](spark, sf_dir).collect()
-    queries["corpus_split_counts"](spark, sf_dir).collect()
-    queries["events_hourly_by_type"](spark, sf_dir).collect()
-    queries["q6_forecast_revenue"](spark, sf_dir).collect()
-    from salesforce_prefect_etl_pipeline_spark.queries_llm import (
-        ensure_ivf_index,
-        ensure_minhash_index,
-    )
-
-    ensure_ivf_index(spark, sf_dir)
-    ensure_minhash_index(spark, sf_dir)
+    warm(spark, sf_dir, queries)
 
     timings, spread = {}, {}
     for name in names:
