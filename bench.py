@@ -8,6 +8,15 @@ has a bounded buffer, and round 9's spread-laden line overflowed it):
 Per-query [min, max] spreads + runs_per_query go to the BENCH_SPREAD.json
 sidecar (repo root) and stderr.
 
+With query names as arguments (``python bench.py q1_pricing_summary
+corpus_e2e_curation``) it is the focused A/B tool instead: after the
+same warm-up it times only those rows, $SPARK_GRAFT_BENCH_RUNS times
+each, writes no sidecar, and prints one JSON line
+  {"queries": {name: median}, "spread": {name: [sec, ...]},
+   "runs": N, "sf_dir": "..."}
+Run it from the checkout whose code you want to measure — it imports
+__spark_entry__ from its own directory.
+
 Headline set: one representative per operator family, weighted toward
 what dominates at 100 TB (big-fact scan+agg, multi-join, window, LSH
 dedup, ANN, sessionization). The quadratic exact verifiers
@@ -104,8 +113,8 @@ HEADLINE = [
     # (argmin-signature probe join + exact verification of survivors).
     "dedup_containment_lsh",
     # Round-9 row: the distributed frontier-MIS greedy accept (the
-    # decision engine behind streaming dedup-on-ingest's
-    # distributed_accept path) — benched so its round count / shuffle
+    # decision engine streaming dedup-on-ingest runs above its driver
+    # cap) — benched so its round count / shuffle
     # growth gets a measured exponent in the sf1 scaling suite. Shares
     # the memoized LSH pairs frame, so the row is the MIS marginal.
     "dedup_greedy_accept_distributed",
@@ -265,9 +274,8 @@ def compact_line(timings: dict[str, float], sf: str, calib: float | None = None)
 
 
 def warm(spark, sf_dir: str, queries) -> None:
-    """Untimed warm-up shared by bench.py and tools/ab_bench.py: the
-    JVM, each big table's first scan, and every persisted index the
-    timed rows probe."""
+    """Untimed warm-up before either mode: the JVM, each big table's
+    first scan, and every persisted index the timed rows probe."""
     from salesforce_prefect_etl_pipeline_spark.queries_llm import (
         _ensure_ivfpq_codes,
         ensure_ivf_index,
@@ -305,6 +313,23 @@ def warm(spark, sf_dir: str, queries) -> None:
     ensure_text_index_retracted(spark, sf_dir)
 
 
+def time_query(spark, sf_dir: str, queries, name: str, runs: int) -> tuple[list[float], int]:
+    """``runs`` wall times of one row, sorted, and its row count (-1 for
+    a streaming frame)."""
+    from salesforce_prefect_etl_pipeline_spark.queries_llm import _minhash_pairs_cached
+
+    times, n = [], -1
+    for _ in range(runs):
+        t0 = time.time()
+        if name == "dedup_minhash_pairs_build":
+            n = _minhash_pairs_cached(spark, sf_dir, refresh=True).count()
+        else:
+            df = queries[name](spark, sf_dir)
+            n = df.count() if not df.isStreaming else -1
+        times.append(time.time() - t0)
+    return sorted(times), n
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -319,8 +344,21 @@ def main() -> None:
     queries = entrymod.queries()
 
     warm(spark, sf_dir, queries)
-
-    from salesforce_prefect_etl_pipeline_spark.queries_llm import _minhash_pairs_cached
+    runs_per_query = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+    names = sys.argv[1:]
+    if names:
+        timings, spread = {}, {}
+        for name in names:
+            times, _ = time_query(spark, sf_dir, queries, name, runs_per_query)
+            timings[name] = round(statistics.median(times), 3)
+            spread[name] = [round(t, 3) for t in times]
+            print(f"# {name}: median {timings[name]}s of {spread[name]}", file=sys.stderr)
+        print(
+            json.dumps(
+                {"queries": timings, "spread": spread, "runs": runs_per_query, "sf_dir": sf_dir}
+            )
+        )
+        return
 
     # median-of-3 per query, spread reported: single-shot timings on this
     # box swing ~1.5x with VM noise (measured 38.7 s vs 57.0 s total for
@@ -336,7 +374,6 @@ def main() -> None:
         SeedReplayError,
     )
 
-    runs_per_query = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     # pre-suite calibration: median-of-3 of the fixed box-speed probe
     # (first run discarded as codegen warmup)
     _calibration_probe(spark)
@@ -347,16 +384,8 @@ def main() -> None:
     timings: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     for name in HEADLINE:
-        times, n = [], -1
         try:
-            for _ in range(runs_per_query):
-                t0 = time.time()
-                if name == "dedup_minhash_pairs_build":
-                    n = _minhash_pairs_cached(spark, sf_dir, refresh=True).count()
-                else:
-                    df = queries[name](spark, sf_dir)
-                    n = df.count() if not df.isStreaming else -1
-                times.append(time.time() - t0)
+            times, n = time_query(spark, sf_dir, queries, name, runs_per_query)
         except (FamilySizeError, SeedReplayError) as exc:
             # Designed guards, not failures: the quadratic-output pair
             # form refuses family-heavy corpora (the linear *_families
@@ -366,7 +395,6 @@ def main() -> None:
             # form). Omit the row rather than bench the refusal.
             print(f"# {name}: SKIPPED ({exc})", file=sys.stderr)
             continue
-        times.sort()
         timings[name] = round(statistics.median(times), 3)
         spread[name] = [round(times[0], 3), round(times[-1], 3)]
         print(

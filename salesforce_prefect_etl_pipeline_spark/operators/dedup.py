@@ -37,10 +37,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
+    Tier,
+    batch_id_of,
     index_component_path,
+    laid_out,
     next_version,
+    parquet_file_count,
     publish_version,
+    reconciled_read,
+    reset_tier,
     reset_versions,
+    restamp_live,
+    write_batch,
 )
 from salesforce_prefect_etl_pipeline_spark.operators.text import (
     NORMALIZED_SQL,
@@ -1208,7 +1216,7 @@ def minhash_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
 
     - ``n_files``: parquet files in the band partition (driver-side FS
       metadata only) — the streamed-ingest fragmentation signal;
-    - ``n_rows``: physical rows (replayed appends included);
+    - ``n_rows``: physical rows (torn and replayed batches included);
     - ``n_entries``: distinct (doc_id, key) entries — the logical
       band size;
     - ``n_replay_dups``: n_rows − n_entries, the compaction payload;
@@ -1226,15 +1234,8 @@ def minhash_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     columns are the pytest-covered maintenance signals."""
     import glob as _glob
 
-    def _file_counts(comp: str) -> dict[int, int]:
-        root = index_component_path(index_dir, comp)
-        out: dict[int, int] = {}
-        for d in _glob.glob(os.path.join(root, "band=*")):
-            b = int(os.path.basename(d).split("=")[1])
-            out[b] = sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
-        return out
-
-    bands = spark.read.parquet(index_component_path(index_dir, "bands"))
+    bands_path = index_component_path(index_dir, MINHASH_BANDS.data)
+    bands = spark.read.parquet(bands_path)
     per_bucket = bands.groupBy("band", "key").agg(
         F.count(F.lit(1)).alias("rows"),
         F.count_distinct("doc_id").alias("sz"),
@@ -1257,7 +1258,10 @@ def minhash_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
         .agg(F.count_distinct("doc_id").alias("n"))
         .collect()
     }
-    files = _file_counts("bands")
+    files = {
+        int(d.rsplit("=", 1)[1]): parquet_file_count(d)
+        for d in _glob.glob(os.path.join(bands_path, "band=*"))
+    }
     rows = [
         (
             "bands",
@@ -1272,21 +1276,16 @@ def minhash_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
         )
         for r in per_band
     ]
-    prof = spark.read.parquet(index_component_path(index_dir, "profiles"))
-    pr = prof.agg(
+    prof_path = index_component_path(index_dir, MINHASH_PROFILES.data)
+    pr = spark.read.parquet(prof_path).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.count_distinct("doc_id").cast("long").alias("n_docs"),
     ).collect()[0]
-    prof_files = sum(
-        1
-        for f in os.listdir(index_component_path(index_dir, "profiles"))
-        if f.endswith(".parquet")
-    )
     rows.append(
         (
             "profiles",
             -1,
-            prof_files,
+            parquet_file_count(prof_path),
             pr["n_rows"],
             pr["n_docs"],
             pr["n_rows"] - pr["n_docs"],
@@ -1367,33 +1366,54 @@ FROM per_key JOIN per_doc USING (band) ORDER BY band
 
 # ----------------------------------------------------------------------
 # Incremental dedup: persisted LSH index + probe
-def build_minhash_index(docs: DataFrame, index_dir: str, k: int = 8) -> None:
-    """Persist the corpus near-dup index: ``bands/`` (doc_id, band, key
-    — partitioned by band, sorted by key within each partition for
-    row-group min/max skipping on the join key) and ``profiles/``
-    (doc_id, shingle-hash sets, for exact verification). Built ONCE per
-    corpus snapshot; every new crawl increment then probes against it
-    without re-scanning or re-signing the corpus — the offline/online
-    split that makes dedup-on-ingest affordable at 100 TB (the IVF
-    lifecycle's pattern applied to text).
+#: The persisted LSH index's stamped tiers (``index_store``'s
+#: **Tiers**), each committed alone: band keys, split by band and sorted
+#: by key for row-group min/max skipping on the join key, and the
+#: shingle-hash profiles exact verification reads.
+MINHASH_BANDS = Tier(
+    data="bands", record="bandbatches", key=("doc_id", "band"),
+    id_col="doc_id", ingest_prefix="minhash", partition="band", sort="key",
+)
+MINHASH_PROFILES = Tier(
+    data="profiles", record="profbatches", key=("doc_id",),
+    id_col="doc_id", ingest_prefix="minhash",
+)
+MINHASH = (MINHASH_BANDS, MINHASH_PROFILES)
 
-    A full build SUPERSEDES any versioned history at this path
-    (``index_store.reset_versions``)."""
+
+def _write_minhash_batch(
+    prof: DataFrame, index_dir: str, mode: str, tier: Tier, bid: str
+) -> None:
+    """One committed batch of ``tier`` from a :func:`minhash_profile`
+    frame."""
+    if tier is MINHASH_BANDS:
+        rows = prof.select(
+            "doc_id", F.posexplode(band_key_array(F.col("sig"))).alias("band", "key")
+        )
+    else:
+        rows = prof.select("doc_id", "shingles")
+    write_batch(laid_out(rows, tier), index_dir, tier, bid, mode)
+
+
+def build_minhash_index(docs: DataFrame, index_dir: str, k: int = 8) -> None:
+    """Persist the corpus near-dup index as one ``build`` batch of each
+    :data:`MINHASH` tier: ``bands/`` (doc_id, band, key) and
+    ``profiles/`` (doc_id, shingle-hash sets, for exact verification).
+    Built ONCE per corpus snapshot; every new crawl increment then
+    probes against it without re-scanning or re-signing the corpus —
+    the offline/online split that makes dedup-on-ingest affordable at
+    100 TB (the IVF lifecycle's pattern applied to text).
+
+    A full build SUPERSEDES any versioned history at this path and
+    resets both tiers before writing either (``index_store``'s
+    **Versions**)."""
     reset_versions(index_dir)
+    for tier in MINHASH:
+        reset_tier(index_dir, tier)
     prof = minhash_profile(docs, k)
-    banded = prof.select(
-        "doc_id", F.posexplode(band_key_array(F.col("sig"))).alias("band", "key")
-    )
-    (
-        banded.repartition("band")
-        .sortWithinPartitions("key")
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(f"{index_dir}/bands")
-    )
-    prof.select("doc_id", "shingles").write.mode("overwrite").parquet(
-        f"{index_dir}/profiles"
-    )
+    bid = batch_id_of(docs, MINHASH_BANDS)
+    for tier in MINHASH:
+        _write_minhash_batch(prof, index_dir, "overwrite", tier, bid)
 
 
 def compact_minhash_index(
@@ -1401,22 +1421,19 @@ def compact_minhash_index(
     index_dir: str,
     drop_doc_ids: DataFrame | None = None,
 ) -> dict:
-    """Index maintenance between rebuilds: rewrite ``bands/`` and
-    ``profiles/`` (1) deduplicating rows an at-least-once replayed
-    ingest batch re-appended (harmless for correctness — candidate
-    generation applies distinct() — but they inflate every probe's
-    scan), and (2) physically dropping ``drop_doc_ids`` (documents
-    retracted by a later curation pass; the ingest contract itself
-    never retracts). Returns before/after row counts per component —
-    the report a maintenance job logs. Probe results over a compacted
-    index are IDENTICAL (pytest-asserted): dedup and tombstone-drop
-    change bytes, not candidates.
+    """Index maintenance between rebuilds: restamp each tier's live rows
+    as one batch (``index_store.restamp_live``), which drops torn
+    batches and replayed rows physically, and drop ``drop_doc_ids``
+    (documents retracted by a later curation pass; the ingest contract
+    itself never retracts). Returns per-component {before, after} row
+    and parquet-file counts — the report a maintenance job logs. Probe
+    results over a compacted index are IDENTICAL (pytest-asserted):
+    compaction changes bytes, not candidates.
 
     Publication is a versioned, snapshot-isolated publish: both
     components are rewritten into a new version and made live by the
     CURRENT-pointer swap, under ``operators.index_store``'s crash-safety,
     retention and single-owner contract."""
-    stats: dict = {}
     drops = (
         drop_doc_ids.select(F.col(drop_doc_ids.columns[0]).alias("doc_id"))
         .distinct()
@@ -1425,32 +1442,15 @@ def compact_minhash_index(
         else None
     )
     new_root = next_version(index_dir)
-    for comp, keys in (("bands", ["doc_id", "band", "key"]), ("profiles", None)):
-        path = index_component_path(index_dir, comp)
-        cur = spark.read.parquet(path)
-        before = cur.count()
-        if keys is not None:
-            new = cur.select(*keys).distinct()
-        else:
-            # profiles: one row per doc survives (replays append
-            # identical rows; keep-first is deterministic here because
-            # replayed rows are value-identical)
-            new = dedup_keep_first(cur, "doc_id")
-        if drops is not None:
-            new = new.join(drops, "doc_id", "anti")
-        out = os.path.join(new_root, comp)
-        writer = new.write.mode("overwrite")
-        if comp == "bands":
-            writer = (
-                new.repartition("band")
-                .sortWithinPartitions("key")
-                .write.mode("overwrite")
-                .partitionBy("band")
-            )
-        writer.parquet(out)
-        after = spark.read.parquet(out).count()
-        stats[comp] = {"before": before, "after": after}
-    publish_version(index_dir, new_root, flat=("bands", "profiles"))
+    stats = {
+        tier.data: restamp_live(
+            spark, index_dir, new_root, tier, f"compact{tier.data}", drops
+        )[1]
+        for tier in MINHASH
+    }
+    publish_version(
+        index_dir, new_root, flat=tuple(c for t in MINHASH for c in t.components)
+    )
     if drops is not None:
         drops.unpersist()
     return stats
@@ -1482,8 +1482,8 @@ def probe_minhash_index(
         F.col("doc_id").alias("new_id"),
         F.posexplode(band_key_array(F.col("sig"))).alias("band", "key"),
     )
-    idx_bands = spark.read.parquet(index_component_path(index_dir, "bands"))
-    idx_prof = spark.read.parquet(index_component_path(index_dir, "profiles"))
+    idx_bands = reconciled_read(spark, index_dir, MINHASH_BANDS)
+    idx_prof = reconciled_read(spark, index_dir, MINHASH_PROFILES)
     cand = (
         new_banded.join(
             idx_bands,

@@ -6,18 +6,22 @@ a :class:`Tier`; the family modules keep their row shapes and pruning
 predicates, and the crash-safety, read and publish contract below is
 stated here once.
 
-**Tiers.** The three stamped tiers and their components:
+**Tiers.** The stamped tiers and their components:
 
-==========  ==========  =============  =============  ===========  ==============
-tier        data        commit record  tombstones     ingest id    retract id
-==========  ==========  =============  =============  ===========  ==============
-BM25        postings    totals         tombstones     (no prefix)  ``retract``
-positional  positional  posbatches     postombstones  (no prefix)  ``retractpos``
-IVF         lists       vecbatches     tombstones     ``ivf``      ``retractivf``
-==========  ==========  =============  =============  ===========  ==============
+===============  ==========  =============  =============  ===========  ==============
+tier             data        commit record  tombstones     ingest id    retract id
+===============  ==========  =============  =============  ===========  ==============
+BM25             postings    totals         tombstones     (no prefix)  ``retract``
+positional       positional  posbatches     postombstones  (no prefix)  ``retractpos``
+IVF              lists       vecbatches     tombstones     ``ivf``      ``retractivf``
+MinHash bands    bands       bandbatches    (none)         ``minhash``  (none)
+MinHash profiles profiles    profbatches    (none)         ``minhash``  (none)
+===============  ==========  =============  =============  ===========  ==============
 
-The champion tier and the IVFPQ codes are unstamped derived caches;
-they only read a tier's committed tombstones.
+The MinHash tiers are never retracted: compaction drops documents
+physically (:func:`restamp_live`'s ``drop``). The champion tier and
+the IVFPQ codes are unstamped derived caches; they only read a tier's
+committed tombstones.
 
 **Batches.** Every write lands as one batch whose id is
 content-derived: ``md5("[prefix:]min:max:count")`` over the tier's id
@@ -65,13 +69,15 @@ history, which would otherwise shadow it. The text tiers share one
 directory, so their builds do not reset it (that would drop the other
 tiers' components): an overwrite build rewrites its own tier's
 components in place, resolved through :func:`index_component_path`,
-so inside the live snapshot once one was published. It deletes the
-tier's commit record first (:func:`reset_tier`), so a torn rebuild
-fails loudly instead of reading new data against stale commit ids.
-An IVF build resets its tier the same way and also removes the
-centroids every probe needs.
+so inside the live snapshot once one was published. Every overwrite
+build deletes its tiers' commit records first (:func:`reset_tier`; a
+MinHash build resets both of its tiers before writing either), so a
+torn rebuild fails loudly instead of reading new data against stale
+commit ids. An IVF build also removes the centroids every probe needs.
 Compaction and rebuild write a whole snapshot into the staging root
-:func:`next_version` returns (``versions/v<N+1>/``) and
+:func:`next_version` returns (``versions/v<N+1>/``); compaction
+restamps each tier's live rows there as one ``build`` batch
+(:func:`restamp_live`). Then
 :func:`publish_version` makes it live by atomically replacing the
 ``CURRENT`` pointer file: a temp pointer, ``flush`` + ``fsync``, then
 ``os.replace``. There is never a window
@@ -95,6 +101,7 @@ compactor are the same owner.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 from collections.abc import Callable, Mapping, Sequence
@@ -106,13 +113,18 @@ from pyspark.sql import functions as F
 
 def index_component_path(index_dir: str, comp: str) -> str:
     """Resolve an index component through the ``CURRENT`` pointer:
-    ``<index_dir>/versions/<v>/<comp>`` once a version was published,
-    the flat ``<index_dir>/<comp>`` before. Every reader and appender
-    resolves through this function."""
+    ``<snapshot_dir>/<comp>`` (:func:`snapshot_dir`). Every reader and
+    appender resolves through this function or that one."""
+    return os.path.join(snapshot_dir(index_dir), comp)
+
+
+def snapshot_dir(index_dir: str) -> str:
+    """The directory ``CURRENT`` resolves components under:
+    ``<index_dir>/versions/<v>`` once a version was published, the flat
+    ``<index_dir>`` before. A read of several components resolves it
+    once, or a publish in between could pair two versions' components."""
     v = current_index_version(index_dir)
-    if v:
-        return os.path.join(index_dir, "versions", v, comp)
-    return os.path.join(index_dir, comp)
+    return os.path.join(index_dir, "versions", v) if v else index_dir
 
 
 def current_index_version(index_dir: str) -> str:
@@ -175,22 +187,24 @@ def gc_index_versions(index_dir: str, keep_n: int = 2) -> list[str]:
 
 @dataclass(frozen=True)
 class Tier:
-    """A stamped tier (see **Tiers**): its three components, the ``key``
-    of a row within a batch, the ``id_col`` batch ids are taken over,
-    its data's ``partition`` column and its two id prefixes."""
+    """A stamped tier (see **Tiers**): its components, the ``key`` of a
+    row within a batch, the ``id_col`` batch ids are taken over, its id
+    prefixes and its data layout (:func:`laid_out`). A tier without
+    ``tombstones`` is never retracted."""
 
     data: str
     record: str
-    tombstones: str
     key: tuple[str, ...]
     id_col: str
-    partition: str
     ingest_prefix: str
-    retract_prefix: str
+    tombstones: str | None = None
+    retract_prefix: str | None = None
+    partition: str | None = None
+    sort: str | None = None
 
     @property
-    def components(self) -> tuple[str, str, str]:
-        return (self.data, self.record, self.tombstones)
+    def components(self) -> tuple[str, ...]:
+        return tuple(c for c in (self.data, self.record, self.tombstones) if c)
 
 
 def batch_id_col(key: str, prefix: str = "") -> Column:
@@ -221,14 +235,32 @@ def batch_id_of(df: DataFrame, tier: Tier, retract: bool = False) -> str:
 BATCH_ISIN_CAP = 128
 
 
+def laid_out(df: DataFrame, tier: Tier) -> DataFrame:
+    """``df`` hash-partitioned by the tier's partition column (each
+    value in one task's file), then sorted by its sort column."""
+    if tier.partition:
+        df = df.repartition(tier.partition)
+    return df.sortWithinPartitions(tier.sort) if tier.sort else df
+
+
 def write_stamped(
     df: DataFrame, index_dir: str, tier: Tier, bid: str, mode: str
 ) -> None:
     """Write ``df`` as the tier's data rows, each stamped with ``bid``,
-    partitioned by the tier's partition column."""
-    df.withColumn("batch_id", F.lit(bid)).write.mode(mode).partitionBy(
-        tier.partition
-    ).parquet(index_component_path(index_dir, tier.data))
+    partitioned by the tier's partition column when it has one."""
+    writer = df.withColumn("batch_id", F.lit(bid)).write.mode(mode)
+    if tier.partition:
+        writer = writer.partitionBy(tier.partition)
+    writer.parquet(index_component_path(index_dir, tier.data))
+
+
+def write_batch(df: DataFrame, index_dir: str, tier: Tier, bid: str, mode: str) -> None:
+    """:func:`write_stamped`, then the batch's commit row: ``build`` for
+    an overwrite, else ``append``."""
+    write_stamped(df, index_dir, tier, bid, mode)
+    commit_batch(
+        df.sparkSession, index_dir, tier, bid, "build" if mode == "overwrite" else "append"
+    )
 
 
 def commit_batch(
@@ -256,7 +288,7 @@ def reset_tier(index_dir: str, tier: Tier) -> None:
     record, which de-commits the superseded data and tombstones, and
     its tombstone component, so a later retraction whose content id
     collides with a stale tombstone batch cannot resurrect its rows."""
-    for comp in (tier.record, tier.tombstones):
+    for comp in tier.components[1:]:
         shutil.rmtree(index_component_path(index_dir, comp), ignore_errors=True)
 
 
@@ -272,12 +304,18 @@ def retract_batch(
     commit_batch(df.sparkSession, index_dir, tier, bid, "retract", **longs)
 
 
+def has_commits(index_dir: str, tier: Tier) -> bool:
+    """Whether the tier's commit record holds a commit (no Spark job)."""
+    path = index_component_path(index_dir, tier.record)
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
 def committed_batch_ids(spark: SparkSession, index_dir: str, tier: Tier) -> set[str]:
     """Batch ids in the tier's commit record, or the empty set before
     its first commit. One row per batch — control-plane sized."""
-    path = index_component_path(index_dir, tier.record)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    if not has_commits(index_dir, tier):
         return set()
+    path = index_component_path(index_dir, tier.record)
     return {r["batch_id"] for r in spark.read.parquet(path).select("batch_id").collect()}
 
 
@@ -317,12 +355,17 @@ def committed_tombstones(
     common case: no read, no plan change). ``committed`` is the
     record's ids when the caller already collected them; otherwise the
     plan scans the record."""
-    path = index_component_path(index_dir, tier.tombstones)
-    if not os.path.isdir(path):
+    return _committed_tombstones(spark, snapshot_dir(index_dir), tier, committed)
+
+
+def _committed_tombstones(
+    spark: SparkSession, snap: str, tier: Tier, committed: list[str] | None
+) -> DataFrame | None:
+    path = tier.tombstones and os.path.join(snap, tier.tombstones)
+    if not path or not os.path.isdir(path):
         return None
     ids = (
-        spark.read.parquet(index_component_path(index_dir, tier.record))
-        .select("batch_id")
+        spark.read.parquet(os.path.join(snap, tier.record)).select("batch_id")
         if committed is None
         else _id_frame(spark, committed)
     )
@@ -344,12 +387,15 @@ def reconciled_read(
     contract above: filtered by the ``prune`` predicates first (in
     order, so partition filters stay static), then reconciled against
     the tier's commit record and tombstones. The result keeps
-    ``batch_id``. A missing commit record fails loudly."""
-    df = spark.read.parquet(index_component_path(index_dir, tier.data))
+    ``batch_id``. A missing commit record fails loudly. All components
+    come from one snapshot, so a concurrent publish cannot tear the
+    read."""
+    snap = snapshot_dir(index_dir)
+    df = spark.read.parquet(os.path.join(snap, tier.data))
     for pred in prune:
         df = df.filter(pred)
     rows = (
-        spark.read.parquet(index_component_path(index_dir, tier.record))
+        spark.read.parquet(os.path.join(snap, tier.record))
         .select("batch_id", "origin")
         .collect()
     )
@@ -361,8 +407,45 @@ def reconciled_read(
         df = df.join(F.broadcast(_id_frame(spark, committed)), "batch_id", "leftsemi")
     if list(ingest.values()) != ["build"]:
         df = df.dropDuplicates([*tier.key, "batch_id"])
-    dead = committed_tombstones(spark, index_dir, tier, committed)
+    dead = _committed_tombstones(spark, snap, tier, committed)
     return df if dead is None else df.join(dead, dead.columns, "anti")
+
+
+def parquet_file_count(path: str) -> int:
+    """Parquet files under ``path``, partition dirs included."""
+    return sum(
+        f.endswith(".parquet") for _root, _dirs, files in os.walk(path) for f in files
+    )
+
+
+def restamp_live(
+    spark: SparkSession,
+    index_dir: str,
+    root: str,
+    tier: Tier,
+    seed: str,
+    drop: DataFrame | None = None,
+    **longs: int,
+) -> tuple[DataFrame, dict]:
+    """Compaction's rewrite of one tier: its live rows, less the ids in
+    ``drop``, written under the staging ``root`` as one ``build`` batch
+    (``longs`` as in :func:`commit_batch`) with id ``md5("seed:rows")``,
+    so recompacting an unchanged index is bit-reproducible. Returns the
+    rows and the {before, after, files_before, files_after} counts."""
+    old = index_component_path(index_dir, tier.data)
+    rows = reconciled_read(spark, index_dir, tier)
+    if drop is not None:
+        rows = rows.join(drop, tier.id_col, "anti")
+    n = rows.count()
+    bid = hashlib.md5(f"{seed}:{n}".encode()).hexdigest()
+    write_stamped(laid_out(rows, tier), root, tier, bid, "overwrite")
+    commit_batch(spark, root, tier, bid, "build", **longs)
+    return rows, {
+        "before": spark.read.parquet(old).count(),
+        "after": n,
+        "files_before": parquet_file_count(old),
+        "files_after": parquet_file_count(os.path.join(root, tier.data)),
+    }
 
 
 def reset_versions(index_dir: str) -> None:

@@ -1,20 +1,13 @@
-"""Join-scale utilities: skew salting and bucketed co-located joins.
+"""Join-scale utility: skew salting, the knob that matters once a
+join's shuffle becomes the bottleneck at 100 TB.
 
-These are the two knobs that matter once a join's shuffle becomes the
-bottleneck at 100 TB:
-
-- **Salting** (`salted_join`): a hot key (power-law user_id, null-heavy
-  fk) overloads one reducer. Replicate the build side `salt` ways and
-  scatter the probe side uniformly; the join key becomes (key, salt), so
-  the hot key's rows spread over `salt` reducers. AQE's skew-join
-  splitting handles moderate skew automatically — salting is for the
-  pathological keys AQE can't split (a single key bigger than an
-  executor).
-- **Bucketing** (`write_bucketed`): pre-shuffle both facts ONCE into
-  the same bucket layout (hash(key) mod n stored as `bucketBy`
-  metadata); every subsequent equi-join on that key, read back with
-  `spark.table`, is exchange-free. The write pays one shuffle; every downstream join reads
-  co-located buckets — the right trade for fact tables joined daily.
+**Salting** (`salted_join`): a hot key (power-law user_id, null-heavy
+fk) overloads one reducer. Replicate the build side `salt` ways and
+scatter the probe side uniformly; the join key becomes (key, salt), so
+the hot key's rows spread over `salt` reducers. AQE's skew-join
+splitting handles moderate skew automatically — salting is for the
+pathological keys AQE can't split (a single key bigger than an
+executor).
 """
 
 from __future__ import annotations
@@ -49,18 +42,3 @@ def salted_join(
     out = pr.join(bd, on=[key, "__salt"], how=how).drop("__salt")
     return out
 
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    key: str,
-    buckets: int = 16,
-    sort_by: str | None = None,
-) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table —
-    the one-time shuffle that makes every later join on `key`
-    exchange-free."""
-    writer = df.write.mode("overwrite").bucketBy(buckets, key)
-    if sort_by:
-        writer = writer.sortBy(sort_by)
-    writer.saveAsTable(table_name)

@@ -331,64 +331,3 @@ def observed_qa(df: DataFrame, columns: list[str] | None = None, name: str = "qa
         for c in cols
     ]
     return df.observe(obs, *metrics), obs
-
-
-class ExpectationError(ValueError):
-    """Raised by check_expectations(strict=True) when any rule fails."""
-
-
-def check_expectations(
-    df: DataFrame, rules: list[tuple], strict: bool = False
-) -> list[dict]:
-    """Declarative data-contract checks in ONE aggregation pass — the
-    dbt-test / Great-Expectations shape on the gate machinery. Rules:
-
-    - ``("not_null", col, min_frac)`` — fraction of non-null values
-    - ``("unique", col)`` — no duplicate values among non-nulls
-    - ``("accepted_values", col, values, min_frac)`` — membership
-    - ``("between", col, lo, hi, min_frac)`` — inclusive range
-
-    Every rule compiles to one conditional aggregate over the same
-    scan, so a 50-rule contract on a 100 TB table costs ONE pass (the
-    reference's QA loop paid a job per check). Returns one report dict
-    per rule; ``strict=True`` raises on the first failure like the
-    schema/non-empty gates."""
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for i, rule in enumerate(rules):
-        kind, col = rule[0], rule[1]
-        c = F.col(col)
-        if kind == "not_null":
-            aggs.append(F.count_if(c.isNotNull()).alias(f"__r{i}"))
-        elif kind == "unique":
-            aggs.append(F.countDistinct(c).alias(f"__r{i}"))
-            aggs.append(F.count_if(c.isNotNull()).alias(f"__r{i}n"))
-        elif kind == "accepted_values":
-            aggs.append(F.count_if(c.isin(list(rule[2]))).alias(f"__r{i}"))
-        elif kind == "between":
-            aggs.append(
-                F.count_if(c.between(rule[2], rule[3])).alias(f"__r{i}")
-            )
-        else:
-            raise ValueError(f"unknown expectation {kind!r}")
-    row = df.agg(*aggs).collect()[0].asDict()
-    n = row["__n"]
-    reports = []
-    for i, rule in enumerate(rules):
-        kind, col = rule[0], rule[1]
-        if kind == "unique":
-            observed = row[f"__r{i}"]
-            ok = observed == row[f"__r{i}n"]
-            detail = {"distinct": observed, "non_null": row[f"__r{i}n"]}
-        else:
-            frac = row[f"__r{i}"] / n if n else 1.0
-            min_frac = rule[-1]
-            ok = frac >= min_frac
-            detail = {"fraction": frac, "min_fraction": min_frac}
-        reports.append(
-            {"rule": kind, "column": col, "ok": ok, "rows": n, **detail}
-        )
-    if strict:
-        failed = [r for r in reports if not r["ok"]]
-        if failed:
-            raise ExpectationError(f"expectations failed: {failed}")
-    return reports

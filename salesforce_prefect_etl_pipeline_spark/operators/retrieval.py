@@ -61,10 +61,13 @@ from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
     committed_tombstones,
     index_component_path,
     next_version,
+    parquet_file_count,
     publish_version,
     reconciled_read,
     reset_tier,
+    restamp_live,
     retract_batch,
+    write_batch,
     write_stamped,
 )
 from salesforce_prefect_etl_pipeline_spark.operators.text import (
@@ -984,14 +987,7 @@ def _write_positional_batch(
         .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
         .withColumn("bucket", _term_bucket())
     )
-    write_stamped(positional, index_dir, POSITIONAL, bid, mode)
-    commit_batch(
-        docs.sparkSession,
-        index_dir,
-        POSITIONAL,
-        bid,
-        "build" if mode == "overwrite" else "append",
-    )
+    write_batch(positional, index_dir, POSITIONAL, bid, mode)
 
 
 def build_positional_index(
@@ -1050,13 +1046,6 @@ def probe_phrase_index(
     return _phrase_anchor_topk(tok, spark, queries, k, analyzer)
 
 
-def _parquet_file_count(path: str) -> int:
-    n = 0
-    for root, _dirs, files in os.walk(path):
-        n += sum(1 for f in files if f.endswith(".parquet"))
-    return n
-
-
 def compact_text_index(
     spark: SparkSession, index_dir: str, m: int = CHAMPION_M
 ) -> dict:
@@ -1084,36 +1073,15 @@ def compact_text_index(
     the maintenance job's log line. The new batch ids are
     content-derived ("compact:" + corpus aggregates), so recompacting
     an unchanged index is bit-reproducible."""
-    import hashlib
-
     stats: dict = {}
     new_root = next_version(index_dir)
-
-    def _rewrite(tier: Tier, seed: str, **longs: int) -> DataFrame:
-        # the tier's live rows restamped as one batch; origin "build":
-        # one canonical batch, so probes skip the replay dedup
-        old = index_component_path(index_dir, tier.data)
-        rows = reconciled_read(spark, index_dir, tier)
-        n = rows.count()
-        bid = hashlib.md5(f"{seed}:{n}".encode()).hexdigest()
-        stats[tier.data] = {
-            "before": spark.read.parquet(old).count(),
-            "after": n,
-            "files_before": _parquet_file_count(old),
-        }
-        write_stamped(
-            rows.repartition(tier.partition), new_root, tier, bid, "overwrite"
-        )
-        stats[tier.data]["files_after"] = _parquet_file_count(
-            os.path.join(new_root, tier.data)
-        )
-        commit_batch(spark, new_root, tier, bid, "build", **longs)
-        return rows
-
     # --- BM25 tier: totals folded to a single row (negative retraction
     # rows summed in — the live corpus's exact N/total_len).
     tot = _corpus_totals(spark, index_dir).collect()[0]
-    postings = _rewrite(
+    postings, stats[BM25.data] = restamp_live(
+        spark,
+        index_dir,
+        new_root,
         BM25,
         f"compact:{tot['n_docs']}:{tot['total_len']}",
         n_docs=tot["n_docs"],
@@ -1136,7 +1104,9 @@ def compact_text_index(
         }
 
     if os.path.isdir(index_component_path(index_dir, POSITIONAL.data)):
-        _rewrite(POSITIONAL, "compactpos")
+        stats[POSITIONAL.data] = restamp_live(
+            spark, index_dir, new_root, POSITIONAL, "compactpos"
+        )[1]
 
     # tombstones are APPLIED, not copied: the new version has none
     publish_version(
@@ -1191,7 +1161,7 @@ def text_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
         out: dict[int, int] = {}
         root = index_component_path(index_dir, comp)
         for d in _glob.glob(os.path.join(root, "bucket=*")):
-            out[int(os.path.basename(d).split("=")[1])] = _parquet_file_count(d)
+            out[int(os.path.basename(d).split("=")[1])] = parquet_file_count(d)
         return out
 
     def _tier_stats(comp: str, tier: Tier) -> list[tuple]:

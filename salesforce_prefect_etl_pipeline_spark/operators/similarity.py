@@ -39,7 +39,6 @@ from pyspark.sql.window import Window
 from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
     Tier,
     batch_id_of,
-    commit_batch,
     committed_tombstones,
     index_component_path,
     next_version,
@@ -48,7 +47,7 @@ from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
     reset_tier,
     reset_versions,
     retract_batch,
-    write_stamped,
+    write_batch,
 )
 
 
@@ -634,10 +633,7 @@ def _write_lists(
     """``emb`` assigned with ``cents`` as one stamped batch of lists,
     then its commit row (index_store's crash-safety contract, which
     stream_ivf_index_ingest composes on)."""
-    write_stamped(ivf_assign(emb, cents), root, IVF, bid, mode)
-    commit_batch(
-        emb.sparkSession, root, IVF, bid, "build" if mode == "overwrite" else "append"
-    )
+    write_batch(ivf_assign(emb, cents), root, IVF, bid, mode)
 
 
 def ivf_list_stats(spark, index_dir: str) -> DataFrame:

@@ -624,9 +624,10 @@ def ensure_minhash_index(spark, sf_dir: str, k: int = 8) -> str:
     """Build the persisted corpus LSH index once per source version
     (the ``build_once`` gate, as ensure_ivf_index: an index persisted
     before the source documents file was rewritten is rebuilt, not
-    silently probed)."""
+    silently probed). The ``-stamped`` tag keeps the gate from serving
+    an index written before its tiers carried commit records."""
     return build_once(
-        fixture_dir(MINHASH_INDEX_ROOT, sf_dir, f"-k{k}-c{_CORPUS_PCT}"),
+        fixture_dir(MINHASH_INDEX_ROOT, sf_dir, f"-k{k}-c{_CORPUS_PCT}-stamped"),
         os.path.join(sf_dir, "documents.parquet"),
         lambda d: dedup.build_minhash_index(
             _docs(spark, sf_dir).filter(
@@ -2120,8 +2121,8 @@ register_query(
 def _dedup_greedy_distributed(spark, sf_dir: str):
     """Whole-corpus greedy dedup via the DISTRIBUTED frontier MIS
     (dedup.greedy_mis_in_id_order) over the memoized LSH pairs — the
-    decision engine behind stream_dedup_on_ingest's
-    distributed_accept=True, exercised here batch-style so the hard
+    decision engine stream_dedup_on_ingest runs for a micro-batch over
+    its driver cap, exercised here batch-style so the hard
     correctness gate covers it: the oracle replays sequential greedy
     acceptance as a pair-endpoint-bounded recursive CTE (identical to
     streaming_dedup_ingest's, because a single batch over an empty

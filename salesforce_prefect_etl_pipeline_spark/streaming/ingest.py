@@ -13,26 +13,21 @@ already-accepted document, so acceptance is first-arrival-wins (made
 deterministic here by ordering within a batch by doc_id).
 
 Scale shape per batch: signing is O(batch); candidate generation is the
-band-key equi-join against the index (corpus-size-independent compute);
-the greedy decision runs driver-side over the batch id list and the
-PAIR LIST only — pairs are the tiny output of LSH verification
-(control-plane, like the IVF centroid fetch), never the documents.
-Driver memory is therefore O(micro-batch), NOT O(corpus) — and that
-bound is ENFORCED: ``max_batch_rows`` fails a batch that exceeds the
-contract (e.g. an unthrottled backfill replay) with instructions to
-bound the source (maxFilesPerTrigger / maxBytesPerTrigger / rate
-limit) instead of silently ballooning the driver. For batches that
-genuinely must be huge, ``distributed_accept=True`` runs the greedy
-decision as a frontier MIS over DataFrames
-(``operators.dedup.greedy_mis_in_id_order``) — nothing is collected,
-driver memory is O(1), and the accepted set is identical
-(pytest-proven). Index appends are parquet appends into the
-band-partitioned layout.
+band-key equi-join against the index (corpus-size-independent compute).
+The near-dup pairs (within the batch and against the index) are
+checkpointed once; the greedy decision then picks its own path by size.
+Up to :data:`ACCEPT_ON_DRIVER_MAX` batch rows and pairs it runs on the
+driver over the id and pair lists — pairs are the tiny output of LSH
+verification (control-plane, like the IVF centroid fetch), never the
+documents. Above that it runs as a frontier MIS over DataFrames
+(``operators.dedup.greedy_mis_in_id_order``), which collects nothing
+and accepts the identical set (pytest-proven). Either way driver memory
+stays bounded by the cap. Index appends are stamped, committed batches
+of the index's two tiers (``index_store``'s lifecycle).
 """
 
 from __future__ import annotations
 
-import os
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,13 +35,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from salesforce_prefect_etl_pipeline_spark.operators.dedup import (
-    band_key_array,
+    MINHASH,
+    _write_minhash_batch,
+    greedy_mis_in_id_order,
     minhash_near_dup_pairs,
     minhash_profile,
     probe_minhash_index,
 )
 from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
-    index_component_path,
+    has_commits,
     retract_batch,
     write_uncommitted,
 )
@@ -81,28 +78,11 @@ def greedy_accept(
     return accepted
 
 
-def _append_profile_to_index(prof: DataFrame, index_dir: str) -> None:
-    """Append accepted docs' bands + profiles (an already-computed
-    minhash_profile frame) to the persisted index — same layout as
-    build_minhash_index, parquet append mode. Appends resolve the
-    component through the version pointer (index_component_path) so
-    they land in the CURRENT snapshot after a compaction has
-    versioned the index; appends must not run concurrently WITH a
-    compaction (same single-owner contract, see
-    compact_minhash_index)."""
-    banded = prof.select(
-        "doc_id", F.posexplode(band_key_array(F.col("sig"))).alias("band", "key")
-    )
-    (
-        banded.repartition("band")
-        .sortWithinPartitions("key")
-        .write.mode("append")
-        .partitionBy("band")
-        .parquet(index_component_path(index_dir, "bands"))
-    )
-    prof.select("doc_id", "shingles").write.mode("append").parquet(
-        index_component_path(index_dir, "profiles")
-    )
+#: Largest micro-batch, and largest near-dup pair list, whose accept
+#: decision runs on the driver (``greedy_accept`` over collected ids and
+#: pairs); a bigger one runs the distributed frontier MIS. Bounds the
+#: driver state per batch.
+ACCEPT_ON_DRIVER_MAX = 100_000
 
 
 def stream_dedup_on_ingest(
@@ -112,8 +92,6 @@ def stream_dedup_on_ingest(
     k: int = 8,
     threshold: float = 0.8,
     checkpoint_dir: str | None = None,
-    max_batch_rows: int = 100_000,
-    distributed_accept: bool = False,
 ) -> str:
     """Run the ingest-dedup stream with Trigger.AvailableNow: per
     micro-batch, (1) find near-dup pairs within the batch and against
@@ -122,42 +100,16 @@ def stream_dedup_on_ingest(
     their signatures to the index. Returns ``accepted_dir``.
 
     Replay safety: the accept decision is deterministic given the index
-    state, so a replayed batch re-derives the SAME accepted rows and
-    appends duplicates of them — readers MUST dedup the manifest by
-    doc_id (the registered query does), and duplicate index signatures
-    are harmless for the accept decision (candidate generation applies
-    distinct(), and duplicated pair rows don't change greedy
-    acceptance) though they do duplicate verified-pair rows and
-    inflate probe scans — ``dedup.compact_minhash_index`` reclaims
-    them between rebuilds. The same at-least-once -> exactly-once
-    composition as stream_upsert_snapshot, with the dedup on the read
-    side."""
+    state, and a replayed batch's own index rows change no decision, so
+    a replay re-derives the SAME accepted set. The index append is
+    exactly-once under ``index_store``'s **Commit records** contract
+    (``write_uncommitted`` skips an already-committed tier batch). The
+    manifest is at-least-once: a replay re-appends identical rows, so
+    readers dedup it by doc_id (the registered query does)."""
     spark = stream_docs.sparkSession
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.select("doc_id", "text")
-        # enforce the driver-state contract BEFORE anything is
-        # collected, and failing fast beats an OOM'd driver
-        # mid-backfill. The cap bounds the collected id list and
-        # (transitively) the pair-endpoint set. limit(cap+1) keeps the
-        # guard itself cheap: a well-behaved batch scans at most cap+1
-        # rows to prove it's under the cap, instead of paying a full
-        # extra source pass per micro-batch to count rows it will scan
-        # again anyway. The distributed_accept path never collects ids
-        # or pairs, so it needs no cap — any batch size goes.
-        if not distributed_accept:
-            n_rows = batch_df.limit(max_batch_rows + 1).count()
-            if n_rows > max_batch_rows:
-                raise ValueError(
-                    f"micro-batch of >{max_batch_rows} rows exceeds max_batch_rows="
-                    f"{max_batch_rows}: the greedy-accept step is "
-                    "driver-side over the batch id list and its near-dup "
-                    "pairs, so driver memory is O(max_batch_rows). Bound "
-                    "the source batch (maxFilesPerTrigger / "
-                    "maxBytesPerTrigger / rate limit), raise "
-                    "max_batch_rows deliberately, or switch to "
-                    "distributed_accept=True."
-                )
         # sign the batch ONCE: the same profile feeds within-batch
         # pairing, the index probe, and the index append (signing is
         # the dominant per-batch cost — shingle regex/substr/hash).
@@ -166,61 +118,28 @@ def stream_dedup_on_ingest(
         # profile would silently drop it from the corpus instead of
         # accepting it (it can't near-dup anything it doesn't shingle).
         prof = minhash_profile(batch_df, k).localCheckpoint(eager=True)
-        has_index = os.path.exists(
-            os.path.join(index_component_path(index_dir, "bands"), "_SUCCESS")
-        )
-        if distributed_accept:
-            # everything stays a DataFrame: within-batch + vs-index
-            # pairs feed the frontier greedy MIS (dedup.py), and the
-            # accepted ids come back as a frame for the semi-joins —
-            # driver memory is O(1) regardless of batch size.
-            ids_df = batch_df.select("doc_id")
-            pairs_df = minhash_near_dup_pairs(
-                batch_df, k, threshold, profile=prof
-            ).select("da", "db")
-            if has_index:
-                pairs_df = pairs_df.union(
-                    probe_minhash_index(
-                        spark, index_dir, batch_df, k, threshold, new_prof=prof
-                    ).select("da", "db")
-                )
-            pairs_df = pairs_df.localCheckpoint(eager=True)
+        pairs_df = minhash_near_dup_pairs(
+            batch_df, k, threshold, profile=prof
+        ).select("da", "db")
+        if all(has_commits(index_dir, t) for t in MINHASH):
+            pairs_df = pairs_df.union(
+                probe_minhash_index(
+                    spark, index_dir, batch_df, k, threshold, new_prof=prof
+                ).select("da", "db")
+            )
+        pairs_df = pairs_df.localCheckpoint(eager=True)
+        ids_df = batch_df.select("doc_id")
+        # the cap+1 limits read the checkpoint and at most cap+1 source
+        # rows: a bounded proof that the batch fits the driver
+        cap = ACCEPT_ON_DRIVER_MAX
+        pairs = pairs_df.limit(cap + 1).collect()
+        if len(pairs) <= cap and batch_df.limit(cap + 1).count() <= cap:
+            ids = [r.doc_id for r in ids_df.collect()]
+            pairs = [(r.da, r.db) for r in pairs]
             # endpoints that are not batch docs ARE the immutable
             # already-indexed acceptances
-            endpoints = (
-                pairs_df.select(F.col("da").alias("doc_id"))
-                .union(pairs_df.select(F.col("db").alias("doc_id")))
-                .distinct()
-            )
-            indexed_df = endpoints.join(ids_df, "doc_id", "anti")
-            from salesforce_prefect_etl_pipeline_spark.operators.dedup import (
-                greedy_mis_in_id_order,
-            )
-
-            keep_df = greedy_mis_in_id_order(
-                ids_df, pairs_df, pre_accepted=indexed_df
-            ).localCheckpoint(eager=True)
-            kept = batch_df.join(keep_df, "doc_id", "semi")
-        else:
-            ids = [r.doc_id for r in batch_df.select("doc_id").collect()]
-            within = [
-                (r.da, r.db)
-                for r in minhash_near_dup_pairs(
-                    batch_df, k, threshold, profile=prof
-                ).collect()
-            ]
-            vs_index = []
-            if has_index:
-                vs_index = [
-                    (r.da, r.db)
-                    for r in probe_minhash_index(
-                        spark, index_dir, batch_df, k, threshold, new_prof=prof
-                    ).collect()
-                ]
-            # docs already in the index are immutable prior acceptances
-            indexed = {x for p in vs_index for x in p} - set(ids)
             accepted = greedy_accept(
-                ids, within + vs_index, pre_accepted=indexed
+                ids, pairs, pre_accepted={x for p in pairs for x in p} - set(ids)
             )
             # join against a keep-frame, not isin(): the accepted list
             # is batch-sized and an In-literal of thousands of ids
@@ -234,9 +153,18 @@ def stream_dedup_on_ingest(
                     T.StructType([T.StructField("doc_id", id_type)]),
                 )
             )
-            kept = batch_df.join(keep_df, "doc_id", "semi")
+        else:
+            endpoints = (
+                pairs_df.select(F.col("da").alias("doc_id"))
+                .union(pairs_df.select(F.col("db").alias("doc_id")))
+                .distinct()
+            )
+            keep_df = greedy_mis_in_id_order(
+                ids_df, pairs_df, pre_accepted=endpoints.join(ids_df, "doc_id", "anti")
+            ).localCheckpoint(eager=True)
         (
-            kept.select(
+            batch_df.join(keep_df, "doc_id", "semi")
+            .select(
                 "doc_id",
                 F.length("text").cast("long").alias("n_chars"),
                 F.lit(batch_id).alias("batch_id"),
@@ -244,19 +172,20 @@ def stream_dedup_on_ingest(
             .write.mode("append")
             .parquet(accepted_dir)
         )
-        # keep_df already carries the broadcast hint on the driver path;
-        # the distributed path leaves the join strategy to AQE (the
-        # accepted frame may be arbitrarily large there)
-        _append_profile_to_index(
-            prof.join(keep_df, "doc_id", "semi"), index_dir
+        kept = prof.join(keep_df, "doc_id", "semi")
+        write_uncommitted(
+            kept,
+            index_dir,
+            {
+                t: partial(_write_minhash_batch, kept, index_dir, "append", t)
+                for t in MINHASH
+            },
         )
         # bound checkpoint storage to one batch: without the explicit
         # release, block cleanup waits on Python->JVM GC and earlier
         # batches' shingle-heavy blocks pile up across a long run
-        prof.unpersist()
-        if distributed_accept:
-            pairs_df.unpersist()
-            keep_df.unpersist()
+        for df in (prof, pairs_df, keep_df):
+            df.unpersist()
 
     run_available_now(stream_docs, _batch, checkpoint_dir=checkpoint_dir)
     return accepted_dir

@@ -25,7 +25,9 @@ from salesforce_prefect_etl_pipeline_spark.streaming.windows import (
 )
 
 
-@pytest.mark.parametrize("prefix", ["", "retract", "retractpos", "ivf", "retractivf"])
+@pytest.mark.parametrize(
+    "prefix", ["", "retract", "retractpos", "ivf", "retractivf", "minhash"]
+)
 def test_batch_id_col_is_the_on_disk_md5(spark, prefix):
     """Ids written before the shared expression existed must still
     reconcile: md5 of "[prefix:]min:max:count" exactly as hashlib spells

@@ -1,14 +1,11 @@
-"""Salted-join correctness and bucketed-join plan-shape tests."""
+"""Join- and aggregate-scale tests: salting, approximate aggregates,
+as-of and interval joins, AQE and pruning plan shapes."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from salesforce_prefect_etl_pipeline_spark.operators.joins import (
-    salted_join,
-    write_bucketed,
-)
+from salesforce_prefect_etl_pipeline_spark.operators.joins import salted_join
 from salesforce_prefect_etl_pipeline_spark.plans import load_table
 
 from tests.conftest import SF_SMALL
@@ -43,31 +40,6 @@ def test_salted_join_spreads_hot_key(spark):
         .count()
     )
     assert n_salts == 8
-
-
-@pytest.mark.usefixtures("spark")
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    # warehouse.dir is static config; park the test DB in tmp via LOCATION
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bdb LOCATION '{tmp_path / 'wh'}'")
-    orders = load_table(spark, SF_SMALL, "orders").select("o_orderkey", "o_totalprice")
-    li = load_table(spark, SF_SMALL, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed(orders, "bdb.b_orders", "o_orderkey", buckets=8)
-    write_bucketed(
-        li.withColumnRenamed("l_orderkey", "o_orderkey"), "bdb.b_lineitem", "o_orderkey", buckets=8
-    )
-    a, b = spark.table("bdb.b_orders"), spark.table("bdb.b_lineitem")
-    # disable auto-broadcast so the join would otherwise need a shuffle
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = a.join(b, "o_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
-        spark.sql("DROP TABLE IF EXISTS bdb.b_orders")
-        spark.sql("DROP TABLE IF EXISTS bdb.b_lineitem")
-        spark.sql("DROP DATABASE IF EXISTS bdb")
 
 
 def test_approx_distinct_accuracy(spark):

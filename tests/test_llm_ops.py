@@ -7,8 +7,14 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from salesforce_prefect_etl_pipeline_spark.operators import dedup, similarity, text
+from salesforce_prefect_etl_pipeline_spark.operators import (
+    dedup,
+    index_store,
+    similarity,
+    text,
+)
 from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
+    batch_id_of,
     index_component_path,
 )
 from salesforce_prefect_etl_pipeline_spark.plans import load_table
@@ -366,7 +372,7 @@ def test_torn_inplace_ivf_rebuild_fails_loudly(spark, emb, tmp_path, monkeypatch
     def crash(*args, **kwargs):
         raise RuntimeError("crash before the commit row")
 
-    monkeypatch.setattr(similarity, "commit_batch", crash)
+    monkeypatch.setattr(index_store, "commit_batch", crash)
     with pytest.raises(RuntimeError, match="commit row"):
         similarity.build_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 0), index_dir, nlist=16, iters=0
@@ -1125,15 +1131,23 @@ def test_greedy_mis_distributed_matches_sequential_random(spark):
         assert got == want, (trial, sorted(got), sorted(want))
 
 
+def _torn_minhash_batch(docs, idx):
+    """A MinHash index batch torn before its commit rows: both tiers'
+    stamped data rows land, neither commit row does."""
+    from unittest import mock
+
+    prof = dedup.minhash_profile(docs, 8)
+    with mock.patch.object(index_store, "commit_batch"):
+        for tier in dedup.MINHASH:
+            dedup._write_minhash_batch(prof, idx, "append", tier, "torn")
+
+
 def test_compact_minhash_index_preserves_probes_and_drops_tombstones(spark, docs, tmp_path):
-    """Compaction contract: after a replayed append doubled every index
-    row, compaction (1) restores the original row counts, (2) leaves
+    """Compaction contract: after a torn batch doubled every index row
+    on disk, compaction (1) restores the original row counts, (2) leaves
     probe results IDENTICAL, and (3) physically drops retracted docs so
     they stop appearing as index-side pair endpoints."""
     from salesforce_prefect_etl_pipeline_spark.operators.corpus import split_bucket
-    from salesforce_prefect_etl_pipeline_spark.streaming.ingest import (
-        _append_profile_to_index,
-    )
 
     idx = str(tmp_path / "idx")
     corpus_side = docs.filter(split_bucket(F.col("doc_id")) < 80)
@@ -1142,21 +1156,27 @@ def test_compact_minhash_index_preserves_probes_and_drops_tombstones(spark, docs
     bands0 = spark.read.parquet(f"{idx}/bands").count()
     profs0 = spark.read.parquet(f"{idx}/profiles").count()
 
-    # simulate an at-least-once replay: append the same corpus again
-    _append_profile_to_index(dedup.minhash_profile(corpus_side, 8), idx)
+    # a torn batch of the same corpus: stamped rows, no commit rows
+    _torn_minhash_batch(corpus_side, idx)
     assert spark.read.parquet(f"{idx}/bands").count() == 2 * bands0
 
     before_rows = [
         (r.da, r.db, r.jaccard)
         for r in dedup.probe_minhash_index(spark, idx, increment).collect()
     ]
-    # replay-doubled PROFILES duplicate every verified pair row — the
-    # read-side artifact compaction exists to remove
-    assert len(before_rows) == 2 * len(set(before_rows))
+    # the uncommitted rows are invisible to the probe; compaction drops
+    # them physically
+    assert len(before_rows) == len(set(before_rows))
     before = set(before_rows)
     stats = dedup.compact_minhash_index(spark, idx)
-    assert stats["bands"] == {"before": 2 * bands0, "after": bands0}
-    assert stats["profiles"] == {"before": 2 * profs0, "after": profs0}
+    assert {k: stats["bands"][k] for k in ("before", "after")} == {
+        "before": 2 * bands0,
+        "after": bands0,
+    }
+    assert {k: stats["profiles"][k] for k in ("before", "after")} == {
+        "before": 2 * profs0,
+        "after": profs0,
+    }
     after_rows = [
         (r.da, r.db, r.jaccard)
         for r in dedup.probe_minhash_index(spark, idx, increment).collect()
@@ -1200,15 +1220,12 @@ def test_compaction_publish_is_snapshot_isolated(spark, docs, tmp_path):
     retained snapshot and returns identical rows after the publish —
     there is no instant at which the live component is missing."""
     from salesforce_prefect_etl_pipeline_spark.operators.corpus import split_bucket
-    from salesforce_prefect_etl_pipeline_spark.streaming.ingest import (
-        _append_profile_to_index,
-    )
 
     idx = str(tmp_path / "idx")
     corpus_side = docs.filter(split_bucket(F.col("doc_id")) < 80)
     increment = docs.filter(split_bucket(F.col("doc_id")) >= 80)
     dedup.build_minhash_index(corpus_side, idx)
-    _append_profile_to_index(dedup.minhash_profile(corpus_side, 8), idx)
+    _torn_minhash_batch(corpus_side, idx)
 
     pre_plan = dedup.probe_minhash_index(spark, idx, increment)
     expected = sorted((r.da, r.db, r.jaccard) for r in pre_plan.collect())
@@ -1226,7 +1243,9 @@ def test_compaction_publish_is_snapshot_isolated(spark, docs, tmp_path):
     )
     assert post == sorted(set(expected))
     # appends resolve into the CURRENT version after compaction
-    _append_profile_to_index(dedup.minhash_profile(increment, 8), idx)
+    prof = dedup.minhash_profile(increment, 8)
+    for tier in dedup.MINHASH:
+        dedup._write_minhash_batch(prof, idx, "append", tier, batch_id_of(prof, tier))
     import os
 
     assert os.path.isdir(os.path.join(idx, "versions", "v1", "bands"))
@@ -1306,16 +1325,13 @@ def test_concurrent_probes_during_maintenance(spark, docs, emb, tmp_path):
     import time
 
     from salesforce_prefect_etl_pipeline_spark.operators.corpus import split_bucket
-    from salesforce_prefect_etl_pipeline_spark.streaming.ingest import (
-        _append_profile_to_index,
-    )
 
     idx = str(tmp_path / "idx")
     corpus_side = docs.filter(split_bucket(F.col("doc_id")) < 80)
     increment = docs.filter(split_bucket(F.col("doc_id")) >= 80)
     dedup.build_minhash_index(corpus_side, idx)
-    # replay-append so compaction has real work to rewrite
-    _append_profile_to_index(dedup.minhash_profile(corpus_side, 8), idx)
+    # a torn batch so compaction has real work to rewrite
+    _torn_minhash_batch(corpus_side, idx)
     expected = set(
         (r.da, r.db, r.jaccard)
         for r in dedup.probe_minhash_index(spark, idx, increment).collect()
@@ -2159,16 +2175,13 @@ def test_ivfpq_residual_gain_on_clustered_corpus(spark, tmp_path):
 
 def test_minhash_index_stats_lifecycle(spark, docs, tmp_path):
     """r16 observe instrument for the LSH index: fresh build is clean;
-    a replayed append doubles physical rows and shows as
+    a torn batch of the same docs doubles physical rows and shows as
     n_replay_dups while the LIVE columns (n_docs, n_keys, max_bucket)
     stay exactly put; compaction returns the physicals to clean with
     the live columns still unchanged. Invariant: one key per (doc,
     band) means n_entries == n_docs per band."""
     from salesforce_prefect_etl_pipeline_spark.operators.corpus import (
         split_bucket,
-    )
-    from salesforce_prefect_etl_pipeline_spark.streaming.ingest import (
-        _append_profile_to_index,
     )
 
     idx = str(tmp_path / "idx")
@@ -2193,7 +2206,7 @@ def test_minhash_index_stats_lifecycle(spark, docs, tmp_path):
         for b, r in clean.items()
     }
 
-    _append_profile_to_index(dedup.minhash_profile(corpus_side, 8), idx)
+    _torn_minhash_batch(corpus_side, idx)
     frag = _bands_rows()
     assert all(r["n_replay_dups"] > 0 for r in frag.values())
     assert all(

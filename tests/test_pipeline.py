@@ -612,33 +612,6 @@ def test_cdc_tombstones_survive_replay(spark, tmp_path):
     assert live == {"a": 9, "b": 2}
 
 
-def test_check_expectations_single_pass_contract(spark):
-    """Declarative contract checks: pass/fail fractions computed in one
-    aggregation job; strict mode raises with the failing rules."""
-    import pytest as _pytest
-
-    from salesforce_prefect_etl_pipeline_spark.operators.quality import (
-        ExpectationError,
-        check_expectations,
-    )
-    from salesforce_prefect_etl_pipeline_spark.plans import load_table
-    from tests.conftest import SF_SMALL
-
-    orders = load_table(spark, SF_SMALL, "orders")
-    rules = [
-        ("not_null", "o_orderkey", 1.0),
-        ("unique", "o_orderkey"),
-        ("accepted_values", "o_orderstatus", ["O", "F", "P"], 1.0),
-        ("between", "o_totalprice", 0.0, 1e9, 1.0),
-        ("not_null", "o_custkey", 1.1),  # impossible -> must fail
-    ]
-    reports = check_expectations(orders, rules)
-    assert [r["ok"] for r in reports] == [True, True, True, True, False]
-    assert reports[1]["distinct"] == reports[1]["non_null"]
-    with _pytest.raises(ExpectationError, match="not_null"):
-        check_expectations(orders, rules, strict=True)
-
-
 def test_paged_extract_mid_stream_page_failure_then_clean_rerun(spark, tmp_path):
     """Fault injection on the paged scale path: one page's fetch dies
     mid-extract (transient API failure ON THE EXECUTOR). The job must

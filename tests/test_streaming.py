@@ -346,72 +346,61 @@ def test_stream_dedup_ingest_keeps_unshingleable_docs(spark, tmp_path):
     assert got == {1, 2, 3}
 
 
-def test_stream_dedup_ingest_enforces_batch_row_cap(spark, tmp_path):
-    """The driver-state contract is enforced, not advisory: a
-    micro-batch larger than max_batch_rows must fail the stream with
-    the contract message BEFORE any driver-side collection, and the
-    same source passes when the cap holds (semantics unchanged)."""
-    import pytest as _pytest
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from salesforce_prefect_etl_pipeline_spark.streaming.ingest import (
-        stream_dedup_on_ingest,
-        stream_documents_dir,
-    )
+def test_stream_dedup_ingest_batch_over_cap_accepts_the_same_set(
+    spark, tmp_path, monkeypatch
+):
+    """The driver cap picks the accept path, not the result: a
+    micro-batch over ``ACCEPT_ON_DRIVER_MAX`` (the distributed frontier
+    MIS) accepts the same set as the same batch under it (the driver
+    greedy)."""
+    from salesforce_prefect_etl_pipeline_spark.streaming import ingest
 
     src = tmp_path / "src"
     spark.createDataFrame(
-        [(i, f"document number {i} with some ordinary text") for i in range(6)],
+        [(i, f"document number {i} with some ordinary text") for i in range(6)]
+        + [(6, "document number 1 with some ordinary text")],
         "doc_id long, text string",
     ).coalesce(1).write.parquet(str(src))
-    with _pytest.raises(StreamingQueryException, match="max_batch_rows"):
-        stream_dedup_on_ingest(
-            stream_documents_dir(spark, str(src)),
-            index_dir=str(tmp_path / "idx"),
-            accepted_dir=str(tmp_path / "acc"),
-            max_batch_rows=2,
+
+    def _accepted(name):
+        acc = ingest.stream_dedup_on_ingest(
+            ingest.stream_documents_dir(spark, str(src)),
+            index_dir=str(tmp_path / f"idx_{name}"),
+            accepted_dir=str(tmp_path / f"acc_{name}"),
         )
-    accepted_dir = stream_dedup_on_ingest(
-        stream_documents_dir(spark, str(src)),
-        index_dir=str(tmp_path / "idx2"),
-        accepted_dir=str(tmp_path / "acc2"),
-        max_batch_rows=6,
-    )
-    got = {r.doc_id for r in spark.read.parquet(accepted_dir).collect()}
-    assert got == set(range(6))
+        return {r.doc_id for r in spark.read.parquet(acc).collect()}
+
+    under = _accepted("under")
+    monkeypatch.setattr(ingest, "ACCEPT_ON_DRIVER_MAX", 2)
+    assert _accepted("over") == under == set(range(6))
 
 
-def test_stream_dedup_ingest_distributed_accept_matches_driver_path(spark, tmp_path):
-    """distributed_accept=True must accept the IDENTICAL doc set as the
-    default driver-side greedy, with no driver collection and no batch
-    cap — same source, fresh indexes for each."""
-    from salesforce_prefect_etl_pipeline_spark.plans import load_table
-    from salesforce_prefect_etl_pipeline_spark.streaming.ingest import (
-        stream_dedup_on_ingest,
-        stream_documents_dir,
-    )
-    from tests.conftest import SF_SMALL
+@pytest.mark.parametrize("cap", ["default", "zero"])
+def test_stream_dedup_ingest_accept_path_matches_sequential_greedy(
+    spark, tmp_path, monkeypatch, cap
+):
+    """Both accept paths — the driver greedy under the cap and the
+    distributed frontier MIS (cap 0) — accept exactly the sequential
+    greedy set over the batch's near-dup pairs (one batch, fresh
+    index)."""
+    from salesforce_prefect_etl_pipeline_spark.operators import dedup
+    from salesforce_prefect_etl_pipeline_spark.streaming import ingest
 
+    if cap == "zero":
+        monkeypatch.setattr(ingest, "ACCEPT_ON_DRIVER_MAX", 0)
+    docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
     src = tmp_path / "src"
-    load_table(spark, SF_SMALL, "documents").select(
-        "doc_id", "text"
-    ).coalesce(1).write.parquet(str(src))
-
-    a_dir = stream_dedup_on_ingest(
-        stream_documents_dir(spark, str(src)),
-        index_dir=str(tmp_path / "idx_driver"),
-        accepted_dir=str(tmp_path / "acc_driver"),
+    docs.coalesce(1).write.parquet(str(src))
+    acc = ingest.stream_dedup_on_ingest(
+        ingest.stream_documents_dir(spark, str(src)),
+        index_dir=str(tmp_path / "idx"),
+        accepted_dir=str(tmp_path / "acc"),
     )
-    b_dir = stream_dedup_on_ingest(
-        stream_documents_dir(spark, str(src)),
-        index_dir=str(tmp_path / "idx_dist"),
-        accepted_dir=str(tmp_path / "acc_dist"),
-        distributed_accept=True,
-        max_batch_rows=1,  # must be ignored on the distributed path
-    )
-    a = {r.doc_id for r in spark.read.parquet(a_dir).collect()}
-    b = {r.doc_id for r in spark.read.parquet(b_dir).collect()}
-    assert a == b and a
+    got = {r.doc_id for r in spark.read.parquet(acc).collect()}
+    ids = [r.doc_id for r in docs.select("doc_id").collect()]
+    pairs = [(r.da, r.db) for r in dedup.minhash_near_dup_pairs(docs).collect()]
+    assert pairs, "planted near-dups required"
+    assert got == ingest.greedy_accept(ids, pairs)
 
 
 def test_stream_text_index_ingest_multi_batch_equals_monolithic(spark, tmp_path):
@@ -891,8 +880,9 @@ def test_stream_ivf_retract_multi_batch_equals_monolithic(spark, tmp_path):
     assert not any(r[1] in dead_set for r in got)
 
 
-#: The six streaming sinks, each over the tier whose guard it exercises:
-#: (text feed or vector feed, retraction sink, positional tier).
+#: The seven streaming sinks, each over the tier whose guard it
+#: exercises: (text, vector or dedup feed, retraction sink, positional
+#: tier).
 _SINKS = {
     "text_ingest_bm25": ("text", False, False),
     "text_ingest_positional": ("text", False, True),
@@ -900,6 +890,7 @@ _SINKS = {
     "text_retract_bm25": ("text", True, False),
     "text_retract_positional": ("text", True, True),
     "ivf_retract": ("ivf", True, False),
+    "minhash_ingest": ("minhash", False, False),
 }
 
 
@@ -908,16 +899,37 @@ def test_sink_guard_skips_a_replayed_committed_batch(spark, tmp_path, sink):
     """Every sink's committed-id guard: re-running the sink over the
     same source with a fresh checkpoint (a crash after the commit row,
     before the checkpoint advanced, replays the batch) writes nothing.
-    The commit record's ids, the data and tombstone file counts and the
+    The commit records' ids, the data and tombstone file counts and the
     probe rows are unchanged."""
-    from salesforce_prefect_etl_pipeline_spark.operators import retrieval, similarity
+    from salesforce_prefect_etl_pipeline_spark.operators import (
+        dedup,
+        retrieval,
+        similarity,
+    )
     from salesforce_prefect_etl_pipeline_spark.streaming import ingest
 
     feed, retract, positional = _SINKS[sink]
     idx, src = str(tmp_path / "idx"), str(tmp_path / "src")
-    if feed == "text":
+    if feed == "minhash":
         docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
-        tier = retrieval.POSITIONAL if positional else retrieval.BM25
+        tiers = dedup.MINHASH
+        dedup.build_minhash_index(docs.filter("doc_id % 2 = 0"), idx)
+        fed = docs.filter("doc_id % 2 = 1")
+
+        def probe(spark, idx):
+            return dedup.probe_minhash_index(spark, idx, docs.filter("doc_id % 3 = 0"))
+
+        def _run(ckpt):
+            ingest.stream_dedup_on_ingest(
+                ingest.stream_documents_dir(spark, src),
+                idx,
+                str(tmp_path / "acc"),
+                checkpoint_dir=ckpt,
+            )
+
+    elif feed == "text":
+        docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
+        tiers = (retrieval.POSITIONAL if positional else retrieval.BM25,)
         probe = (
             retrieval.probe_phrase_index if positional else retrieval.probe_text_index
         )
@@ -938,7 +950,7 @@ def test_sink_guard_skips_a_replayed_committed_batch(spark, tmp_path, sink):
 
     else:
         emb = load_table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
-        tier = similarity.IVF
+        tiers = (similarity.IVF,)
         qvecs = [
             (r.vec_id, list(r.embedding))
             for r in emb.filter(F.col("vec_id").isin([1, 7, 42])).collect()
@@ -969,18 +981,22 @@ def test_sink_guard_skips_a_replayed_committed_batch(spark, tmp_path, sink):
     fed.coalesce(1).write.parquet(src)
 
     def _state():
-        return (
-            sorted(
-                r.batch_id
-                for r in spark.read.parquet(f"{idx}/{tier.record}").collect()
-            ),
-            _parquet_files(f"{idx}/{tier.data}"),
-            _parquet_files(f"{idx}/{tier.tombstones}"),
-            [tuple(r) for r in probe(spark, idx).collect()],
-        )
+        per_tier = [
+            (
+                sorted(
+                    r.batch_id
+                    for r in spark.read.parquet(f"{idx}/{tier.record}").collect()
+                ),
+                _parquet_files(f"{idx}/{tier.data}"),
+                tier.tombstones and _parquet_files(f"{idx}/{tier.tombstones}"),
+            )
+            for tier in tiers
+        ]
+        return per_tier, [tuple(r) for r in probe(spark, idx).collect()]
 
     _run(str(tmp_path / "ckpt1"))
     first = _state()
-    assert len(first[0]) == 2 and first[3]  # build + the streamed batch
+    # build + the streamed batch in every tier's record
+    assert all(len(ids) == 2 for ids, _, _ in first[0]) and first[1]
     _run(str(tmp_path / "ckpt2"))
     assert _state() == first

@@ -1163,7 +1163,7 @@ def test_compaction_is_probe_identical_and_merges_files(spark, tmp_path):
     retrieval.retract_positional_index(dead, idx)
     retrieval.retract_champion_lists(dead, idx)
     before = _all_tier_probes(spark, idx)
-    assert retrieval._parquet_file_count(f"{idx}/postings") > 50
+    assert index_store.parquet_file_count(f"{idx}/postings") > 50
 
     stats = retrieval.compact_text_index(spark, idx)
     assert _all_tier_probes(spark, idx) == before
@@ -1593,9 +1593,10 @@ def test_above_cap_semi_join_equals_literal_filter(spark, tmp_path, monkeypatch)
 
 
 #: Each stamped tier's on-disk format, spelled out rather than read from
-#: its ``Tier``: (data, record, tombstones) component names, their
+#: its ``Tier``: (data, record[, tombstones]) component names, their
 #: parquet file schemas (partition column excluded), the partition
-#: column, and the ingest and retraction id prefixes.
+#: column, and the ingest and retraction id prefixes (None: the tier is
+#: never retracted and has no tombstones).
 _ON_DISK = {
     "bm25": (
         ("postings", "totals", "tombstones"),
@@ -1647,6 +1648,28 @@ _ON_DISK = {
         "list_id",
         ("ivf", "retractivf"),
     ),
+    "minhash_bands": (
+        ("bands", "bandbatches"),
+        (
+            [("doc_id", "int64"), ("key", "int64"), ("batch_id", "string")],
+            [("batch_id", "string"), ("origin", "string")],
+        ),
+        "band",
+        ("minhash", None),
+    ),
+    "minhash_profiles": (
+        ("profiles", "profbatches"),
+        (
+            [
+                ("doc_id", "int64"),
+                ("shingles", "list<element: int64 not null>"),
+                ("batch_id", "string"),
+            ],
+            [("batch_id", "string"), ("origin", "string")],
+        ),
+        None,
+        ("minhash", None),
+    ),
 }
 
 
@@ -1668,15 +1691,29 @@ def _file_schema(path: str) -> list[tuple[str, str]]:
 @pytest.mark.parametrize("tier", sorted(_ON_DISK))
 def test_commit_batch_on_disk_schema(spark, tmp_path, tier):
     """The stamped tiers' on-disk format after a build, an append and a
-    retraction: component names, file schemas and column order,
-    partition dir names, and commit and tombstone rows whose batch ids
-    are hashlib's md5 of "[prefix:]min:max:count"."""
+    retraction (where the tier has one): component names, file schemas
+    and column order, partition dir names, and commit and tombstone rows
+    whose batch ids are hashlib's md5 of "[prefix:]min:max:count"."""
     import hashlib
     import os
 
+    from salesforce_prefect_etl_pipeline_spark.operators import dedup
+    from salesforce_prefect_etl_pipeline_spark.streaming import ingest as sink
+
     comps, schemas, part, (ingest, retract) = _ON_DISK[tier]
     idx = str(tmp_path / tier)
-    if tier == "ivf":
+    if tier.startswith("minhash"):
+        key, frame = "doc_id", _docs(spark, _LIFECYCLE_TEXTS)
+        head, tail = frame.filter("doc_id < 4"), frame.filter("doc_id >= 4")
+        dedup.build_minhash_index(head, idx)
+        tail.coalesce(1).write.parquet(str(tmp_path / "src"))
+        sink.stream_dedup_on_ingest(
+            sink.stream_documents_dir(spark, str(tmp_path / "src")),
+            idx,
+            str(tmp_path / "accepted"),
+        )
+        parts = {f"band={b}" for b in range(16)} if part else set()
+    elif tier == "ivf":
         key, frame = "vec_id", _emb(spark).select("vec_id", "embedding")
         head, tail = frame.filter("vec_id % 2 = 0"), frame.filter("vec_id % 2 = 1")
         dead = tail.filter("vec_id % 3 = 0").select("vec_id")
@@ -1707,23 +1744,21 @@ def test_commit_batch_on_disk_schema(spark, tmp_path, tier):
         body = f"{ids[0]}:{ids[-1]}:{len(ids)}"
         return hashlib.md5((f"{prefix}:{body}" if prefix else body).encode()).hexdigest()
 
-    data, record, tombstones = (os.path.join(idx, c) for c in comps)
-    assert [_file_schema(p) for p in (data, record, tombstones)] == list(schemas)
+    paths = [os.path.join(idx, c) for c in comps]
+    assert [_file_schema(p) for p in paths] == list(schemas)
+    data, record = paths[:2]
     got_parts = {d for d in os.listdir(data) if "=" in d}
     assert got_parts <= parts and (tier == "ivf" or got_parts == parts), got_parts
-    dead_id = _md5_id(dead, retract)
+    commits = [(_md5_id(head, ingest), "build"), (_md5_id(tail, ingest), "append")]
+    if retract:
+        dead_id = _md5_id(dead, retract)
+        commits.append((dead_id, "retract"))
+        assert sorted(tuple(r) for r in spark.read.parquet(paths[2]).collect()) == [
+            (r[0], dead_id) for r in sorted(dead.select(key).collect())
+        ]
     assert sorted(
         tuple(r) for r in spark.read.parquet(record).select("batch_id", "origin").collect()
-    ) == sorted(
-        [
-            (_md5_id(head, ingest), "build"),
-            (_md5_id(tail, ingest), "append"),
-            (dead_id, "retract"),
-        ]
-    )
-    assert sorted(tuple(r) for r in spark.read.parquet(tombstones).collect()) == [
-        (r[0], dead_id) for r in sorted(dead.select(key).collect())
-    ]
+    ) == sorted(commits)
     if tier == "bm25":
         n_docs = [r[0] for r in spark.read.parquet(record).select("n_docs").collect()]
         assert sorted(n_docs) == [-2, 4, 4]
