@@ -39,12 +39,11 @@ from pyspark.sql import types as T
 from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
     Tier,
     batch_id_of,
-    index_component_path,
     laid_out,
     next_version,
+    open_snapshot,
     parquet_file_count,
     publish_version,
-    reconciled_read,
     reset_tier,
     reset_versions,
     restamp_live,
@@ -1234,7 +1233,8 @@ def minhash_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     columns are the pytest-covered maintenance signals."""
     import glob as _glob
 
-    bands_path = index_component_path(index_dir, MINHASH_BANDS.data)
+    snap = open_snapshot(spark, index_dir)
+    bands_path = snap.path(MINHASH_BANDS.data)
     bands = spark.read.parquet(bands_path)
     per_bucket = bands.groupBy("band", "key").agg(
         F.count(F.lit(1)).alias("rows"),
@@ -1276,7 +1276,7 @@ def minhash_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
         )
         for r in per_band
     ]
-    prof_path = index_component_path(index_dir, MINHASH_PROFILES.data)
+    prof_path = snap.path(MINHASH_PROFILES.data)
     pr = spark.read.parquet(prof_path).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.count_distinct("doc_id").cast("long").alias("n_docs"),
@@ -1406,14 +1406,18 @@ def build_minhash_index(docs: DataFrame, index_dir: str, k: int = 8) -> None:
 
     A full build SUPERSEDES any versioned history at this path and
     resets both tiers before writing either (``index_store``'s
-    **Versions**)."""
+    **Versions**). The corpus is signed once: one persisted profile
+    feeds both tiers' writes and is released when they end."""
     reset_versions(index_dir)
     for tier in MINHASH:
         reset_tier(index_dir, tier)
-    prof = minhash_profile(docs, k)
     bid = batch_id_of(docs, MINHASH_BANDS)
-    for tier in MINHASH:
-        _write_minhash_batch(prof, index_dir, "overwrite", tier, bid)
+    prof = minhash_profile(docs, k).persist()
+    try:
+        for tier in MINHASH:
+            _write_minhash_batch(prof, index_dir, "overwrite", tier, bid)
+    finally:
+        prof.unpersist()
 
 
 def compact_minhash_index(
@@ -1441,11 +1445,10 @@ def compact_minhash_index(
         if drop_doc_ids is not None
         else None
     )
+    snap = open_snapshot(spark, index_dir, MINHASH)
     new_root = next_version(index_dir)
     stats = {
-        tier.data: restamp_live(
-            spark, index_dir, new_root, tier, f"compact{tier.data}", drops
-        )[1]
+        tier.data: restamp_live(snap, new_root, tier, f"compact{tier.data}", drops)[1]
         for tier in MINHASH
     }
     publish_version(
@@ -1482,8 +1485,9 @@ def probe_minhash_index(
         F.col("doc_id").alias("new_id"),
         F.posexplode(band_key_array(F.col("sig"))).alias("band", "key"),
     )
-    idx_bands = reconciled_read(spark, index_dir, MINHASH_BANDS)
-    idx_prof = reconciled_read(spark, index_dir, MINHASH_PROFILES)
+    snap = open_snapshot(spark, index_dir, MINHASH)
+    idx_bands = snap.read(MINHASH_BANDS)
+    idx_prof = snap.read(MINHASH_PROFILES)
     cand = (
         new_banded.join(
             idx_bands,

@@ -38,17 +38,23 @@ crash between the two writes leaves an invisible orphan, and the replay
 re-appends byte-identical rows that the readers' replay dedup
 collapses. Retractions use the same order (:func:`retract_batch`):
 tombstone rows, then the commit row. Streaming sinks skip a batch whose
-id is already committed (:func:`write_uncommitted`, over
-:func:`committed_batch_ids`; one row per batch, so driver state is
+id is already committed (:func:`write_uncommitted`, over the
+snapshot's committed ids; one row per batch, so driver state is
 bounded by the batch count).
 
-**Reads.** Every stamped component is read through
-:func:`reconciled_read`, which sees:
+**Reads.** A read opens one :class:`Snapshot`
+(:func:`open_snapshot`): ``CURRENT`` is resolved once, and each tier
+the read names has its commit record collected once, whole (one row
+per batch; a record without ``_SUCCESS`` holds no commit). The handle
+answers every question a reader asks from those rows: a component's
+path, the committed ids, the summed commit longs (the text corpus
+totals), and the reconciled read of a tier's data
+(:meth:`Snapshot.read`; :func:`reconciled_read` is its one-tier
+form), which sees:
 
-- committed batches only. The commit record is collected once (one row
-  per batch) and its ids filter the data as a plan-time ``isin``
-  literal, which parquet can push into the scan, up to
-  :data:`BATCH_ISIN_CAP` ids; above that, as a broadcast semi-join
+- committed batches only. The committed ids filter the data as a
+  plan-time ``isin`` literal, which parquet can push into the scan, up
+  to :data:`BATCH_ISIN_CAP` ids; above that, as a broadcast semi-join
   against the same collected ids;
 - replay-deduplicated rows, keyed on the family's row key plus
   ``batch_id`` (only a replayed batch can duplicate a row). The dedup
@@ -57,11 +63,12 @@ bounded by the batch count).
   directory, so there is nothing to replay against, while an
   append-created single batch (a streamed first micro-batch, torn and
   replayed) carries duplicates under one committed id;
-- no retracted rows: the tier's committed tombstones
-  (:func:`committed_tombstones`, a tombstone counts only when its batch
-  id is in the tier's own commit record) are anti-joined out. The
-  anti-join is not a forced broadcast: retraction sets grow without
-  bound at crawl scale, and AQE promotes it while they are small.
+- no retracted rows (:meth:`Snapshot.live`, which the derived caches'
+  probes apply too): the tier's committed tombstones (a tombstone
+  counts only when its batch id is in the tier's own commit record)
+  are anti-joined out on its id column. The anti-join is not a forced
+  broadcast: retraction sets grow without bound at crawl scale, and
+  AQE promotes it while they are small.
 
 **Versions.** A fresh MinHash or IVF build writes the flat layout
 ``<index_dir>/<comp>`` after :func:`reset_versions` drops any versioned
@@ -82,8 +89,11 @@ restamps each tier's live rows there as one ``build`` batch
 ``CURRENT`` pointer file: a temp pointer, ``flush`` + ``fsync``, then
 ``os.replace``. There is never a window
 where a live component is missing. A reader that resolved ``CURRENT``
-(:func:`index_component_path`) before the swap keeps reading the
-previous version; one that resolves after reads the new one. A crash
+before the swap keeps reading the previous version; one that resolves
+after reads the new one. A read of several components (data, record,
+tombstones, totals, centroids, codes) opens one snapshot and takes
+every path from it, so a publish in between cannot pair two versions'
+components. A crash
 anywhere leaves ``CURRENT`` on intact data, and the next publish
 overwrites the orphaned staging dir.
 
@@ -107,22 +117,22 @@ import shutil
 from collections.abc import Callable, Mapping, Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 
 def index_component_path(index_dir: str, comp: str) -> str:
-    """Resolve an index component through the ``CURRENT`` pointer:
-    ``<snapshot_dir>/<comp>`` (:func:`snapshot_dir`). Every reader and
-    appender resolves through this function or that one."""
+    """Resolve one index component through the ``CURRENT`` pointer:
+    ``<snapshot_dir>/<comp>`` (:func:`snapshot_dir`). Writers and
+    one-component reads resolve through this function; a read of
+    several components takes them from one :func:`open_snapshot`."""
     return os.path.join(snapshot_dir(index_dir), comp)
 
 
 def snapshot_dir(index_dir: str) -> str:
     """The directory ``CURRENT`` resolves components under:
     ``<index_dir>/versions/<v>`` once a version was published, the flat
-    ``<index_dir>`` before. A read of several components resolves it
-    once, or a publish in between could pair two versions' components."""
+    ``<index_dir>`` before."""
     v = current_index_version(index_dir)
     return os.path.join(index_dir, "versions", v) if v else index_dir
 
@@ -189,8 +199,9 @@ def gc_index_versions(index_dir: str, keep_n: int = 2) -> list[str]:
 class Tier:
     """A stamped tier (see **Tiers**): its components, the ``key`` of a
     row within a batch, the ``id_col`` batch ids are taken over, its id
-    prefixes and its data layout (:func:`laid_out`). A tier without
-    ``tombstones`` is never retracted."""
+    prefixes, the ``longs`` its commit rows carry and its data layout
+    (:func:`laid_out`). A tier without ``tombstones`` is never
+    retracted."""
 
     data: str
     record: str
@@ -201,10 +212,18 @@ class Tier:
     retract_prefix: str | None = None
     partition: str | None = None
     sort: str | None = None
+    longs: tuple[str, ...] = ()
 
     @property
     def components(self) -> tuple[str, ...]:
         return tuple(c for c in (self.data, self.record, self.tombstones) if c)
+
+    @property
+    def record_schema(self) -> str:
+        """The commit record's columns: ``longs`` as bigints, then
+        ``batch_id`` and ``origin``."""
+        longs = "".join(f"{c} long, " for c in self.longs)
+        return longs + "batch_id string, origin string"
 
 
 def batch_id_col(key: str, prefix: str = "") -> Column:
@@ -272,12 +291,12 @@ def commit_batch(
     **longs: int,
 ) -> None:
     """Write one commit row ``(*longs, batch_id, origin)`` to the tier's
-    commit record; a ``build`` row replaces the record, any other
-    appends to it. ``longs`` become leading bigint columns in the order
-    given: the text ``totals`` row's ``n_docs`` and ``total_len``."""
+    commit record (:attr:`Tier.record_schema`; ``longs`` names the
+    tier's ``longs``: the text ``totals`` row's ``n_docs`` and
+    ``total_len``); a ``build`` row replaces the record, any other
+    appends to it."""
     spark.createDataFrame(
-        [(*longs.values(), bid, origin)],
-        "".join(f"{c} long, " for c in longs) + "batch_id string, origin string",
+        [(*(longs[c] for c in tier.longs), bid, origin)], tier.record_schema
     ).write.mode("overwrite" if origin == "build" else "append").parquet(
         index_component_path(index_dir, tier.record)
     )
@@ -310,15 +329,6 @@ def has_commits(index_dir: str, tier: Tier) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
-def committed_batch_ids(spark: SparkSession, index_dir: str, tier: Tier) -> set[str]:
-    """Batch ids in the tier's commit record, or the empty set before
-    its first commit. One row per batch — control-plane sized."""
-    if not has_commits(index_dir, tier):
-        return set()
-    path = index_component_path(index_dir, tier.record)
-    return {r["batch_id"] for r in spark.read.parquet(path).select("batch_id").collect()}
-
-
 def write_uncommitted(
     df: DataFrame,
     index_dir: str,
@@ -330,12 +340,13 @@ def write_uncommitted(
     is already committed. Tiers with one id rule share one computation;
     each is guarded alone, so a crash between two tiers' writes replays
     only the missing one."""
+    snap = open_snapshot(df.sparkSession, index_dir, tuple(writes))
     ids: dict[tuple[str, str], str] = {}
     for tier, write in writes.items():
         rule = (tier.id_col, tier.retract_prefix if retract else tier.ingest_prefix)
         if rule not in ids:
             ids[rule] = batch_id_of(df, tier, retract)
-        if ids[rule] not in committed_batch_ids(df.sparkSession, index_dir, tier):
+        if ids[rule] not in snap.committed(tier):
             write(ids[rule])
 
 
@@ -343,38 +354,100 @@ def _id_frame(spark: SparkSession, ids: list[str]) -> DataFrame:
     return spark.createDataFrame([(b,) for b in ids], "batch_id string")
 
 
-def committed_tombstones(
-    spark: SparkSession,
-    index_dir: str,
-    tier: Tier,
-    committed: list[str] | None = None,
-) -> DataFrame | None:
-    """Distinct keys retracted from a tier: the rows of its tombstone
-    component whose batch id is in its own commit record, without
-    ``batch_id``. None when the tier has no tombstone component (the
-    common case: no read, no plan change). ``committed`` is the
-    record's ids when the caller already collected them; otherwise the
-    plan scans the record."""
-    return _committed_tombstones(spark, snapshot_dir(index_dir), tier, committed)
+@dataclass(frozen=True)
+class Snapshot:
+    """One read's view of an index (see **Reads**): the directory
+    ``CURRENT`` resolved to, and the commit rows of each tier named at
+    :func:`open_snapshot` (None: the record holds no commit)."""
+
+    spark: SparkSession
+    root: str
+    records: Mapping[Tier, list[Row] | None]
+
+    def path(self, comp: str) -> str:
+        return os.path.join(self.root, comp)
+
+    def has(self, comp: str) -> bool:
+        return os.path.isdir(self.path(comp))
+
+    def _record(self, tier: Tier) -> list[Row]:
+        rows = self.records[tier]
+        if rows is None:
+            raise FileNotFoundError(f"no commit in {self.path(tier.record)}")
+        return rows
+
+    def committed(self, tier: Tier) -> list[str]:
+        """The tier's committed batch ids, sorted; none before its first
+        commit."""
+        return sorted({r["batch_id"] for r in self.records[tier] or ()})
+
+    def longs(self, tier: Tier) -> Row:
+        """The record's long columns (:func:`commit_batch`'s ``longs``)
+        summed over its distinct batch ids, so a replayed commit row
+        counts once; retraction rows carry negative longs."""
+        rows = {r["batch_id"]: r for r in self._record(tier)}.values()
+        return Row(**{c: sum(r[c] for r in rows) for c in tier.longs})
+
+    def tombstones(self, tier: Tier) -> DataFrame | None:
+        """Distinct ids retracted from the tier: its tombstone rows whose
+        batch id is committed, without ``batch_id``. None when it has no
+        tombstone component (the common case: no read, no plan change)."""
+        if not tier.tombstones or not self.has(tier.tombstones):
+            return None
+        ids = _id_frame(self.spark, self.committed(tier))
+        return (
+            self.spark.read.parquet(self.path(tier.tombstones))
+            .join(F.broadcast(ids), "batch_id", "leftsemi")
+            .drop("batch_id")
+            .distinct()
+        )
+
+    def live(self, df: DataFrame, tier: Tier) -> DataFrame:
+        """``df`` without the rows of ids the tier retracted."""
+        dead = self.tombstones(tier)
+        return df if dead is None else df.join(dead, tier.id_col, "anti")
+
+    def read(self, tier: Tier, prune: Sequence[Column] = ()) -> DataFrame:
+        """The live rows of the tier's data component, under the
+        **Reads** contract: filtered by the ``prune`` predicates first
+        (in order, so partition filters stay static), then reconciled
+        against the tier's commit record and tombstones. The result
+        keeps ``batch_id``. A record without a commit fails loudly."""
+        df = self.spark.read.parquet(self.path(tier.data))
+        for pred in prune:
+            df = df.filter(pred)
+        rows = self._record(tier)
+        ingest = {r["batch_id"]: r["origin"] for r in rows if r["origin"] != "retract"}
+        committed = self.committed(tier)
+        if len(committed) <= BATCH_ISIN_CAP:
+            df = df.filter(F.col("batch_id").isin(committed))
+        else:
+            ids = F.broadcast(_id_frame(self.spark, committed))
+            df = df.join(ids, "batch_id", "leftsemi")
+        if list(ingest.values()) != ["build"]:
+            df = df.dropDuplicates([*tier.key, "batch_id"])
+        return self.live(df, tier)
 
 
-def _committed_tombstones(
-    spark: SparkSession, snap: str, tier: Tier, committed: list[str] | None
-) -> DataFrame | None:
-    path = tier.tombstones and os.path.join(snap, tier.tombstones)
-    if not path or not os.path.isdir(path):
-        return None
-    ids = (
-        spark.read.parquet(os.path.join(snap, tier.record)).select("batch_id")
-        if committed is None
-        else _id_frame(spark, committed)
-    )
-    return (
-        spark.read.parquet(path)
-        .join(F.broadcast(ids), "batch_id", "leftsemi")
-        .drop("batch_id")
-        .distinct()
-    )
+def open_snapshot(
+    spark: SparkSession, index_dir: str, tiers: Sequence[Tier] = ()
+) -> Snapshot:
+    """Open one read's :class:`Snapshot`: resolve ``CURRENT`` once and
+    collect each of ``tiers``' commit records, whole, if it holds a
+    commit (``_SUCCESS``). The record's schema is declared
+    (:attr:`Tier.record_schema`), so the collect is the one Spark job
+    per tier; its rows are bounded by the batch count."""
+    root = snapshot_dir(index_dir)
+    records = {}
+    for tier in tiers:
+        path = os.path.join(root, tier.record)
+        committed = os.path.exists(os.path.join(path, "_SUCCESS"))
+        records[tier] = (
+            spark.read.schema(tier.record_schema).parquet(path).collect()
+            if committed
+            else None
+        )
+    return Snapshot(spark, root, records)
 
 
 def reconciled_read(
@@ -383,32 +456,8 @@ def reconciled_read(
     tier: Tier,
     prune: Sequence[Column] = (),
 ) -> DataFrame:
-    """The live rows of the tier's data component, under the **Reads**
-    contract above: filtered by the ``prune`` predicates first (in
-    order, so partition filters stay static), then reconciled against
-    the tier's commit record and tombstones. The result keeps
-    ``batch_id``. A missing commit record fails loudly. All components
-    come from one snapshot, so a concurrent publish cannot tear the
-    read."""
-    snap = snapshot_dir(index_dir)
-    df = spark.read.parquet(os.path.join(snap, tier.data))
-    for pred in prune:
-        df = df.filter(pred)
-    rows = (
-        spark.read.parquet(os.path.join(snap, tier.record))
-        .select("batch_id", "origin")
-        .collect()
-    )
-    committed = sorted({r["batch_id"] for r in rows})
-    ingest = {r["batch_id"]: r["origin"] for r in rows if r["origin"] != "retract"}
-    if len(committed) <= BATCH_ISIN_CAP:
-        df = df.filter(F.col("batch_id").isin(committed))
-    else:
-        df = df.join(F.broadcast(_id_frame(spark, committed)), "batch_id", "leftsemi")
-    if list(ingest.values()) != ["build"]:
-        df = df.dropDuplicates([*tier.key, "batch_id"])
-    dead = _committed_tombstones(spark, snap, tier, committed)
-    return df if dead is None else df.join(dead, dead.columns, "anti")
+    """:meth:`Snapshot.read` of one tier on a snapshot of its own."""
+    return open_snapshot(spark, index_dir, (tier,)).read(tier, prune)
 
 
 def parquet_file_count(path: str) -> int:
@@ -419,21 +468,21 @@ def parquet_file_count(path: str) -> int:
 
 
 def restamp_live(
-    spark: SparkSession,
-    index_dir: str,
+    snap: Snapshot,
     root: str,
     tier: Tier,
     seed: str,
     drop: DataFrame | None = None,
     **longs: int,
 ) -> tuple[DataFrame, dict]:
-    """Compaction's rewrite of one tier: its live rows, less the ids in
-    ``drop``, written under the staging ``root`` as one ``build`` batch
-    (``longs`` as in :func:`commit_batch`) with id ``md5("seed:rows")``,
-    so recompacting an unchanged index is bit-reproducible. Returns the
-    rows and the {before, after, files_before, files_after} counts."""
-    old = index_component_path(index_dir, tier.data)
-    rows = reconciled_read(spark, index_dir, tier)
+    """Compaction's rewrite of one tier: its live rows in ``snap``, less
+    the ids in ``drop``, written under the staging ``root`` as one
+    ``build`` batch (``longs`` as in :func:`commit_batch`) with id
+    ``md5("seed:rows")``, so recompacting an unchanged index is
+    bit-reproducible. Returns the rows and the {before, after,
+    files_before, files_after} counts."""
+    spark, old = snap.spark, snap.path(tier.data)
+    rows = snap.read(tier)
     if drop is not None:
         rows = rows.join(drop, tier.id_col, "anti")
     n = rows.count()

@@ -57,10 +57,9 @@ from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
     batch_id_col,
     batch_id_of,
     commit_batch,
-    committed_batch_ids,
-    committed_tombstones,
     index_component_path,
     next_version,
+    open_snapshot,
     parquet_file_count,
     publish_version,
     reconciled_read,
@@ -208,8 +207,16 @@ def _score_topk(
     with_df = tf0.withColumn(
         "df", F.count(F.lit(1)).over(_W.partitionBy("term"))
     )
+    return _rank_topk(with_df, qterms, totals, k)
+
+
+def _rank_topk(
+    postings: DataFrame, qterms: DataFrame, totals: DataFrame, k: int
+) -> DataFrame:
+    """The ranked top-k of (term, doc_id, tf, dl, df) postings: every
+    tier's BM25 scoring and per-query cut."""
     scored = (
-        with_df.join(F.broadcast(qterms), "term")
+        postings.join(F.broadcast(qterms), "term")
         .crossJoin(F.broadcast(totals))
         .select(
             "query_id",
@@ -306,7 +313,7 @@ TEXT_INDEX_LAYOUT = 4
 BM25 = Tier(
     data="postings", record="totals", tombstones="tombstones",
     key=("term", "doc_id"), id_col="doc_id", partition="bucket",
-    ingest_prefix="", retract_prefix="retract",
+    ingest_prefix="", retract_prefix="retract", longs=("n_docs", "total_len"),
 )
 POSITIONAL = Tier(
     data="positional", record="posbatches", tombstones="postombstones",
@@ -556,20 +563,6 @@ def _probe_terms(
     )
 
 
-def _corpus_totals(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The live corpus's (n_docs, total_len): the append-only totals
-    rows summed (retraction rows are negative), one row per batch id so
-    a replayed commit row counts once."""
-    return (
-        spark.read.parquet(index_component_path(index_dir, BM25.record))
-        .dropDuplicates(["batch_id"])
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("total_len").cast("long").alias("total_len"),
-        )
-    )
-
-
 def build_champion_lists(
     index_dir: str, spark: SparkSession, m: int = CHAMPION_M
 ) -> None:
@@ -668,36 +661,15 @@ def probe_champion_lists(
     query term's df <= CHAMPION_M (pytest-pinned both ways); recall on
     common-term queries is the documented trade for the bounded read."""
     qdf, (in_bucket, in_terms) = _probe_terms(spark, queries, analyzer)
+    snap = open_snapshot(spark, index_dir, (BM25,))
     champs = (
-        spark.read.parquet(index_component_path(index_dir, "champions"))
+        spark.read.parquet(snap.path("champions"))
         .filter(in_bucket)
         .filter(in_terms)
         .select("term", "doc_id", "tf", "dl", "df")
     )
-    dead = committed_tombstones(spark, index_dir, BM25)
-    if dead is not None:
-        champs = champs.join(dead, "doc_id", "anti")
-    scored = (
-        champs.join(F.broadcast(qdf), "term")
-        .crossJoin(F.broadcast(_corpus_totals(spark, index_dir)))
-        .select(
-            "query_id",
-            "doc_id",
-            _bm25_term_score_expr().alias("term_score"),
-        )
-    )
-    per_doc = scored.groupBy("query_id", "doc_id").agg(
-        F.sum("term_score").alias("score_scaled")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score_scaled"), F.asc("doc_id")
-    )
-    return (
-        per_doc.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "doc_id", "score_scaled")
-        .orderBy("query_id", "rnk")
-    )
+    totals = spark.createDataFrame([snap.longs(BM25)])
+    return _rank_topk(snap.live(champs, BM25), qdf, totals, k)
 
 
 def probe_text_index(
@@ -720,10 +692,9 @@ def probe_text_index(
     corpus's. ``analyzer`` must match the one the index was built
     with."""
     qdf, prune = _probe_terms(spark, queries, analyzer)
-    tf0 = reconciled_read(spark, index_dir, BM25, prune).select(
-        "term", "doc_id", "tf", "dl"
-    )
-    return _score_topk(tf0, qdf, _corpus_totals(spark, index_dir), k)
+    snap = open_snapshot(spark, index_dir, (BM25,))
+    tf0 = snap.read(BM25, prune).select("term", "doc_id", "tf", "dl")
+    return _score_topk(tf0, qdf, spark.createDataFrame([snap.longs(BM25)]), k)
 
 
 def bm25_topk_sql(
@@ -1074,22 +1045,21 @@ def compact_text_index(
     content-derived ("compact:" + corpus aggregates), so recompacting
     an unchanged index is bit-reproducible."""
     stats: dict = {}
+    snap = open_snapshot(spark, index_dir, (BM25, POSITIONAL))
     new_root = next_version(index_dir)
     # --- BM25 tier: totals folded to a single row (negative retraction
     # rows summed in — the live corpus's exact N/total_len).
-    tot = _corpus_totals(spark, index_dir).collect()[0]
+    tot = snap.longs(BM25)
     postings, stats[BM25.data] = restamp_live(
-        spark,
-        index_dir,
+        snap,
         new_root,
         BM25,
         f"compact:{tot['n_docs']}:{tot['total_len']}",
-        n_docs=tot["n_docs"],
-        total_len=tot["total_len"],
+        **tot.asDict(),
     )
 
     # --- champion tier: recut from the compacted corpus when present
-    if os.path.isdir(index_component_path(index_dir, "champions")):
+    if snap.has("champions"):
         champs = _champion_recut(postings, m)
         (
             champs.repartition("bucket")
@@ -1103,9 +1073,9 @@ def compact_text_index(
             ).count()
         }
 
-    if os.path.isdir(index_component_path(index_dir, POSITIONAL.data)):
+    if snap.has(POSITIONAL.data):
         stats[POSITIONAL.data] = restamp_live(
-            spark, index_dir, new_root, POSITIONAL, "compactpos"
+            snap, new_root, POSITIONAL, "compactpos"
         )[1]
 
     # tombstones are APPLIED, not copied: the new version has none
@@ -1157,9 +1127,11 @@ def text_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     maintenance signals."""
     import glob as _glob
 
+    snap = open_snapshot(spark, index_dir, (BM25, POSITIONAL))
+
     def _bucket_file_counts(comp: str) -> dict[int, int]:
         out: dict[int, int] = {}
-        root = index_component_path(index_dir, comp)
+        root = snap.path(comp)
         for d in _glob.glob(os.path.join(root, "bucket=*")):
             out[int(os.path.basename(d).split("=")[1])] = parquet_file_count(d)
         return out
@@ -1168,16 +1140,14 @@ def text_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
         """Stats of the tier's data component, or of the champions
         cache: no batch stamps, every row committed, live = rows minus
         the BM25 tier's committed tombstones."""
-        raw = spark.read.parquet(index_component_path(index_dir, comp))
+        raw = spark.read.parquet(snap.path(comp))
+        tomb = snap.tombstones(tier)
         if comp == tier.data:
-            record_ids = sorted(committed_batch_ids(spark, index_dir, tier))
-            tomb = committed_tombstones(spark, index_dir, tier, record_ids)
             grouped = raw.groupBy("bucket", "term", "doc_id", "batch_id").agg(
                 F.count(F.lit(1)).alias("copies")
             )
-            committed = F.col("batch_id").isin(record_ids)
+            committed = F.col("batch_id").isin(snap.committed(tier))
         else:
-            tomb = committed_tombstones(spark, index_dir, tier)
             grouped = raw.select(
                 "bucket",
                 "term",
@@ -1236,9 +1206,9 @@ def text_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
         ]
 
     rows = _tier_stats(BM25.data, BM25)
-    if os.path.isdir(index_component_path(index_dir, POSITIONAL.data)):
+    if snap.has(POSITIONAL.data):
         rows += _tier_stats(POSITIONAL.data, POSITIONAL)
-    if os.path.isdir(index_component_path(index_dir, "champions")):
+    if snap.has("champions"):
         rows += _tier_stats("champions", BM25)
     return spark.createDataFrame(
         rows,

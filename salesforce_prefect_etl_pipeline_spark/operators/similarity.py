@@ -38,12 +38,12 @@ from pyspark.sql.window import Window
 
 from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
     Tier,
+    Snapshot,
     batch_id_of,
-    committed_tombstones,
     index_component_path,
     next_version,
+    open_snapshot,
     publish_version,
-    reconciled_read,
     reset_tier,
     reset_versions,
     retract_batch,
@@ -86,6 +86,18 @@ def qcos_sql(a: str, b: str) -> str:
     )
 
 
+def _qcos_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per query, the ``k`` (query_id, neighbor_id, qcos) rows of
+    highest qcos, ties to the lower neighbor_id, ranked ``rnk``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("qcos"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "neighbor_id", "rnk", "qcos")
+        .orderBy("query_id", "rnk")
+    )
+
+
 def cosine_topk(
     emb: DataFrame, query_ids: list[int], k: int = 10
 ) -> DataFrame:
@@ -105,13 +117,7 @@ def cosine_topk(
         F.col("vec_id").alias("neighbor_id"),
         qcos(F.col("qvec"), F.col("embedding")).alias("qcos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qcos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "qcos")
-        .orderBy("query_id", "rnk")
-    )
+    return _qcos_topk(scored, k)
 
 
 def cosine_topk_sql(query_ids: list[int], k: int = 10) -> str:
@@ -229,13 +235,7 @@ def cosine_topk_np(emb: DataFrame, query_ids: list[int], k: int = 10) -> DataFra
                 yield pd.concat(outs, ignore_index=True)
 
     partial = emb.select("vec_id", "embedding").mapInPandas(_topk_batches, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("qcos"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "qcos")
-        .orderBy("query_id", "rnk")
-    )
+    return _qcos_topk(partial, k)
 
 
 # ----------------------------------------------------------------------
@@ -531,17 +531,17 @@ def build_ivf_index(
     return _write_ivf_snapshot(emb, index_dir, nlist, iters, seed_emb)
 
 
-def _reconciled_lists(spark, index_dir: str, list_ids=None) -> DataFrame:
-    """The live inverted lists (``index_store.reconciled_read``, keyed
-    on vec_id), optionally pruned to ``list_ids`` before the scan, with
+def _reconciled_lists(snap: Snapshot, list_ids=None) -> DataFrame:
+    """The live inverted lists of ``snap`` (``Snapshot.read``, keyed on
+    vec_id), optionally pruned to ``list_ids`` before the scan, with
     the batch stamp removed. Lists with no ``vecbatches`` commit record
     (written directly by ``ivf_assign``, as tests build reference
     indexes) carry no stamps and pass through as stored."""
     prune = [] if list_ids is None else [F.col("list_id").isin(list_ids)]
-    if not os.path.isdir(index_component_path(index_dir, IVF.record)):
-        lists = spark.read.parquet(index_component_path(index_dir, IVF.data))
+    if not snap.has(IVF.record):
+        lists = snap.spark.read.parquet(snap.path(IVF.data))
         return lists.filter(prune[0]) if prune else lists
-    return reconciled_read(spark, index_dir, IVF, prune).drop("batch_id")
+    return snap.read(IVF, prune).drop("batch_id")
 
 
 def _write_ivf_snapshot(
@@ -649,10 +649,9 @@ def ivf_list_stats(spark, index_dir: str) -> DataFrame:
     fully SQL-replayable for the iters=0 quantizer. A maintenance
     policy triggers :func:`rebalance_ivf_index` when max(skew_pm)
     crosses its threshold."""
-    lists = _reconciled_lists(spark, index_dir)
-    cents = spark.read.parquet(
-        index_component_path(index_dir, "centroids")
-    ).select("list_id")
+    snap = open_snapshot(spark, index_dir, (IVF,))
+    lists = _reconciled_lists(snap)
+    cents = spark.read.parquet(snap.path("centroids")).select("list_id")
     nlist = cents.count()
     per = lists.groupBy("list_id").agg(F.count(F.lit(1)).alias("n_vecs"))
     total = lists.count()
@@ -689,7 +688,8 @@ def rebalance_ivf_index(
     monolithic build over the union corpus with the same seeds
     (pytest-pinned), so recall@nprobe recovers to build-time level by
     construction, not statistically."""
-    emb = _reconciled_lists(spark, index_dir).select("vec_id", "embedding")
+    snap = open_snapshot(spark, index_dir, (IVF,))
+    emb = _reconciled_lists(snap).select("vec_id", "embedding")
     return rebuild_ivf_index(
         emb, index_dir, nlist=nlist, iters=iters, seed_emb=seed_emb
     )
@@ -730,12 +730,39 @@ def _retraction_ids(index_dir: str, vec_ids: DataFrame) -> DataFrame:
 
 
 def load_ivf_centroids(spark, index_dir: str) -> np.ndarray:
+    return _centroids(open_snapshot(spark, index_dir))
+
+
+def _centroids(snap: Snapshot) -> np.ndarray:
     rows = (
-        spark.read.parquet(index_component_path(index_dir, "centroids"))
-        .orderBy("list_id")
-        .collect()
+        snap.spark.read.parquet(snap.path("centroids")).orderBy("list_id").collect()
     )
     return np.array([r.centroid for r in rows], dtype=np.float64)
+
+
+def _probed_lists(
+    spark, index_dir: str, queries, nprobe: int, centroids: np.ndarray | None
+) -> tuple[DataFrame, DataFrame]:
+    """The (query_id, qvec, list_id) probes of each query's ``nprobe``
+    nearest centroids, and the live lists pruned to the probed ones,
+    both from one snapshot of the index (its centroids unless
+    ``centroids`` is given)."""
+    snap = open_snapshot(spark, index_dir, (IVF,))
+    cents = centroids if centroids is not None else _centroids(snap)
+    probe_rows = []
+    for qid, vec in queries:
+        qv = np.array(vec, dtype=np.float64)
+        # Probe selection on the module's quantized key with a stable
+        # sort (ties -> lowest list_id), same reasoning as ivf_assign:
+        # raw-double argsort could pick a different near-tied list per
+        # engine, and the iters=0 oracle replays this exact selection.
+        qsims = np.floor(((qv / np.linalg.norm(qv)) @ cents.T) * 1e6).astype(np.int64)
+        for lid in np.argsort(-qsims, kind="stable")[:nprobe]:
+            probe_rows.append((qid, [float(v) for v in vec], int(lid)))
+    probes = spark.createDataFrame(
+        probe_rows, "query_id long, qvec array<float>, list_id int"
+    )
+    return probes, _reconciled_lists(snap, sorted({r[2] for r in probe_rows}))
 
 
 def probe_ivf(
@@ -756,28 +783,7 @@ def probe_ivf(
     cosine_topk, approximate recall (measured in tests). Pass
     ``centroids`` to skip re-reading them (callers probing repeatedly
     should hold them driver-side — they are nlist x dim floats)."""
-    cents = centroids if centroids is not None else load_ivf_centroids(spark, index_dir)
-    probe_rows = []
-    for qid, vec in queries:
-        qv = np.array(vec, dtype=np.float64)
-        # Probe selection on the module's quantized key with a stable
-        # sort (ties -> lowest list_id), same reasoning as ivf_assign:
-        # raw-double argsort could pick a different near-tied list per
-        # engine, and the iters=0 oracle replays this exact selection.
-        qsims = np.floor(((qv / np.linalg.norm(qv)) @ cents.T) * 1e6).astype(np.int64)
-        for lid in np.argsort(-qsims, kind="stable")[:nprobe]:
-            probe_rows.append((qid, [float(v) for v in vec], int(lid)))
-    probe_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("qvec", T.ArrayType(T.FloatType())),
-            T.StructField("list_id", T.IntegerType()),
-        ]
-    )
-    probes = spark.createDataFrame(probe_rows, probe_schema)
-    probe_lists = sorted({r[2] for r in probe_rows})
-
-    lists = _reconciled_lists(spark, index_dir, probe_lists)
+    probes, lists = _probed_lists(spark, index_dir, queries, nprobe, centroids)
     cand = lists.join(F.broadcast(probes), "list_id").filter(
         F.col("vec_id") != F.col("query_id")
     )
@@ -786,13 +792,7 @@ def probe_ivf(
         F.col("vec_id").alias("neighbor_id"),
         qcos(F.col("qvec"), F.col("embedding")).alias("qcos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qcos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "qcos")
-        .orderBy("query_id", "rnk")
-    )
+    return _qcos_topk(scored, k)
 
 
 def probe_ivf_exact_within_lists(
@@ -815,26 +815,8 @@ def probe_ivf_exact_within_lists(
     candidate, or a re-rank bug in probe_ivf therefore diverges from
     this frame. Deterministic tie-break (qcos desc, neighbor_id asc)
     matches probe_ivf so positional equality is exact."""
-    cents = centroids if centroids is not None else load_ivf_centroids(spark, index_dir)
-    probe_rows = []
-    for qid, vec in queries:
-        qv = np.array(vec, dtype=np.float64)
-        qsims = np.floor(((qv / np.linalg.norm(qv)) @ cents.T) * 1e6).astype(np.int64)
-        for lid in np.argsort(-qsims, kind="stable")[:nprobe]:
-            probe_rows.append((qid, [float(v) for v in vec], int(lid)))
-    probe_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("qvec", T.ArrayType(T.FloatType())),
-            T.StructField("list_id", T.IntegerType()),
-        ]
-    )
-    probes = spark.createDataFrame(probe_rows, probe_schema)
-    probe_lists = sorted({r[2] for r in probe_rows})
-
-    members = _reconciled_lists(spark, index_dir, probe_lists).select(
-        "list_id", "vec_id"
-    )
+    probes, lists = _probed_lists(spark, index_dir, queries, nprobe, centroids)
+    members = lists.select("list_id", "vec_id")
     cand = members.join(F.broadcast(probes), "list_id").filter(
         F.col("vec_id") != F.col("query_id")
     )
@@ -846,13 +828,7 @@ def probe_ivf_exact_within_lists(
         F.col("vec_id").alias("neighbor_id"),
         qcos(F.col("qvec"), F.col("src_embedding")).alias("qcos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qcos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "qcos")
-        .orderBy("query_id", "rnk")
-    )
+    return _qcos_topk(scored, k)
 
 
 def ivf_residual_frame(
@@ -923,18 +899,15 @@ def build_ivfpq_codes(
     caller seeds them from panel residuals the same way the plain
     books seed from panel vectors."""
     books = np.asarray(codebooks, dtype=np.float64)
-    lists = _reconciled_lists(spark, index_dir).select(
-        "vec_id", "list_id", "embedding"
-    )
+    snap = open_snapshot(spark, index_dir, (IVF,))
+    lists = _reconciled_lists(snap).select("vec_id", "list_id", "embedding")
     if residual:
-        lists = ivf_residual_frame(
-            spark, lists, load_ivf_centroids(spark, index_dir)
-        )
+        lists = ivf_residual_frame(spark, lists, _centroids(snap))
     codes_comp = "pqrescodes" if residual else "pqcodes"
     books_comp = "pqresbooks" if residual else "pqbooks"
     enc = pq_encode(lists, books, passthrough=("list_id",))
     enc.write.mode("overwrite").partitionBy("list_id").parquet(
-        index_component_path(index_dir, codes_comp)
+        snap.path(codes_comp)
     )
     m, codes, dsub = books.shape
     rows = [
@@ -944,18 +917,12 @@ def build_ivfpq_codes(
     ]
     spark.createDataFrame(
         rows, "subspace int, code int, c array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        index_component_path(index_dir, books_comp)
-    )
+    ).coalesce(1).write.mode("overwrite").parquet(snap.path(books_comp))
 
 
-def load_pq_codebooks(
-    spark, index_dir: str, comp: str = "pqbooks"
-) -> np.ndarray:
+def _codebooks(snap: Snapshot, comp: str) -> np.ndarray:
     rows = (
-        spark.read.parquet(index_component_path(index_dir, comp))
-        .orderBy("subspace", "code")
-        .collect()
+        snap.spark.read.parquet(snap.path(comp)).orderBy("subspace", "code").collect()
     )
     m = max(r["subspace"] for r in rows) + 1
     codes = max(r["code"] for r in rows) + 1
@@ -1003,15 +970,12 @@ def probe_ivfpq(
     scoring joins on (query_id, list_id). The ADC estimate then
     approximates ||q − x||² with the coarse term cancelled, which is
     what buys residual PQ its lower quantization error."""
-    cents = (
-        centroids if centroids is not None else load_ivf_centroids(spark, index_dir)
-    )
+    snap = open_snapshot(spark, index_dir, (IVF,))
+    cents = centroids if centroids is not None else _centroids(snap)
     books = (
         np.asarray(codebooks, dtype=np.float64)
         if codebooks is not None
-        else load_pq_codebooks(
-            spark, index_dir, "pqresbooks" if residual else "pqbooks"
-        )
+        else _codebooks(snap, "pqresbooks" if residual else "pqbooks")
     )
     m, codes, dsub = books.shape
     probe_rows = []
@@ -1070,11 +1034,7 @@ def probe_ivfpq(
         lut_keys = ["query_id"]
     code_cols = [f"code_{s}" for s in range(m)]
     cand = (
-        spark.read.parquet(
-            index_component_path(
-                index_dir, "pqrescodes" if residual else "pqcodes"
-            )
-        )
+        spark.read.parquet(snap.path("pqrescodes" if residual else "pqcodes"))
         .filter(F.col("list_id").isin(probe_lists))
         .select("vec_id", "list_id", *code_cols)
         .join(F.broadcast(probes), "list_id")
@@ -1082,10 +1042,7 @@ def probe_ivfpq(
     )
     # retractions AFTER the codes build: drop committed tombstones at
     # read time (same live view as _reconciled_lists)
-    dead = committed_tombstones(spark, index_dir, IVF)
-    if dead is not None:
-        cand = cand.join(dead, "vec_id", "anti")
-    scored = cand.join(F.broadcast(lut), lut_keys)
+    scored = snap.live(cand, IVF).join(F.broadcast(lut), lut_keys)
     adc = None
     for s in range(m):
         term = F.element_at(
@@ -1122,15 +1079,7 @@ def probe_ivfpq(
         "neighbor_id",
         qcos(F.col("qvec"), F.col("src_embedding")).alias("qcos"),
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("qcos"), F.asc("neighbor_id")
-    )
-    return (
-        rer.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "qcos")
-        .orderBy("query_id", "rnk")
-    )
+    return _qcos_topk(rer, k)
 
 
 def ivf_topk(
@@ -1181,13 +1130,7 @@ def ivf_topk(
         F.col("vec_id").alias("neighbor_id"),
         qcos(F.col("qvec"), F.col("embedding")).alias("qcos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qcos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "qcos")
-        .orderBy("query_id", "rnk")
-    )
+    return _qcos_topk(scored, k)
 
 
 # ----------------------------------------------------------------------
@@ -1417,13 +1360,7 @@ def srp_topk(
         "neighbor_id",
         qcos(F.col("qvec"), F.col("embedding")).alias("qcos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qcos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "qcos")
-        .orderBy("query_id", "rnk")
-    )
+    return _qcos_topk(scored, k)
 
 
 def srp_topk_sql(

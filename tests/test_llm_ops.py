@@ -1142,6 +1142,25 @@ def _torn_minhash_batch(docs, idx):
             dedup._write_minhash_batch(prof, idx, "append", tier, "torn")
 
 
+def test_build_minhash_index_signs_the_corpus_once(spark, docs, tmp_path):
+    """Both MinHash tiers come from one signing pass: a row counter on
+    the text the signer reads sees each document once, and the profile
+    the two writes share is released when the build ends."""
+    sc = spark.sparkContext
+    seen = sc.accumulator(0)
+
+    def counted(text):
+        seen.add(1)
+        return text
+
+    n_docs = docs.count()
+    counted_docs = docs.withColumn("text", F.udf(counted, "string")("text"))
+    persisted = set(sc._jsc.getPersistentRDDs())
+    dedup.build_minhash_index(counted_docs, str(tmp_path / "idx"))
+    assert seen.value == n_docs
+    assert not set(sc._jsc.getPersistentRDDs()) - persisted
+
+
 def test_compact_minhash_index_preserves_probes_and_drops_tombstones(spark, docs, tmp_path):
     """Compaction contract: after a torn batch doubled every index row
     on disk, compaction (1) restores the original row counts, (2) leaves
@@ -1444,6 +1463,143 @@ def test_concurrent_probes_during_maintenance(spark, docs, emb, tmp_path):
         ).collect()
     )
     assert post == expected_ivf
+
+
+@pytest.fixture(scope="module")
+def torn_read_indexes(spark, docs, emb, tmp_path_factory):
+    """One index per family, each with a committed retraction, that the
+    torn-read cases copy before publishing over them.
+
+    - ``text``: BM25 over two batches, champions cut, then the champion
+      probe's rank-1 documents retracted (champions not recut);
+    - ``ivf``: nlist 16, iters 0, PQ codes built, then the rank-1 IVF
+      and ADC neighbors of three queries retracted;
+    - ``minhash``: an 80% corpus build plus a torn batch."""
+    from salesforce_prefect_etl_pipeline_spark.operators import retrieval
+    from salesforce_prefect_etl_pipeline_spark.operators.corpus import split_bucket
+
+    root = tmp_path_factory.mktemp("torn_read")
+    sb = split_bucket(F.col("doc_id"))
+    text_idx = str(root / "text")
+    retrieval.build_text_index(docs.filter(sb < 60), text_idx)
+    retrieval.append_text_index(docs.filter(sb >= 60), text_idx)
+    retrieval.build_champion_lists(text_idx, spark)
+    top = [r.doc_id for r in retrieval.probe_champion_lists(spark, text_idx).collect()
+           if r.rnk == 1]
+    retrieval.retract_text_index(docs.filter(F.col("doc_id").isin(top)), text_idx)
+
+    ivf = str(root / "ivf")
+    cents = similarity.build_ivf_index(emb, ivf, nlist=16, iters=0)
+    books = similarity.train_pq_codebooks(emb, m=4, codes=16, iters=0)
+    similarity.build_ivfpq_codes(spark, ivf, books)
+    qvecs = [
+        (r.vec_id, list(r.embedding))
+        for r in emb.filter(F.col("vec_id").isin([1, 7, 42])).collect()
+    ]
+    dead = {
+        r.neighbor_id
+        for probe in (similarity.probe_ivf, similarity.probe_ivfpq)
+        for r in probe(spark, ivf, qvecs, centroids=cents).collect()
+        if r.rnk == 1
+    }
+    similarity.retract_ivf_vectors(
+        spark, ivf, spark.createDataFrame([(v,) for v in dead], "vec_id long")
+    )
+
+    minhash = str(root / "minhash")
+    dedup.build_minhash_index(docs.filter(sb < 80), minhash)
+    _torn_minhash_batch(docs.filter(sb < 80), minhash)
+    return {
+        "text": text_idx,
+        "ivf": ivf,
+        "minhash": minhash,
+        "cents": cents,
+        "books": books,
+        "qvecs": qvecs,
+        "increment": docs.filter(sb >= 80),
+    }
+
+
+def _torn_read_cases():
+    """reader -> (family, read(spark, idx, fx), publish(spark, idx, fx)):
+    the text readers under a compaction, the IVF readers under a
+    rebuild over the unretracted corpus, MinHash under a compaction."""
+    from salesforce_prefect_etl_pipeline_spark.operators import retrieval
+
+    def compact_text(spark, idx, fx):
+        retrieval.compact_text_index(spark, idx)
+
+    def rebuild_ivf(spark, idx, fx):
+        similarity.rebuild_ivf_index(
+            load_table(spark, SF_SMALL, "embeddings"), idx, nlist=16, iters=0
+        )
+
+    def compact_minhash(spark, idx, fx):
+        dedup.compact_minhash_index(spark, idx)
+
+    return {
+        "probe_text_index": (
+            "text", lambda s, i, fx: retrieval.probe_text_index(s, i), compact_text
+        ),
+        "probe_champion_lists": (
+            "text", lambda s, i, fx: retrieval.probe_champion_lists(s, i), compact_text
+        ),
+        "text_index_stats": (
+            "text", lambda s, i, fx: retrieval.text_index_stats(s, i), compact_text
+        ),
+        "probe_ivf": (
+            "ivf", lambda s, i, fx: similarity.probe_ivf(s, i, fx["qvecs"]), rebuild_ivf
+        ),
+        "probe_ivfpq": (
+            "ivf",
+            lambda s, i, fx: similarity.probe_ivfpq(
+                s, i, fx["qvecs"], centroids=fx["cents"], codebooks=fx["books"]
+            ),
+            rebuild_ivf,
+        ),
+        "ivf_list_stats": (
+            "ivf", lambda s, i, fx: similarity.ivf_list_stats(s, i), rebuild_ivf
+        ),
+        "probe_minhash_index": (
+            "minhash",
+            lambda s, i, fx: dedup.probe_minhash_index(s, i, fx["increment"]),
+            compact_minhash,
+        ),
+    }
+
+
+@pytest.mark.parametrize("reader", sorted(_torn_read_cases()))
+def test_publish_after_first_resolution_keeps_the_read_on_one_version(
+    spark, torn_read_indexes, tmp_path, monkeypatch, reader
+):
+    """A reader that resolved ``CURRENT`` keeps reading that version:
+    a real publish right after the reader's first resolution leaves its
+    rows equal to its rows with no publish (no retracted row comes
+    back, no committed batch goes missing)."""
+    import shutil
+
+    family, read, publish = _torn_read_cases()[reader]
+    fx = torn_read_indexes
+    idx = str(tmp_path / family)
+    shutil.copytree(fx[family], idx)
+    want = [tuple(r) for r in read(spark, idx, fx).collect()]
+    assert want
+
+    real = index_store.current_index_version
+    published = []
+
+    def spy(index_dir):
+        version = real(index_dir)
+        if not published:
+            published.append(index_dir)
+            publish(spark, idx, fx)
+        return version
+
+    monkeypatch.setattr(index_store, "current_index_version", spy)
+    got = [tuple(r) for r in read(spark, idx, fx).collect()]
+    monkeypatch.undo()
+    assert published == [idx] and real(idx) == "v1"
+    assert got == want
 
 
 def test_e2e_curation_profile_reuse_is_bit_identical(spark, docs):

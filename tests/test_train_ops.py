@@ -1592,6 +1592,39 @@ def test_above_cap_semi_join_equals_literal_filter(spark, tmp_path, monkeypatch)
     assert _probes() == literal
 
 
+def _jobs(spark, group, action):
+    """Spark jobs ``action`` runs, counted under a job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_probe_text_index_job_budget(spark, tmp_path):
+    """One snapshot per probe: on a three-batch index with a committed
+    retraction, building the BM25 probe's frame runs the one commit
+    record collect plus the postings and tombstones schema reads, and
+    the collect scans neither the record nor a totals aggregate. A
+    second read of the record adds jobs and fails the budget (a probe
+    that read the record twice and aggregated the totals in its plan
+    ran 5 + 14)."""
+    docs = _docs(spark, _LIFECYCLE_TEXTS)
+    idx = str(tmp_path / "idx")
+    retrieval.build_text_index(docs.filter("doc_id < 3"), idx)
+    for part in ("doc_id BETWEEN 3 AND 5", "doc_id > 5"):
+        retrieval.append_text_index(docs.filter(part), idx)
+    retrieval.retract_text_index(docs.filter("doc_id = 4"), idx)
+    build, frame = _jobs(
+        spark, "budget-build", lambda: retrieval.probe_text_index(spark, idx)
+    )
+    collect, rows = _jobs(spark, "budget-collect", frame.collect)
+    assert rows and 4 not in {r.doc_id for r in rows}
+    assert build <= 3 and collect <= 12, (build, collect)
+
+
 #: Each stamped tier's on-disk format, spelled out rather than read from
 #: its ``Tier``: (data, record[, tombstones]) component names, their
 #: parquet file schemas (partition column excluded), the partition
